@@ -135,54 +135,38 @@ def arrow_i64(col) -> np.ndarray:
     return np.asarray(col.to_numpy(zero_copy_only=False), dtype=np.int64)
 
 
-def _arrow_matrix_groups(batches, extract):
-    """Shared per-list grouping over ``mapInArrow`` batches of
-    ``(list_no, id, <payload>)``: numpy group-bounds instead of pandas
-    groupby, and a no-gather fast path for the common case where a batch
-    holds exactly one list (codes tables are partitioned by list_no).
-    ``extract(column, num_rows)`` builds the payload matrix."""
+def arrow_list_groups(batches, extract):
+    """Per-list groups over ``mapInArrow`` batches of ``(list_no, id,
+    <payload columns>)``: numpy group-bounds instead of pandas groupby,
+    and a no-gather fast path for the common case where a batch holds
+    exactly one list (codes tables are partitioned by list_no).
+    ``extract(batch)`` builds the tuple of payload matrices; yields
+    ``(list_no, payload tuple, ids)``."""
     for b in batches:
         if b.num_rows == 0:
             continue
-        lists = np.asarray(
-            b.column(0).to_numpy(zero_copy_only=False), dtype=np.int64
-        )
-        ids = np.asarray(
-            b.column(1).to_numpy(zero_copy_only=False), dtype=np.int64
-        )
-        M = extract(b.column(2), b.num_rows)
+        lists = arrow_i64(b.column(0))
+        ids = arrow_i64(b.column(1))
+        blk = extract(b)
         if lists[0] == lists[-1] and (lists == lists[0]).all():
-            yield int(lists[0]), M, ids
+            yield int(lists[0]), blk, ids
             continue
         order = np.argsort(lists, kind="stable")
         sl = lists[order]
         bounds = np.flatnonzero(np.r_[True, sl[1:] != sl[:-1], True])
         for s, e in zip(bounds[:-1], bounds[1:]):
             rows = order[s:e]
-            yield int(sl[s]), M[rows], ids[rows]
+            yield int(sl[s]), tuple(m[rows] for m in blk), ids[rows]
 
 
 def arrow_code_groups(batches):
     """(list_no, codes (n, w) uint8, ids int64) per-list groups from
     ``mapInArrow`` batches of ``(list_no, id, code binary)`` — zero-copy
     code matrix via arrow_binary_matrix."""
-    yield from _arrow_matrix_groups(
-        batches, lambda col, n: arrow_binary_matrix(col)
-    )
-
-
-def arrow_vec_groups(batches, dtype=np.float64):
-    """(list_no, X (n, d) dtype, ids int64) per-list groups from
-    ``mapInArrow`` batches of ``(list_no, id, vec array<float>)`` —
-    zero-copy reshape of the list values buffer (cast only when dtype
-    differs)."""
-
-    def extract(col, n):
-        return np.asarray(
-            col.flatten().to_numpy(zero_copy_only=False), dtype=dtype
-        ).reshape(n, -1)
-
-    yield from _arrow_matrix_groups(batches, extract)
+    for list_no, (codes,), ids in arrow_list_groups(
+        batches, lambda b: (arrow_binary_matrix(b.column(2)),)
+    ):
+        yield list_no, codes, ids
 
 
 def pairwise_distances(

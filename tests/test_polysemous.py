@@ -126,7 +126,7 @@ def test_ivfpq_polysemous_ht_filter(vectors):
     from faiss_spark.operators.ivf import IVFPQIndex
 
     idx = IVFPQIndex.train(vectors, nlist=8, M=4, seed=42, niter=5)
-    # swapping idx.pq must auto-invalidate the precomputed ADC table
+    # the list scanner builds its ADC terms from the live (reordered) books
     idx.pq, _ = PolysemousTraining(n_iter=1500, seed=7).optimize_pq(idx.pq)
     idx.add(vectors)
     qs = vectors.filter("id < 5").select(F.col("id").alias("qid"), "vec")
@@ -148,33 +148,35 @@ def test_ivfpq_polysemous_ht_filter(vectors):
     assert len(tight) <= len(full)
 
 
-def test_precomputed_table_digest_catches_permutation(vectors):
-    """ADVICE r9: the old (shape, sum) fingerprint was permutation-
-    invariant — PolysemousTraining reorders codebook ROWS with identical
-    values, so the f64 sum collides bit-exactly and a stale ADC table
-    could serve wrong distances. The content digest must invalidate on a
-    pure permutation, and the size gate must return the same rows as the
-    cached full table."""
-    import numpy as np
-
-    from faiss_spark.operators.ivf import IVFPQIndex
-
-    idx = IVFPQIndex.train(vectors, nlist=4, M=4, seed=42, niter=3, pq_niter=3)
-    before = idx._precomputed_tables([0, 1])
-    # pure row permutation of every sub-codebook: same value SUM, so the
-    # old fingerprint would collide; the digest must not
+def test_permuted_codebooks_search_identically_on_both_routes(vectors):
+    """ADVICE r9 hazard at search level: PolysemousTraining reorders
+    codebook ROWS with identical values, so any ADC table cached by a
+    value fingerprint would serve the old row order after the swap. A
+    pure row permutation re-labels the codes but not the
+    reconstruction: after re-adding, the driver route and the
+    distributed route must both return exactly the rows the unpermuted
+    index returned — the per-list ADC term is rebuilt from the live
+    codebooks in every search."""
     from faiss_spark.operators.codecs import ProductQuantizerModel
+    from faiss_spark.operators.ivf import IVFPQIndex, pq_search_preassigned
 
+    idx = IVFPQIndex.train(
+        vectors, nlist=4, M=4, seed=42, niter=3, pq_niter=3
+    ).add(vectors)
+    qs = vectors.filter("id < 10").select(F.col("id").alias("qid"), "vec")
+
+    def rows(df):
+        return sorted(
+            (r["qid"], r["rank"], r["id"], round(r["dist"], 6))
+            for r in df.collect()
+        )
+
+    before = rows(idx.search(qs, 5, nprobe=2))
+    assert before
+    # pure row permutation of every sub-codebook: same value SUM
     idx.pq = ProductQuantizerModel(
         codebooks=np.ascontiguousarray(idx.pq.codebooks[:, ::-1, :])
     )
-    after = idx._precomputed_tables([0, 1])
-    np.testing.assert_allclose(after[0], before[0][:, ::-1])
-    assert not np.allclose(after[0], before[0])
-    # size gate: above the byte budget the rows are computed per-search
-    # for the probed lists only — values identical to the cached path
-    idx.precomputed_table_max_bytes = 0
-    assert idx._pct is not None  # cache still holds the gated-off table
-    gated = idx._precomputed_tables([1, 3])
-    np.testing.assert_allclose(gated[1], after[1])
-    assert set(gated) == {1, 3}
+    idx.add(vectors)
+    assert rows(idx.search(qs, 5, nprobe=2)) == before
+    assert rows(pq_search_preassigned(idx, qs, 5, nprobe=2)) == before

@@ -8,6 +8,7 @@ must auto-fall-back to its twin past the query bound (reference
 contrib/ivf_tools.py:26-57 — the big-batch pattern is index-agnostic;
 benchs/distributed_ondisk/README.md is the PQ flagship)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,15 +17,19 @@ from faiss_spark.operators.ivf import (
     IMIIVFIndex,
     IMIPQIndex,
     IVFAQIndex,
+    IVFIndex,
     IVFNestedIndex,
     IVFPQIndex,
     IVFPQRIndex,
     IVFRCQIndex,
+    IVFSQIndex,
     MIQ2IVFIndex,
     aq_search_preassigned,
     pq_search_preassigned,
     pqr_search_preassigned,
     search_preassigned,
+    search_with_parameters,
+    sq_search_preassigned,
 )
 
 
@@ -60,33 +65,6 @@ def _spy_fallback(monkeypatch, twin_name):
     return calls
 
 
-def test_pq_search_preassigned_equals_driver(vectors, queries):
-    """IVFPQ ADC cogroup == driver-planned ADC at every probe depth,
-    including the polysemous in-scan Hamming pre-filter."""
-    idx = IVFPQIndex.train(vectors, nlist=8, M=8, seed=42, niter=5).add(vectors)
-    for nprobe in (1, 3, 8):
-        assert rows(pq_search_preassigned(idx, queries, 5, nprobe=nprobe)) == rows(
-            idx.search(queries, 5, nprobe=nprobe)
-        ), nprobe
-    # polysemous_ht rides through the cogroup identically
-    assert rows(
-        pq_search_preassigned(idx, queries, 5, nprobe=8, polysemous_ht=30)
-    ) == rows(idx.search(queries, 5, nprobe=8, polysemous_ht=30))
-
-
-def test_pq_search_preassigned_imi_and_max_codes(vectors, queries):
-    """IMIPQ twin: IMI product-grid probe selection executor-side +
-    the nearest-first max_codes scan budget (ragged probe sets)."""
-    idx = IMIPQIndex.train(vectors, nbits=2, M=8, seed=42, niter=5).add(vectors)
-    idx.codes = idx.codes.localCheckpoint(eager=True)
-    assert rows(pq_search_preassigned(idx, queries, 5, nprobe=4)) == rows(
-        idx.search(queries, 5, nprobe=4)
-    )
-    assert rows(
-        pq_search_preassigned(idx, queries, 5, nprobe=8, max_codes=100)
-    ) == rows(idx.search(queries, 5, nprobe=8, max_codes=100))
-
-
 def test_pq_driver_fallback_routes_to_twin(vectors, queries, monkeypatch):
     idx = IVFPQIndex.train(vectors, nlist=8, M=8, seed=42, niter=5).add(vectors)
     direct = rows(pq_search_preassigned(idx, queries, 5, nprobe=4))
@@ -104,38 +82,189 @@ def test_imipq_driver_fallback_routes_to_twin(vectors, queries, monkeypatch):
     assert calls
 
 
-def test_aq_search_preassigned_equals_driver(vectors, queries, monkeypatch):
-    """IVFAQ twin: per-cell gather-sum decode == driver scan, and the
-    driver search auto-falls-back past the bound."""
-    idx = IVFAQIndex.train(vectors, nlist=8, M=4, seed=42, niter=5).add(vectors)
-    for nprobe in (1, 3, 8):
-        assert rows(aq_search_preassigned(idx, queries, 5, nprobe=nprobe)) == rows(
-            idx.search(queries, 5, nprobe=nprobe)
-        ), nprobe
-    direct = rows(aq_search_preassigned(idx, queries, 5, nprobe=3))
-    calls = _spy_fallback(monkeypatch, "aq_search_preassigned")
-    assert rows(idx.search(queries, 5, nprobe=3)) == direct and direct
-    assert calls
+def _imipq(vectors):
+    idx = IMIPQIndex.train(vectors, nbits=2, M=8, seed=42, niter=5).add(vectors)
+    idx.codes = idx.codes.localCheckpoint(eager=True)
+    return idx
 
 
-def test_pqr_search_preassigned_equals_driver(vectors, queries, monkeypatch):
-    """IVFPQR codes-rerank twin: ADC shortlist + refine decode per cell
-    == the driver _search_pqr_codes, and the codes-only search
-    auto-falls-back past the bound."""
+def _pqr(vectors):
     idx = IVFPQRIndex.train(
         vectors, nlist=8, M=8, k_factor=4, seed=7, niter=5, M_refine=8
     )
     idx.vectors = None  # codes-only (the 100 TB shape)
-    for nprobe in (1, 3):
-        assert rows(
-            pqr_search_preassigned(idx, queries, 5, nprobe=nprobe)
-        ) == rows(
-            idx.search(queries, 5, nprobe=nprobe, rerank="pqr_codes")
-        ), nprobe
-    direct = rows(pqr_search_preassigned(idx, queries, 5, nprobe=3))
-    calls = _spy_fallback(monkeypatch, "pqr_search_preassigned")
-    assert rows(idx.search(queries, 5, nprobe=3)) == direct and direct
-    assert calls
+    return idx
+
+
+def _sq_rcq(vectors):
+    from faiss_spark.operators.codecs import ResidualCoarseQuantizer
+
+    cq = ResidualCoarseQuantizer(M=2, nbits=2, seed=5).fit(vectors)
+    return IVFSQIndex.train(
+        vectors, nlist=cq.nlist, bits=8, seed=42, coarse_q=cq
+    ).add(vectors)
+
+
+def _graph_plan(vectors):
+    from faiss_spark.plans.factory import index_factory
+
+    return index_factory("IVF16_NSG8,Flat").fit(vectors, seed=42)
+
+
+def _graph_distributed(monkeypatch):
+    """The factory plan has no public twin: force its fallback."""
+
+    def run(plan, q, k, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
+            return rows(plan.search(q, k, **kw))
+
+    return run
+
+
+# cell -> (build, driver search, distributed twin, (twin name, kwargs)
+# for the fallback spy or None, per-comparison search kwargs)
+ROUTE_CELLS = {
+    # IVFPQ ADC at every probe depth, plus the polysemous in-scan filter
+    "pq": (
+        lambda v: IVFPQIndex.train(v, nlist=8, M=8, seed=42, niter=5).add(v),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        pq_search_preassigned, None,
+        [dict(nprobe=1), dict(nprobe=3), dict(nprobe=8),
+         dict(nprobe=8, polysemous_ht=30)],
+    ),
+    # IMI product-grid probes executor-side, the nearest-first max_codes
+    # budget (ragged probe sets) and the polysemous filter
+    "imipq": (
+        _imipq,
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        pq_search_preassigned, None,
+        [dict(nprobe=4), dict(nprobe=8, max_codes=100),
+         dict(nprobe=4, polysemous_ht=20)],
+    ),
+    # AQ gather-sum decode, exact decoded distances
+    "aq": (
+        lambda v: IVFAQIndex.train(v, nlist=8, M=4, seed=42, niter=5).add(v),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        aq_search_preassigned, ("aq_search_preassigned", dict(nprobe=3)),
+        [dict(nprobe=1), dict(nprobe=3), dict(nprobe=8)],
+    ),
+    # AQ with a '_N*' stored-norm search_type estimator
+    "aq_norm": (
+        lambda v: IVFAQIndex.train(
+            v, nlist=8, M=4, seed=42, niter=5, search_type="qint8"
+        ).add(v),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        aq_search_preassigned, None,
+        [dict(nprobe=1), dict(nprobe=8)],
+    ),
+    # IVFPQR codes rerank: ADC shortlist + refine decode per list
+    "pqr": (
+        _pqr,
+        lambda idx, q, k, **kw: idx.search(q, k, rerank="pqr_codes", **kw),
+        pqr_search_preassigned, ("pqr_search_preassigned", dict(nprobe=3)),
+        [dict(nprobe=1), dict(nprobe=3)],
+    ),
+    # SQ under an RCQ coarse quantizer (beam probes on both routes)
+    "sq_rcq": (
+        _sq_rcq,
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        sq_search_preassigned, None,
+        [dict(nprobe=1), dict(nprobe=8)],
+    ),
+    # the factory's graph-routed plan: the same beam walk both routes
+    "graph_routed": (
+        _graph_plan,
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        None, None,
+        [dict(nprobe=4)],
+    ),
+}
+
+
+@pytest.mark.parametrize("cell", sorted(ROUTE_CELLS))
+def test_routes_agree(cell, vectors, queries, monkeypatch):
+    """The route-agreement matrix: for every IVF codec and coarse
+    quantizer, the distributed (cogroup) route returns exactly the rows
+    of the driver-planned route — same probes, same distances — and,
+    where the cell names its twin, the driver search auto-falls-back to
+    it past the query bound."""
+    build, driver, twin, spy, params = ROUTE_CELLS[cell]
+    idx = build(vectors)
+    if twin is None:
+        twin_rows = _graph_distributed(monkeypatch)
+    else:
+        def twin_rows(i, q, k, **kw):
+            return rows(twin(i, q, k, **kw))
+    for kw in params:
+        got = twin_rows(idx, queries, 5, **kw)
+        assert got == rows(driver(idx, queries, 5, **kw)) and got, kw
+    if spy is not None:
+        name, kw = spy
+        direct = rows(twin(idx, queries, 5, **kw))
+        calls = _spy_fallback(monkeypatch, name)
+        assert rows(driver(idx, queries, 5, **kw)) == direct and direct
+        assert calls
+
+
+STATS_CELLS = {
+    "pq": lambda v: IVFPQIndex.train(v, nlist=8, M=8, seed=42, niter=5).add(v),
+    "sq": lambda v: IVFSQIndex.train(v, nlist=8, bits=8, seed=42, niter=5).add(v),
+    "aq": lambda v: IVFAQIndex.train(v, nlist=8, M=4, seed=42, niter=5).add(v),
+    "pqr": _pqr,
+}
+
+
+@pytest.mark.parametrize("codec", sorted(STATS_CELLS))
+def test_stats_equal_across_routes(codec, vectors, queries, monkeypatch, tmp_path):
+    """IVFSearchStats counters live in the two shared routes, so every
+    codec reports them and both routes count the same work: nq,
+    list_scans (one scan per list — each list is one file in the saved
+    layout and one cogroup cell) and ndis (faiss IndexIVFStats)."""
+    idx = STATS_CELLS[codec](vectors)
+    idx.save(str(tmp_path / codec))
+    res, st = search_with_parameters(idx, queries, 5, nprobe=3)
+    driver_rows = rows(res)
+    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
+    res2, st2 = search_with_parameters(idx, queries, 5, nprobe=3)
+    assert rows(res2) == driver_rows and driver_rows
+    assert st.as_dict() == st2.as_dict()
+    assert st.nq == 20 and st.list_scans >= 20 and st.ndis > 0
+
+
+@pytest.fixture(scope="module")
+def dim8_indexes(spark):
+    rng = np.random.default_rng(0)
+    data = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(400)]
+    v = spark.createDataFrame(data, "id bigint, vec array<float>")
+    return {
+        "flat": (IVFIndex.train(v, nlist=4, seed=1, niter=3).add(v),
+                 search_preassigned),
+        "sq": (IVFSQIndex.train(v, nlist=4, bits=8, seed=1, niter=3).add(v),
+               sq_search_preassigned),
+        "pq": (IVFPQIndex.train(v, nlist=4, M=4, seed=1, niter=3,
+                                pq_niter=3).add(v),
+               pq_search_preassigned),
+    }
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+@pytest.mark.parametrize("codec", ["flat", "sq", "pq"])
+def test_wrong_dimension_queries_fail_with_message(codec, route, dim8_indexes, spark):
+    """5-d queries against an 8-d index fail with a message naming both
+    dimensions — on the driver before any job (driver route), or from
+    the probe map's size guard before any Python worker sees the
+    vectors (distributed route) — never as a worker stack trace."""
+    from pyspark.errors import PythonException
+
+    idx, twin = dim8_indexes[codec]
+    q5 = spark.createDataFrame([(0, [0.1] * 5)], "qid bigint, vec array<float>")
+    with pytest.raises(Exception, match="5 components but the index has d=8") as ei:
+        if route == "driver":
+            idx.search(q5, 3, nprobe=2).collect()
+        else:
+            twin(idx, q5, 3, nprobe=2).collect()
+    assert not isinstance(ei.value, PythonException)
 
 
 def test_rcq_nested_imi_fallbacks_route_and_match(

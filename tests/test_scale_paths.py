@@ -513,9 +513,9 @@ def test_range_search_preassigned_hot_cell_subshards(vectors, tmp_path):
 
 def test_ivf_range_search_falls_back_to_preassigned(vectors, monkeypatch):
     """ivf_range_search past the driver query bound must route through
-    range_search_preassigned (not raise), with identical results; a
-    stats out-param makes the overflow a loud refusal instead (the
-    distributed plan cannot populate accumulator stats)."""
+    range_search_preassigned (not raise), with identical results; with a
+    stats out-param the overflow runs the distributed route directly and
+    that route fills the same counters."""
     import faiss_spark.operators.ivf as ivfmod
     from faiss_spark.operators.ivf import ivf_range_search
 
@@ -545,8 +545,10 @@ def test_ivf_range_search_falls_back_to_preassigned(vectors, monkeypatch):
 
     from faiss_spark.operators.ivf import range_search_with_parameters
 
-    with pytest.raises(ValueError, match="stats"):
-        res, _ = range_search_with_parameters(idx, q, radius, nprobe=4)
+    res, st = range_search_with_parameters(idx, q, radius, nprobe=4)
+    got = {(r["qid"], r["id"], round(r["dist"], 9)) for r in res.collect()}
+    assert got == direct
+    assert st.nq == 20 and st.ndis > 0 and st.list_scans > 0
 
 
 def test_sq_search_preassigned_equals_driver_planned(vectors, monkeypatch):
