@@ -65,20 +65,22 @@ def fingerprint(text: Column) -> Column:
 
 def shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles; documents shorter than n words get a
-    single whole-document shingle (so every doc has ≥1 shingle)."""
+    single whole-document shingle (so every doc has ≥1 shingle; NULL text
+    gives ``[""]``).
 
-    def build(t: Column) -> Column:
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-        )
-        return F.array_distinct(
-            F.when(F.size(t) >= n, grams).otherwise(
-                F.array(F.concat_ws(" ", t))
-            )
-        )
-
-    return bind(tokens(text), build)
+    One codegen'd regex over the normalized text: at every token start
+    (string start or after a space) a lookahead captures the next n
+    space-separated tokens, so the matches are exactly the n-grams of
+    ``tokens(text)``, empty tokens included, in order. Its second branch
+    matches only at the start of a text of fewer than n tokens and
+    captures all of it."""
+    short = "" if n == 1 else f"|^[^ ]*(?: [^ ]*){{0,{n - 2}}}\\z"
+    grams = F.regexp_extract_all(
+        normalize_text(text),
+        F.lit(f"(?<=^| )(?=([^ ]*(?: [^ ]*){{{n - 1}}}{short}))"),
+        1,
+    )
+    return F.coalesce(F.array_distinct(grams), F.array(F.lit("")))
 
 
 def punct_ratio(text: Column) -> Column:

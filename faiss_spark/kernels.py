@@ -1,4 +1,5 @@
-"""Numpy distance/top-k kernels used inside Arrow-batched Pandas UDFs.
+"""Numpy distance/top-k kernels used inside Arrow-batched Pandas UDFs,
+and a vectorized MD5 for the MinHash signatures of operators/dedup.py.
 
 These mirror the faiss brute-force BLAS path (reference
 faiss/utils/distances.cpp:271-354 ``exhaustive_L2sqr_blas``: tiled GEMM of
@@ -779,3 +780,201 @@ def topk_merge(dist: np.ndarray, ids: np.ndarray, k: int, largest: bool):
         acc._d = [dist.ravel().astype(np.float64, copy=False)]
         acc._n = nq * m
     return acc.emit()
+
+
+# --- MD5 over columns of messages (MinHash signatures) ----------------------
+#
+# RFC 1321 MD5, vectorized across messages: each of the 16 little-endian
+# message words of a 64-byte block is one uint32 array over N messages, and
+# every round step is a handful of whole-array numpy ops (uint32 arithmetic
+# wraps mod 2³², exactly as MD5 requires). Column chunks of ~32k messages
+# keep the working arrays cache-resident.
+
+_MD5_SHIFT = [7, 12, 17, 22] * 4 + [5, 9, 14, 20] * 4 + [4, 11, 16, 23] * 4 \
+    + [6, 10, 15, 21] * 4
+_MD5_K = np.floor(np.abs(np.sin(np.arange(1, 65))) * 2.0**32).astype(np.uint32)
+_MD5_WORD = list(range(16)) + [(5 * i + 1) % 16 for i in range(16)] \
+    + [(3 * i + 5) % 16 for i in range(16)] + [(7 * i) % 16 for i in range(16)]
+_MD5_INIT = np.array([0x67452301, 0xEFCDAB89, 0x98BADCFE, 0x10325476], np.uint32)
+#: longest message that fits one padded block (55 bytes + 0x80 + 8-byte length)
+_MD5_ONE_BLOCK = 55
+_MD5_CHUNK = 1 << 15
+_HEX = np.frombuffer(b"0123456789abcdef", np.uint8)
+
+
+def _md5_compress(X):
+    """One MD5 compression from the initial state over n columns: ``X``
+    is the block's 16 uint32 word arrays, where ``None`` stands for an
+    all-zero word (skipped). Returns the 4 final state arrays."""
+    n = len(next(x for x in X if x is not None))
+    a, b, c, d = (np.full(n, s, np.uint32) for s in _MD5_INIT)
+    f = np.empty(n, np.uint32)
+    t = np.empty(n, np.uint32)
+    for i in range(64):
+        r = i >> 4
+        if r == 0:  # F = d ^ (b & (c ^ d))
+            np.bitwise_xor(c, d, out=f)
+            f &= b
+            f ^= d
+        elif r == 1:  # G = c ^ (d & (b ^ c))
+            np.bitwise_xor(b, c, out=f)
+            f &= d
+            f ^= c
+        elif r == 2:  # H = b ^ c ^ d
+            np.bitwise_xor(b, c, out=f)
+            f ^= d
+        else:  # I = c ^ (b | ~d)
+            np.invert(d, out=f)
+            f |= b
+            f ^= c
+        f += a
+        f += _MD5_K[i]
+        w = X[_MD5_WORD[i]]
+        if w is not None:
+            f += w
+        s = _MD5_SHIFT[i]
+        np.left_shift(f, np.uint32(s), out=t)
+        f >>= np.uint32(32 - s)
+        f |= t
+        f += b
+        # (a, b, c, d) <- (d, b + rotl(...), b, c); old a becomes scratch
+        a, b, c, d, f = d, f, b, c, a
+    for x, s in zip((a, b, c, d), _MD5_INIT):
+        x += s
+    return a, b, c, d
+
+
+def _varlen_offsets(arr, n: int) -> np.ndarray:
+    """The n + 1 value offsets of an Arrow list/string/binary array,
+    sliced to the array's own window (absolute into its child/data)."""
+    import pyarrow as pa
+
+    large = pa.types.is_large_list(arr.type) or pa.types.is_large_string(
+        arr.type) or pa.types.is_large_binary(arr.type)
+    off = np.frombuffer(arr.buffers()[1], np.int64 if large else np.int32)
+    return off[arr.offset:arr.offset + n + 1].astype(np.int64)
+
+
+def pair_min_reduceat(hi: np.ndarray, lo: np.ndarray, starts: np.ndarray):
+    """Lexicographic minimum of the uint64 pairs (hi, lo) over the
+    segments ``[starts[j], starts[j+1])`` (the last runs to the end):
+    min hi, then min lo among the elements that reach it, so ties in hi
+    resolve exactly. Returns (min hi, min lo) per segment."""
+    mh = np.minimum.reduceat(hi, starts)
+    at_min = hi == np.repeat(mh, np.diff(np.r_[starts, len(hi)]))
+    return mh, np.minimum.reduceat(
+        np.where(at_min, lo, np.iinfo(np.uint64).max), starts)
+
+
+def md5_min_digests(lists, prefixes: list[bytes]):
+    """Per row of an Arrow ``list<string|binary>`` column, the minimum over
+    the row's non-null elements ``s`` of ``md5(p + s)``, for each prefix
+    ``p``, in big-endian digest order — the order of the hex strings, so
+    it equals SQL ``min(md5(concat(p, s)))`` byte for byte.
+
+    Each element is packed into its single MD5 block once per distinct
+    prefix length; prefixes of one length differ only in the leading
+    words, which are OR-ed in per hash. Elements whose prefixed message is
+    longer than one block (55 bytes) go through
+    ``hashlib``. Work runs over whole rows in ~32k-element chunks.
+
+    Returns ``(valid (n,) bool, digests (n, len(prefixes), 16) uint8)``;
+    rows that are null or hold no non-null element are not valid and
+    their digests are undefined."""
+    import hashlib
+
+    import pyarrow as pa
+
+    if isinstance(lists, pa.ChunkedArray):
+        lists = lists.combine_chunks()
+    n, P = len(lists), len(prefixes)
+    loff = _varlen_offsets(lists, n)
+    row_ok = lists.is_valid().to_numpy(zero_copy_only=False)
+    lens = np.where(row_ok, np.diff(loff), 0)
+    cum = np.r_[0, np.cumsum(lens)]
+    elem = np.repeat(loff[:-1] - cum[:-1], lens) + np.arange(cum[-1])
+    sv = lists.values
+    voff = _varlen_offsets(sv, len(sv))
+    data = (np.frombuffer(sv.buffers()[2], np.uint8) if sv.buffers()[2]
+            else np.empty(0, np.uint8))
+    elem_ok = sv.is_valid().to_numpy(zero_copy_only=False)[elem]
+    by_len: dict[int, list[int]] = {}
+    for k, p in enumerate(prefixes):
+        by_len.setdefault(len(p), []).append(k)
+    full = np.iinfo(np.uint64).max
+    hi = np.zeros((n, P), np.uint64)
+    lo = np.zeros((n, P), np.uint64)
+    valid = np.zeros(n, bool)
+    cuts = np.searchsorted(cum, np.arange(_MD5_CHUNK, cum[-1], _MD5_CHUNK),
+                           side="right")
+    row_cuts = np.unique(np.r_[0, cuts, n])
+    for r0, r1 in zip(row_cuts[:-1], row_cuts[1:]):
+        rows = r0 + np.flatnonzero(lens[r0:r1])
+        if len(rows) == 0:
+            continue
+        e0, e1 = cum[r0], cum[r1]
+        m = e1 - e0
+        starts = cum[rows] - e0
+        ok = elem_ok[e0:e1]
+        valid[rows] = np.logical_or.reduceat(ok, starts)
+        el = elem[e0:e1]
+        bstart = voff[el]
+        blen = voff[el + 1] - bstart
+        for plen, ks in by_len.items():
+            short = blen <= _MD5_ONE_BLOCK - plen
+            bl = np.where(short, blen, 0)
+            bcum = np.r_[0, np.cumsum(bl)]
+            tot = int(bcum[-1])
+            blk = np.zeros((m, 64), np.uint8)
+            blk.ravel()[np.repeat(np.arange(m) * 64 + plen - bcum[:-1], bl)
+                        + np.arange(tot)] = data[
+                np.repeat(bstart - bcum[:-1], bl) + np.arange(tot)]
+            blk[np.arange(m), plen + bl] = 0x80
+            W = np.ascontiguousarray(blk.view("<u4").T)
+            W[14] = 8 * (plen + bl)
+            # words past the longest message (and its 0x80) are all zero
+            used = (plen + int(bl.max()) + 4) // 4
+            words = [W[j] if j < used or j == 14 else None for j in range(16)]
+            long_ = np.flatnonzero(~short & ok)
+            for k in ks:
+                # the prefix fills the leading words, zero in the packing
+                pw = np.frombuffer(prefixes[k].ljust(-(-plen // 4) * 4, b"\0"),
+                                   "<u4")
+                X = list(words)
+                for j, w in enumerate(pw):
+                    X[j] = W[j] | w
+                a, b, c, d = _md5_compress(X)
+                h = (a.byteswap().astype(np.uint64) << np.uint64(32)) \
+                    | b.byteswap().astype(np.uint64)
+                l_ = (c.byteswap().astype(np.uint64) << np.uint64(32)) \
+                    | d.byteswap().astype(np.uint64)
+                for e in long_:
+                    s = int(bstart[e])
+                    dg = hashlib.md5(prefixes[k] + data[s:s + int(blen[e])]
+                                     .tobytes()).digest()
+                    h[e] = int.from_bytes(dg[:8], "big")
+                    l_[e] = int.from_bytes(dg[8:], "big")
+                h[~ok] = full
+                l_[~ok] = full
+                hi[rows, k], lo[rows, k] = pair_min_reduceat(h, l_, starts)
+    return valid, np.stack([hi, lo], axis=-1).astype(">u8").view(
+        np.uint8).reshape(n, P, 16)
+
+
+def hex_digits(b: np.ndarray) -> np.ndarray:
+    """Lower-case hex of uint8 bytes along the last axis: (..., w) ->
+    (..., 2w) ASCII uint8 (the ``md5`` hex string bytes)."""
+    out = np.empty(b.shape[:-1] + (2 * b.shape[-1],), np.uint8)
+    out[..., 0::2] = _HEX[b >> 4]
+    out[..., 1::2] = _HEX[b & 15]
+    return out
+
+
+def ascii_strings(b: np.ndarray):
+    """Arrow string array from the rows of an (n, w) ASCII uint8 matrix."""
+    import pyarrow as pa
+
+    n, w = b.shape
+    offs = np.arange(0, (n + 1) * w, w, dtype=np.int32)
+    return pa.StringArray.from_buffers(
+        n, pa.py_buffer(offs), pa.py_buffer(np.ascontiguousarray(b)))

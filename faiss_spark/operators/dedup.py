@@ -15,18 +15,23 @@ Four tiers, cheapest to richest, all shuffle-disciplined for 100 TB:
   embedding    cosine near-duplicate pairs over the embeddings table
                (brute range-search here; IVF-bucketed at scale).
 
-Everything except the final embedding kernel is built from JVM-side SQL
-expressions, so each operator has a byte-exact DuckDB oracle. Minhashes
-are *hex strings* (md5), not ints: lexicographic MIN over hex strings is
-identical in every engine, which sidesteps cross-engine integer-hash
-mismatches entirely.
+Each operator has a byte-exact DuckDB oracle. Text features, shingles,
+candidate joins and verification are JVM-side SQL expressions; MinHash
+hashing runs in the numpy MD5 kernel (kernels.md5_min_digests) inside one
+mapInArrow, byte-exact with the SQL form min(md5(i|s)) and so with the
+DuckDB twin; the embedding pairers use the numpy distance kernels.
+Minhashes are *hex strings* (md5), not ints: lexicographic MIN over hex
+strings is identical in every engine, which sidesteps cross-engine
+integer-hash mismatches entirely.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from faiss_spark import kernels as K
 from faiss_spark.functions.text import fingerprint, shingles
 from faiss_spark.operators.knn import range_search
 
@@ -163,11 +168,14 @@ def dedup_keep_best(
 
 
 def _minhash_array(sh_col, num_hashes: int = NUM_HASHES):
-    """All H minhashes in ONE expression: array(i -> min(md5(i|s))).
+    """All H minhashes in ONE SQL expression: array(i -> min(md5(i|s))).
 
-    The shingle expression is bound once (functions.text.bind) — Spark's
-    interpreted higher-order lambdas would otherwise re-evaluate the whole
-    tokenize+shingle subtree once per (hash, shingle) pair."""
+    The per-row form ``streaming.neardup_stream`` uses (one stateful
+    operator per query rules out an aggregate), and the independent JVM
+    reference the batch MD5 kernel is pinned against. The shingle
+    expression is bound once (functions.text.bind) — Spark's interpreted
+    higher-order lambdas would otherwise re-evaluate it once per (hash,
+    shingle) pair."""
     from faiss_spark.functions.text import bind
 
     return bind(
@@ -183,34 +191,40 @@ def _minhash_array(sh_col, num_hashes: int = NUM_HASHES):
     )
 
 
-def _minhash_min_aggs(num_hashes: int, shingle_col: str = "s") -> list:
-    """The codegen formulation of ``_minhash_array``: one MIN aggregate
-    per hash over exploded shingles (min(md5(i|s)) — lexicographic min on
-    hex strings, identical in every engine). Bit-identical to the HOF
-    form, ~2× faster, and the groupBy collapses map-side (a doc's
-    exploded shingles never leave its input task)."""
-    return [
-        F.min(
-            F.md5(F.concat(F.lit(str(i)), F.lit("|"), F.col(shingle_col)))
-        ).alias(f"__mh{i}")
-        for i in range(num_hashes)
-    ]
+def _minhash_hex(batch, num_hashes: int):
+    """``(ids, hex)`` of the rows of an Arrow ``(id, sh)`` batch that have
+    a shingle: hex is the (m, H, 32) ASCII of min(md5(i|s)) over the
+    row's shingles s, for i < H — the numpy MD5 kernel, byte-identical to
+    the SQL ``_minhash_array``."""
+    valid, dig = K.md5_min_digests(
+        batch.column(1), [f"{i}|".encode() for i in range(num_hashes)]
+    )
+    return K.arrow_i64(batch.column(0))[valid], K.hex_digits(dig[valid])
 
 
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_hashes: int = NUM_HASHES, n: int = SHINGLE_N,
 ) -> DataFrame:
-    """(id, mh array<string>) minhash signature table — all JVM
-    expressions, min-aggregated over exploded shingles."""
-    posted = df.select(
+    """(id, mh array<string>) minhash signature table: codegen'd
+    shingles, then one mapInArrow through the numpy MD5 kernel."""
+
+    def sign(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ids, hx = _minhash_hex(b, num_hashes)
+            mh = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (len(ids) + 1) * num_hashes, num_hashes,
+                                   dtype=np.int32)),
+                K.ascii_strings(hx.reshape(-1, 32)),
+            )
+            yield pa.RecordBatch.from_arrays([pa.array(ids), mh], ["id", "mh"])
+
+    return df.select(
         F.col(id_col).cast("bigint").alias("id"),
-        F.explode(shingles(F.col(text_col), n)).alias("s"),
-    )
-    g = posted.groupBy("id").agg(*_minhash_min_aggs(num_hashes))
-    return g.select(
-        "id", F.array(*[F.col(f"__mh{i}") for i in range(num_hashes)]).alias("mh")
-    )
+        shingles(F.col(text_col), n).alias("sh"),
+    ).mapInArrow(sign, "id bigint, mh array<string>")
 
 
 def minhash_lsh_pairs(
@@ -225,10 +239,19 @@ def minhash_lsh_pairs(
     """Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
 
     Plan shape (the 100 TB path):
-      1. signatures: one scan, no shuffle (JVM expressions only)
-      2. bands: explode H/b band keys per doc → groupBy band bucket —
-         shuffle keyed on md5 band key (uniform, skew-free by construction)
-      3. candidate pairs: self-join *within buckets only*
+      1. shingles: one scan, codegen'd regex, checkpointed once (they
+         feed the band keys and both verify joins)
+      2. band keys: ONE mapInArrow over (id, sh) runs the numpy MD5
+         kernel — H minhashes min(md5(i|s)), then b band keys
+         md5(concat of a band's minhashes) — and emits (id, bucket)
+         rows; no explode, no per-hash aggregate, nothing persisted
+      3. candidate pairs: groupBy bucket → sorted id set → its (a < b)
+         pairs, streamed by posexplode + explode → dropDuplicates — one
+         shuffle keyed on the md5 band key, never a self-join. Keys
+         spread uniformly, but a cluster of k identical documents puts
+         all k in the same bucket of every band: that group is one
+         task holding k ids and emitting k(k-1)/2 pairs per band (the
+         pairs themselves are output, so no plan avoids them)
       4. verify: exact Jaccard on the candidates' shingle sets — touches
          only candidate pairs, never all O(n²) pairs.
 
@@ -244,44 +267,39 @@ def minhash_lsh_pairs(
             F.col(id_col).cast("bigint").alias("id"),
             shingles(F.col(text_col), n).alias("sh"),
         )
-        # shingle sets feed the signature aggregation AND the two verify
-        # joins below; materialize once
+        # shingle sets feed the band keys AND the two verify joins
+        # below; materialize once
         .localCheckpoint(eager=False)
     )
-    # signatures via codegen min-aggregates over exploded shingles
-    # (bit-identical to the HOF transform form, ~2× faster; the groupBy
-    # collapses map-side since a doc's shingles stay in its input task)
-    posted = sh.select("id", F.explode("sh").alias("s"))
-    sig = posted.groupBy("id").agg(*_minhash_min_aggs(num_hashes))
-    # band key b = md5(mh[b*rows] || ... || mh[b*rows+rows-1])
-    bands = [
-        F.md5(
-            F.concat_ws(
-                "", *[F.col(f"__mh{b * rows + r}") for r in range(rows)]
+
+    def band_keys(batches):
+        import hashlib
+
+        import pyarrow as pa
+
+        for b in batches:
+            ids, hx = _minhash_hex(b, num_hashes)
+            # band key b = md5(mh[b*rows] || ... || mh[b*rows+rows-1])
+            msgs = hx[:, : num_bands * rows].reshape(-1, rows * 32)
+            keys = [hashlib.md5(m).hexdigest() for m in msgs]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(ids, num_bands)), pa.array(keys, pa.string())],
+                ["id", "bucket"],
             )
-        )
-        for b in range(num_bands)
-    ]
-    # bucket join on (id, bucket) ONLY — don't drag the shingle arrays
-    # through the band shuffle; candidates are deduped as bare id pairs
-    # materialize the banded signature table ONCE (bounded localCheckpoint
-    # inside the operator, the nsg cells-assign pattern): without it both
-    # sides of the self-join recompute the whole explode -> md5 -> 12
-    # min-aggregates subtree. r13 measured that duplication "free on idle
-    # cores" and reverted a forced-SHJ fix (serial AQE stage barriers),
-    # but VERDICT r13 #1 showed the assumption breaks exactly when it
-    # matters: on a bandwidth-collapsed 32-way day minhash ran 2x SLOWER
-    # at 32 cores than at 8 (4.34 vs 2.27 s). Checkpointing kills the
-    # duplicate subtree without forcing a join strategy, so the planner
-    # stays scale-adaptive (guide §2.4/§5).
-    banded = sig.select(
-        "id", F.explode(F.array(*bands)).alias("bucket")
-    ).persist()
-    a = banded.alias("a")
-    b = banded.alias("b")
+
+    # candidates from one grouped pass over the (id, bucket) table: each
+    # bucket's sorted id set yields its (a < b) pairs — the band table
+    # has one consumer, so it is computed once without being persisted.
+    # The pairs are streamed by two explodes (each id against the ids
+    # after it), so no row ever holds more than one bucket's id set
+    ids = F.col("ids")
     cands = (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        sh.mapInArrow(band_keys, "id bigint, bucket string")
+        .groupBy("bucket")
+        .agg(F.array_sort(F.collect_set("id")).alias("ids"))
+        .filter(F.size(ids) > 1)
+        .select(F.posexplode(ids).alias("i", "id_a"), ids)
+        .select("id_a", F.explode(F.slice(ids, F.col("i") + 2, F.size(ids))).alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     # verification joins fetch the shingle sets only for candidate pairs
@@ -913,49 +931,50 @@ def dedup_components(
     at any corpus size. Each round is checkpointed so lineage stays flat
     (Spark re-executes exponentially otherwise).
 
-    Termination: stop when a round changes no label (count of changed
-    rows — cheap, the frame is already materialized by the checkpoint).
+    Each round is one join and one aggregate: the edge list carries a
+    self-loop per node, so a node's new label min(rep) over its
+    neighbourhood and its old label (the self-loop's) come from the same
+    group. The first round needs no join (every label is still the node
+    itself: rep = least(src, min(dst))). Termination: stop when a round
+    changes no label — a flag column on the checkpointed frame, read
+    with ``filter(chg).limit(1)``.
     """
-    # undirected edge list, both directions + self-loop keeps singletons
-    e = pairs.select(
-        F.col(id_a_col).cast("bigint").alias("src"),
-        F.col(id_b_col).cast("bigint").alias("dst"),
-    )
+    # undirected edge list, both directions + self-loops, from ONE scan
+    # of the pairs (they are often an unmaterialized pairer plan)
+    a = F.col(id_a_col).cast("bigint")
+    b = F.col(id_b_col).cast("bigint")
     edges = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select("src")
-        .distinct()
-        .select("src", F.col("src").alias("rep"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        # candidate label per node: min over self and neighbors' labels
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("src", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("rep").alias("nrep"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "src", "left")
-            .select(
-                "src",
-                F.least(F.col("rep"), F.coalesce("nrep", F.col("rep"))).alias("rep"),
+        pairs.select(
+            F.inline(
+                F.array(
+                    *[
+                        F.struct(s.alias("src"), d.alias("dst"))
+                        for s, d in ((a, b), (b, a), (a, a), (b, b))
+                    ]
+                )
             )
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    if max_iter < 1:
+        # no rounds: every node is its own representative
+        return edges.select(F.col("src").alias("id"), F.col("src").alias("rep_id")).distinct()
+    # (src, dst, rep = the current label of dst)
+    nbr = edges.withColumn("rep", F.col("dst"))
+    for _ in range(max_iter):
+        labels = (
+            nbr.groupBy("src")
+            .agg(
+                F.min("rep").alias("rep"),
+                F.max(F.when(F.col("dst") == F.col("src"), F.col("rep"))).alias("old"),
+            )
+            .select("src", "rep", (F.col("rep") < F.col("old")).alias("chg"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "src")
-            .filter(F.col("n.rep") != F.col("o.rep"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if labels.filter("chg").limit(1).count() == 0:
             break
+        nbr = edges.join(labels.select(F.col("src").alias("dst"), "rep"), "dst")
     return labels.select(F.col("src").alias("id"), F.col("rep").alias("rep_id"))
 
 

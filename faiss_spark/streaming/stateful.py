@@ -205,7 +205,7 @@ def neardup_stream(
     Plan constraints drive the shape: Structured Streaming allows ONE
     stateful operator per query, so signatures come from the pure
     higher-order-function form (``dedup._minhash_array`` — per-row
-    expressions, bit-identical to the batch codegen aggregates and
+    expressions, bit-identical to the batch numpy MD5 kernel and
     pinned so in tests), never a groupBy aggregation; the single
     stateful op is the per-bucket keep-first fold, whose state is one
     bigint (the claimant id) per touched bucket — the minimum state

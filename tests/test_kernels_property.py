@@ -1,10 +1,16 @@
 """Property-based tests for the numpy kernel layer (no Spark session —
-fast): TopKAccumulator vs full sort, metric identities."""
+fast): TopKAccumulator vs full sort, metric identities, the MD5 kernel
+vs hashlib."""
+
+import hashlib
 
 import numpy as np
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from faiss_spark import kernels
 from faiss_spark.kernels import TopKAccumulator, pairwise_distances
 
 matrices = st.integers(min_value=1, max_value=12)
@@ -362,3 +368,98 @@ def test_running_bound_multi_push_is_exact(
         order = np.lexsort((ids, key))[:k]
         assert list(got_ids[qidx == q]) == list(ids[order])
         assert np.allclose(got_d[qidx == q], D[q][order], atol=1e-12)
+
+
+# ------------------------------------------- MD5 kernel (MinHash signatures)
+
+#: the MinHash prefixes "0|".."11|" plus prefixes that fill a whole word
+#: and spill into the second one
+MD5_PREFIXES = [f"{i}|".encode() for i in range(12)] + [b"123|", b"12345|"]
+
+
+def _hashlib_min_hex(rows, prefixes):
+    """Reference: per row, per prefix, min of hashlib md5(p + s) hex over
+    the row's non-null elements; None when the row has none."""
+    out = []
+    for row in rows:
+        vals = [s.encode() if isinstance(s, str) else s
+                for s in (row or []) if s is not None]
+        out.append([min(hashlib.md5(p + s).hexdigest() for s in vals)
+                    for p in prefixes] if vals else None)
+    return out
+
+
+def _kernel_min_hex(arr, prefixes):
+    valid, dig = kernels.md5_min_digests(arr, prefixes)
+    hx = kernels.hex_digits(dig)
+    return [[hx[r, k].tobytes().decode() for k in range(len(prefixes))]
+            if valid[r] else None for r in range(len(valid))]
+
+
+@pytest.mark.parametrize("chunk", [3, 1 << 15])
+def test_md5_min_digests_random_bytes_across_block_edge(chunk, monkeypatch):
+    """Random byte strings of 0-200 bytes: the prefixed message crosses
+    the 55-byte single-block edge (long ones take the hashlib branch);
+    a tiny chunk size splits rows over many chunks."""
+    monkeypatch.setattr(kernels, "_MD5_CHUNK", chunk)
+    rng = np.random.default_rng(7)
+    rows = []
+    for _ in range(120):
+        k = int(rng.integers(1, 8))
+        rows.append([rng.integers(0, 256, int(rng.choice(
+            [rng.integers(0, 60), rng.integers(45, 60), rng.integers(0, 201)])),
+            dtype=np.uint8).tobytes() for _ in range(k)])
+    # every length around the edge, for every prefix length
+    rows += [[bytes([97 + L % 26]) * L] for L in range(48, 60)]
+    arr = pa.array(rows, pa.list_(pa.binary()))
+    assert _kernel_min_hex(arr, MD5_PREFIXES) == _hashlib_min_hex(
+        rows, MD5_PREFIXES)
+
+
+def test_md5_min_digests_multibyte_utf8():
+    words = ["é", "日本語", "ß", "😀", "naïve", "ω", "a", "zz"]
+    rng = np.random.default_rng(3)
+    rows = [[" ".join(rng.choice(words, int(rng.integers(1, 25))))
+             for _ in range(int(rng.integers(1, 6)))] for _ in range(60)]
+    arr = pa.array(rows, pa.list_(pa.string()))
+    assert _kernel_min_hex(arr, MD5_PREFIXES) == _hashlib_min_hex(
+        rows, MD5_PREFIXES)
+
+
+def test_md5_min_digests_nulls_empty_lists_and_slices():
+    rows = [["a b c", "x"], None, [], ["q", None], [None], [""],
+            ["dup", "dup"], ["w" * 70, "v"], None, ["m n o", "p q r"]]
+    prefixes = MD5_PREFIXES[:12]
+    want = _hashlib_min_hex(rows, prefixes)
+    for typ in (pa.list_(pa.string()), pa.large_list(pa.large_string())):
+        arr = pa.array(rows, typ)
+        assert _kernel_min_hex(arr, prefixes) == want
+        # sliced list arrays keep absolute offsets into their values
+        assert _kernel_min_hex(arr.slice(3, 5), prefixes) == want[3:8]
+        # a chunked column, and a list over a sliced values array
+        chunked = pa.chunked_array([arr.slice(0, 4), arr.slice(4)])
+        assert _kernel_min_hex(chunked, prefixes) == want
+    values = pa.array(["zz", "a b c", "x", "q", None])
+    sliced = pa.ListArray.from_arrays(pa.array([0, 2, 2, 4], pa.int32()),
+                                      values.slice(1))
+    assert _kernel_min_hex(sliced, prefixes) == _hashlib_min_hex(
+        [["a b c", "x"], [], ["q", None]], prefixes)
+    assert _kernel_min_hex(pa.array([], pa.list_(pa.string())), prefixes) == []
+
+
+@settings(max_examples=40, deadline=None)
+@given(seed=st.integers(0, 10_000), n=st.integers(1, 300),
+       nseg=st.integers(1, 40))
+def test_pair_min_reduceat_resolves_first_word_ties(seed, n, nseg):
+    """The per-row minimum compares 16-byte digests as (first 8 bytes,
+    last 8 bytes); with hi drawn from 3 values nearly every segment has
+    ties in hi, which the lo column must break exactly."""
+    rng = np.random.default_rng(seed)
+    hi = rng.integers(0, 3, n).astype(np.uint64) + np.uint64(2**63)
+    lo = rng.integers(0, 2**63, n, dtype=np.int64).astype(np.uint64) * 2
+    starts = np.unique(np.r_[0, rng.integers(0, n, nseg - 1)])
+    mh, ml = kernels.pair_min_reduceat(hi, lo, starts)
+    ends = np.r_[starts[1:], n]
+    for j, (s, e) in enumerate(zip(starts, ends)):
+        assert (int(mh[j]), int(ml[j])) == min(
+            zip(hi[s:e].tolist(), lo[s:e].tolist()))

@@ -167,8 +167,9 @@ def test_neardup_stream_matches_batch_bands(spark, tables, tmp_path):
         spark, src, docs.schema, lambda s: neardup_stream(s), tmp_path
     )
     got = {(r["bucket"], r["doc_id"], r["dup_of"]) for r in rows}
-    # batch twin: band table from the codegen signature path (pinned
-    # bit-identical to the streaming HOF path), keep-first per bucket
+    # batch twin: band table from minhash_signatures (the numpy MD5
+    # kernel), keep-first per bucket — this pins the kernel against the
+    # streaming HOF form, the independent JVM reference
     sig = minhash_signatures(docs)
     rows_per_band = 3
     bands = [

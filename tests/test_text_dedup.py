@@ -1,5 +1,10 @@
 """Text analysis + dedup operators vs DuckDB oracle on the documents table."""
 
+import hashlib
+import re
+from itertools import combinations
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,20 +49,46 @@ def test_token_count_matches_duckdb(tables, oracle):
     assert got == expect
 
 
-def test_shingles_match_duckdb(tables, oracle):
-    got = {
-        (r["doc_id"], tuple(sorted(r["sh"])))
-        for r in tables["documents"]
-        .select("doc_id", T.shingles(F.col("text")).alias("sh"))
-        .collect()
-    }
-    expect = {
-        (r[0], tuple(sorted(r[1])))
-        for r in oracle.execute(
-            f"SELECT doc_id, {duck_shingles()} AS sh FROM documents"
-        ).fetchall()
-    }
-    assert got == expect
+# edge documents for the shingle twin: empty, whitespace-only, a leading
+# tab, fewer than n tokens, repeated grams, multi-byte text (no \v or
+# NBSP: DuckDB's \s and trim() treat those differently from Java's)
+EDGE_DOCS = [
+    "", " ", "\t", "  \n ", "\tleading tab then words here", "one",
+    "two words", "a b a b a b a b", "x  y\n z ", "Héllo wörld ñ 日本 語",
+    "a b c d e f g", "end with space ",
+]
+
+
+def test_shingles_match_duckdb(tables, oracle, spark):
+    """Same shingle sets as the DuckDB twin for n in {1, 2, 3, 5}, on the
+    documents table and on edge documents; NULL text gives [""]."""
+    import pyarrow as pa
+
+    edge = [(10_000 + i, t) for i, t in enumerate(EDGE_DOCS)]
+    oracle.register("edge_docs", pa.table({
+        "doc_id": pa.array([i for i, _ in edge], pa.int64()),
+        "text": pa.array([t for _, t in edge]),
+    }))
+    docs = tables["documents"].select("doc_id", "text").unionByName(
+        spark.createDataFrame(edge + [(20_000, None)], "doc_id bigint, text string")
+    )
+    for n in (1, 2, 3, 5):
+        got = {
+            (r["doc_id"], tuple(sorted(r["sh"])))
+            for r in docs.select(
+                "doc_id", T.shingles(F.col("text"), n).alias("sh")
+            ).collect()
+        }
+        expect = {
+            (r[0], tuple(sorted(r[1])))
+            for r in oracle.execute(
+                f"SELECT doc_id, {duck_shingles(n)} AS sh FROM documents "
+                f"UNION ALL SELECT doc_id, {duck_shingles(n)} FROM edge_docs"
+            ).fetchall()
+        } | {(20_000, ("",))}
+        assert got == expect, n
+        # distinct per document
+        assert all(len(sh) == len(set(sh)) for _, sh in got)
 
 
 def test_exact_dedup_counts(tables, oracle):
@@ -125,6 +156,112 @@ def test_minhash_lsh_finds_exact_dups(tables):
     assert n_groups > 0, "testdata should contain exact dups"
 
 
+def _py_shingles(text, n=3):
+    """Python twin of functions.text.shingles (Spark's trim strips spaces
+    only; Java's \\s is [ \\t\\n\\x0B\\f\\r])."""
+    if text is None:
+        return {""}
+    toks = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower().strip(" ")).split(" ")
+    if len(toks) < n:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _py_minhash_lsh_pairs(docs, threshold, num_hashes=12, num_bands=4, n=3):
+    """hashlib reference of minhash_lsh_pairs: min md5(i|s) signatures,
+    md5 band keys, bucket-mates verified by exact Jaccard."""
+    rows = num_hashes // num_bands
+    sh = {i: _py_shingles(t, n) for i, t in docs}
+    buckets = {}
+    for i, s in sh.items():
+        mh = [min(hashlib.md5(f"{h}|{g}".encode()).hexdigest() for g in s)
+              for h in range(num_hashes)]
+        for b in range(num_bands):
+            key = hashlib.md5("".join(mh[b * rows:(b + 1) * rows]).encode())
+            buckets.setdefault(key.hexdigest(), set()).add(i)
+    out = {}
+    for ids in buckets.values():
+        for a, b in combinations(sorted(ids), 2):
+            j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def _zipf_corpus(seed=11, n_docs=240, vocab=400):
+    """Zipf word documents plus planted near-duplicates at a spread of
+    word-substitution rates (so some pairs straddle the threshold and
+    some are missed by the bands), short docs and a repeated-gram doc."""
+    rng = np.random.default_rng(seed)
+    words = np.array([f"w{i}" for i in range(vocab)])
+    p = 1.0 / np.arange(1, vocab + 1)
+    p /= p.sum()
+    docs = [rng.choice(vocab, int(rng.integers(12, 60)), p=p) for _ in range(n_docs)]
+    for k, src in enumerate(rng.choice(n_docs, n_docs // 4, replace=False).tolist()):
+        w = docs[src].copy()
+        hit = rng.random(len(w)) < (0.0, 0.03, 0.08, 0.15, 0.3)[k % 5]
+        w[hit] = rng.choice(vocab, int(hit.sum()), p=p)
+        docs.append(w)
+    texts = [" ".join(words[d].tolist()) for d in docs]
+    texts += ["w1", "w1 w2", "W1  w2", "w3 w4 w3 w4 w3 w4", ""]
+    order = rng.permutation(len(texts))
+    return [(int(i), texts[j]) for i, j in enumerate(order)]
+
+
+def test_minhash_lsh_pairs_match_python_reference(spark):
+    """minhash_lsh_pairs == the hashlib reference on a seeded Zipf corpus
+    with planted near-duplicates; the executed plan computes the band
+    table in one MapInArrow (no SortAggregate), and the call leaves at
+    most one persisted RDD behind (its shingle checkpoint)."""
+    docs = _zipf_corpus()
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    want = _py_minhash_lsh_pairs(docs, threshold=0.5)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    pairs = D.minhash_lsh_pairs(df, threshold=0.5)
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert len(want) > 20
+    assert got.keys() == want.keys()
+    for k, v in want.items():
+        assert got[k] == pytest.approx(v)
+    final = pairs._jdf.queryExecution().executedPlan().toString().split(
+        "Initial Plan")[0]
+    assert final.count("MapInArrow") == 1
+    assert "SortAggregate" not in final
+
+
+def test_minhash_lsh_pairs_large_duplicate_cluster(spark):
+    """Clusters of identical documents put every member in the same bucket
+    of every band: 1,200 copies of one page and 800 empty or NULL docs
+    (shingle set [""]) yield every within-cluster pair once, at jaccard 1,
+    and nothing across clusters."""
+    page = "the same boilerplate footer on every page of the site"
+    texts = [page] * 1200 + [""] * 400 + [None] * 400 + ["a b c d", "e f g h"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    got = (
+        D.minhash_lsh_pairs(df, threshold=0.5)
+        .agg(F.count("*").alias("n"), F.min("jaccard").alias("lo"),
+             F.sum(((F.col("id_a") < 1200) != (F.col("id_b") < 1200)).cast("int"))
+             .alias("cross"))
+        .first()
+    )
+    assert got["n"] == 1200 * 1199 // 2 + 800 * 799 // 2
+    assert got["lo"] == 1.0 and got["cross"] == 0
+
+
+def test_minhash_signatures_match_python_reference(spark):
+    docs = _zipf_corpus(seed=5, n_docs=40)
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    got = {r["id"]: r["mh"] for r in D.minhash_signatures(df).collect()}
+    want = {
+        i: [min(hashlib.md5(f"{h}|{g}".encode()).hexdigest()
+                for g in _py_shingles(t)) for h in range(12)]
+        for i, t in docs
+    }
+    assert got == want
+
+
 def test_ngram_jaccard_matches_minhash_verified_jaccard(tables):
     """Both operators compute the same exact jaccard for shared pairs."""
     docs = tables["documents"].limit(200)
@@ -174,6 +311,39 @@ def test_dedup_components_chains_and_singletons(spark):
         10: 10, 11: 10,
         20: 20, 21: 20, 22: 20, 23: 20,
     }
+
+
+def test_dedup_components_match_union_find(spark):
+    """Random forest-plus-cycles graph with long chains (many rounds):
+    labels equal a union-find reference's component minima; max_iter
+    caps the rounds."""
+    from faiss_spark.operators.dedup import dedup_components
+
+    rng = np.random.default_rng(4)
+    edges = [(i, i + 1) for i in range(0, 30)]  # a 31-node path
+    edges += [tuple(sorted(rng.choice(np.arange(100, 220), 2, replace=False).tolist()))
+              for _ in range(90)]
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+    pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    got = {r["id"]: r["rep_id"] for r in dedup_components(pairs, max_iter=40).collect()}
+    assert got == want
+    # one round only: every node adopts its neighbourhood minimum
+    one = {r["id"]: r["rep_id"] for r in dedup_components(pairs, max_iter=1).collect()}
+    assert one[30] == 29 and one[0] == 0
+    # no rounds: every node is its own representative
+    zero = {r["id"]: r["rep_id"] for r in dedup_components(pairs, max_iter=0).collect()}
+    assert zero == {x: x for x in want}
 
 
 def test_dedup_components_on_minhash_pairs(tables):
