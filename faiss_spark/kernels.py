@@ -620,8 +620,9 @@ class TopKAccumulator:
         kk = min(self.k, m)
         if m > 2 * kk:
             # The exact per-row kth via introselect is the dominant pass
-            # of the scan at large m (measured ~5× the GEMM per push,
-            # tools/f32_profile.py r11). A SUBSET's kth order statistic
+            # of the scan at large m (measured ~5× the GEMM per push by
+            # tools/f32_profile.py in r11, since removed; the finding is
+            # in SCALE.md). A SUBSET's kth order statistic
             # is ≥ the full row's kth, so the kth of every 16th column
             # is a valid loose threshold: masking ≤ t̂ keeps a SUPERSET
             # of the exact ≤-kth set (ties at the true kth included),

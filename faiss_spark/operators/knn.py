@@ -83,11 +83,18 @@ def _scan_partitions(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
+    d: int,
     make_emit,
 ):
     """Arrow-native scan of the vector table; ``make_emit`` builds the
     per-partition handler: it receives an iterator of ``(X, ids)`` blocks
     and yields result pandas frames with ``_RESULT_SCHEMA`` columns.
+
+    ``d`` is the queries' dimension. A corpus vector of any other length
+    fails the job in the JVM with a message naming both dimensions,
+    before the batch reaches the worker: the reshape below assumes every
+    row of a batch has d components, so a ragged batch would otherwise
+    shift into wrong rows and a short one into an IndexError.
 
     mapInArrow, not mapInPandas: the Arrow list<float> column's values
     buffer IS the row-major matrix, so ``flatten().reshape`` hands numpy
@@ -121,8 +128,19 @@ def _scan_partitions(
                 pdf, schema=out_schema, preserve_index=False
             )
 
+    vec = F.col(vec_col)
     src = vectors.select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
+        F.col(id_col).cast("bigint").alias("id"),
+        F.when(F.size(vec) == d, vec)
+        .otherwise(
+            F.raise_error(
+                F.format_string(
+                    f"corpus vector has %d components but the queries have d={d}",
+                    F.size(vec),
+                )
+            )
+        )
+        .alias("vec"),
     )
     # CPU-bound scan: when the source is a handful of splits (small local
     # files), fan it out across cores first. At cluster scale real tables
@@ -200,7 +218,7 @@ def knn(
             {"qid": qids_[qidx[finite]], "id": nid[finite], "dist": nd[finite]}
         )
 
-    candidates = _scan_partitions(vectors, id_col, vec_col, scan)
+    candidates = _scan_partitions(vectors, id_col, vec_col, Q.shape[1], scan)
     order = [F.col("dist").desc() if largest else F.col("dist").asc(), F.col("id").asc()]
     w = Window.partitionBy("qid").orderBy(*order)
     return (
@@ -253,7 +271,7 @@ def range_search(
                     }
                 )
 
-    return _scan_partitions(vectors, id_col, vec_col, scan)
+    return _scan_partitions(vectors, id_col, vec_col, Q.shape[1], scan)
 
 
 def knn_join(

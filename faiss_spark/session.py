@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory that holds the ``faiss_spark`` package, put on the
+#: workers' PYTHONPATH so they import it whatever the driver's cwd
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -98,6 +102,17 @@ def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSe
         # the arithmetic). With a high threshold the same pages recycle.
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "1073741824")
+        # fork Python workers from faiss_spark.worker_daemon, which stops
+        # every task from re-reading the central directories of pyspark.zip
+        # and the py4j zip (pyspark invalidates import caches once per
+        # task; CPython < 3.13 zipimport re-reads the archive on each call)
+        # and then runs pyspark's own daemon: measured a median 225 ms off
+        # every Python task, 0.37 -> 0.16 s for a trivial 4-task mapInArrow
+        # on 4 vCPUs (SCALE.md, "Python worker start per task"). The daemon
+        # must import from any cwd, hence the package root on the workers'
+        # PYTHONPATH (local[N]: the driver's path is the workers' path).
+        .config("spark.python.daemon.module", "faiss_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

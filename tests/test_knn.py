@@ -158,3 +158,55 @@ def test_brute_force_query_collect_is_bounded(vectors, queries, monkeypatch):
     # within budget: unchanged behavior
     monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 32_000_000)
     assert knn(vectors, queries, K).count() == NQ * K
+
+
+@pytest.mark.parametrize("case", ["short_queries", "ragged_corpus"])
+@pytest.mark.parametrize("op", ["knn", "range_search"])
+def test_wrong_dimension_fails_with_message(spark, op, case):
+    """A corpus vector whose length differs from the queries' d fails the
+    job with a message naming both dimensions, raised by the JVM-side size
+    guard before any Python worker reshapes the batch — never a worker
+    IndexError, and never silently shifted rows."""
+    from pyspark.errors import PythonException
+
+    if case == "short_queries":
+        corpus = spark.createDataFrame(
+            [(i, [float(i)] * 8) for i in range(8)], "id bigint, vec array<double>"
+        )
+        qs = spark.createDataFrame([(0, [0.1] * 5)], "qid bigint, vec array<double>")
+        msg = "8 components but the queries have d=5"
+    else:
+        # an 8-d corpus whose one Arrow batch also holds a 7-d and a 9-d row
+        rows = [(i, [float(i)] * 8) for i in range(6)]
+        rows += [(6, [1.0] * 7), (7, [2.0] * 9)]
+        corpus = spark.createDataFrame(
+            rows, "id bigint, vec array<double>"
+        ).coalesce(1)
+        qs = spark.createDataFrame([(0, [1.0] * 8)], "qid bigint, vec array<double>")
+        msg = "[79] components but the queries have d=8"
+    with pytest.raises(Exception, match=msg) as ei:
+        if op == "knn":
+            knn(corpus, qs, 3).collect()
+        else:
+            range_search(corpus, qs, radius=1e9).collect()
+    assert not isinstance(ei.value, PythonException)
+
+
+def test_knn_k_above_corpus_size_returns_every_row_unpadded(spark):
+    """The documented no-padding contract: k > ntotal returns ntotal rows
+    per query, ranked 1..ntotal, with no faiss-style -1 pad rows."""
+    rng = np.random.default_rng(0)
+    corpus = spark.createDataFrame(
+        [(i, rng.standard_normal(4).tolist()) for i in range(20)],
+        "id bigint, vec array<double>",
+    )
+    qs = spark.createDataFrame(
+        [(q, rng.standard_normal(4).tolist()) for q in range(3)],
+        "qid bigint, vec array<double>",
+    )
+    rows = knn(corpus, qs, 50).collect()
+    assert len(rows) == 3 * 20
+    for q in range(3):
+        got = [r for r in rows if r["qid"] == q]
+        assert sorted(r["rank"] for r in got) == list(range(1, 21))
+        assert sorted(r["id"] for r in got) == list(range(20))

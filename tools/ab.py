@@ -4,8 +4,8 @@ worktree (default: the revision the round started from).
 Each arm runs the chosen bench queries ALONE in a fresh subprocess and
 session from its own checkout, warm-up + best-of-2 per draw, arm order
 alternating per round so contention windows hit both arms equally (the
-nsg_ab protocol — the chronic bench-weather defence; SCALE.md records
-the dedup_minhash_lsh A/B run this way).
+protocol of the removed tools/nsg_ab.py — the chronic bench-weather
+defence; SCALE.md records the dedup_minhash_lsh A/B run this way).
 
 Special names (bench sub-sections, not headline queries):
   graph_bucketed  -> knn_graph_bucketed at the bench shape (600k, f32)
