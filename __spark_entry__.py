@@ -1399,9 +1399,9 @@ def q_pq_sdc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries); (2) end-to-end recall vs exact knn ≥ 0.5 (below ADC's
     0.6 bound: quantizing the query side too costs recall, exactly as the
     reference's SDC-vs-ADC tables show)."""
+    import numpy as np
     import pandas as pd
 
-    from faiss_spark.kernels import as_matrix
     from faiss_spark.operators.codecs import ProductQuantizer
 
     vecs = _emb(spark, sf_dir)
@@ -1410,7 +1410,8 @@ def q_pq_sdc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = model.encode(vecs)
     sdc = model.sdc_search(codes, qs, K).select("qid", "id")
     qp = qs.toPandas()
-    Qd = model.decode_np(model.encode_np(as_matrix(qp["vec"]))).astype("float32")
+    Q = np.stack(qp["vec"]).astype(np.float64)
+    Qd = model.decode_np(model.encode_np(Q)).astype("float32")
     # plain Python rows + explicit schema: must not depend on the SESSION's
     # Arrow / schema-inference config (a driver-owned session may not have
     # the repo's Arrow settings, and ndarray columns then fail inference)
@@ -1536,7 +1537,6 @@ def q_ivfaq_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from faiss_spark.kernels import as_matrix
     from faiss_spark.operators.fastscan import IVFAQFastScanIndex
 
     vecs = _emb(spark, sf_dir)
@@ -1547,7 +1547,7 @@ def q_ivfaq_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx.codes = idx.codes.localCheckpoint()
     fs = idx.search(qs, K, nprobe=16).select("qid", "id")
     qp = qs.toPandas()
-    Q = as_matrix(qp["vec"])
+    Q = np.stack(qp["vec"]).astype(np.float64)
     allp = idx.codes.toPandas()
     ids = allp["id"].to_numpy("int64")
     lists = allp["list_no"].to_numpy("int64")
@@ -1697,7 +1697,6 @@ def q_aq_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥ 0.8; (2) recall vs exact knn ≥ 0.3."""
     import numpy as np
 
-    from faiss_spark.kernels import as_matrix
     from faiss_spark.operators.fastscan import (
         aq_fastscan_encode,
         aq_fastscan_search,
@@ -1711,7 +1710,7 @@ def q_aq_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs = aq_fastscan_search(model, codes_df, qs, K).select("qid", "id")
     # float twin of the same approximation, driver-side
     qp = qs.toPandas()
-    Q = as_matrix(qp["vec"])
+    Q = np.stack(qp["vec"]).astype(np.float64)
     allp = codes_df.toPandas()
     ids = allp["id"].to_numpy("int64")
     codes = np.stack([np.frombuffer(c, np.uint8) for c in allp["code"]])

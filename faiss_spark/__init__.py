@@ -11,8 +11,8 @@ Design (see SURVEY.md):
   artifact (centroids / codebooks / transform matrices) — never a server
   object.
 - Distances are declared with built-in SQL expressions where exactness vs
-  a SQL oracle matters, and computed with numpy GEMM inside Arrow-batched
-  ``mapInPandas`` on the hot path (mirrors faiss's BLAS brute-force path,
+  a SQL oracle matters, and computed with numpy GEMM inside
+  ``mapInArrow`` on the hot path (mirrors faiss's BLAS brute-force path,
   reference faiss/utils/distances.cpp:271-354).
 - Top-k is per-partition bounded selection + a small global merge
   (reference faiss/python/extra_wrappers.py:136-174 ResultHeap semantics).

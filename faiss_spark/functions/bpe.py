@@ -23,8 +23,8 @@ Scale design (the part that matters at 100 TB):
 * The word table is localCheckpoint'ed per iteration so the plan stays
   flat instead of nesting ``num_merges`` fold expressions.
 * ``bpe_encode`` applies a learned merge table to documents via ONE
-  Arrow-batched mapInPandas with the ranks dict broadcast and a
-  per-batch word memo — map-only, no shuffle.
+  mapInArrow with the ranks dict broadcast and a per-task word memo —
+  map-only, no shuffle.
 
 Determinism: pair argmax ties break lexicographically on (left, right),
 so the learned merge sequence is a pure function of the word counts —
@@ -254,12 +254,10 @@ def bpe_encode(
     end_of_word: str = END_OF_WORD,
 ) -> DataFrame:
     """Tokenize documents with a learned merge table: (id, bpe_tokens,
-    n_bpe_tokens). ONE Arrow-batched mapInPandas — the ranks dict
-    (num_merges entries) is broadcast, encoded words are memoized per
-    batch (Zipf makes the memo hit rate high), no shuffle: the encode
-    is map-only at any corpus scale."""
-    import pandas as pd
-
+    n_bpe_tokens). ONE mapInArrow — the ranks dict (num_merges
+    entries) is broadcast, encoded words are memoized per task (Zipf
+    makes the memo hit rate high), no shuffle: the encode is map-only
+    at any corpus scale."""
     spark = df.sparkSession
     ranks = {(m.left, m.right): m.rank for m in merges}
     bc = spark.sparkContext.broadcast(ranks)
@@ -271,11 +269,13 @@ def bpe_encode(
     )
 
     def encode(batches):
+        import pyarrow as pa
+
         rk = bc.value
         memo: dict = {}
-        for pdf in batches:
+        for b in batches:
             toks_out = []
-            for words in pdf["words"]:
+            for words in b.column(1).to_pylist():
                 doc: list = []
                 for w in words:
                     if w == "":
@@ -285,14 +285,15 @@ def bpe_encode(
                         got = memo[w] = _encode_word(w, rk, eow)
                     doc.extend(got)
                 toks_out.append(doc)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "bpe_tokens": toks_out,
-                    "n_bpe_tokens": [len(t) for t in toks_out],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(0),
+                    pa.array(toks_out, pa.list_(pa.string())),
+                    pa.array([len(t) for t in toks_out], pa.int32()),
+                ],
+                names=["id", "bpe_tokens", "n_bpe_tokens"],
             )
 
-    return src.mapInPandas(
+    return src.mapInArrow(
         encode, "id bigint, bpe_tokens array<string>, n_bpe_tokens int"
     )

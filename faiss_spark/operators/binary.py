@@ -20,10 +20,7 @@ Distances (reference faiss/utils/hamming.h:113-170, binary_distances.h):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -119,7 +116,7 @@ def binarize_rotated(
         # form, bit-identical codes.
         import pyarrow as pa
 
-        from faiss_spark.kernels import arrow_i64, arrow_list_matrix
+        from faiss_spark.kernels import arrow_i64, arrow_list, arrow_list_matrix
 
         A_, thr = bc.value
         nbits = A_.shape[0]
@@ -139,14 +136,10 @@ def binarize_rotated(
             words = (
                 B.reshape(len(B), nwords, WORD_BITS).astype(np.int64) * weights
             ).sum(2)
-            offs = np.arange(len(words) + 1, dtype=np.int32) * nwords
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(arrow_i64(b.column(0)), pa.int64()),
-                    pa.ListArray.from_arrays(
-                        pa.array(offs, pa.int32()),
-                        pa.array(words.ravel(), pa.int64()),
-                    ),
+                    arrow_list(words),
                 ],
                 ["id", "code"],
             )
@@ -506,19 +499,19 @@ class BinaryIVFIndex:
         ``binary_search_preassigned`` cogroup plan."""
         if self.codes is None:
             raise ValueError("index has no codes table; call add() first")
-        from faiss_spark.operators.ivf import collect_query_frame_bounded
+        from faiss_spark.operators.ivf import collect_queries_bounded
 
-        qpdf = collect_query_frame_bounded(
+        collected = collect_queries_bounded(
             qcodes, qid_col, qcode_col, "binary_ivf_search",
-            d=self.centroid_words.shape[1],
+            d=self.centroid_words.shape[1], dtype=np.int64,
             fallback=lambda: binary_search_preassigned(
                 self, qcodes, k, nprobe=nprobe,
                 qid_col=qid_col, qcode_col=qcode_col,
             ),
         )
-        if isinstance(qpdf, DataFrame):
-            return qpdf
-        qwords = np.stack([np.asarray(w, np.int64) for w in qpdf[qcode_col]])
+        if isinstance(collected, DataFrame):
+            return collected
+        qids, qwords = collected
         nprobe_ = min(nprobe, len(self.centroid_words))
         if self._cgraph is not None:
             order = self._routed_probes(qwords, nprobe_)
@@ -529,8 +522,8 @@ class BinaryIVFIndex:
         # probe table joined on list_no keeps everything JVM-side
         spark = self.codes.sparkSession
         probe_rows = [
-            (int(qpdf[qid_col].iloc[i]), [int(w) for w in qwords[i]], int(c))
-            for i in range(len(qpdf))
+            (int(qids[i]), qwords[i].tolist(), int(c))
+            for i in range(len(qids))
             for c in order[i]
         ]
         probes = spark.createDataFrame(
@@ -562,19 +555,19 @@ class BinaryIVFIndex:
         bound auto-falls-back to binary_range_search_preassigned."""
         if self.codes is None:
             raise ValueError("index has no codes table; call add() first")
-        from faiss_spark.operators.ivf import collect_query_frame_bounded
+        from faiss_spark.operators.ivf import collect_queries_bounded
 
-        qpdf = collect_query_frame_bounded(
+        collected = collect_queries_bounded(
             qcodes, qid_col, qcode_col, "binary_ivf_range_search",
-            d=self.centroid_words.shape[1],
+            d=self.centroid_words.shape[1], dtype=np.int64,
             fallback=lambda: binary_range_search_preassigned(
                 self, qcodes, radius, nprobe=nprobe,
                 qid_col=qid_col, qcode_col=qcode_col,
             ),
         )
-        if isinstance(qpdf, DataFrame):
-            return qpdf
-        qwords = np.stack([np.asarray(w, np.int64) for w in qpdf[qcode_col]])
+        if isinstance(collected, DataFrame):
+            return collected
+        qids, qwords = collected
         nprobe_ = min(nprobe, len(self.centroid_words))
         if self._cgraph is not None:
             order = self._routed_probes(qwords, nprobe_)
@@ -584,8 +577,8 @@ class BinaryIVFIndex:
         probed = sorted({int(c) for c in order.ravel()})
         spark = self.codes.sparkSession
         probe_rows = [
-            (int(qpdf[qid_col].iloc[i]), [int(w) for w in qwords[i]], int(c))
-            for i in range(len(qpdf))
+            (int(qids[i]), qwords[i].tolist(), int(c))
+            for i in range(len(qids))
             for c in order[i]
         ]
         probes = spark.createDataFrame(
@@ -703,10 +696,11 @@ def binary_search_preassigned(
     def scan_cell(key, ptab, ctab):
         from faiss_spark.kernels import (
             TopKAccumulator,
+            _cand_table,
+            _empty_cand_table,
             arrow_i64,
             arrow_list_matrix,
         )
-        from faiss_spark.operators.ivf import _cand_table, _empty_cand_table
 
         if ptab.num_rows == 0 or ctab.num_rows == 0:
             return _empty_cand_table()
@@ -762,11 +756,12 @@ def binary_range_search_preassigned(
 
     def scan_cell(key, ptab, ctab):
         from faiss_spark.kernels import (
+            _cand_table,
+            _empty_cand_table,
             arrow_i64,
             arrow_list_matrix,
             range_pairs,
         )
-        from faiss_spark.operators.ivf import _cand_table, _empty_cand_table
 
         if ptab.num_rows == 0 or ctab.num_rows == 0:
             return _empty_cand_table()
@@ -859,20 +854,19 @@ class BinaryHashIndex:
         a true neighbor differing in > radius prefix bits is missed."""
         if self.codes is None:
             raise ValueError("index has no codes table; call add() first")
-        from faiss_spark.operators.ivf import collect_query_frame_bounded
+        from faiss_spark.operators.ivf import collect_queries_bounded
 
         spark = self.codes.sparkSession
-        qpdf = collect_query_frame_bounded(
-            qcodes, qid_col, qcode_col, "binary_hash_search"
+        qids, qwords = collect_queries_bounded(
+            qcodes, qid_col, qcode_col, "binary_hash_search", dtype=np.int64
         )
         mask = (1 << self.b) - 1
         probe_rows = []
         probed: set[int] = set()
-        for i in range(len(qpdf)):
-            qw = [int(w) for w in qpdf[qcode_col].iloc[i]]
+        for qid, qw in zip(qids.tolist(), qwords.tolist()):
             prefix = qw[0] & mask
             for bkt in self._flips(prefix, self.b, radius):
-                probe_rows.append((int(qpdf[qid_col].iloc[i]), qw, bkt))
+                probe_rows.append((qid, qw, bkt))
                 probed.add(bkt)
         probes = spark.createDataFrame(
             probe_rows, "qid bigint, qcode array<bigint>, bucket int"
@@ -970,18 +964,17 @@ class BinaryMultiHashIndex:
         verify full Hamming once per (query, candidate), top-k."""
         if self.codes is None:
             raise ValueError("index has no codes table; call add() first")
-        from faiss_spark.operators.ivf import collect_query_frame_bounded
+        from faiss_spark.operators.ivf import collect_queries_bounded
 
         spark = self.codes.sparkSession
-        qpdf = collect_query_frame_bounded(
-            qcodes, qid_col, qcode_col, "binary_multihash_search"
+        qids, qwords = collect_queries_bounded(
+            qcodes, qid_col, qcode_col, "binary_multihash_search",
+            dtype=np.int64,
         )
         mask = (1 << self.b) - 1
         probe_rows = []
         probed: set[tuple[int, int]] = set()
-        for i in range(len(qpdf)):
-            qw = [int(w) for w in qpdf[qcode_col].iloc[i]]
-            qid = int(qpdf[qid_col].iloc[i])
+        for qid, qw in zip(qids.tolist(), qwords.tolist()):
             for h in range(self.nhash):
                 start = h * self.b
                 w = start // WORD_BITS
@@ -1113,7 +1106,11 @@ class LSHIndex:
             # ListArray emit instead of per-row float32 objects
             import pyarrow as pa
 
-            from faiss_spark.kernels import arrow_i64, arrow_list_matrix
+            from faiss_spark.kernels import (
+                arrow_i64,
+                arrow_list,
+                arrow_list_matrix,
+            )
 
             nbits, thr, A = bc.value
             for b in batches:
@@ -1127,15 +1124,10 @@ class LSHIndex:
                     X += thr
                 if A is not None:
                     X = X @ A  # y = A x  =>  x = Aᵀ y (row form: Y @ A)
-                Xf = np.ascontiguousarray(X, np.float32)
-                offs = np.arange(len(Xf) + 1, dtype=np.int32) * Xf.shape[1]
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(arrow_i64(b.column(0)), pa.int64()),
-                        pa.ListArray.from_arrays(
-                            pa.array(offs, pa.int32()),
-                            pa.array(Xf.ravel(), pa.float32()),
-                        ),
+                        arrow_list(X.astype(np.float32)),
                     ],
                     ["id", "vec"],
                 )

@@ -14,7 +14,7 @@ full dataset. We keep exactly that split:
            byte-stable across partitionings (the hard problem in SURVEY §7
            "what's hard (b)").
   assign : one distributed pass — broadcast centroids, argmin via GEMM in
-           mapInPandas. This is the step that scales to 100 TB, and it is
+           mapInArrow. This is the step that scales to 100 TB, and it is
            embarrassingly parallel (no shuffle).
 
 Empty-cluster handling mirrors ``split_clusters`` (Clustering.cpp:220-270):
@@ -27,14 +27,10 @@ best (lowest) objective. ``spherical`` renormalizes centroids each iteration
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from faiss_spark.kernels import as_matrix
 
 
 EPS_SPLIT = 1.0 / 1024.0  # same perturbation faiss uses (Clustering.cpp:249)
@@ -157,12 +153,11 @@ class KMeansModel:
         (id, cluster, dist[, vec]) — keep_vec carries the vector through
         so encode-and-layout callers don't need a join-back shuffle.
 
-        mapInArrow, not mapInPandas: the list<float> values buffer
-        reshapes zero-copy into the GEMM tile, and keep_vec passes the
-        ORIGINAL Arrow column back untouched — the pandas route
-        materialized one Python object per row in both directions (the
-        r9 knn-scan finding; assign is the encode primitive every IVF
-        add path runs over the full 100 TB table)."""
+        The list<float> values buffer reshapes zero-copy into the GEMM
+        tile, and keep_vec passes the ORIGINAL Arrow column back
+        untouched — no Python object per row in either direction (assign
+        is the encode primitive every IVF add path runs over the full
+        100 TB table)."""
         spark = df.sparkSession
         bc = spark.sparkContext.broadcast(self.centroids)
         spherical = self.spherical
@@ -170,7 +165,11 @@ class KMeansModel:
         def do_assign(batches):
             import pyarrow as pa
 
-            from faiss_spark.kernels import _compute_block, _row_chunk
+            from faiss_spark.kernels import (
+                _compute_block,
+                _row_chunk,
+                arrow_list_matrix,
+            )
 
             f32_list = pa.list_(pa.float32())
             C = np.ascontiguousarray(bc.value)
@@ -181,10 +180,7 @@ class KMeansModel:
                 vec_arr = b.column(1)
                 if keep_vec and vec_arr.type != f32_list:
                     vec_arr = vec_arr.cast(f32_list)
-                X = np.asarray(
-                    b.column(1).flatten().to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                ).reshape(b.num_rows, -1)
+                X = arrow_list_matrix(b.column(1))
                 n = len(X)
                 xn = None if spherical else (X * X).sum(1)
                 labels = np.empty(n, dtype=np.int64)
@@ -271,9 +267,8 @@ class KMeans:
             # seeded sample, slight over-draw then exact limit → deterministic
             frac = min(1.0, 1.2 * max_train / n)
             sample = sample.sample(fraction=frac, seed=self.seed).limit(max_train)
-        # Arrow collect (guide §6 "Arrow for driver transfers"): the list
-        # column reshapes zero-copy into the training matrix — toPandas +
-        # np.stack materialized one Python object per sampled row
+        # Arrow collect: the list column reshapes zero-copy into the
+        # training matrix, with no Python object per sampled row
         tbl = sample.toArrow()
         from faiss_spark.kernels import arrow_list_matrix
 

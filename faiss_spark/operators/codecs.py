@@ -22,14 +22,18 @@ Quantization semantics (match the reference so error bounds carry over):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from faiss_spark.kernels import TopKAccumulator, as_matrix
+from faiss_spark.kernels import (
+    TopKAccumulator,
+    arrow_binary,
+    arrow_binary_matrix,
+    arrow_list,
+    arrow_list_matrix,
+)
 
 
 def _kmeans_np(X: np.ndarray, k: int, niter: int, seed: int) -> tuple:
@@ -62,27 +66,79 @@ def _sampled_matrix(df: DataFrame, vec_col: str, max_train: int, seed: int):
     if n > max_train:
         frac = min(1.0, 1.2 * max_train / n)
         sample = sample.sample(fraction=frac, seed=seed).limit(max_train)
-    from faiss_spark.kernels import arrow_list_matrix
-
     return arrow_list_matrix(sample.toArrow().column(vec_col))
 
 
-def _map_codec(df: DataFrame, id_col: str, in_col: str, fn, out_schema: str):
-    src = df.select(F.col(id_col).cast("bigint").alias("id"), F.col(in_col))
+def _map_codec(df: DataFrame, id_col: str, in_cols, fn, out_schema: str) -> DataFrame:
+    """Map-only ``mapInArrow`` shared by every codec's Spark face: the id
+    (cast to bigint) passes through untouched and ``fn(*columns)`` maps
+    the Arrow input column(s) of each non-empty batch to the one output
+    column; output names come from ``out_schema``."""
+    in_cols = [in_cols] if isinstance(in_cols, str) else list(in_cols)
+    src = df.select(F.col(id_col).cast("bigint").alias("id"), *in_cols)
+    names = [f.split()[0] for f in out_schema.split(",")]
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield fn(pdf)
+    def do(batches):
+        import pyarrow as pa
 
-    return src.mapInPandas(do, schema=out_schema)
+        for b in batches:
+            if b.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    [b.column(0), fn(*b.columns[1:])], names=names
+                )
+
+    return src.mapInArrow(do, schema=out_schema)
+
+
+def decode_column(model, codes) -> np.ndarray:
+    """float64 vectors of an Arrow code column: the stored bytes read as
+    ``model.code_dtype`` sub-codes, through ``model.decode_np``."""
+    return model.decode_np(arrow_binary_matrix(codes).view(model.code_dtype))
+
+
+def encode_codes(
+    model, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
+) -> DataFrame:
+    """(id, vec) -> (id, code BINARY) through ``model.encode_np`` — the
+    one Spark encode of every codec (reference sa_encode,
+    faiss/Index.h:255); a code is ``bytes`` of its encode_np row."""
+    return _map_codec(
+        df, id_col, vec_col,
+        lambda v: arrow_binary(model.encode_np(arrow_list_matrix(v))),
+        "id bigint, code binary",
+    )
+
+
+class _CodecFace:
+    """Spark ``encode``/``decode`` of a codec model with numpy
+    ``encode_np``/``decode_np`` kernels; codes are stored as
+    ``code_dtype`` bytes."""
+
+    code_dtype = np.uint8
+
+    def encode(
+        self, df: DataFrame, id_col: str = "id", vec_col: str = "vec"
+    ) -> DataFrame:
+        return encode_codes(self, df, id_col, vec_col)
+
+    def decode(
+        self, df: DataFrame, id_col: str = "id", code_col: str = "code"
+    ) -> DataFrame:
+        """(id, code) -> (id, vec array<float>) through ``decode_np`` —
+        the one Spark decode of every codec (reference sa_decode,
+        faiss/Index.h:271)."""
+        return _map_codec(
+            df, id_col, code_col,
+            lambda c: arrow_list(decode_column(self, c).astype(np.float32)),
+            "id bigint, vec array<float>",
+        )
 
 
 # ============================================================ ScalarQuantizer
 
 
 @dataclass
-class ScalarQuantizerModel:
+class ScalarQuantizerModel(_CodecFace):
     """Per-dimension linear quantizer (reference ScalarQuantizer, trained
     ranges, faiss/impl/ScalarQuantizer.h:26-48).
 
@@ -155,34 +211,6 @@ class ScalarQuantizerModel:
             weights = (1 << np.arange(5, -1, -1)).astype(np.float64)
             q = flat.reshape(len(codes), self.d, 6) @ weights
         return self.vmin + (q + 0.5) * unit
-
-    # -- distributed transforms --------------------------------------------
-    def encode(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-            codes = model.encode_np(X)
-            return pd.DataFrame(
-                {"id": pdf["id"].to_numpy(np.int64), "code": list(map(bytes, codes))}
-            )
-
-        return _map_codec(df, id_col, vec_col, fn, "id bigint, code binary")
-
-    def decode(self, df: DataFrame, id_col: str = "id", code_col: str = "code") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            codes = np.stack([np.frombuffer(c, np.uint8) for c in pdf[code_col]])
-            X = model.decode_np(codes)
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "vec": list(X.astype(np.float32)),
-                }
-            )
-
-        return _map_codec(df, id_col, code_col, fn, "id bigint, vec array<float>")
 
 
 def _sq_optim_ranges(
@@ -390,7 +418,7 @@ class ScalarQuantizer:
 
 
 @dataclass
-class ProductQuantizerModel:
+class ProductQuantizerModel(_CodecFace):
     """M sub-space codebooks, (M, ksub, dsub) — reference
     faiss/impl/ProductQuantizer.h:25-147."""
 
@@ -451,33 +479,6 @@ class ProductQuantizerModel:
             T[m] = ((self.codebooks[m] - sub) ** 2).sum(1)
         return T
 
-    def encode(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "code": list(map(bytes, model.encode_np(X))),
-                }
-            )
-
-        return _map_codec(df, id_col, vec_col, fn, "id bigint, code binary")
-
-    def decode(self, df: DataFrame, id_col: str = "id", code_col: str = "code") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            codes = np.stack([np.frombuffer(c, model.code_dtype) for c in pdf[code_col]])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "vec": list(model.decode_np(codes).astype(np.float32)),
-                }
-            )
-
-        return _map_codec(df, id_col, code_col, fn, "id bigint, vec array<float>")
 
     def adc_search(
         self,
@@ -868,7 +869,7 @@ def beam_search_np(
 
 
 @dataclass
-class ResidualQuantizerModel:
+class ResidualQuantizerModel(_CodecFace):
     """M additive codebooks over successive residuals (reference
     faiss/impl/ResidualQuantizer.h:25; AdditiveQuantizer decode =
     gather-sum, faiss/impl/AdditiveQuantizer.h:25)."""
@@ -899,33 +900,6 @@ class ResidualQuantizerModel:
             out += self.codebooks[m][codes[:, m]]
         return out
 
-    def encode(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "code": list(map(bytes, model.encode_np(X))),
-                }
-            )
-
-        return _map_codec(df, id_col, vec_col, fn, "id bigint, code binary")
-
-    def decode(self, df: DataFrame, id_col: str = "id", code_col: str = "code") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            codes = np.stack([np.frombuffer(c, np.uint8) for c in pdf[code_col]])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "vec": list(model.decode_np(codes).astype(np.float32)),
-                }
-            )
-
-        return _map_codec(df, id_col, code_col, fn, "id bigint, vec array<float>")
 
 
 def _normalize_nbits(nbits, M: int) -> list[int]:
@@ -1199,14 +1173,10 @@ class ResidualCoarseQuantizerModel:
         with rows like every other map-side codec here."""
         model = self
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "cluster": model.assign_np(X),
-                }
-            )
+        def fn(vec):
+            import pyarrow as pa
+
+            return pa.array(model.assign_np(arrow_list_matrix(vec)), pa.int64())
 
         return _map_codec(df, id_col, vec_col, fn, "id bigint, cluster bigint")
 
@@ -1266,7 +1236,7 @@ class LSCoarseQuantizer:
 
 
 @dataclass
-class LocalSearchQuantizerModel:
+class LocalSearchQuantizerModel(_CodecFace):
     """LSQ: additive codebooks with ICM (iterated conditional modes)
     encoding (reference faiss/impl/LocalSearchQuantizer.h:45 — we use
     deterministic ICM without the simulated-annealing perturbations, so
@@ -1325,33 +1295,6 @@ class LocalSearchQuantizerModel:
             out += self.codebooks[m][codes[:, m]]
         return out
 
-    def encode(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "code": list(map(bytes, model.encode_np(X))),
-                }
-            )
-
-        return _map_codec(df, id_col, vec_col, fn, "id bigint, code binary")
-
-    def decode(self, df: DataFrame, id_col: str = "id", code_col: str = "code") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            codes = np.stack([np.frombuffer(c, np.uint8) for c in pdf[code_col]])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "vec": list(model.decode_np(codes).astype(np.float32)),
-                }
-            )
-
-        return _map_codec(df, id_col, code_col, fn, "id bigint, vec array<float>")
 
 
 class LocalSearchQuantizer:
@@ -1452,7 +1395,7 @@ class ProductAdditiveQuantizer:
 
 
 @dataclass
-class ProductAdditiveQuantizerModel:
+class ProductAdditiveQuantizerModel(_CodecFace):
     subs: list  # of ResidualQuantizerModel
     dsub: int
 
@@ -1475,30 +1418,3 @@ class ProductAdditiveQuantizerModel:
             off += m
         return np.concatenate(outs, axis=1)
 
-    def encode(self, df: DataFrame, id_col: str = "id", vec_col: str = "vec") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "code": list(map(bytes, model.encode_np(X))),
-                }
-            )
-
-        return _map_codec(df, id_col, vec_col, fn, "id bigint, code binary")
-
-    def decode(self, df: DataFrame, id_col: str = "id", code_col: str = "code") -> DataFrame:
-        model = self
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            codes = np.stack([np.frombuffer(c, np.uint8) for c in pdf[code_col]])
-            return pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "vec": list(model.decode_np(codes).astype(np.float32)),
-                }
-            )
-
-        return _map_codec(df, id_col, code_col, fn, "id bigint, vec array<float>")

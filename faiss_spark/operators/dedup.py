@@ -716,14 +716,14 @@ def embedding_neardup_bucketed(
 
     Shuffle discipline: one assign pass (broadcast centroids, no shuffle),
     one hash shuffle on bucket id, then a per-bucket vectorized GEMM
-    (applyInPandas) that emits only the pairs at/above the threshold —
+    (applyInArrow) that emits only the pairs at/above the threshold —
     the same per-cell kernel shape as graph.knn_graph_bucketed. An
     earlier version scored each candidate pair with an interpreted
     zip_with/aggregate expression; the GEMM does the whole cell in one
     BLAS call instead of one lambda walk per pair.
 
     Hot-cell skew: AQE skew handling splits JOIN partitions, not
-    ``groupBy().applyInPandas`` groups — a hot k-means cell lands in
+    ``groupBy().applyInArrow`` groups — a hot k-means cell lands in
     exactly ONE task and becomes the straggler/OOM at scale.
     ``max_cell_rows`` bounds that: any cell above the budget is split
     into ``ceil(|cell|/max_cell_rows)`` hash sub-shards (the same salting
@@ -1332,14 +1332,14 @@ def duplicated_spans(
         budget_rows = (max_broadcast_mb << 20) // key_bytes
         # one job: fetch up to budget+1 rows — both the size probe and
         # (when it fits) the broadcast payload in a single pass. Arrow
-        # both ways (toPandas / createDataFrame-from-pandas): near the
+        # both ways (toArrow / createDataFrame-from-Arrow): near the
         # budget ceiling this is millions of rows, which as Python Row
         # objects would cost ~10× the nominal broadcast size on the
         # driver
-        hot_pdf = hot.limit(budget_rows + 1).toPandas()
-        if len(hot_pdf) <= budget_rows:
+        hot_tbl = hot.limit(budget_rows + 1).toArrow()
+        if hot_tbl.num_rows <= budget_rows:
             spark = df.sparkSession
-            hot_local = spark.createDataFrame(hot_pdf, schema=hot.schema)
+            hot_local = spark.createDataFrame(hot_tbl, schema=hot.schema)
             dups = spans.join(F.broadcast(hot_local), "span_hash")
         else:
             warnings.warn(

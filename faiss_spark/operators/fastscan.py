@@ -32,10 +32,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, Window
 
-from faiss_spark.kernels import TopKAccumulator, as_matrix, pairwise_distances
+from faiss_spark.kernels import (
+    TopKAccumulator,
+    _cand_table,
+    _empty_cand_table,
+    arrow_binary,
+    arrow_list,
+    arrow_list_matrix,
+    pairwise_distances,
+)
 from faiss_spark.operators.codecs import ProductQuantizerModel
 from faiss_spark.operators.ivf import IVFPQIndex, collect_queries_bounded
 
@@ -323,9 +330,7 @@ class IVFPQFastScanIndex:
                     [
                         pa.array(d2.argmin(1).astype(np.int32), pa.int32()),
                         pa.array(ids, pa.int64()),
-                        pa.array(
-                            list(map(bytes, pqm.encode_np(X))), pa.binary()
-                        ),
+                        arrow_binary(pqm.encode_np(X)),
                     ],
                     names=["list_no", "id", "code"],
                 )
@@ -563,12 +568,7 @@ def fastscan_search_preassigned(
     driver scan's bit for bit (same LUT floats entering the same uint8
     quantization, same saturating accumulation), for both by_residual
     modes."""
-    from faiss_spark.operators.ivf import (
-        _cand_table,
-        _empty_cand_table,
-        _window_topk,
-        cogrouped_cell_scan,
-    )
+    from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
 
     base = index.base
     if base.codes is None:
@@ -629,7 +629,7 @@ def fastscan_search_preassigned(
                 [
                     pa.array(qids[rep], pa.int64()),
                     pa.array(probes.astype(np.int32).ravel(), pa.int32()),
-                    pa.array(list(map(bytes, lut_rows)), pa.binary()),
+                    arrow_binary(lut_rows),
                     pa.array(biasq.ravel().astype(np.int32), pa.int32()),
                     pa.array(a[rep], pa.float64()),
                     pa.array(b[rep], pa.float64()),
@@ -846,18 +846,9 @@ def aq_fastscan_encode(
     id_col: str = "id",
     vec_col: str = "vec",
 ) -> DataFrame:
-    from faiss_spark.operators.codecs import _map_codec
+    from faiss_spark.operators.codecs import encode_codes
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
-        return pd.DataFrame(
-            {
-                "id": pdf["id"].to_numpy(np.int64),
-                "code": list(map(bytes, model.encode_np(X))),
-            }
-        )
-
-    return _map_codec(df, id_col, vec_col, fn, "id bigint, code binary")
+    return encode_codes(model, df, id_col, vec_col)
 
 
 def aq_fastscan_search(
@@ -1093,7 +1084,7 @@ class IVFAQFastScanIndex:
                     [
                         pa.array(lists.astype(np.int32), pa.int32()),
                         pa.array(ids, pa.int64()),
-                        pa.array(list(map(bytes, codes)), pa.binary()),
+                        arrow_binary(codes),
                     ],
                     names=["list_no", "id", "code"],
                 )
@@ -1322,12 +1313,7 @@ def aq_fastscan_search_preassigned(
     the per-cell scan is the same NormTableScaler saturating sum with
     no quantizer state. Covers both by_residual modes, PRQ/PLSQ
     included (the ProductAQAdapter rides inside rq)."""
-    from faiss_spark.operators.ivf import (
-        _cand_table,
-        _empty_cand_table,
-        _window_topk,
-        cogrouped_cell_scan,
-    )
+    from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
 
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
@@ -1378,7 +1364,7 @@ def aq_fastscan_search_preassigned(
                 [
                     pa.array(qids[rep], pa.int64()),
                     pa.array(probes.astype(np.int32).ravel(), pa.int32()),
-                    pa.array(list(map(bytes, lut_rows)), pa.binary()),
+                    arrow_binary(lut_rows),
                     pa.array(biasq.ravel().astype(np.int32), pa.int32()),
                     pa.array(a[rep], pa.float64()),
                     pa.array(b[rep], pa.float64()),
@@ -1606,18 +1592,10 @@ def train_ivf_paq_fastscan(
         for b in batches:
             if b.num_rows == 0:
                 continue
-            X = np.asarray(
-                b.column(0).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            ).reshape(b.num_rows, -1)
+            X = arrow_list_matrix(b.column(0))
             d2 = (X * X).sum(1)[:, None] + cn[None, :] - 2.0 * (X @ C_.T)
             resid = X - C_[d2.argmin(1)]
-            n, d = resid.shape
-            offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
-            vals = pa.array(resid.ravel(), pa.float64())
-            yield pa.RecordBatch.from_arrays(
-                [pa.ListArray.from_arrays(offsets, vals)], names=["vec"]
-            )
+            yield pa.RecordBatch.from_arrays([arrow_list(resid)], names=["vec"])
 
     resid_df = vectors.select(F.col(vec_col).alias("vec")).mapInArrow(
         to_resid, schema="vec array<double>"

@@ -232,7 +232,7 @@ def knn_graph_bucketed(
          the probe sets of s and t overlap (symmetric coverage; border
          nodes meet in whichever cell both probe);
       3. the data shuffle: one exchange keyed on cell (nprobe× the
-         table); per-cell local GEMM k-NN via applyInPandas;
+         table); per-cell local GEMM k-NN via applyInArrow;
       4. candidate-edge dedup (same edge can surface in every shared
          cell) + per-src top-k merge — two more exchanges, but over
          candidate EDGES (≤ n·k·nprobe rows), not the data.
@@ -284,7 +284,11 @@ def knn_graph_bucketed(
         # no per-row Python objects in either direction.
         import pyarrow as pa
 
-        from faiss_spark.kernels import _compute_block, _row_chunk
+        from faiss_spark.kernels import (
+            _compute_block,
+            _row_chunk,
+            arrow_list_matrix,
+        )
 
         C_, metric_, nprobe_ = bc.value
         largest = metric_ in SIMILARITY_METRICS
@@ -301,10 +305,7 @@ def knn_graph_bucketed(
             if b.num_rows == 0:
                 continue
             n = b.num_rows
-            X = np.asarray(
-                b.column(1).flatten().to_numpy(zero_copy_only=False),
-                dtype=np_dt,
-            ).reshape(n, -1)
+            X = arrow_list_matrix(b.column(1), np_dt)
             if metric_ == "cosine":
                 xnorm = np.linalg.norm(X, axis=1, keepdims=True)
                 xnorm[xnorm == 0] = 1.0

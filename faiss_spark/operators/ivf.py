@@ -50,20 +50,21 @@ from __future__ import annotations
 import hashlib
 import os
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from faiss_spark.kernels import (
     SIMILARITY_METRICS,
     TopKAccumulator,
+    _cand_table,
+    _empty_cand_table,
+    arrow_binary,
     arrow_binary_matrix,
     arrow_i64,
+    arrow_list,
     arrow_list_matrix,
-    as_matrix,
     pairwise_distances,
 )
 from faiss_spark.operators.cluster import KMeans, KMeansModel
@@ -171,7 +172,7 @@ def _encode_lists(vectors: DataFrame, id_col: str, vec_col: str, state, encode):
                 [
                     pa.array(lists.astype(np.int32), pa.int32()),
                     pa.array(ids, pa.int64()),
-                    pa.array(list(map(bytes, codes)), pa.binary()),
+                    arrow_binary(codes),
                 ],
                 names=["list_no", "id", "code"],
             )
@@ -193,7 +194,7 @@ def _coarse_assign(X: np.ndarray, C, cq, metric: str) -> np.ndarray:
 
 def collect_queries_bounded(
     queries, qid_col: str, qvec_col: str, op: str, d: int | None = None,
-    dtype=None, to_matrix=None, fallback=None,
+    dtype=np.float64, fallback=None,
 ):
     """Driver-side query materialization with a hard bound (the same
     MAX_DRIVER_QUERY_CELLS budget IVFIndex.search uses for its
@@ -203,49 +204,31 @@ def collect_queries_bounded(
     fully-distributed twin (IVFIndex.search → search_preassigned) fall
     back instead of raising.
 
-    Collects ONE limited job and checks the collected length, so the
-    rows that passed the bound check ARE the rows returned — a derived /
-    nondeterministic query frame is never recomputed between check and
-    collect. Callers that already know the dimensionality (every index
-    carries it in its centroids/codebooks) pass ``d`` and skip the
-    1-row dimension probe entirely. ``dtype`` picks the matrix dtype
-    (default float64, the oracle-exact path); ``to_matrix`` overrides the
-    column→matrix conversion entirely (binary indexes collect int64 word
-    arrays, not float vectors) — this is the ONLY query-collect path in
-    the repo (VERDICT r7 #5), so every driver-planned search family
-    (brute-force, binary, NSG, IVF, fast-scan) shares the same one-job
-    budget and the same actionable error. ``fallback`` (a zero-arg
-    callable returning a DataFrame) switches overflow from raise to
-    auto-fallback — the caller's distributed twin — and is returned
-    verbatim; callers that pass it must type-check the result."""
-    qpdf = collect_query_frame_bounded(
-        queries, qid_col, qvec_col, op, d=d, fallback=fallback
-    )
-    if isinstance(qpdf, DataFrame):
-        return qpdf
-    if to_matrix is not None:
-        Q = to_matrix(qpdf[qvec_col])
-    else:
-        Q = as_matrix(qpdf[qvec_col], dtype=dtype or np.float64)
-    return qpdf[qid_col].to_numpy(np.int64), Q
-
-
-def collect_query_frame_bounded(
-    queries, qid_col: str, qvec_col: str, op: str, d: int | None = None,
-    fallback=None,
-):
-    """pandas-frame variant of collect_queries_bounded — same one-job
-    budget, actionable error, and optional distributed-twin ``fallback``
-    — for callers that consume the raw column objects row-wise (the
-    binary-hash probe builders)."""
+    Collects ONE limited job through Arrow and checks the collected
+    length, so the rows that passed the bound check ARE the rows
+    returned — a derived / nondeterministic query frame is never
+    recomputed between check and collect. Callers that already know the
+    dimensionality (every index carries it in its centroids/codebooks)
+    pass ``d`` and skip the 1-row dimension probe entirely. Returns
+    ``(qids int64, Q (nq, d) dtype)``; ``dtype`` picks the matrix dtype
+    (default float64, the oracle-exact path; binary indexes collect
+    int64 code words). This is the ONLY query-collect path in the repo
+    (VERDICT r7 #5), so every driver-planned search family (brute-force,
+    binary, NSG, IVF, fast-scan) shares the same one-job budget, the
+    same actionable error, and the same query checks: a ragged or null
+    vector, or a non-finite component, raises a ValueError naming it.
+    ``fallback`` (a zero-arg callable returning a DataFrame) switches
+    overflow from raise to auto-fallback — the caller's distributed twin
+    — and is returned verbatim; callers that pass it must type-check
+    the result."""
     if d is None:
         first = (
             queries.select(F.size(F.col(qvec_col)).alias("d")).limit(1).first()
         )
         d = int(first["d"]) if first else 1
     max_rows = max(1, MAX_DRIVER_QUERY_CELLS // max(1, d))
-    qpdf = queries.select(qid_col, qvec_col).limit(max_rows + 1).toPandas()
-    if len(qpdf) > max_rows:
+    tbl = queries.select(qid_col, qvec_col).limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows:
         if fallback is not None:
             return fallback()
         raise ValueError(
@@ -254,7 +237,15 @@ def collect_query_frame_bounded(
             "(operators.knn.knn_chunked) or use a distributed plan "
             "(IVFIndex.search auto-falls-back to search_preassigned)."
         )
-    return qpdf
+    qids = arrow_i64(tbl.column(0))
+    Q = arrow_list_matrix(tbl.column(1), dtype)
+    bad = ~np.isfinite(Q).all(axis=1)
+    if bad.any():
+        raise ValueError(
+            f"{op}: query {qids[bad.argmax()]} has a non-finite component "
+            "(NaN or inf); every query component must be finite"
+        )
+    return qids, Q
 
 
 @dataclass
@@ -2082,30 +2073,6 @@ def range_search_preassigned(
     )
 
 
-def _empty_cand_table():
-    import pyarrow as pa
-
-    return pa.table(
-        {
-            "qid": pa.array([], pa.int64()),
-            "id": pa.array([], pa.int64()),
-            "dist": pa.array([], pa.float64()),
-        }
-    )
-
-
-def _cand_table(qids, ids, dists):
-    import pyarrow as pa
-
-    return pa.table(
-        {
-            "qid": pa.array(np.asarray(qids, np.int64), pa.int64()),
-            "id": pa.array(np.asarray(ids, np.int64), pa.int64()),
-            "dist": pa.array(np.asarray(dists, np.float64), pa.float64()),
-        }
-    )
-
-
 def _cand_queries(ptab):
     """(qids int64, Q (n,d) f64) from a probe-side cogroup table."""
     from faiss_spark.kernels import arrow_i64, arrow_list_matrix
@@ -2200,17 +2167,29 @@ def _probe_table(
             )
 
     vec = F.col(qvec_col)
+    qid = F.col(qid_col).cast("bigint")
     q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"),
-        F.when(F.size(vec) == d, vec)
-        .otherwise(
+        qid.alias("qid"),
+        F.when(
+            ~F.coalesce(F.size(vec) == d, F.lit(False)),
             F.raise_error(
                 F.format_string(
                     f"query vector has %d components but the index has d={d}",
                     F.size(vec),
                 )
-            )
+            ),
         )
+        .when(
+            F.exists(vec, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))),
+            F.raise_error(
+                F.format_string(
+                    "query %d has a non-finite component (NaN or inf); "
+                    "every query component must be finite",
+                    qid,
+                )
+            ),
+        )
+        .otherwise(vec)
         .alias("vec"),
     )
     return q.mapInArrow(
@@ -3242,8 +3221,8 @@ class IVFPQRIndex:
                     [
                         pa.array(lists.astype(np.int32), pa.int32()),
                         pa.array(ids, pa.int64()),
-                        pa.array(list(map(bytes, c1)), pa.binary()),
-                        pa.array(list(map(bytes, c2)), pa.binary()),
+                        arrow_binary(c1),
+                        arrow_binary(c2),
                     ],
                     names=["list_no", "id", "code", "rcode"],
                 )
@@ -3359,26 +3338,20 @@ class TwoLayerCodes:
 
     def reconstruct(self, ids: list[int]) -> DataFrame:
         """Random-access decode: join on id, add back the cell centroid."""
-        spark = self.codes.sparkSession
-        bc = spark.sparkContext.broadcast((self.centroids, self.pq.codebooks))
+        from faiss_spark.operators.codecs import _map_codec, decode_column
 
-        def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            C, books = bc.value
-            pqm = ProductQuantizerModel(codebooks=books)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes = np.stack([np.frombuffer(c, np.uint8) for c in pdf["code"]])
-                X = pqm.decode_np(codes) + C[pdf["list_no"].to_numpy(np.int64)]
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].to_numpy(np.int64),
-                        "vec": list(X.astype(np.float32)),
-                    }
-                )
+        spark = self.codes.sparkSession
+        bc = spark.sparkContext.broadcast((self.centroids, self.pq))
+
+        def dec(code, list_no):
+            C, pq = bc.value
+            X = decode_column(pq, code) + C[arrow_i64(list_no)]
+            return arrow_list(X.astype(np.float32))
 
         sel = self.codes.filter(F.col("id").isin(ids))
-        return sel.mapInPandas(dec, schema="id bigint, vec array<float>")
+        return _map_codec(
+            sel, "id", ["code", "list_no"], dec, "id bigint, vec array<float>"
+        )
 
 
 class IVFSpectralHash:
@@ -3512,13 +3485,14 @@ class IVFSpectralHash:
         spark = vectors.sparkSession
         bc = spark.sparkContext.broadcast(self)
 
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def enc(batches):
+            import pyarrow as pa
+
+            from faiss_spark.kernels import arrow_id_vec_blocks
+
             idx = bc.value
             C = idx.centroids
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = as_matrix(pdf["vec"])
+            for ids, X, _ in arrow_id_vec_blocks(batches):
                 d2 = (
                     (X * X).sum(1)[:, None]
                     + (C * C).sum(1)[None, :]
@@ -3527,18 +3501,19 @@ class IVFSpectralHash:
                 lists = d2.argmin(1)
                 Xt = X @ idx.A.T + (idx.b if idx.b is not None else 0.0)
                 words = _bits_to_words(idx._binarize(Xt, lists))
-                yield pd.DataFrame(
-                    {
-                        "list_no": lists.astype(np.int32),
-                        "id": pdf["id"].to_numpy(np.int64),
-                        "code": list(words),
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(lists.astype(np.int32), pa.int32()),
+                        pa.array(ids, pa.int64()),
+                        arrow_list(words),
+                    ],
+                    names=["list_no", "id", "code"],
                 )
 
         src = vectors.select(
             F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
         )
-        self.codes = src.mapInPandas(
+        self.codes = src.mapInArrow(
             enc, schema="list_no int, id bigint, code array<bigint>"
         )
         return self
@@ -3664,13 +3639,14 @@ def sh_search_preassigned(
     )
     bc = spark.sparkContext.broadcast(shell)
 
-    def assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    def assign(batches):
+        import pyarrow as pa
+
+        from faiss_spark.kernels import arrow_id_vec_blocks
+
         idx = bc.value
         C = idx.centroids
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = as_matrix(pdf["vec"])
+        for qids, Q, _ in arrow_id_vec_blocks(batches):
             CD = (
                 (Q * Q).sum(1)[:, None]
                 + (C * C).sum(1)[None, :]
@@ -3682,20 +3658,19 @@ def sh_search_preassigned(
                 idx._binarize(np.repeat(Qt, nprobe_, axis=0), order.ravel())
             )
             rep = np.repeat(np.arange(len(Q)), nprobe_)
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy(np.int64)[rep],
-                    "qcode": [
-                        [int(w) for w in row] for row in qwords
-                    ],
-                    "list_no": order.astype(np.int32).ravel(),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids[rep], pa.int64()),
+                    arrow_list(qwords),
+                    pa.array(order.astype(np.int32).ravel(), pa.int32()),
+                ],
+                names=["qid", "qcode", "list_no"],
             )
 
     q = queries.select(
         F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
     )
-    probes = q.mapInPandas(
+    probes = q.mapInArrow(
         assign, schema="qid bigint, qcode array<bigint>, list_no int"
     ).localCheckpoint(eager=False)
     pruned = index.codes.join(
@@ -4011,14 +3986,12 @@ class IVFAQIndex(_CoarseQuantized):
                 )
                 for m in range(books.shape[0]):
                     X += books[m][codes[:, m]]
-                Xf = np.ascontiguousarray(X, np.float32)
-                n, d = Xf.shape
-                vec = pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32)),
-                    pa.array(Xf.ravel()),
-                )
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_, pa.int64()), vec], names=["id", "vec"]
+                    [
+                        pa.array(ids_, pa.int64()),
+                        arrow_list(X.astype(np.float32)),
+                    ],
+                    names=["id", "vec"],
                 )
 
         src = self.codes

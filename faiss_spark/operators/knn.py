@@ -32,16 +32,15 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from faiss_spark.kernels import (
     SIMILARITY_METRICS,
     TopKAccumulator,
+    _cand_table,
+    arrow_id_vec_blocks,
 )
 
 _RESULT_SCHEMA = "qid bigint, id bigint, dist double"
@@ -83,50 +82,28 @@ def _scan_partitions(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
-    d: int,
+    Q: np.ndarray,
     make_emit,
 ):
     """Arrow-native scan of the vector table; ``make_emit`` builds the
-    per-partition handler: it receives an iterator of ``(X, ids)`` blocks
-    and yields result pandas frames with ``_RESULT_SCHEMA`` columns.
+    per-partition handler: it receives the arrow_id_vec_blocks of the
+    partition, X in Q's dtype, and yields ``_cand_table`` result tables.
 
-    ``d`` is the queries' dimension. A corpus vector of any other length
-    fails the job in the JVM with a message naming both dimensions,
-    before the batch reaches the worker: the reshape below assumes every
-    row of a batch has d components, so a ragged batch would otherwise
-    shift into wrong rows and a short one into an IndexError.
+    ``Q`` is the query matrix (its width and dtype are read here). A
+    corpus vector of any other length fails the job in the JVM with a
+    message naming both dimensions, before the batch reaches the worker.
 
-    mapInArrow, not mapInPandas: the Arrow list<float> column's values
-    buffer IS the row-major matrix, so ``flatten().reshape`` hands numpy
-    a ZERO-COPY view — the pandas route materializes one object per row
-    and re-stacks them, which profiled at ~40% of the whole scan on the
-    600k-row bench table (the GEMM itself is the small part at d≤64).
-    ids likewise arrive as one int64 buffer."""
-    import pyarrow as pa
-
-    out_schema = pa.schema(
-        [
-            pa.field("qid", pa.int64()),
-            pa.field("id", pa.int64()),
-            pa.field("dist", pa.float64()),
-        ]
-    )
+    The Arrow list<float> column's values buffer IS the row-major
+    matrix, so arrow_id_vec_blocks hands numpy a ZERO-COPY view — a
+    per-row route materializes one object per row and re-stacks them,
+    which profiled at ~40% of the whole scan on the 600k-row bench
+    table (the GEMM itself is the small part at d≤64). ids likewise
+    arrive as one int64 buffer."""
+    d, dtype = Q.shape[1], Q.dtype
 
     def arrow_scan(batches):
-        def blocks():
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                ids = np.asarray(
-                    b.column(0).to_numpy(zero_copy_only=False), dtype=np.int64
-                )
-                flat = b.column(1).flatten().to_numpy(zero_copy_only=False)
-                yield flat.reshape(b.num_rows, -1), ids
-
-        for pdf in make_emit(blocks()):
-            yield pa.RecordBatch.from_pandas(
-                pdf, schema=out_schema, preserve_index=False
-            )
+        for t in make_emit(arrow_id_vec_blocks(batches, dtype)):
+            yield from t.to_batches()
 
     vec = F.col(vec_col)
     src = vectors.select(
@@ -201,24 +178,21 @@ def knn(
         return spark.createDataFrame([], _RESULT_SCHEMA + ", rank int")
     bc = spark.sparkContext.broadcast((qids, Q))
 
-    def scan(blocks) -> Iterator[pd.DataFrame]:
+    def scan(blocks):
         qids_, Q_ = bc.value
         acc = TopKAccumulator(len(qids_), k, largest)
         acc.bind_queries(Q_, metric, metric_arg)
-        for X, ids in blocks:
-            # zero-copy when the Arrow buffer already matches Q's dtype
+        for ids, X, _ in blocks:
             acc.push_block(
-                np.asarray(X, dtype=Q_.dtype), ids,
+                X, ids,
                 qids=qids_ if exclude_same_id else None,
                 exclude_same_id=exclude_same_id,
             )
         qidx, nid, nd = acc.emit()
         finite = np.isfinite(nd)
-        yield pd.DataFrame(
-            {"qid": qids_[qidx[finite]], "id": nid[finite], "dist": nd[finite]}
-        )
+        yield _cand_table(qids_[qidx[finite]], nid[finite], nd[finite])
 
-    candidates = _scan_partitions(vectors, id_col, vec_col, Q.shape[1], scan)
+    candidates = _scan_partitions(vectors, id_col, vec_col, Q, scan)
     order = [F.col("dist").desc() if largest else F.col("dist").asc(), F.col("id").asc()]
     w = Window.partitionBy("qid").orderBy(*order)
     return (
@@ -255,23 +229,16 @@ def range_search(
         return spark.createDataFrame([], _RESULT_SCHEMA)
     bc = spark.sparkContext.broadcast((qids, Q))
 
-    def scan(blocks) -> Iterator[pd.DataFrame]:
+    def scan(blocks):
         from faiss_spark.kernels import range_pairs
 
         qids_, Q_ = bc.value
-        for X, ids in blocks:
-            X = np.asarray(X, dtype=Q_.dtype)
+        for ids, X, _ in blocks:
             hit_q, hit_x, vals = range_pairs(Q_, X, metric, radius, metric_arg)
             if len(hit_q):
-                yield pd.DataFrame(
-                    {
-                        "qid": qids_[hit_q],
-                        "id": ids[hit_x],
-                        "dist": vals,
-                    }
-                )
+                yield _cand_table(qids_[hit_q], ids[hit_x], vals)
 
-    return _scan_partitions(vectors, id_col, vec_col, Q.shape[1], scan)
+    return _scan_partitions(vectors, id_col, vec_col, Q, scan)
 
 
 def knn_join(

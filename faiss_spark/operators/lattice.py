@@ -24,7 +24,7 @@ never leave this engine.
 Spark-first shape: encode/decode are numpy-vectorized per Arrow batch
 (grouped by atom so the combinadic arithmetic runs as array ops, no
 per-row Python in the hot loop except the final bit-packing), driven by
-``mapInPandas`` over the (id, vec) table; training is a pure JVM-side
+``mapInArrow`` over the (id, vec) table; training is a pure JVM-side
 aggregate (slice + aggregate + min/max), so the scan stays in codegen.
 """
 
@@ -33,14 +33,12 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from faiss_spark.kernels import as_matrix
+from faiss_spark.kernels import arrow_list, arrow_list_matrix
 
 
 def _comb_table(nmax: int) -> np.ndarray:
@@ -333,38 +331,25 @@ class LatticeModel:
     def encode(self, df: DataFrame, id_col: str = "id",
                vec_col: str = "vec") -> DataFrame:
         """(id, vec) -> (id, code BINARY) — sa_encode as a map-only
-        mapInPandas; column pruning reaches the scan."""
-        model = self
+        mapInArrow; column pruning reaches the scan."""
+        from faiss_spark.operators.codecs import _map_codec
 
-        def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = as_matrix(pdf[vec_col])
-                yield pd.DataFrame(
-                    {"id": pdf[id_col].values, "code": model.encode_np(X)}
-                )
+        def enc(vec):
+            import pyarrow as pa
 
-        src = df.select(F.col(id_col).cast("bigint").alias(id_col),
-                        F.col(vec_col))
-        return src.mapInPandas(do, schema="id bigint, code binary")
+            return pa.array(self.encode_np(arrow_list_matrix(vec)), pa.binary())
+
+        return _map_codec(df, id_col, vec_col, enc, "id bigint, code binary")
 
     def decode(self, df: DataFrame, id_col: str = "id",
                code_col: str = "code") -> DataFrame:
         """(id, code) -> (id, vec array<double>) — sa_decode."""
-        model = self
+        from faiss_spark.operators.codecs import _map_codec
 
-        def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = model.decode_np(list(pdf[code_col]))
-                yield pd.DataFrame(
-                    {"id": pdf[id_col].values, "vec": list(X)}
-                )
-
-        return df.select(id_col, code_col).mapInPandas(
-            do, schema="id bigint, vec array<double>"
+        return _map_codec(
+            df, id_col, code_col,
+            lambda code: arrow_list(self.decode_np(code.to_pylist())),
+            "id bigint, vec array<double>",
         )
 
 

@@ -4,7 +4,7 @@ pipelines.
 Media lives in DataFrames as opaque ``payload BINARY`` plus typed
 metadata columns — the same "table + small artifact" discipline as the
 vector operators. All Spark-side plumbing here is real and tested:
-schemas, Arrow batch shapes, ``mapInPandas`` signatures, partitioning,
+schemas, Arrow batch shapes, ``mapInArrow`` signatures, partitioning,
 and the metadata fast paths.
 
 Codecs: real, stdlib-only formats — binary PPM (P6), uncompressed
@@ -28,10 +28,7 @@ Schema conventions:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -527,7 +524,7 @@ def sample_video_frames(
     """Frame-sampling BOOKKEEPING (pure SQL, no decode): explode each
     video row into (id, frame_no, ts_sec) for frames 0, n, 2n, … —
     the shuffle-free planning step a real pipeline runs before paying for
-    decode; the decode itself would be a mapInPandas like image_features."""
+    decode; the decode itself would be a mapInArrow like image_features."""
     frame_nos = F.when(
         F.col("n_frames") > 0,
         F.sequence(F.lit(0), (F.col("n_frames") - 1).cast("int"), F.lit(every_n)),

@@ -34,13 +34,16 @@ entry + beam search recover the same search semantics.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window
 
-from faiss_spark.kernels import as_matrix
+from faiss_spark.kernels import (
+    arrow_binary,
+    arrow_i64,
+    arrow_list,
+    arrow_list_matrix,
+)
 from faiss_spark.sources import fsio
 
 
@@ -566,24 +569,11 @@ class NSGIndex:
             if books is not None:
                 from faiss_spark.operators.codecs import ProductQuantizerModel
 
-                codes = ProductQuantizerModel(codebooks=books).encode_np(X)
-                codes = np.ascontiguousarray(codes, np.uint8)
-                w = codes.shape[1] if codes.ndim == 2 else 0
-                coffs = np.arange(len(ids) + 1, dtype=np.int32) * w
-                out["code"] = pa.Array.from_buffers(
-                    pa.binary(), len(ids),
-                    [None, pa.py_buffer(coffs.tobytes()),
-                     pa.py_buffer(codes.tobytes())],
+                out["code"] = arrow_binary(
+                    ProductQuantizerModel(codebooks=books).encode_np(X)
                 )
             elif sqm is not None:
-                codes = np.ascontiguousarray(sqm.encode_np(X), np.uint8)
-                w = codes.shape[1] if codes.ndim == 2 else 0
-                coffs = np.arange(len(ids) + 1, dtype=np.int32) * w
-                out["code"] = pa.Array.from_buffers(
-                    pa.binary(), len(ids),
-                    [None, pa.py_buffer(coffs.tobytes()),
-                     pa.py_buffer(codes.tobytes())],
-                )
+                out["code"] = arrow_binary(sqm.encode_np(X))
             else:
                 out["vec"] = tbl.column("vec")
             return pa.table(out)
@@ -689,46 +679,42 @@ class NSGIndex:
             fsio.delete(spark, path + "_pq")
         if self.sq_model is None:
             fsio.delete(spark, path + "_sq")
+        import pyarrow as pa
+
+        def write(name: str, cols: dict) -> None:
+            spark.createDataFrame(pa.table(cols)).write.mode(
+                "overwrite"
+            ).parquet(path + name)
+
         if self.centroids is not None:
             subs = (
                 self.cell_subs
                 if self.cell_subs is not None
                 else np.ones(len(self.centroids), np.int64)
             )
-            cpdf = pd.DataFrame(
-                {
-                    "cell": np.arange(len(self.centroids), dtype=np.int32),
-                    "vec": list(self.centroids.astype(np.float32)),
-                    "n_sub": subs.astype(np.int64),
-                }
-            )
-            spark.createDataFrame(cpdf).write.mode("overwrite").parquet(
-                path + "_centroids"
-            )
+            write("_centroids", {
+                "cell": pa.array(np.arange(len(self.centroids), dtype=np.int32)),
+                "vec": arrow_list(self.centroids.astype(np.float32)),
+                "n_sub": pa.array(subs.astype(np.int64)),
+            })
         if self.pq_codebooks is not None:
             M, ksub, dsub = self.pq_codebooks.shape
-            rows = [
-                {"m": m, "k": k, "sub": list(self.pq_codebooks[m, k].astype(np.float32))}
-                for m in range(M)
-                for k in range(ksub)
-            ]
-            spark.createDataFrame(pd.DataFrame(rows)).write.mode(
-                "overwrite"
-            ).parquet(path + "_pq")
+            write("_pq", {
+                "m": pa.array(np.repeat(np.arange(M, dtype=np.int64), ksub)),
+                "k": pa.array(np.tile(np.arange(ksub, dtype=np.int64), M)),
+                "sub": arrow_list(
+                    self.pq_codebooks.reshape(M * ksub, dsub).astype(np.float32)
+                ),
+            })
         if self.sq_model is not None:
             m = self.sq_model
-            spdf = pd.DataFrame(
-                {
-                    "dim": np.arange(m.d, dtype=np.int32),
-                    "vmin": m.vmin.astype(np.float64),
-                    "vdiff": m.vdiff.astype(np.float64),
-                    "bits": np.full(m.d, m.bits, np.int32),
-                    "variant": [m.variant] * m.d,
-                }
-            )
-            spark.createDataFrame(spdf).write.mode("overwrite").parquet(
-                path + "_sq"
-            )
+            write("_sq", {
+                "dim": pa.array(np.arange(m.d, dtype=np.int32)),
+                "vmin": pa.array(m.vmin.astype(np.float64)),
+                "vdiff": pa.array(m.vdiff.astype(np.float64)),
+                "bits": pa.array(np.full(m.d, m.bits, np.int32)),
+                "variant": pa.array([m.variant] * m.d, pa.string()),
+            })
 
     @staticmethod
     def load(spark: SparkSession, path: str, R: int = 16) -> "NSGIndex":
@@ -761,45 +747,37 @@ class NSGIndex:
         # neither) — only their ABSENCE is tolerated; a corrupted or
         # partially-written sidecar must fail loudly, not silently yield
         # an index that cannot route or misreads its PQ storage
+        def read(name: str, keys: list):
+            try:
+                tbl = spark.read.parquet(path + name).toArrow()
+            except AnalysisException:
+                return None
+            return tbl.sort_by([(k_, "ascending") for k_ in keys])
+
         centroids = None
         cell_subs = None
-        try:
-            cp = spark.read.parquet(path + "_centroids").toPandas()
-        except AnalysisException:
-            cp = None
+        cp = read("_centroids", ["cell"])
         if cp is not None:
-            cp = cp.sort_values("cell")
-            centroids = as_matrix(cp["vec"])
-            subs = cp["n_sub"].to_numpy(np.int64)
+            centroids = arrow_list_matrix(cp.column("vec"))
+            subs = arrow_i64(cp.column("n_sub"))
             if (subs != 1).any():
                 cell_subs = subs
         pq_books = None
-        try:
-            pp = spark.read.parquet(path + "_pq").toPandas()
-        except AnalysisException:
-            pp = None
+        pp = read("_pq", ["m", "k"])
         if pp is not None:
-            pp = pp.sort_values(["m", "k"])
-            M = int(pp["m"].max()) + 1
-            ksub = int(pp["k"].max()) + 1
-            dsub = len(pp["sub"].iloc[0])
-            pq_books = np.stack(
-                [np.asarray(s, np.float64) for s in pp["sub"]]
-            ).reshape(M, ksub, dsub)
+            M = int(arrow_i64(pp.column("m")).max()) + 1
+            ksub = int(arrow_i64(pp.column("k")).max()) + 1
+            pq_books = arrow_list_matrix(pp.column("sub")).reshape(M, ksub, -1)
         sq_model = None
-        try:
-            sp = spark.read.parquet(path + "_sq").toPandas()
-        except AnalysisException:
-            sp = None
+        sp = read("_sq", ["dim"])
         if sp is not None:
             from faiss_spark.operators.codecs import ScalarQuantizerModel
 
-            sp = sp.sort_values("dim")
             sq_model = ScalarQuantizerModel(
-                vmin=sp["vmin"].to_numpy(np.float64),
-                vdiff=sp["vdiff"].to_numpy(np.float64),
-                bits=int(sp["bits"].iloc[0]),
-                variant=str(sp["variant"].iloc[0]),
+                vmin=np.asarray(sp.column("vmin").to_numpy(), np.float64),
+                vdiff=np.asarray(sp.column("vdiff").to_numpy(), np.float64),
+                bits=int(sp.column("bits")[0].as_py()),
+                variant=str(sp.column("variant")[0].as_py()),
             )
         return NSGIndex(
             table=t, nshards=nshards, R=R, centroids=centroids,
@@ -876,36 +854,29 @@ class NSGIndex:
             # either side of the boundary.
             import pyarrow as pa
 
-            from faiss_spark.kernels import (
-                arrow_binary_matrix,
-                arrow_i64,
-                arrow_list_matrix,
-            )
+            from faiss_spark.kernels import _cand_table, _empty_cand_table
 
             qids_all, Q_all, s2q, books, sqm = bc.value
-            empty = pa.table(
-                {
-                    "qid": pa.array([], pa.int64()),
-                    "id": pa.array([], pa.int64()),
-                    "dist": pa.array([], pa.float64()),
-                }
-            )
             if s2q is not None:
                 qsel = s2q.get(shard)
                 if qsel is None or len(qsel) == 0:
-                    return empty
+                    return _empty_cand_table()
                 qids_, Q_ = qids_all[qsel], Q_all[qsel]
             else:
                 qids_, Q_ = qids_all, Q_all
             ids = arrow_i64(tbl.column("id"))
-            if books is not None:
-                from faiss_spark.operators.codecs import ProductQuantizerModel
+            if books is not None or sqm is not None:
+                from faiss_spark.operators.codecs import (
+                    ProductQuantizerModel,
+                    decode_column,
+                )
 
-                codes = arrow_binary_matrix(tbl.column("code"))
-                X = ProductQuantizerModel(codebooks=books).decode_np(codes)
-            elif sqm is not None:
-                codes = arrow_binary_matrix(tbl.column("code"))
-                X = sqm.decode_np(codes)
+                model = (
+                    ProductQuantizerModel(codebooks=books)
+                    if books is not None
+                    else sqm
+                )
+                X = decode_column(model, tbl.column("code"))
             else:
                 X = arrow_list_matrix(tbl.column("vec"))
             n = len(ids)
@@ -946,12 +917,8 @@ class NSGIndex:
             nid, nd = _beam_search_all(X, adj, ep, Q_, k_, L_)
             # flat emit: one table per shard, not one per query
             mask = nid >= 0
-            return pa.table(
-                {
-                    "qid": np.repeat(qids_, mask.sum(1)),
-                    "id": ids[nid[mask]],
-                    "dist": nd[mask],
-                }
+            return _cand_table(
+                np.repeat(qids_, mask.sum(1)), ids[nid[mask]], nd[mask]
             )
 
         if self.shard_collocated:

@@ -2,7 +2,7 @@
 
 Reference: faiss/VectorTransform.h:25-295, VectorTransform.cpp. Every
 transform is an Estimator (fit -> small numpy artifact on the driver)
-plus a distributed `apply` (broadcast matrix, GEMM inside mapInPandas) and
+plus a distributed `apply` (broadcast matrix, GEMM inside mapInArrow) and
 `reverse` where the reference supports reverse_transform.
 
 Fit strategy mirrors the reference: moments (mean/covariance) are computed
@@ -19,14 +19,12 @@ Transforms compose: ``Pipeline([CenteringTransform(), PCAMatrix(16)])``
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from faiss_spark.kernels import as_matrix
+from faiss_spark.kernels import arrow_list, arrow_list_matrix
 
 
 def _apply_linear(
@@ -35,29 +33,21 @@ def _apply_linear(
 ) -> DataFrame:
     """y = A·x + b via broadcast matrix + GEMM per Arrow batch
     (reference LinearTransform::apply_noalloc, VectorTransform.h:73-99)."""
+    from faiss_spark.operators.codecs import _map_codec
+
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((A, b))
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def apply(vec):
         A_, b_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = as_matrix(pdf["__vec"])
-            Y = X @ A_.T
-            if b_ is not None:
-                Y += b_
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                    out_col: list(Y.astype(np.float32)),
-                }
-            )
+        Y = arrow_list_matrix(vec) @ A_.T
+        if b_ is not None:
+            Y += b_
+        return arrow_list(Y.astype(np.float32))
 
-    src = df.select(
-        F.col(id_col).cast("bigint").alias(id_col), F.col(vec_col).alias("__vec")
+    return _map_codec(
+        df, id_col, vec_col, apply, f"{id_col} bigint, {out_col} array<float>"
     )
-    return src.mapInPandas(do, schema=f"{id_col} bigint, {out_col} array<float>")
 
 
 @dataclass
@@ -98,26 +88,30 @@ class LinearTransformModel:
 
 def _moments(df: DataFrame, vec_col: str, d: int):
     """Distributed mean + covariance: single aggregation pass.
-    sum(x), sum(x xᵀ) via outer-product accumulation in mapInPandas,
+    sum(x), sum(x xᵀ) via outer-product accumulation in mapInArrow,
     reduced on the driver (d ≤ a few thousand ⇒ d² floats is small)."""
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial(batches):
+        import pyarrow as pa
+
         s = None
         ss = None
         n = 0
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            X = as_matrix(pdf[vec_col])
+            X = arrow_list_matrix(b.column(0))
             s = X.sum(0) if s is None else s + X.sum(0)
             ss = X.T @ X if ss is None else ss + X.T @ X
             n += len(X)
         if n:
-            yield pd.DataFrame(
-                {"n": [n], "s": [s.tolist()], "ss": [ss.ravel().tolist()]}
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([n], pa.int64()), arrow_list(s[None]),
+                 arrow_list(ss.reshape(1, -1))],
+                names=["n", "s", "ss"],
             )
 
-    parts = df.select(vec_col).mapInPandas(
+    parts = df.select(vec_col).mapInArrow(
         partial, schema="n bigint, s array<double>, ss array<double>"
     ).collect()
     n = sum(r["n"] for r in parts)

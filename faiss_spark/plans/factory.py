@@ -596,7 +596,7 @@ class IndexPlan:
         def aug(batches):
             import pyarrow as pa
 
-            from faiss_spark.kernels import arrow_id_vec_blocks
+            from faiss_spark.kernels import arrow_id_vec_blocks, arrow_list
 
             qz = bc.value
             for ids, X, _ in arrow_id_vec_blocks(batches):
@@ -607,13 +607,9 @@ class IndexPlan:
                     else np.zeros(len(X))
                 )
                 Y = np.concatenate([2.0 * X, -n_est[:, None]], axis=1)
-                n, d = Y.shape
-                vec = pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32)),
-                    pa.array(np.ascontiguousarray(Y.ravel())),
-                )
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids, pa.int64()), vec], names=["id", "vec"]
+                    [pa.array(ids, pa.int64()), arrow_list(Y)],
+                    names=["id", "vec"],
                 )
 
         aug_t = decoded.select("id", "vec").mapInArrow(

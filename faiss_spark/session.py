@@ -49,7 +49,7 @@ def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # split small single-file tables across cores: a 15 MB parquet is
         # one 128 MB-default split = a single-threaded scan feeding every
-        # CPU-bound mapInPandas; parquet is splittable, so ask for at
+        # CPU-bound mapInArrow; parquet is splittable, so ask for at
         # least one split per core (no shuffle involved)
         .config("spark.sql.files.minPartitionNum", str(cpus))
         .config("spark.sql.files.maxPartitionBytes", "16m")

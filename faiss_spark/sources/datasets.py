@@ -24,11 +24,10 @@ reference's construction.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from faiss_spark.kernels import arrow_i64, arrow_list
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -98,21 +97,20 @@ class SyntheticDataset:
     def _split(self, offset: int, n: int) -> DataFrame:
         proj, scale, d1, seed = self.proj, self.scale, self.d1, self.seed
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
+        def gen(batches):
+            import pyarrow as pa
+
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                ids = pdf["id"].to_numpy(np.int64)
-                z = _hash_normals(ids + offset, d1, seed)
+                z = _hash_normals(arrow_i64(b.column(0)) + offset, d1, seed)
                 x = np.sin((z @ proj) * scale[None, :])
-                yield pd.DataFrame(
-                    {
-                        "id": ids,
-                        "vec": list(x.astype(np.float32)),
-                    }
+                yield pa.RecordBatch.from_arrays(
+                    [b.column(0), arrow_list(x.astype(np.float32))],
+                    names=["id", "vec"],
                 )
 
-        return self.spark.range(n).mapInPandas(
+        return self.spark.range(n).mapInArrow(
             gen, schema="id bigint, vec array<float>"
         )
 

@@ -119,11 +119,11 @@ def test_merge_pair_expr_greedy_left_to_right(spark):
 
 
 def test_bpe_encode_plan_is_map_only(tables):
-    """The encode is one mapInPandas over the scan — no exchange."""
+    """The encode is one mapInArrow over the scan — no exchange."""
     from tests.test_plans import plan
 
     docs = tables["documents"]
     merges = [B.BPEMerge(0, "t", "h", 10), B.BPEMerge(1, "th", "e", 5)]
     p = plan(B.bpe_encode(docs, merges))
     assert "Exchange" not in p, p
-    assert "MapInPandas" in p or "ArrowEvalPython" in p
+    assert "MapInArrow" in p, p

@@ -124,10 +124,9 @@ def test_prq_plsq_search(vectors, queries, exact10):
 def test_prq_code_roundtrip_improves_with_levels(vectors):
     import numpy as np
 
-    from faiss_spark.kernels import as_matrix
     from faiss_spark.operators.codecs import ProductAdditiveQuantizer
 
-    X = as_matrix(vectors.limit(512).toPandas()["vec"])
+    X = np.stack(vectors.limit(512).toPandas()["vec"]).astype(np.float64)
     coarse = ProductAdditiveQuantizer(nsplits=2, M_per_split=1, seed=7).fit(
         vectors
     )
@@ -152,11 +151,10 @@ def test_lsh_variants_search(vectors, queries, exact10):
 def test_lsh_thresholds_are_medians(vectors):
     import numpy as np
 
-    from faiss_spark.kernels import as_matrix
     from faiss_spark.operators.binary import LSHIndex
 
     idx = LSHIndex(train_thresholds=True, seed=3).fit(vectors)
-    X = as_matrix(vectors.toPandas()["vec"])
+    X = np.stack(vectors.toPandas()["vec"]).astype(np.float64)
     # full table fits in the training sample at test scale → exact medians
     assert np.allclose(idx.thresholds, np.median(X, axis=0))
 

@@ -199,10 +199,8 @@ def test_aq_fastscan_norm_codec_roundtrip(vectors, aqfs):
     bounded relative error (reference ST_norm_rq2x4 norm encoding)."""
     import numpy as np
 
-    from faiss_spark.kernels import as_matrix
-
     model, _ = aqfs
-    X = as_matrix(vectors.limit(200).toPandas()["vec"])
+    X = np.stack(vectors.limit(200).toPandas()["vec"]).astype(np.float64)
     codes = model.encode_np(X)
     xhat = model.rq.decode_np(codes[:, : model.M])
     true = (xhat * xhat).sum(1)
@@ -217,7 +215,6 @@ def test_aq_fastscan_matches_float_estimate(vectors, aqfs):
     the SAME approximation (−2·⟨q, x̂⟩ + ‖x̂‖²_quantized + ‖q‖²)."""
     import numpy as np
 
-    from faiss_spark.kernels import as_matrix
     from faiss_spark.operators.fastscan import aq_fastscan_search
 
     model, codes_df = aqfs
@@ -228,7 +225,7 @@ def test_aq_fastscan_matches_float_estimate(vectors, aqfs):
     }
     # float twin computed driver-side
     qp = queries.toPandas()
-    Q = as_matrix(qp["vec"])
+    Q = np.stack(qp["vec"]).astype(np.float64)
     allp = codes_df.toPandas().sort_values("id")
     ids = allp["id"].to_numpy("int64")
     codes = np.stack([np.frombuffer(c, np.uint8) for c in allp["code"]])
@@ -290,12 +287,10 @@ def test_ivfaq_fastscan_matches_float_twin(vectors, ivfaqfs):
     computed driver-side (the IVFAQFastScan LUT identity)."""
     import numpy as np
 
-    from faiss_spark.kernels import as_matrix
-
     idx = ivfaqfs
     queries = vectors.filter("id < 20").select(F.col("id").alias("qid"), "vec")
     qp = queries.toPandas()
-    Q = as_matrix(qp["vec"])
+    Q = np.stack(qp["vec"]).astype(np.float64)
     allp = idx.codes.toPandas()
     ids = allp["id"].to_numpy("int64")
     lists = allp["list_no"].to_numpy("int64")

@@ -463,3 +463,76 @@ def test_pair_min_reduceat_resolves_first_word_ties(seed, n, nseg):
     for j, (s, e) in enumerate(zip(starts, ends)):
         assert (int(mh[j]), int(ml[j])) == min(
             zip(hi[s:e].tolist(), lo[s:e].tolist()))
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    n=st.integers(0, 30),
+    d=st.integers(1, 9),
+    dtype=st.sampled_from([np.float32, np.float64, np.int64, np.uint16]),
+    lo=st.integers(0, 5),
+    seed=st.integers(0, 10_000),
+)
+def test_arrow_list_and_binary_round_trip(n, d, dtype, lo, seed):
+    """arrow_list / arrow_binary are the inverses of arrow_list_matrix /
+    arrow_binary_matrix: values, dtype and per-row bytes survive, for
+    0 rows and for sliced input arrays alike."""
+    rng = np.random.default_rng(seed)
+    M = (rng.normal(size=(n, d)) * 1000).astype(dtype)
+
+    lst = kernels.arrow_list(M)
+    assert lst.type == pa.list_(pa.from_numpy_dtype(dtype))
+    back = kernels.arrow_list_matrix(lst, dtype)
+    assert back.dtype == dtype
+    if n:
+        np.testing.assert_array_equal(back, M)
+    else:
+        assert back.shape[0] == 0
+
+    codes = kernels.arrow_binary(M)
+    assert codes.type == pa.binary()
+    assert codes.to_pylist() == [bytes(row) for row in M]
+    if n:
+        np.testing.assert_array_equal(
+            kernels.arrow_binary_matrix(codes).view(dtype), M
+        )
+
+    # sliced inputs read only their own window
+    hi = max(lo, n - 2)
+    lo = min(lo, hi)
+    np.testing.assert_array_equal(
+        kernels.arrow_list_matrix(lst.slice(lo, hi - lo), dtype).reshape(
+            -1, d
+        ),
+        M[lo:hi],
+    )
+    np.testing.assert_array_equal(
+        kernels.arrow_binary_matrix(codes.slice(lo, hi - lo))
+        .view(dtype)
+        .reshape(-1, d),
+        M[lo:hi],
+    )
+    assert kernels.arrow_binary(M[lo:hi:2]).to_pylist() == [
+        bytes(row) for row in M[lo:hi:2]
+    ]
+
+
+def test_arrow_list_matrix_rejects_ragged_and_null_rows():
+    """A ragged or null vector must raise, naming the lengths — a bare
+    flatten-and-reshape would shift it silently into wrong rows."""
+    ragged = pa.array([[1.0, 2.0], [3.0], [4.0, 5.0]], pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match=r"unequal length \[1, 2\]"):
+        kernels.arrow_list_matrix(ragged)
+    # a ragged row outside the slice window does not count
+    np.testing.assert_array_equal(
+        kernels.arrow_list_matrix(ragged.slice(2, 1)), [[4.0, 5.0]]
+    )
+    nulls = pa.array([[1.0, 2.0], None, [4.0, 5.0]], pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match="1 null row"):
+        kernels.arrow_list_matrix(nulls)
+    with pytest.raises(ValueError, match="1 null row"):
+        list(
+            kernels.arrow_id_vec_blocks(
+                [pa.record_batch([pa.array([1, 2, 3]), nulls], ["id", "vec"])]
+            )
+        )

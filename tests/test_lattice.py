@@ -139,7 +139,7 @@ def test_lattice_save_load_roundtrip(spark, tables, tmp_path):
 
 
 def test_lattice_encode_is_map_only(spark, tables):
-    """sa_encode must stay a single map stage: scan -> mapInPandas, no
+    """sa_encode must stay a single map stage: scan -> mapInArrow, no
     exchange/join — the shape that scales to a 100 TB encode."""
     vecs = tables["embeddings"].select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")

@@ -73,7 +73,7 @@ def test_ivf_search_prunes_partitions(emb, queries, tmp_path):
 
 
 def test_range_search_has_no_keyed_shuffle(emb, queries):
-    """Range search is embarrassingly parallel: scan + mapInPandas. The
+    """Range search is embarrassingly parallel: scan + mapInArrow. The
     only Exchange allowed is the explicit hash(id) fan-out of a
     single-split local file (a no-op on real multi-split tables; r13:
     hash on the unique id instead of round-robin, which pays a local
@@ -434,24 +434,38 @@ def test_dedup_against_is_left_anti_on_keys(tables):
     assert "LeftAnti" in p
 
 
-def test_ivf_module_has_no_pandas_scan_paths():
-    """VERDICT r9 #3 (ROUND9 claim made true): every IVF/PQ list scan and
-    encode path rides the Arrow group helpers. The only permitted
-    mapInPandas call sites in ivf.py are TwoLayerCodes.reconstruct (tiny
-    id-list path) and IVFSpectralHash's word-code paths — the encode and
-    the r13 sh_search_preassigned probe builder (codes are array<bigint>
-    words, not a fixed-width binary matrix)."""
-    import inspect
+def test_package_python_boundary_is_arrow_only():
+    """One Python boundary idiom: every worker map and query collect in
+    the package goes through Arrow. No module calls mapInPandas or
+    applyInPandas, and none imports pandas, except the stateful
+    streaming operators (applyInPandasWithState has no Arrow twin)."""
+    import ast
+    import pathlib
 
-    from faiss_spark.operators import ivf as ivfmod
+    import faiss_spark
 
-    src = inspect.getsource(ivfmod).splitlines()
-    calls = [
-        (i + 1, ln.strip())
-        for i, ln in enumerate(src)
-        if ".mapInPandas(" in ln
-    ]
-    assert len(calls) == 3, calls
+    root = pathlib.Path(faiss_spark.__file__).parent
+    allowed = {root / "streaming" / "stateful.py"}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path in allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "mapInPandas", "applyInPandas",
+            ):
+                hits.append((path.name, node.lineno, node.attr))
+            elif isinstance(node, ast.Import):
+                hits += [
+                    (path.name, node.lineno, a.name)
+                    for a in node.names
+                    if a.name.split(".")[0] == "pandas"
+                ]
+            elif isinstance(node, ast.ImportFrom) and (
+                (node.module or "").split(".")[0] == "pandas"
+            ):
+                hits.append((path.name, node.lineno, node.module))
+    assert not hits, hits
 
 
 def test_binary_preassigned_bucketed_codes_skip_shuffle(emb, queries, tmp_path):

@@ -152,19 +152,35 @@ def test_ivfpqr_beats_ivfpq(vectors):
     assert len(ref & truth) >= len(raw & truth)
 
 
-def test_two_layer_reconstruct(vectors):
+@pytest.mark.parametrize("nbits", [8, 9])
+def test_two_layer_reconstruct(vectors, nbits):
+    """reconstruct(id) = centroid[list_no] + PQ decode of the stored code,
+    equal to the numpy decode for 1-byte and 2-byte (nbits > 8) sub-codes
+    alike."""
     from faiss_spark.operators.ivf import IVFPQIndex, TwoLayerCodes
-    import numpy as np
 
-    idx = IVFPQIndex.train(vectors, nlist=8, M=8, seed=42, niter=5, pq_niter=5).add(vectors)
+    idx = IVFPQIndex.train(
+        vectors, nlist=8, M=8, seed=42, niter=5, pq_niter=5, nbits=nbits
+    ).add(vectors)
+    pq = idx.pq
+    assert pq.code_dtype == (np.uint8 if nbits == 8 else np.uint16)
     tl = TwoLayerCodes.from_ivfpq(idx)
     got = {r["id"]: np.asarray(r["vec"]) for r in tl.reconstruct([1, 5, 9]).collect()}
+    want = {
+        r["id"]: (
+            idx.centroids[r["list_no"]]
+            + pq.decode_np(np.frombuffer(r["code"], pq.code_dtype)[None])[0]
+        ).astype(np.float32)
+        for r in tl.codes.filter("id in (1,5,9)").collect()
+    }
     orig = {
         r["id"]: np.asarray(r["vec"])
         for r in vectors.filter("id in (1,5,9)").collect()
     }
-    assert got.keys() == orig.keys()
-    for i in got:  # lossy codec: reconstruction close, not exact
+    assert got.keys() == want.keys() == orig.keys()
+    for i in got:
+        np.testing.assert_array_equal(got[i], want[i])
+        # lossy codec: reconstruction close, not exact
         err = np.abs(got[i] - orig[i]).mean()
         assert err < 0.2, err
 

@@ -288,14 +288,13 @@ def test_pq_sdc_equals_adc_of_roundtripped_query(vectors, spark):
     import numpy as np
     import pandas as pd
 
-    from faiss_spark.kernels import as_matrix
-
     model = ProductQuantizer(M=8, niter=8, seed=3).fit(vectors)
     codes = model.encode(vectors)
     queries = vectors.filter("id < 5").select(F.col("id").alias("qid"), "vec")
     sdc = model.sdc_search(codes, queries, k=10)
     qp = queries.toPandas()
-    Qd = model.decode_np(model.encode_np(as_matrix(qp["vec"])))
+    Q = np.stack(qp["vec"]).astype(np.float64)
+    Qd = model.decode_np(model.encode_np(Q))
     qs_rt = spark.createDataFrame(
         pd.DataFrame({"qid": qp["qid"], "vec": list(Qd.astype(np.float64))})
     )
