@@ -208,16 +208,6 @@ def arrow_list_groups(batches, extract):
             yield int(sl[s]), tuple(m[rows] for m in blk), ids[rows]
 
 
-def arrow_code_groups(batches):
-    """(list_no, codes (n, w) uint8, ids int64) per-list groups from
-    ``mapInArrow`` batches of ``(list_no, id, code binary)`` — zero-copy
-    code matrix via arrow_binary_matrix."""
-    for list_no, (codes,), ids in arrow_list_groups(
-        batches, lambda b: (arrow_binary_matrix(b.column(2)),)
-    ):
-        yield list_no, codes, ids
-
-
 def pairwise_distances(
     Q: np.ndarray, X: np.ndarray, metric: str, metric_arg: float | None = None
 ) -> np.ndarray:

@@ -21,8 +21,10 @@ Distances (reference faiss/utils/hamming.h:113-170, binary_distances.h):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
 
 WORD_BITS = 32
 
@@ -160,12 +162,7 @@ def _binary_knn(
     joined = codes.crossJoin(F.broadcast(qcodes)).select(
         "qid", "id", dist.alias("dist")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(joined, k, largest=False)
 
 
 def hamming_knn(
@@ -535,12 +532,7 @@ class BinaryIVFIndex:
             "id",
             hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
         )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "id", "dist", "rank")
-        )
+        return _window_topk(joined, k, largest=False)
 
     def range_search(
         self, qcodes: DataFrame, radius: int, nprobe: int = 1,
@@ -684,8 +676,6 @@ def binary_search_preassigned(
     the tiled TopKAccumulator: squared L2 on 0/1 vectors IS Hamming
     (integer-exact in f64), so distances match the driver-planned
     ``hamming_expr`` scan bit for bit."""
-    from faiss_spark.operators.ivf import cogrouped_cell_scan
-
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
     nbits = index.nbits
@@ -720,12 +710,7 @@ def binary_search_preassigned(
         return _cand_table(arrow_i64(ptab.column("qid"))[qidx], nid, nd)
 
     cands = cogrouped_cell_scan(index, probes, codes, max_cell_rows, scan_cell)
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(cands, k, largest=False)
 
 
 def binary_range_search_preassigned(
@@ -745,8 +730,6 @@ def binary_range_search_preassigned(
     (squared L2 == Hamming, integer-exact) — no top-k, and because
     inverted lists partition the ids the plan ends map-only after the
     cogroup, exactly like the float ``range_search_preassigned``."""
-    from faiss_spark.operators.ivf import cogrouped_cell_scan
-
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
     nbits = index.nbits
@@ -877,12 +860,7 @@ class BinaryHashIndex:
             "id",
             hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
         )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "id", "dist", "rank")
-        )
+        return _window_topk(joined, k, largest=False)
 
 
 class BinaryMultiHashIndex:
@@ -1010,12 +988,7 @@ class BinaryMultiHashIndex:
             .groupBy("qid", "id")
             .agg(F.min("dist").alias("dist"))
         )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "id", "dist", "rank")
-        )
+        return _window_topk(joined, k, largest=False)
 
 
 class LSHIndex:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from faiss_spark.kernels import (
@@ -558,6 +558,8 @@ class ProductQuantizerModel(_CodecFace):
         reduce to D[q, x] = Σ_m lut[q, m, code[x, m]]). Arrow-native:
         the binary code column reshapes zero-copy into the (n, M) uint8
         matrix (kernels.arrow_binary_matrix) — no per-row frombuffer."""
+        from faiss_spark.operators.ivf import _window_topk
+
         spark = codes_df.sparkSession
         bc = spark.sparkContext.broadcast((qids, luts, qcodes))
         k_ = k
@@ -621,12 +623,7 @@ class ProductQuantizerModel(_CodecFace):
         cands = codes_df.select("id", "code").mapInArrow(
             scan, schema="qid bigint, id bigint, dist double"
         )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
+        return _window_topk(cands, k_, largest=False)
 
 
 def _hamming_table(nbits: int) -> np.ndarray:

@@ -21,50 +21,47 @@ The physical half (register layout) is out of scope per SURVEY §2.B —
 numpy's vectorized gather over Arrow batches is this engine's vector
 unit, and Tungsten/whole-stage-codegen owns the layout above it.
 
-Scale shape: LUT construction is O(nq · nprobe · M · ksub · dsub) on the
-driver (ksub is 16 for 4-bit codes — a few MB even at nq=10k), broadcast
-once; the scan over the codes table is map-only over (pruned) partitions
-with per-worker top-k partials, identical to the ADC scan plans pinned in
-tests/test_plans.py.
+Scale shape: the flat scans build their LUTs on the driver (ksub is 16
+for 4-bit codes — a few MB even at nq=10k), broadcast once, and scan the
+codes table map-only with per-worker top-k partials. The IVF indexes
+(``IVFPQFastScanIndex``, ``IVFAQFastScanIndex``) are list scanners
+(``_PQ4Scanner``, ``_AQ4Scanner``) on the two shared IVF routes of
+operators/ivf.py. Their LUTs are quantized per query over its whole
+probe set, so they come from the scanner's ``probe_terms`` hook: built
+on the driver and broadcast with the list → queries map (driver route),
+or built in the probe map and carried as a ``terms`` column through the
+cogroup (distributed route). Both routes then share the partition-pruned
+scan, hot-cell sub-sharding, IVFSearchStats and the max_codes budget of
+every other IVF codec.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 import numpy as np
-from pyspark.sql import DataFrame, functions as F, Window
+from pyspark.sql import DataFrame, functions as F
 
 from faiss_spark.kernels import (
     TopKAccumulator,
-    _cand_table,
-    _empty_cand_table,
     arrow_binary,
+    arrow_binary_matrix,
     arrow_list,
     arrow_list_matrix,
-    pairwise_distances,
 )
 from faiss_spark.operators.codecs import ProductQuantizerModel
-from faiss_spark.operators.ivf import IVFPQIndex, collect_queries_bounded
+from faiss_spark.operators.ivf import (
+    IVFPQIndex,
+    _ListScanner,
+    _preassigned_cogrouped,
+    _probe_pairs,
+    _probe_planner,
+    _scan_probed_lists,
+    _window_topk,
+    collect_queries_bounded,
+)
 
 
 # ------------------------------------------------------------ quantization
-
-
-def _emit_group_candidates(qids, accs, qsels):
-    """RecordBatch candidate emitter shared by the grouped fast-scan
-    scans (one batch per touched list's accumulator)."""
-    import pyarrow as pa
-
-    for key, acc in accs.items():
-        qidx, nid, nd = acc.emit()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids[qsels[key][qidx]], pa.int64()),
-                pa.array(nid, pa.int64()),
-                pa.array(nd, pa.float64()),
-            ],
-            names=["qid", "id", "dist"],
-        )
 
 
 def quantize_lut_flat(luts: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -186,8 +183,6 @@ def pq_fastscan_search(
     def scan(batches):
         import pyarrow as pa
 
-        from faiss_spark.kernels import arrow_binary_matrix
-
         qids_, lutq_, a_, b_ = bc.value
         nq = len(qids_)
         acc = TopKAccumulator(nq, k_, largest=False)
@@ -216,12 +211,7 @@ def pq_fastscan_search(
     cands = codes_df.select("id", "code").mapInArrow(
         scan, schema="qid bigint, id bigint, dist double"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(cands, k_, largest=False)
 
 
 # ------------------------------------------------------------ IVFPQ scan
@@ -387,161 +377,126 @@ class IVFPQFastScanIndex:
         qid_col: str = "qid",
         qvec_col: str = "vec",
     ) -> DataFrame:
-        base = self.base
-        if base.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = base.codes.sparkSession
-        C = base.centroids
-        books = base.pq.codebooks
-        M, ksub, dsub = books.shape
-        if ksub > 16:
-            raise ValueError(f"fast-scan requires 4-bit codes, got ksub={ksub}")
-        nlist = len(C)
-        nprobe = min(nprobe, nlist)
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFPQFastScanIndex.search",
-            d=C.shape[1],
+        """Driver-route IVF fast-scan search (``_PQ4Scanner``); a query
+        side past the driver bound falls back to
+        ``fastscan_search_preassigned`` (looked up at call time)."""
+        return _scan_probed_lists(
+            self.base, queries, _probe_planner(self.base, nprobe),
+            _PQ4Scanner(self), "IVFPQFastScanIndex.search", qid_col,
+            qvec_col, k=k,
             fallback=lambda: fastscan_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        nq = len(Q)
-        CD = pairwise_distances(Q, C, "l2")
-        probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe]  # (nq, nprobe)
-        if not self.by_residual:
-            return self._search_flat_lut(spark, qids, Q, probes, k)
 
-        # Residual LUTs per (query, probe), quantized in QUERY BLOCKS so
-        # only the uint8 tables persist on the driver: the float64
-        # (blk, nprobe, M, ksub) LUT tensor and (blk, nprobe, d) residuals
-        # are scratch per block (at nq=10k, nprobe=16 the full-tensor form
-        # would hold ~330 MB; the kept lutq/biasq are ~nq·nprobe·M·ksub
-        # bytes — a few MB)
-        lutq = np.empty((nq, nprobe, M, ksub), np.uint8)
-        biasq = np.empty((nq, nprobe), np.uint16)
-        a = np.empty(nq)
-        b = np.empty(nq)
-        zero_bias = np.zeros(nprobe)
-        blk = 256
-        for s in range(0, nq, blk):
-            e = min(nq, s + blk)
-            R = Q[s:e, None, :] - C[probes[s:e]]  # (blk, nprobe, d)
-            Rs = R.reshape(e - s, nprobe, M, dsub)
+
+def _pack_terms(lut, biasq, *f64) -> np.ndarray:
+    """The fast-scan scanners' probe_terms rows, one per (query, probe):
+    the uint8 LUT bytes (lut is (n, L)), the uint16 quantized bias, then
+    float64 scalars (a, b, ...) — the layout ``_unpack_terms`` reads."""
+    n = len(lut)
+    return np.concatenate(
+        [
+            lut,
+            np.asarray(biasq, np.uint16).reshape(n, 1).view(np.uint8),
+            np.stack(f64, axis=1).view(np.uint8),
+        ],
+        axis=1,
+    )
+
+
+def _unpack_terms(T, L: int, nf: int):
+    """(lut (n, L) uint8, biasq (n,) uint16, [nf float64 columns]) from
+    ``_pack_terms`` rows."""
+    lut = np.ascontiguousarray(T[:, :L])
+    biasq = np.ascontiguousarray(T[:, L : L + 2]).view(np.uint16)[:, 0]
+    f = np.ascontiguousarray(T[:, L + 2 : L + 2 + 8 * nf]).view(np.float64)
+    return lut, biasq, [f[:, i] for i in range(nf)]
+
+
+class _PQ4Scanner(_ListScanner):
+    """IVF-PQ fast-scan lists (IndexIVFPQFastScan, both by_residual
+    modes). ``probe_terms`` builds each query's uint8 LUTs: per-probe
+    residual LUTs quantized JOINTLY over the query's probe set (shared
+    a/b, per-probe bias — quantize_lut_ivf, quantize_lut.cpp:195) so
+    distances from different lists stay comparable in the merge, or one
+    flat LUT shared by every probe (quantize_lut_flat, the
+    by_residual=false branch — at full probe bit-identical to
+    pq_fastscan_search). A push is the saturating uint16 LUT sum,
+    de-quantized as acc / a + b."""
+
+    def __init__(self, index: IVFPQFastScanIndex):
+        ksub = index.base.pq.ksub
+        if ksub > 16:
+            raise ValueError(f"fast-scan requires 4-bit codes, got ksub={ksub}")
+        self.pq, self.centroids = index.base.pq, index.base.centroids
+        self.by_residual = index.by_residual
+
+    def block(self, cols):
+        return (arrow_binary_matrix(cols[0]),)
+
+    def block_rows(self, nq, d):
+        # saturation is per element: chunking the codes keeps the uint16
+        # chain bit-equal while bounding the uint32 scratch
+        return max(16, (1 << 22) // max(1, nq))
+
+    def probe_terms(self, Q, probes):
+        books = self.pq.codebooks
+        M, ksub, dsub = books.shape
+        rep, _ = _probe_pairs(probes)
+        if not self.by_residual:
+            # LUT via the SAME distance_table arithmetic as
+            # pq_fastscan_search: the full-probe == flat-scan bit-identity
+            # needs IDENTICAL floats entering uint8 quantization — an
+            # algebraically-equal expanded form (|q|²+|c|²−2⟨q,c⟩) can land
+            # a value on the other side of a bin boundary
+            luts = np.stack([self.pq.distance_table(q) for q in Q])
+            lutq, a, b = quantize_lut_flat(luts)
+            return _pack_terms(
+                lutq.reshape(len(Q), M * ksub)[rep], np.zeros(len(rep)),
+                a[rep], b[rep],
+            )
+        n = len(rep)
+        lut = np.empty((n, M * ksub), np.uint8)
+        biasq = np.empty(n, np.uint16)
+        a, b = np.empty(n), np.empty(n)
+        # residual LUTs in query blocks (ragged rows: one query a block),
+        # so only the uint8 rows persist: the float (blk, p, M, ksub) LUT
+        # tensor and (blk, p, d) residuals are scratch per block
+        if isinstance(probes, np.ndarray):
+            blocks = [(s, probes[s : s + 256]) for s in range(0, len(Q), 256)]
+        else:
+            blocks = [(qi, row[None, :]) for qi, row in enumerate(probes)]
+        o = 0
+        for s, P in blocks:
+            nb, p = P.shape
+            Rs = (Q[s : s + nb, None, :] - self.centroids[P]).reshape(
+                nb, p, M, dsub
+            )
             luts = (
                 (Rs * Rs).sum(3)[:, :, :, None]
                 + (books * books).sum(2)[None, None, :, :]
                 - 2.0 * np.einsum("qpmd,mkd->qpmk", Rs, books)
             )
-            for qi in range(s, e):
-                lutq[qi], biasq[qi], a[qi], b[qi] = quantize_lut_ivf(
-                    luts[qi - s], zero_bias
+            for li in range(nb):
+                lq, biasq[o : o + p], a[o : o + p], b[o : o + p] = (
+                    quantize_lut_ivf(luts[li], np.zeros(p))
                 )
+                lut[o : o + p] = lq.reshape(p, M * ksub)
+                o += p
+        return _pack_terms(lut, biasq, a, b)
 
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        l2q: dict[int, list[tuple[int, int]]] = {c: [] for c in probed_lists}
-        for qi in range(nq):
-            for j, c in enumerate(probes[qi]):
-                l2q[int(c)].append((qi, j))
-        l2q_np = {
-            c: (
-                np.asarray([p[0] for p in v], np.int64),
-                np.asarray([p[1] for p in v], np.int64),
-            )
-            for c, v in l2q.items()
-        }
-        bc = spark.sparkContext.broadcast((qids, lutq, biasq, a, b, l2q_np))
-        k_ = k
-        pruned = base.codes.filter(F.col("list_no").isin(probed_lists))
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
+        M, ksub = self.pq.codebooks.shape[:2]
+        lut, biasq, (a, b) = _unpack_terms(T, M * ksub, 2)
+        lutq = lut.reshape(-1, M, ksub)
 
-        def scan(batches):
-            from faiss_spark.kernels import arrow_code_groups
+        def push(blk, ids):
+            D16 = _saturating_lut_sum(lutq, blk[0], init=biasq)
+            acc.push(D16 / a[:, None] + b[:, None], ids)
 
-            qids_, lutq_, biasq_, a_, b_, l2q_ = bc.value
-            accs: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                sel = l2q_.get(list_no)
-                if sel is None or len(sel[0]) == 0:
-                    continue
-                qsel, jsel = sel
-                D16 = _saturating_lut_sum(
-                    lutq_[qsel, jsel], codes, init=biasq_[qsel, jsel]
-                )
-                est = D16 / a_[qsel][:, None] + b_[qsel][:, None]
-                if list_no not in accs:
-                    accs[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                accs[list_no].push(est, ids)
-            yield from _emit_group_candidates(qids_, accs, qsels)
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
-
-    def _search_flat_lut(self, spark, qids, Q, probes, k):
-        """Non-residual scan: ONE quantize_lut_flat LUT per query shared
-        across its probes (the reference's by_residual=false branch) —
-        identical arithmetic to pq_fastscan_search, restricted to the
-        probed partitions."""
-        nq = len(Q)
-        # LUT via the SAME distance_table arithmetic as pq_fastscan_search
-        # (fastscan.py pq path / ProductQuantizerModel.distance_table):
-        # the full-probe == flat-scan bit-identity depends on IDENTICAL
-        # floats entering uint8 quantization — an algebraically-equal
-        # expanded form (|q|²+|c|²−2⟨q,c⟩) can land a value on the other
-        # side of a bin boundary (ADVICE r7).
-        luts = np.stack([self.base.pq.distance_table(q) for q in Q])
-        lutq, a, b = quantize_lut_flat(luts)
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        l2q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(nq):
-            for c in probes[qi]:
-                l2q[int(c)].append(qi)
-        l2q_np = {c: np.asarray(v, np.int64) for c, v in l2q.items()}
-        bc = spark.sparkContext.broadcast((qids, lutq, a, b, l2q_np))
-        k_ = k
-        pruned = self.base.codes.filter(F.col("list_no").isin(probed_lists))
-
-        def scan(batches):
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, lutq_, a_, b_, l2q_ = bc.value
-            accs: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                qsel = l2q_.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                D16 = _saturating_lut_sum(lutq_[qsel], codes)
-                est = D16 / a_[qsel][:, None] + b_[qsel][:, None]
-                if list_no not in accs:
-                    accs[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                accs[list_no].push(est, ids)
-            yield from _emit_group_candidates(qids_, accs, qsels)
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
+        return push
 
 
 def fastscan_search_preassigned(
@@ -558,127 +513,16 @@ def fastscan_search_preassigned(
     contrib/ivf_tools.py pattern over faiss/IndexIVFPQFastScan.h).
 
     Fast-scan's LUTs are quantized PER QUERY (by_residual: jointly over
-    the query's probes so distances stay comparable in the merge,
-    quantize_lut.cpp:195), so the distributed shape quantizes inside
-    the probe-assignment map — each (qid, list_no) probe row carries
-    its uint8 LUT bytes (M·ksub ≈ 128 B at 4-bit PQ8), bias, and the
-    per-query (a, b) dequantization constants through the cogroup; the
-    per-cell scan is then pure ``_saturating_lut_sum`` against the
-    cell's codes with no codebook state at all. Arithmetic is the
-    driver scan's bit for bit (same LUT floats entering the same uint8
-    quantization, same saturating accumulation), for both by_residual
+    the query's probes, quantize_lut.cpp:195), so the probe map builds
+    them (``_PQ4Scanner.probe_terms``) and each (qid, list_no) probe row
+    carries its LUT bytes, bias and (a, b) through the cogroup; the
+    per-cell scan is the saturating LUT sum against the cell's codes.
+    Arithmetic is the driver route's bit for bit, for both by_residual
     modes."""
-    from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
-
-    base = index.base
-    if base.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    C0 = base.centroids
-    books0 = base.pq.codebooks
-    M, ksub, dsub = books0.shape
-    if ksub > 16:
-        raise ValueError(f"fast-scan requires 4-bit codes, got ksub={ksub}")
-    nprobe_ = min(nprobe, len(C0))
-    by_res = index.by_residual
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((C0, books0))
-    k_ = k
-
-    def assign_probes(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_id_vec_blocks
-
-        C, books = bc.value
-        pqm = ProductQuantizerModel(codebooks=books)
-        zero_bias = np.zeros(nprobe_)
-        for qids, Q, _ in arrow_id_vec_blocks(batches):
-            nq = len(Q)
-            CD = pairwise_distances(Q, C, "l2")
-            probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-            if by_res:
-                lutq = np.empty((nq, nprobe_, M, ksub), np.uint8)
-                biasq = np.empty((nq, nprobe_), np.uint16)
-                a = np.empty(nq)
-                b = np.empty(nq)
-                blk = 256  # float LUT tensor stays scratch per block
-                for s in range(0, nq, blk):
-                    e = min(nq, s + blk)
-                    R = Q[s:e, None, :] - C[probes[s:e]]
-                    Rs = R.reshape(e - s, nprobe_, M, dsub)
-                    luts = (
-                        (Rs * Rs).sum(3)[:, :, :, None]
-                        + (books * books).sum(2)[None, None, :, :]
-                        - 2.0 * np.einsum("qpmd,mkd->qpmk", Rs, books)
-                    )
-                    for qi in range(s, e):
-                        lutq[qi], biasq[qi], a[qi], b[qi] = quantize_lut_ivf(
-                            luts[qi - s], zero_bias
-                        )
-            else:
-                # one flat LUT per query shared across its probes — the
-                # same distance_table arithmetic as the driver path (an
-                # algebraically-equal form can flip a uint8 bin)
-                luts = np.stack([pqm.distance_table(q) for q in Q])
-                lut1, a, b = quantize_lut_flat(luts)
-                lutq = np.repeat(lut1[:, None, :, :], nprobe_, axis=1)
-                biasq = np.zeros((nq, nprobe_), np.uint16)
-            rep = np.repeat(np.arange(nq), nprobe_)
-            lut_rows = lutq.reshape(nq * nprobe_, M * ksub)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    pa.array(probes.astype(np.int32).ravel(), pa.int32()),
-                    arrow_binary(lut_rows),
-                    pa.array(biasq.ravel().astype(np.int32), pa.int32()),
-                    pa.array(a[rep], pa.float64()),
-                    pa.array(b[rep], pa.float64()),
-                ],
-                names=["qid", "list_no", "lut", "bias", "a", "b"],
-            )
-
-    q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
+    return _preassigned_cogrouped(
+        index.base, queries, _probe_planner(index.base, nprobe),
+        _PQ4Scanner(index), qid_col, qvec_col, max_cell_rows, k=k,
     )
-    probes_df = q.mapInArrow(
-        assign_probes,
-        schema="qid bigint, list_no int, lut binary, bias int, a double, b double",
-    )
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import arrow_binary_matrix, arrow_i64
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        qids_ = arrow_i64(ptab.column("qid"))
-        lutq = arrow_binary_matrix(ptab.column("lut")).reshape(-1, M, ksub)
-        bias = arrow_i64(ptab.column("bias")).astype(np.uint16)
-        a_ = np.asarray(
-            ptab.column("a").combine_chunks().to_numpy(zero_copy_only=False),
-            np.float64,
-        )
-        b_ = np.asarray(
-            ptab.column("b").combine_chunks().to_numpy(zero_copy_only=False),
-            np.float64,
-        )
-        codes = arrow_binary_matrix(ctab.column("code"))
-        ids = arrow_i64(ctab.column("id"))
-        acc = TopKAccumulator(len(qids_), k_, largest=False)
-        # saturation is per-element, so column-chunking the codes keeps
-        # the uint16 chain bit-equal while bounding the uint32 scratch
-        chunk = max(16, (1 << 22) // max(1, len(qids_)))
-        for s in range(0, len(ids), chunk):
-            D16 = _saturating_lut_sum(
-                lutq, codes[s:s + chunk], init=bias if by_res else None
-            )
-            est = D16 / a_[:, None] + b_[:, None]
-            acc.push(est, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids_[qidx], nid, nd)
-
-    codes = base.codes.select("list_no", "id", "code")
-    cands = cogrouped_cell_scan(base, probes_df, codes, max_cell_rows, scan_cell)
-    return _window_topk(cands, k, largest=False)
 
 
 # ------------------------------------------------------------ AQ fast-scan
@@ -878,8 +722,6 @@ def aq_fastscan_search(
     def scan(batches):
         import pyarrow as pa
 
-        from faiss_spark.kernels import arrow_binary_matrix
-
         qids_, lutq_, a_, b_, qsq_, w_ = bc.value
         nq = len(qids_)
         acc = TopKAccumulator(nq, k_, largest=False)
@@ -908,12 +750,7 @@ def aq_fastscan_search(
     cands = codes_df.select("id", "code").mapInArrow(
         scan, schema="qid bigint, id bigint, dist double"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(cands, k_, largest=False)
 
 
 # ------------------------------------------------------- IVF AQ fast-scan
@@ -1189,110 +1026,85 @@ class IVFAQFastScanIndex:
         qid_col: str = "qid",
         qvec_col: str = "vec",
     ) -> DataFrame:
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        C = self.centroids
-        M, ksub = self.M, self.ksub
-        nlist = len(C)
-        nprobe = min(nprobe, nlist)
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFAQFastScanIndex.search",
-            d=C.shape[1],
+        """Driver-route IVF AQ fast-scan search (``_AQ4Scanner``); a
+        query side past the driver bound falls back to
+        ``aq_fastscan_search_preassigned`` (looked up at call time)."""
+        return _scan_probed_lists(
+            self, queries, _probe_planner(self, nprobe), _AQ4Scanner(self),
+            "IVFAQFastScanIndex.search", qid_col, qvec_col, k=k,
             fallback=lambda: aq_fastscan_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        nq = len(Q)
-        CD = pairwise_distances(Q, C, "l2")
-        probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe]
-        # one 2-D LUT per query (shared across probes) — rows are exactly
-        # AQFastScanModel.float_luts of the RQ (residual or raw)
-        luts = AQFastScanModel(
-            rq=self.rq, norm_books=self.norm_books, norm_scale=self.norm_scale
-        ).float_luts(Q)  # (nq, M+2, ksub)
+
+
+class _AQ4Scanner(_ListScanner):
+    """IVF additive-quantizer fast-scan lists
+    (IndexIVFAdditiveQuantizerFastScan.cpp:352-401; RQ, and PRQ/PLSQ
+    through ProductAQAdapter; both by_residual modes). ``probe_terms``
+    builds ONE 2-D LUT per query shared by its probes
+    (AQFastScanModel.float_luts): by_residual quantizes it with the
+    per-probe −2⟨q, c_j⟩ bias (aq_quantize_lut_bias), otherwise exactly
+    as the flat aq_fastscan LUT, so at full probe results equal
+    aq_fastscan_search. A push is the NormTableScaler saturating sum,
+    de-quantized, plus ‖q‖²."""
+
+    def __init__(self, index: IVFAQFastScanIndex):
+        self.model = AQFastScanModel(
+            rq=index.rq, norm_books=index.norm_books,
+            norm_scale=index.norm_scale,
+        )
+        self.centroids = index.centroids
+        self.by_residual = index.by_residual
+
+    def block(self, cols):
+        return (arrow_binary_matrix(cols[0]),)
+
+    def block_rows(self, nq, d):
+        return max(16, (1 << 22) // max(1, nq))
+
+    def probe_terms(self, Q, probes):
+        m = self.model
+        L = (m.M + 2) * m.ksub
+        rep, _ = _probe_pairs(probes)
+        luts = m.float_luts(Q)  # (nq, M+2, ksub)
         if self.by_residual:
-            qc = Q @ C.T  # ⟨q, c⟩ for the per-probe bias
-            lutq = np.empty((nq, M + 2, ksub), np.uint8)
-            biasq = np.empty((nq, nprobe), np.uint16)
-            a = np.empty(nq)
-            b = np.empty(nq)
-            for qi in range(nq):
-                bias = -2.0 * qc[qi, probes[qi]]
-                lutq[qi], biasq[qi], a[qi], b[qi] = aq_quantize_lut_bias(
-                    luts[qi], bias, M_norm=2, norm_scale=self.norm_scale
+            qc = Q @ self.centroids.T  # ⟨q, c⟩ for the per-probe bias
+            lutq = np.empty((len(Q), m.M + 2, m.ksub), np.uint8)
+            biasq = np.empty(len(rep), np.uint16)
+            a, b = np.empty(len(Q)), np.empty(len(Q))
+            o = 0
+            for qi, row in enumerate(probes):
+                lutq[qi], biasq[o : o + len(row)], a[qi], b[qi] = (
+                    aq_quantize_lut_bias(
+                        luts[qi], -2.0 * qc[qi, row], M_norm=2,
+                        norm_scale=m.norm_scale,
+                    )
                 )
+                o += len(row)
         else:
-            # no bias: the flat aq_fastscan quantization verbatim, so at
-            # full probe results are bit-identical to aq_fastscan_search
-            lutq, a, b = aq_quantize_lut(
-                luts, M_norm=2, norm_scale=self.norm_scale
-            )
-            biasq = np.zeros((nq, nprobe), np.uint16)
+            lutq, a, b = aq_quantize_lut(luts, M_norm=2, norm_scale=m.norm_scale)
+            biasq = np.zeros(len(rep), np.uint16)
         qsq = (Q * Q).sum(1)
+        return _pack_terms(
+            lutq.reshape(len(Q), L)[rep], biasq, a[rep], b[rep], qsq[rep]
+        )
+
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
+        M, ksub = self.model.M, self.model.ksub
+        lut, biasq, (a, b, qsq) = _unpack_terms(T, (M + 2) * ksub, 3)
+        lutq = lut.reshape(-1, M + 2, ksub)
         weights = np.ones(M + 2, np.int64)
-        weights[M:] = self.norm_scale
+        weights[M:] = self.model.norm_scale
 
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        l2q: dict[int, list[tuple[int, int]]] = {c: [] for c in probed_lists}
-        for qi in range(nq):
-            for j, c in enumerate(probes[qi]):
-                l2q[int(c)].append((qi, j))
-        l2q_np = {
-            c: (
-                np.asarray([p[0] for p in v], np.int64),
-                np.asarray([p[1] for p in v], np.int64),
+        def push(blk, ids):
+            D16 = _saturating_lut_sum(
+                lutq, blk[0], init=biasq, row_weights=weights
             )
-            for c, v in l2q.items()
-        }
-        bc = spark.sparkContext.broadcast(
-            (qids, lutq, biasq, a, b, qsq, weights, l2q_np)
-        )
-        k_ = k
-        pruned = self.codes.filter(F.col("list_no").isin(probed_lists))
+            acc.push(D16 / a[:, None] + b[:, None] + qsq[:, None], ids)
 
-        def scan(batches):
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, lutq_, biasq_, a_, b_, qsq_, w_, l2q_ = bc.value
-            accs: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                sel = l2q_.get(list_no)
-                if sel is None or len(sel[0]) == 0:
-                    continue
-                qsel, jsel = sel
-                D16 = _saturating_lut_sum(
-                    lutq_[qsel],
-                    codes,
-                    init=biasq_[qsel, jsel],
-                    row_weights=w_,
-                )
-                est = (
-                    D16 / a_[qsel][:, None]
-                    + b_[qsel][:, None]
-                    + qsq_[qsel][:, None]
-                )
-                if list_no not in accs:
-                    accs[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                accs[list_no].push(est, ids)
-            yield from _emit_group_candidates(qids_, accs, qsels)
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
+        return push
 
 
 def aq_fastscan_search_preassigned(
@@ -1305,123 +1117,17 @@ def aq_fastscan_search_preassigned(
     max_cell_rows: int | None = 1_000_000,
 ) -> DataFrame:
     """Distributed big-batch twin of IVFAQFastScanIndex.search
-    (reference IndexIVFAdditiveQuantizerFastScan.cpp:352-401): the
-    query map builds ONE 2-D LUT per query (AQFastScanModel.float_luts,
-    shared across probes) and quantizes it with the per-probe
-    −2⟨q,c_j⟩ bias exactly as the driver path, then each (qid, list_no)
-    probe row ships (lut bytes, bias, a, b, ‖q‖²) through the cogroup —
-    the per-cell scan is the same NormTableScaler saturating sum with
-    no quantizer state. Covers both by_residual modes, PRQ/PLSQ
-    included (the ProductAQAdapter rides inside rq)."""
-    from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
-
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    M, ksub = index.M, index.ksub
-    norm_scale = index.norm_scale
-    by_res = index.by_residual
-    nprobe_ = min(nprobe, len(index.centroids))
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (index.centroids, index.rq, index.norm_books)
+    (reference IndexIVFAdditiveQuantizerFastScan.cpp:352-401): the probe
+    map builds each query's LUT and quantizes it with the per-probe
+    −2⟨q,c_j⟩ bias exactly as the driver route (``_AQ4Scanner``), and
+    each (qid, list_no) probe row ships (lut bytes, bias, a, b, ‖q‖²)
+    through the cogroup — the per-cell scan is the same NormTableScaler
+    saturating sum. Covers both by_residual modes, PRQ/PLSQ included
+    (the ProductAQAdapter rides inside rq)."""
+    return _preassigned_cogrouped(
+        index, queries, _probe_planner(index, nprobe), _AQ4Scanner(index),
+        qid_col, qvec_col, max_cell_rows, k=k,
     )
-    k_ = k
-
-    def assign_probes(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_id_vec_blocks
-
-        C, rq, norm_books = bc.value
-        model = AQFastScanModel(
-            rq=rq, norm_books=norm_books, norm_scale=norm_scale
-        )
-        for qids, Q, _ in arrow_id_vec_blocks(batches):
-            nq = len(Q)
-            CD = pairwise_distances(Q, C, "l2")
-            probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-            luts = model.float_luts(Q)  # (nq, M+2, ksub)
-            if by_res:
-                qc = Q @ C.T
-                lutq = np.empty((nq, M + 2, ksub), np.uint8)
-                biasq = np.empty((nq, nprobe_), np.uint16)
-                a = np.empty(nq)
-                b = np.empty(nq)
-                for qi in range(nq):
-                    bias = -2.0 * qc[qi, probes[qi]]
-                    lutq[qi], biasq[qi], a[qi], b[qi] = aq_quantize_lut_bias(
-                        luts[qi], bias, M_norm=2, norm_scale=norm_scale
-                    )
-            else:
-                lutq, a, b = aq_quantize_lut(
-                    luts, M_norm=2, norm_scale=norm_scale
-                )
-                biasq = np.zeros((nq, nprobe_), np.uint16)
-            qsq = (Q * Q).sum(1)
-            rep = np.repeat(np.arange(nq), nprobe_)
-            lut_rows = lutq.reshape(nq, -1)[rep]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    pa.array(probes.astype(np.int32).ravel(), pa.int32()),
-                    arrow_binary(lut_rows),
-                    pa.array(biasq.ravel().astype(np.int32), pa.int32()),
-                    pa.array(a[rep], pa.float64()),
-                    pa.array(b[rep], pa.float64()),
-                    pa.array(qsq[rep], pa.float64()),
-                ],
-                names=["qid", "list_no", "lut", "bias", "a", "b", "qsq"],
-            )
-
-    q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
-    )
-    probes_df = q.mapInArrow(
-        assign_probes,
-        schema=(
-            "qid bigint, list_no int, lut binary, bias int, "
-            "a double, b double, qsq double"
-        ),
-    )
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import arrow_binary_matrix, arrow_i64
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        qids_ = arrow_i64(ptab.column("qid"))
-        lutq = arrow_binary_matrix(ptab.column("lut")).reshape(-1, M + 2, ksub)
-        bias = arrow_i64(ptab.column("bias")).astype(np.uint16)
-
-        def f64(name):
-            return np.asarray(
-                ptab.column(name).combine_chunks().to_numpy(
-                    zero_copy_only=False
-                ),
-                np.float64,
-            )
-
-        a_, b_, qsq_ = f64("a"), f64("b"), f64("qsq")
-        codes = arrow_binary_matrix(ctab.column("code"))
-        ids = arrow_i64(ctab.column("id"))
-        weights = np.ones(M + 2, np.int64)
-        weights[M:] = norm_scale
-        acc = TopKAccumulator(len(qids_), k_, largest=False)
-        chunk = max(16, (1 << 22) // max(1, len(qids_)))
-        for s in range(0, len(ids), chunk):
-            D16 = _saturating_lut_sum(
-                lutq, codes[s:s + chunk], init=bias, row_weights=weights
-            )
-            est = D16 / a_[:, None] + b_[:, None] + qsq_[:, None]
-            acc.push(est, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids_[qidx], nid, nd)
-
-    codes = index.codes.select("list_no", "id", "code")
-    cands = cogrouped_cell_scan(
-        index, probes_df, codes, max_cell_rows, scan_cell
-    )
-    return _window_topk(cands, k, largest=False)
 
 
 # --------------------------------------- product-AQ fast-scan (PRQ/PLSQ)

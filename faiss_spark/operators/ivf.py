@@ -22,9 +22,13 @@ The faiss mapping onto Spark:
                    ``max_codes`` nearest-first scan budget.
           scanner  one InvertedListScanner per codec (``_FlatScanner``,
                    ``_SQScanner``, ``_PQScanner``, ``_AQScanner``,
-                   ``_PQRScanner``): built on the driver, broadcast once,
-                   ``bind(list_no, Q, qsel, acc, scratch)`` then push code
-                   blocks into a TopKAccumulator (flat also scans ranges).
+                   ``_PQRScanner``, ``_SHScanner``, and fastscan.py's
+                   ``_PQ4Scanner``/``_AQ4Scanner``): built on the driver,
+                   broadcast once, ``bind(list_no, Q, qsel, acc, scratch,
+                   T)`` then push code blocks into a TopKAccumulator
+                   (flat also scans ranges). ``T`` carries the optional
+                   ``probe_terms`` rows — per-(query, probe) terms built
+                   over a query's whole probe set (fast-scan LUTs).
           route    ``_scan_probed_lists`` — the driver route: bounded
                    query collect, probes planned on the driver, the
                    ``list_no IN (cells)`` filter as Catalyst **partition
@@ -489,9 +493,10 @@ def search_with_parameters(
     """IVF search under explicit parameters, returning (results, stats)
     (reference faiss/IVFlib.h:129-141 ``search_with_parameters`` /
     ``ivf_search_precomputed`` — the variant that outputs IndexIVFStats).
-    Works for every IVF family (flat, SQ, PQ, IMI-PQ, AQ, PQR codes) on
-    both routes: the driver route, or past the query bound the
-    distributed route, each filling the same counters.
+    Works for every IVF family (flat, SQ, PQ, IMI-PQ, AQ, PQR codes, the
+    PQ/AQ/PRQ/PLSQ fast-scan indexes and IVFSpectralHash) on both
+    routes: the driver route, or past the query bound the distributed
+    route, each filling the same counters.
 
     max_codes (reference SearchParametersIVF / faiss/IndexIVF.h:69 and
     the scan loop's ``if (max_codes && ndis >= max_codes) break`` at
@@ -511,7 +516,8 @@ def search_with_parameters(
     populated only after the returned DataFrame is materialized (count /
     collect / write) — the lazy-plan analogue of the reference's
     "stats filled during the call" contract."""
-    lists = getattr(index, "ivfpq", index)  # IVFPQR keeps its lists in the base IVFPQ
+    # IVFPQR keeps its lists in the base IVFPQ, IVFPQFastScan in ``base``
+    lists = getattr(index, "ivfpq", None) or getattr(index, "base", index)
     planner = _probe_planner(lists, nprobe, max_codes)
     stats = IVFSearchStats(queries.sparkSession)
     res = _scan_probed_lists(
@@ -628,6 +634,20 @@ def _probe_planner(
     return _ProbePlanner(kind, state, min(nprobe, nlist), d, sizes, max_codes)
 
 
+def _probe_pairs(order) -> tuple[np.ndarray, np.ndarray]:
+    """(query index, list_no) int64 arrays of every probe pair, row-major,
+    from planner rows: an (nq, p) array or ragged rows (the max_codes
+    budget)."""
+    if isinstance(order, np.ndarray):
+        rep = np.repeat(np.arange(len(order)), order.shape[1])
+        return rep, order.astype(np.int64).ravel()
+    lens = np.fromiter((len(o) for o in order), np.int64, len(order))
+    rep = np.repeat(np.arange(len(order)), lens)
+    if not len(rep):
+        return rep, np.empty(0, np.int64)
+    return rep, np.concatenate(order).astype(np.int64)
+
+
 _POP8 = (
     np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
     .sum(1)
@@ -643,17 +663,34 @@ class _ListScanner:
 
       code_cols          payload columns read from the codes table
       block(cols)        those Arrow columns → tuple of numpy blocks
-      bind(list_no, Q, qsel, acc, scratch) → push(blocks, ids)
+      bind(list_no, Q, qsel, acc, scratch, T) → push(blocks, ids)
                          set the list and the query group ``Q[qsel]``;
                          ``push`` scores a block of codes into the
                          TopKAccumulator ``acc``. ``scratch`` lives for
                          one task (driver route) or one cell (cogroup)
                          and holds list-independent per-query terms.
+                         ``T`` holds the ``probe_terms`` rows of
+                         (qsel, list_no), or None without the hook.
       block_rows(nq, d)  rows per push — bounds the scratch of a hot
-                         cell (None: the whole block at once)"""
+                         cell (None: the whole block at once)
+      probe_terms(Q, probes)  optional hook (None: no terms) for
+                         per-query terms ``bind`` cannot build from a
+                         list's query group: fast-scan LUTs are quantized
+                         jointly over the query's probes
+                         (quantize_lut.cpp:195), and the spectral-hash
+                         transform must come from the query's own batch
+                         (``_SHScanner``). ``probes`` are the
+                         planner's rows (ragged allowed); it returns one
+                         uint8 row per (query, probe), row-major, in a
+                         layout only the scanner reads. The driver route
+                         runs it on the driver and broadcasts the rows
+                         with the list → queries map; the distributed
+                         route runs it in the probe map, as a ``terms``
+                         column of the probe table."""
 
     code_cols = ("code",)
     largest = False
+    probe_terms = None
 
     def block_rows(self, nq: int, d: int) -> int | None:
         return None
@@ -676,7 +713,7 @@ class _FlatScanner(_ListScanner):
     def decode(self, list_no: int, blk) -> np.ndarray:
         return blk[0]
 
-    def bind(self, list_no, Q, qsel, acc, scratch):
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
         acc.bind_queries(np.ascontiguousarray(Q[qsel]), self.metric)
         return lambda blk, ids: acc.push_block(self.decode(list_no, blk), ids)
 
@@ -746,9 +783,9 @@ class _AQScanner(_DecodeScanner):
             X = X + self.books[m][cc[:, m]]
         return X
 
-    def bind(self, list_no, Q, qsel, acc, scratch):
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
         if not self.est:
-            return super().bind(list_no, Q, qsel, acc, scratch)
+            return super().bind(list_no, Q, qsel, acc, scratch, T)
         Qg = np.ascontiguousarray(Q[qsel], np.float64)
         qn = (Qg * Qg).sum(1)[:, None]
 
@@ -797,7 +834,7 @@ class _PQScanner(_ListScanner):
         # its full (nq, n_codes) distance block
         return max(16, (1 << 22) // max(1, nq))
 
-    def bind(self, list_no, Q, qsel, acc, scratch):
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
         books = self.pq.codebooks
         M, ksub, dsub = books.shape
         if "t3" not in scratch:
@@ -864,7 +901,7 @@ class _PQRScanner(_ListScanner):
     def block_rows(self, nq, d):
         return max(16, (1 << 22) // max(1, nq))
 
-    def bind(self, list_no, Q, qsel, acc, scratch):
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
         books1 = self.pq1.codebooks
         M, _, dsub = books1.shape
         R = Q[qsel] - self.centroids[list_no][None, :]
@@ -901,6 +938,19 @@ class _PQRScanner(_ListScanner):
 
 def _scanner_for(index, k: int) -> _ListScanner:
     """The list scanner of an index's codec (search_with_parameters)."""
+    from faiss_spark.operators.fastscan import (
+        IVFAQFastScanIndex,
+        IVFPQFastScanIndex,
+        _AQ4Scanner,
+        _PQ4Scanner,
+    )
+
+    if isinstance(index, IVFPQFastScanIndex):
+        return _PQ4Scanner(index)
+    if isinstance(index, IVFAQFastScanIndex):
+        return _AQ4Scanner(index)
+    if isinstance(index, IVFSpectralHash):
+        return _SHScanner(index)
     if getattr(index, "refine_pq", None) is not None:
         return _PQRScanner(index, k)
     index = getattr(index, "ivfpq", index)
@@ -913,10 +963,11 @@ def _scanner_for(index, k: int) -> _ListScanner:
     return _FlatScanner(index.metric)
 
 
-def _scan_lists(scanner, groups, Q, l2q, k, radius, accs):
+def _scan_lists(scanner, groups, Q, l2q, k, radius, accs, l2t=None):
     """The one list-scan loop both routes run over ``(list_no, blocks,
     ids)`` groups: bind the scanner the first time a list appears (query
-    group ``l2q[list_no]``), push its code blocks in bounded rows, and
+    group ``l2q[list_no]``, probe-term rows ``l2t[list_no]``), push its
+    code blocks in bounded rows, and
     yield ``(query index, id, dist)`` arrays — every pair within
     ``radius`` as it is found, or each list's top-k survivors at the end
     (a vector lives in one list, so survivors never repeat). ``accs`` are
@@ -933,7 +984,10 @@ def _scan_lists(scanner, groups, Q, l2q, k, radius, accs):
                 acc_scans.add(len(qsel))
             if radius is None:
                 acc = TopKAccumulator(len(qsel), k, scanner.largest)
-                bound[list_no] = (acc, scanner.bind(list_no, Q, qsel, acc, scratch))
+                T = None if l2t is None else l2t[list_no]
+                bound[list_no] = (
+                    acc, scanner.bind(list_no, Q, qsel, acc, scratch, T)
+                )
             else:
                 bound[list_no] = None
         if acc_ndis is not None:
@@ -995,27 +1049,35 @@ def _scan_probed_lists(
             f"{op}: query vectors have d={Q.shape[1]} components but the "
             f"index has d={planner.d}"
         )
-    # invert: list_no -> local query indexes; probe rows may be ragged
-    # (the max_codes scan budget)
-    l2q: dict[int, list[int]] = {}
-    for qi, row in enumerate(planner(Q) if len(Q) else []):
-        for c in row:
-            l2q.setdefault(int(c), []).append(qi)
+    # invert: list_no -> local query indexes (ascending) and, with the
+    # probe_terms hook, those pairs' term rows
+    probes = planner(Q) if len(Q) else np.empty((0, 0), np.int64)
+    rep, cells = _probe_pairs(probes)
+    T = None
+    if scanner.probe_terms is not None and len(Q):
+        T = scanner.probe_terms(Q, probes)
+    order = np.argsort(cells, kind="stable")
+    lists_, starts = np.unique(cells[order], return_index=True)
+    pairs = np.split(order, starts[1:]) if len(order) else []
+    l2q = {int(c): rep[p] for c, p in zip(lists_, pairs)}
+    l2t = None if T is None else {int(c): T[p] for c, p in zip(lists_, pairs)}
     accs = None
     if stats is not None:
         stats._acc_nq.add(len(qids))
         accs = (stats._acc_list_scans, stats._acc_ndis)
     bc = lists.codes.sparkSession.sparkContext.broadcast(
-        (qids, Q, {c: np.asarray(v, np.int64) for c, v in l2q.items()}, scanner)
+        (qids, Q, l2q, l2t, scanner)
     )
     def scan(batches):
         import pyarrow as pa
 
         from faiss_spark.kernels import arrow_list_groups
 
-        qids_, Q_, l2q_, sc = bc.value
+        qids_, Q_, l2q_, l2t_, sc = bc.value
         groups = arrow_list_groups(batches, lambda b: sc.block(b.columns[2:]))
-        for qi, ids, dist in _scan_lists(sc, groups, Q_, l2q_, k, radius, accs):
+        for qi, ids, dist in _scan_lists(
+            sc, groups, Q_, l2q_, k, radius, accs, l2t_
+        ):
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(qids_[qi], pa.int64()),
@@ -2104,6 +2166,7 @@ def _probe_table(
     assign_payload,
     assign_fn,
     acc_nq=None,
+    terms_fn=None,
 ) -> DataFrame:
     """Distributed probe assignment shared by every preassigned search:
     broadcast the (small) quantizer state, map each query batch through
@@ -2114,9 +2177,11 @@ def _probe_table(
     this map is the whole plan's fan-out). ``assign_payload`` may
     already be a Broadcast (callers whose cell scan shares the same
     artifacts broadcast once and reuse the handle). A query vector
-    whose length is not the index dimension ``d`` fails the job with a
-    clear message before any Python worker sees it; ``acc_nq`` counts
-    the queries for IVFSearchStats."""
+    whose length is not the index dimension ``d``, or one with a
+    non-finite component, fails the job with a clear message before any
+    Python worker sees it; ``acc_nq`` counts the queries for
+    IVFSearchStats. ``terms_fn(Q, probes)`` (a scanner's probe_terms)
+    adds one ``terms binary`` column, a row per probe."""
     from pyspark.broadcast import Broadcast
 
     spark = queries.sparkSession
@@ -2133,38 +2198,25 @@ def _probe_table(
 
         payload = bc.value
         f32_list = pa.list_(pa.float32())
+        names = ["qid", "vec", "list_no"] + (["terms"] if terms_fn else [])
         for qids, Q, vec_arr in arrow_id_vec_blocks(batches):
             if acc_nq is not None:
                 acc_nq.add(len(qids))
             order = assign_fn(payload, Q)
-            if isinstance(order, np.ndarray):
-                rep = np.repeat(
-                    np.arange(len(qids)), order.shape[1]
-                )
-                cells = order.astype(np.int32).ravel()
-            else:  # ragged probe sets (per-query scan budgets)
-                lens = np.fromiter(
-                    (len(o) for o in order), np.int64, len(order)
-                )
-                rep = np.repeat(np.arange(len(qids)), lens)
-                cells = (
-                    np.concatenate(order).astype(np.int32)
-                    if len(rep)
-                    else np.empty(0, np.int32)
-                )
+            rep, cells = _probe_pairs(order)
             # the declared output schema is array<float>; an array<double>
             # input (DataFrames built from Python floats) must cast before
             # the zero-copy pass-through, as imi_assign/KMeansModel.assign do
             if vec_arr.type != f32_list:
                 vec_arr = vec_arr.cast(f32_list)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    vec_arr.take(pa.array(rep, pa.int64())),
-                    pa.array(cells, pa.int32()),
-                ],
-                names=["qid", "vec", "list_no"],
-            )
+            cols = [
+                pa.array(qids[rep], pa.int64()),
+                vec_arr.take(pa.array(rep, pa.int64())),
+                pa.array(cells.astype(np.int32), pa.int32()),
+            ]
+            if terms_fn is not None:
+                cols.append(arrow_binary(terms_fn(Q, order)))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     vec = F.col(qvec_col)
     qid = F.col(qid_col).cast("bigint")
@@ -2192,9 +2244,10 @@ def _probe_table(
         .otherwise(vec)
         .alias("vec"),
     )
-    return q.mapInArrow(
-        assign_probes, schema="qid bigint, vec array<float>, list_no int"
-    )
+    schema = "qid bigint, vec array<float>, list_no int"
+    if terms_fn is not None:
+        schema += ", terms binary"
+    return q.mapInArrow(assign_probes, schema=schema)
 
 
 def _preassigned_cogrouped(
@@ -2224,9 +2277,13 @@ def _preassigned_cogrouped(
     accs = None
     if stats is not None:
         accs = (stats._acc_list_scans, stats._acc_ndis)
+    terms_fn = None
+    if scanner.probe_terms is not None:
+        def terms_fn(Q, order):
+            return bc.value[1].probe_terms(Q, order)
     probes = _probe_table(
         queries, qid_col, qvec_col, planner.d, payload, assign_fn,
-        acc_nq=None if stats is None else stats._acc_nq,
+        acc_nq=None if stats is None else stats._acc_nq, terms_fn=terms_fn,
     )
     codes = lists.codes.select("list_no", "id", *scanner.code_cols)
     def scan_cell(key, ptab, ctab):
@@ -2240,8 +2297,12 @@ def _preassigned_cogrouped(
             sc.block([ctab.column(c) for c in sc.code_cols]),
             arrow_i64(ctab.column("id")),
         )
+        l2t = None
+        if sc.probe_terms is not None:
+            l2t = {list_no: arrow_binary_matrix(ptab.column("terms"))}
         parts = list(_scan_lists(
-            sc, [group], Qg, {list_no: np.arange(len(Qg))}, k, radius, accs
+            sc, [group], Qg, {list_no: np.arange(len(Qg))}, k, radius, accs,
+            l2t,
         ))
         if not parts:
             return _empty_cand_table()
@@ -2262,10 +2323,12 @@ def cogrouped_cell_scan(
     """Generic cell-cogroup tail of the preassigned searches: left-semi
     cell prune + hot/cold cogroup on ``list_no``, parameterized by the
     per-cell scan. ``probes`` carries ``list_no`` plus whatever
-    query payload the scan reads (float ``vec``, binary ``qcode``);
-    ``codes`` likewise. Shared by the float k-NN/range twins, the coded
-    (SQ/PQ/AQ) twins, and the binary Hamming twin
-    (binary.binary_search_preassigned).
+    query payload the scan reads (float ``vec`` and, with a scanner's
+    probe_terms hook, binary ``terms``; binary ``qcode``); ``codes``
+    likewise. Its users: ``_preassigned_cogrouped`` (every float-query
+    IVF twin — flat, SQ, PQ, AQ, PQR, the fast-scan indexes and the
+    spectral hash) and the binary Hamming twins
+    (binary.binary_search_preassigned, binary_range_search_preassigned).
 
     The scan is Arrow-native (``applyInArrow``, r13 — VERDICT r12 #3):
     ``scan_cell(key, probe_table, code_table) -> pa.Table`` with columns
@@ -3369,8 +3432,9 @@ class IVFSpectralHash:
          bit_j = int64(floor((x_j − c_j) · 2/period)) & 1.
 
     The query code is list-DEPENDENT (scanner.set_list re-binarizes the
-    query against each probed list's thresholds, cpp:244-258), so the
-    probe table carries one qcode per (query, probed list)."""
+    query against each probed list's thresholds, cpp:244-258), so
+    ``_SHScanner`` binarizes in ``bind``, once per (list, query group),
+    on both shared routes."""
 
     def __init__(
         self,
@@ -3557,57 +3621,69 @@ class IVFSpectralHash:
         self, queries: DataFrame, k: int, nprobe: int = 1,
         qid_col: str = "qid", qvec_col: str = "vec",
     ) -> DataFrame:
-        """Coarse L2 probes + Hamming scan over binarized codes (JVM bit
-        ops after the partition-pruned join). A query side past the
-        driver bound auto-falls-back to ``sh_search_preassigned``,
-        which builds the per-(query, probed-list) qcodes executor-side
-        and joins without collecting."""
-        from faiss_spark.operators.binary import _bits_to_words, hamming_expr
-
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFSpectralHash.search",
-            d=self.centroids.shape[1],
+        """Coarse L2 probes + Hamming scan of the binarized codes on the
+        driver route (``_SHScanner``). A query side past the driver
+        bound auto-falls-back to ``sh_search_preassigned``."""
+        return _scan_probed_lists(
+            self, queries, _probe_planner(self, nprobe), _SHScanner(self),
+            "IVFSpectralHash.search", qid_col, qvec_col, k=k,
             fallback=lambda: sh_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        CD = pairwise_distances(Q, self.centroids, "l2")
-        nprobe_ = min(nprobe, len(self.centroids))
-        order = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-        probed = sorted({int(c) for c in order.ravel()})
-        Qt = Q @ self.A.T + (self.b if self.b is not None else 0.0)
-        # per-(query, probed list) code: the scanner re-binarizes the query
-        # against each list's thresholds (cpp:244-258)
-        flat_lists = order.ravel()
-        qwords = _bits_to_words(
-            self._binarize(np.repeat(Qt, nprobe_, axis=0), flat_lists)
+
+
+_POP8_U8 = _POP8.astype(np.uint8)
+
+
+class _SHScanner(_ListScanner):
+    """IVFSpectralHash codes (reference IndexIVFSpectralHash.cpp:244-258
+    ``set_list``): binding a list re-binarizes its queries against that
+    list's thresholds; a push scores Hamming distances over the packed
+    int64 code words, as doubles.
+
+    The transform ``Q @ vt`` comes from ``probe_terms``, i.e. from the
+    query batch the query enters with (the driver's collected matrix,
+    the probe map's Arrow batch), not from a cell's query group: a
+    one-query group takes numpy's matrix-vector product, whose rounding
+    can flip a threshold bit against the driver route (median thresholds
+    are training values, so a stored vector searched as a query can sit
+    exactly on one)."""
+
+    def __init__(self, index):
+        # codes-free: the scanner is broadcast, the codes DataFrame is not
+        self.sh = IVFSpectralHash(
+            centroids=index.centroids, A=index.A, b=index.b,
+            trained=index.trained, period=index.period,
+            threshold_type=index.threshold_type,
         )
-        probe_rows = [
-            (
-                int(qids[i]),
-                [int(w) for w in qwords[i * nprobe_ + j]],
-                int(order[i, j]),
-            )
-            for i in range(len(qids))
-            for j in range(nprobe_)
-        ]
-        probes = spark.createDataFrame(
-            probe_rows, "qid bigint, qcode array<bigint>, list_no int"
-        )
-        pruned = self.codes.filter(F.col("list_no").isin(probed))
-        joined = pruned.join(F.broadcast(probes), "list_no").select(
-            "qid",
-            "id",
-            hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
-        )
-        return _window_topk(joined, k, largest=False)
+
+    def block(self, cols):
+        return (arrow_list_matrix(cols[0], np.int64),)
+
+    def block_rows(self, nq, d):
+        # the XOR block is (nq, rows, words) int64
+        return max(16, (1 << 22) // max(1, nq))
+
+    def probe_terms(self, Q, probes):
+        sh = self.sh
+        Qt = Q @ sh.A.T + (sh.b if sh.b is not None else 0.0)
+        rep, _ = _probe_pairs(probes)
+        return np.ascontiguousarray(Qt[rep], np.float64).view(np.uint8)
+
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
+        from faiss_spark.operators.binary import _bits_to_words
+
+        Qt = T.copy().view(np.float64)  # aligned copy of the term rows
+        qw = _bits_to_words(self.sh._binarize(Qt, np.full(len(qsel), list_no)))
+
+        def push(blk, ids):
+            x = np.bitwise_xor(qw[:, None, :], blk[0][None, :, :])
+            D = _POP8_U8[x.view(np.uint8)].sum(axis=2, dtype=np.float64)
+            acc.push(D, ids)
+
+        return push
 
 
 def sh_search_preassigned(
@@ -3618,72 +3694,15 @@ def sh_search_preassigned(
     qid_col: str = "qid",
     qvec_col: str = "vec",
 ) -> DataFrame:
-    """Distributed big-batch twin of IVFSpectralHash.search: probe
-    selection AND the per-(query, probed-list) periodic binarization
-    (the scanner.set_list re-binarization, cpp:244-258) run
-    executor-side over broadcast artifacts, emitting the same
-    (qid, qcode, list_no) probe rows the driver path builds — then the
-    identical partition-pruned Hamming join, with the probe side
-    shuffled on list_no instead of broadcast (the query side is huge by
-    assumption)."""
-    from faiss_spark.operators.binary import _bits_to_words, hamming_expr
-
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    spark = queries.sparkSession
-    nprobe_ = min(nprobe, len(index.centroids))
-    shell = IVFSpectralHash(
-        centroids=index.centroids, A=index.A, b=index.b,
-        trained=index.trained, period=index.period,
-        threshold_type=index.threshold_type,
+    """Distributed big-batch twin of IVFSpectralHash.search: the same
+    probe planner runs in the probe map, and the cogrouped cell scan
+    re-binarizes each cell's queries against that list's thresholds
+    (``_SHScanner``, the scanner.set_list step, cpp:244-258) — the
+    query side never collects."""
+    return _preassigned_cogrouped(
+        index, queries, _probe_planner(index, nprobe), _SHScanner(index),
+        qid_col, qvec_col, k=k,
     )
-    bc = spark.sparkContext.broadcast(shell)
-
-    def assign(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_id_vec_blocks
-
-        idx = bc.value
-        C = idx.centroids
-        for qids, Q, _ in arrow_id_vec_blocks(batches):
-            CD = (
-                (Q * Q).sum(1)[:, None]
-                + (C * C).sum(1)[None, :]
-                - 2.0 * (Q @ C.T)
-            )
-            order = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-            Qt = Q @ idx.A.T + (idx.b if idx.b is not None else 0.0)
-            qwords = _bits_to_words(
-                idx._binarize(np.repeat(Qt, nprobe_, axis=0), order.ravel())
-            )
-            rep = np.repeat(np.arange(len(Q)), nprobe_)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    arrow_list(qwords),
-                    pa.array(order.astype(np.int32).ravel(), pa.int32()),
-                ],
-                names=["qid", "qcode", "list_no"],
-            )
-
-    q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
-    )
-    probes = q.mapInArrow(
-        assign, schema="qid bigint, qcode array<bigint>, list_no int"
-    ).localCheckpoint(eager=False)
-    pruned = index.codes.join(
-        probes.select("list_no").distinct().hint("broadcast"),
-        "list_no",
-        "left_semi",
-    )
-    joined = pruned.join(probes, "list_no").select(
-        "qid",
-        "id",
-        hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
-    )
-    return _window_topk(joined, k, largest=False)
 
 
 @dataclass

@@ -33,7 +33,7 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from faiss_spark.kernels import (
@@ -42,6 +42,7 @@ from faiss_spark.kernels import (
     _cand_table,
     arrow_id_vec_blocks,
 )
+from faiss_spark.operators.ivf import _window_topk
 
 _RESULT_SCHEMA = "qid bigint, id bigint, dist double"
 
@@ -193,13 +194,7 @@ def knn(
         yield _cand_table(qids_[qidx[finite]], nid[finite], nd[finite])
 
     candidates = _scan_partitions(vectors, id_col, vec_col, Q, scan)
-    order = [F.col("dist").desc() if largest else F.col("dist").asc(), F.col("id").asc()]
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(candidates, k, largest)
 
 
 def range_search(
@@ -428,12 +423,7 @@ def split_vectors_knn(
         "id",
         sum(F.col(f"d{i}") for i in range(len(splits))).alias("dist"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        total.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(total, k, largest=False)
 
 
 def knn_chunked(

@@ -36,7 +36,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F, Window
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from faiss_spark.kernels import (
     arrow_binary,
@@ -44,6 +44,7 @@ from faiss_spark.kernels import (
     arrow_list,
     arrow_list_matrix,
 )
+from faiss_spark.operators.ivf import _window_topk
 from faiss_spark.sources import fsio
 
 
@@ -955,12 +956,7 @@ class NSGIndex:
             cands = src.groupBy("shard").applyInArrow(
                 scan, schema="qid bigint, id bigint, dist double"
             )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
+        return _window_topk(cands, k_, largest=False)
 
 
 def _unpack_bits_expr(code, nbits: int):

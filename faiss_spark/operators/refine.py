@@ -15,9 +15,10 @@ IndexIVFFlatDedup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from faiss_spark.operators.ivf import _window_topk
 from faiss_spark.operators.knn import distance_expr, knn
 
 
@@ -53,13 +54,7 @@ def refine_search(
             distance_expr(F.col("__q"), F.col("__v"), metric).alias("dist"),
         )
     )
-    order = [F.col("dist").desc() if largest else F.col("dist").asc(), F.col("id").asc()]
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(scored, k, largest)
 
 
 def knn_1d(
@@ -86,12 +81,7 @@ def knn_1d(
     joined = v.crossJoin(F.broadcast(q)).select(
         "qid", "id", F.abs(F.col("x") - F.col("qx")).alias("dist")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(joined, k, largest=False)
 
 
 def dedup_flat(

@@ -196,49 +196,108 @@ def ivf_pq(vecs):
     ).add(vecs)
 
 
-def _knn(vecs, q, ivf_flat, ivf_pq):
+@pytest.fixture(scope="module")
+def ivf_pqfs(vecs):
+    from faiss_spark.operators.fastscan import IVFPQFastScanIndex
+
+    return IVFPQFastScanIndex.train(
+        vecs, nlist=4, M=8, seed=42, niter=5, pq_niter=5
+    ).add(vecs)
+
+
+@pytest.fixture(scope="module")
+def ivf_aqfs(vecs):
+    from faiss_spark.operators.fastscan import IVFAQFastScanIndex
+
+    return IVFAQFastScanIndex.train(
+        vecs, nlist=4, M=4, seed=42, niter=5, rq_niter=5
+    ).add(vecs)
+
+
+@pytest.fixture(scope="module")
+def ivf_sh(vecs):
+    from faiss_spark.operators.ivf import IVFSpectralHash
+
+    return IVFSpectralHash.train(vecs, nlist=4, seed=42, niter=5).add(vecs)
+
+
+def _knn(vecs, q, index):
     from faiss_spark.operators.knn import knn
 
     return knn(vecs, q, 3)
 
 
-def _range(vecs, q, ivf_flat, ivf_pq):
+def _range(vecs, q, index):
     from faiss_spark.operators.knn import range_search
 
     return range_search(vecs, q, 10.0)
 
 
-def _flat_driver(vecs, q, ivf_flat, ivf_pq):
-    return ivf_flat.search(q, 3, nprobe=2)
+def _flat_driver(vecs, q, index):
+    return index("ivf_flat").search(q, 3, nprobe=2)
 
 
-def _flat_distributed(vecs, q, ivf_flat, ivf_pq):
+def _flat_distributed(vecs, q, index):
     from faiss_spark.operators.ivf import search_preassigned
 
-    return search_preassigned(ivf_flat, q, 3, nprobe=2)
+    return search_preassigned(index("ivf_flat"), q, 3, nprobe=2)
 
 
-def _pq_driver(vecs, q, ivf_flat, ivf_pq):
-    return ivf_pq.search(q, 3, nprobe=2)
+def _pq_driver(vecs, q, index):
+    return index("ivf_pq").search(q, 3, nprobe=2)
 
 
-def _pq_distributed(vecs, q, ivf_flat, ivf_pq):
+def _pq_distributed(vecs, q, index):
     from faiss_spark.operators.ivf import pq_search_preassigned
 
-    return pq_search_preassigned(ivf_pq, q, 3, nprobe=2)
+    return pq_search_preassigned(index("ivf_pq"), q, 3, nprobe=2)
+
+
+def _pqfs_driver(vecs, q, index):
+    return index("ivf_pqfs").search(q, 3, nprobe=2)
+
+
+def _pqfs_distributed(vecs, q, index):
+    from faiss_spark.operators.fastscan import fastscan_search_preassigned
+
+    return fastscan_search_preassigned(index("ivf_pqfs"), q, 3, nprobe=2)
+
+
+def _aqfs_driver(vecs, q, index):
+    return index("ivf_aqfs").search(q, 3, nprobe=2)
+
+
+def _aqfs_distributed(vecs, q, index):
+    from faiss_spark.operators.fastscan import aq_fastscan_search_preassigned
+
+    return aq_fastscan_search_preassigned(index("ivf_aqfs"), q, 3, nprobe=2)
+
+
+def _sh_driver(vecs, q, index):
+    return index("ivf_sh").search(q, 3, nprobe=2)
+
+
+def _sh_distributed(vecs, q, index):
+    from faiss_spark.operators.ivf import sh_search_preassigned
+
+    return sh_search_preassigned(index("ivf_sh"), q, 3, nprobe=2)
 
 
 @pytest.mark.parametrize(
     "route",
     [_knn, _range, _flat_driver, _flat_distributed, _pq_driver,
-     _pq_distributed],
+     _pq_distributed, _pqfs_driver, _pqfs_distributed, _aqfs_driver,
+     _aqfs_distributed, _sh_driver, _sh_distributed],
     ids=["knn", "range_search", "ivf_flat_driver", "ivf_flat_distributed",
-         "ivf_pq_driver", "ivf_pq_distributed"],
+         "ivf_pq_driver", "ivf_pq_distributed", "pq_fastscan_driver",
+         "pq_fastscan_distributed", "aq_fastscan_driver",
+         "aq_fastscan_distributed", "sh_driver", "sh_distributed"],
 )
-def test_non_finite_query_is_rejected(vecs, nan_queries, ivf_flat, ivf_pq, route):
+def test_non_finite_query_is_rejected(vecs, nan_queries, request, route):
     """A NaN query component raises a message naming the query on every
-    route — never 0 silent rows, never a Python worker stack trace."""
+    route — never 0 silent rows, never a Python worker stack trace.
+    Indexes build lazily, only for the routes that search them."""
     with pytest.raises(Exception) as ei:
-        route(vecs, nan_queries, ivf_flat, ivf_pq).collect()
+        route(vecs, nan_queries, request.getfixturevalue).collect()
     assert "query 11 has a non-finite component" in str(ei.value)
     assert not isinstance(ei.value, PythonException)

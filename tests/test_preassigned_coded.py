@@ -1,18 +1,27 @@
 """Distributed big-batch (preassigned) twins for the CODED and
 custom-coarse IVF families — r13 (VERDICT r12 #1/#2): the ADC cogroup
-over PQ-coded lists (IVFPQ / IMIPQ), the AQ and PQR-codes twins, and
-the assign-override flat twins (RCQ beam, nested routers, IMI/MIQ2
-product grids). Every twin must return exactly what its driver-planned
-path returns (same probes, same distances), and every driver search
-must auto-fall-back to its twin past the query bound (reference
-contrib/ivf_tools.py:26-57 — the big-batch pattern is index-agnostic;
-benchs/distributed_ondisk/README.md is the PQ flagship)."""
+over PQ-coded lists (IVFPQ / IMIPQ), the AQ and PQR-codes twins, the
+fast-scan and spectral-hash twins, and the assign-override flat twins
+(RCQ beam, nested routers, IMI/MIQ2 product grids). Every twin must
+return exactly what its driver-planned path returns (same probes, same
+distances), and every driver search must auto-fall-back to its twin
+past the query bound (reference contrib/ivf_tools.py:26-57 — the
+big-batch pattern is index-agnostic; benchs/distributed_ondisk/README.md
+is the PQ flagship)."""
+
+import importlib
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 import faiss_spark.operators.ivf as ivfmod
+from faiss_spark.operators.fastscan import (
+    IVFAQFastScanIndex,
+    IVFPQFastScanIndex,
+    aq_fastscan_search_preassigned,
+    fastscan_search_preassigned,
+)
 from faiss_spark.operators.ivf import (
     IMIIVFIndex,
     IMIPQIndex,
@@ -22,6 +31,7 @@ from faiss_spark.operators.ivf import (
     IVFPQIndex,
     IVFPQRIndex,
     IVFRCQIndex,
+    IVFSpectralHash,
     IVFSQIndex,
     MIQ2IVFIndex,
     aq_search_preassigned,
@@ -29,6 +39,7 @@ from faiss_spark.operators.ivf import (
     pqr_search_preassigned,
     search_preassigned,
     search_with_parameters,
+    sh_search_preassigned,
     sq_search_preassigned,
 )
 
@@ -52,15 +63,18 @@ def rows(df, nd=6):
     )
 
 
-def _spy_fallback(monkeypatch, twin_name):
+def _spy_fallback(monkeypatch, twin_name, mod=ivfmod):
+    """Count calls of the public twin ``mod.twin_name`` (driver searches
+    look their twin up at call time) and shrink the driver bound so the
+    next driver search falls back to it."""
     calls = []
-    real = getattr(ivfmod, twin_name)
+    real = getattr(mod, twin_name)
 
     def spy(*a, **kw):
         calls.append(1)
         return real(*a, **kw)
 
-    monkeypatch.setattr(ivfmod, twin_name, spy)
+    monkeypatch.setattr(mod, twin_name, spy)
     monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
     return calls
 
@@ -103,6 +117,25 @@ def _sq_rcq(vectors):
     return IVFSQIndex.train(
         vectors, nlist=cq.nlist, bits=8, seed=42, coarse_q=cq
     ).add(vectors)
+
+
+def _pqfs(by_residual):
+    return lambda v: IVFPQFastScanIndex.train(
+        v, nlist=8, M=8, seed=42, niter=5, by_residual=by_residual
+    ).add(v)
+
+
+def _aqfs(by_residual):
+    return lambda v: IVFAQFastScanIndex.train(
+        v, nlist=8, M=4, seed=42, niter=5, by_residual=by_residual
+    ).add(v)
+
+
+def _sh(v):
+    return IVFSpectralHash.train(
+        v, nlist=8, nbit=32, period=1.0, threshold_type="median",
+        transform="pca", seed=42, niter=5,
+    ).add(v)
 
 
 def _graph_plan(vectors):
@@ -172,6 +205,45 @@ ROUTE_CELLS = {
         sq_search_preassigned, None,
         [dict(nprobe=1), dict(nprobe=8)],
     ),
+    # IVF-PQ fast-scan, residual LUTs quantized jointly over each
+    # query's probes (x4fsr) and one flat LUT shared by them (x4fs): the
+    # probe map ships the same LUT bytes the driver builds
+    "pqfs_res": (
+        _pqfs(True),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        fastscan_search_preassigned,
+        ("fastscan_search_preassigned", dict(nprobe=3)),
+        [dict(nprobe=1), dict(nprobe=3), dict(nprobe=8)],
+    ),
+    "pqfs_flat": (
+        _pqfs(False),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        fastscan_search_preassigned,
+        ("fastscan_search_preassigned", dict(nprobe=3)),
+        [dict(nprobe=1), dict(nprobe=3), dict(nprobe=8)],
+    ),
+    # IVF-RQ fast-scan: one LUT per query, per-probe bias (x4fsr) or none
+    "aqfs_res": (
+        _aqfs(True),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        aq_fastscan_search_preassigned,
+        ("aq_fastscan_search_preassigned", dict(nprobe=3)),
+        [dict(nprobe=1), dict(nprobe=3), dict(nprobe=8)],
+    ),
+    "aqfs_flat": (
+        _aqfs(False),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        aq_fastscan_search_preassigned,
+        ("aq_fastscan_search_preassigned", dict(nprobe=3)),
+        [dict(nprobe=1), dict(nprobe=3), dict(nprobe=8)],
+    ),
+    # spectral hash: per-(query, list) re-binarization, Hamming distances
+    "sh": (
+        _sh,
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        sh_search_preassigned, ("sh_search_preassigned", dict(nprobe=4)),
+        [dict(nprobe=1), dict(nprobe=4), dict(nprobe=8)],
+    ),
     # the factory's graph-routed plan: the same beam walk both routes
     "graph_routed": (
         _graph_plan,
@@ -202,7 +274,9 @@ def test_routes_agree(cell, vectors, queries, monkeypatch):
     if spy is not None:
         name, kw = spy
         direct = rows(twin(idx, queries, 5, **kw))
-        calls = _spy_fallback(monkeypatch, name)
+        calls = _spy_fallback(
+            monkeypatch, name, importlib.import_module(twin.__module__)
+        )
         assert rows(driver(idx, queries, 5, **kw)) == direct and direct
         assert calls
 
@@ -212,6 +286,9 @@ STATS_CELLS = {
     "sq": lambda v: IVFSQIndex.train(v, nlist=8, bits=8, seed=42, niter=5).add(v),
     "aq": lambda v: IVFAQIndex.train(v, nlist=8, M=4, seed=42, niter=5).add(v),
     "pqr": _pqr,
+    "pqfs": _pqfs(True),
+    "aqfs": _aqfs(True),
+    "sh": _sh,
 }
 
 
@@ -223,6 +300,8 @@ def test_stats_equal_across_routes(codec, vectors, queries, monkeypatch, tmp_pat
     layout and one cogroup cell) and ndis (faiss IndexIVFStats)."""
     idx = STATS_CELLS[codec](vectors)
     idx.save(str(tmp_path / codec))
+    if codec == "sh":  # its save leaves the in-memory codes attached
+        idx = IVFSpectralHash.load(vectors.sparkSession, str(tmp_path / codec))
     res, st = search_with_parameters(idx, queries, 5, nprobe=3)
     driver_rows = rows(res)
     monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
@@ -245,11 +324,19 @@ def dim8_indexes(spark):
         "pq": (IVFPQIndex.train(v, nlist=4, M=4, seed=1, niter=3,
                                 pq_niter=3).add(v),
                pq_search_preassigned),
+        "pqfs": (IVFPQFastScanIndex.train(v, nlist=4, M=4, seed=1, niter=3,
+                                          pq_niter=3).add(v),
+                 fastscan_search_preassigned),
+        "aqfs": (IVFAQFastScanIndex.train(v, nlist=4, M=4, seed=1, niter=3,
+                                          rq_niter=3).add(v),
+                 aq_fastscan_search_preassigned),
+        "sh": (IVFSpectralHash.train(v, nlist=4, seed=1, niter=3).add(v),
+               sh_search_preassigned),
     }
 
 
 @pytest.mark.parametrize("route", ["driver", "distributed"])
-@pytest.mark.parametrize("codec", ["flat", "sq", "pq"])
+@pytest.mark.parametrize("codec", ["flat", "sq", "pq", "pqfs", "aqfs", "sh"])
 def test_wrong_dimension_queries_fail_with_message(codec, route, dim8_indexes, spark):
     """5-d queries against an 8-d index fail with a message naming both
     dimensions — on the driver before any job (driver route), or from
@@ -319,67 +406,38 @@ def test_pq_code_view_two_byte_subcodes(vectors, queries):
     assert hit >= len(top1) * 0.8, top1
 
 
-def test_fastscan_preassigned_equals_driver(vectors, queries, monkeypatch):
-    """IVF fast-scan twins (PQ and AQ forms, both by_residual modes):
-    the probe-assignment map quantizes the per-query LUTs exactly as
-    the driver path (joint per-query quantization — the cogroup ships
-    uint8 LUT bytes, never codebooks), so the distributed scan is
-    bit-identical; the driver search auto-falls-back past the bound."""
-    import faiss_spark.operators.fastscan as fsmod
-    from faiss_spark.operators.fastscan import (
-        IVFAQFastScanIndex,
-        IVFPQFastScanIndex,
-        aq_fastscan_search_preassigned,
-        fastscan_search_preassigned,
-    )
-
-    for br in (True, False):
-        idx = IVFPQFastScanIndex.train(
-            vectors, nlist=8, M=8, seed=42, niter=5, by_residual=br
-        ).add(vectors)
-        assert rows(fastscan_search_preassigned(idx, queries, 5, nprobe=3)) == rows(
-            idx.search(queries, 5, nprobe=3)
-        ), br
-        aidx = IVFAQFastScanIndex.train(
-            vectors, nlist=8, M=4, seed=42, niter=5, by_residual=br
-        ).add(vectors)
-        assert rows(
-            aq_fastscan_search_preassigned(aidx, queries, 5, nprobe=3)
-        ) == rows(aidx.search(queries, 5, nprobe=3)), br
-
-    # fallback routing (the module-global twins are what the hooks call)
-    calls = []
-    for name in ("fastscan_search_preassigned", "aq_fastscan_search_preassigned"):
-        real = getattr(fsmod, name)
-
-        def spy(*a, _real=real, **kw):
-            calls.append(1)
-            return _real(*a, **kw)
-
-        monkeypatch.setattr(fsmod, name, spy)
-    import faiss_spark.operators.ivf as ivfmod
-
-    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)
-    assert rows(idx.search(queries, 5, nprobe=3))
-    assert rows(aidx.search(queries, 5, nprobe=3))
-    assert len(calls) == 2
+@pytest.mark.parametrize("codec", ["pqfs", "aqfs"])
+def test_fastscan_max_codes_routes_agree(codec, vectors, queries, monkeypatch):
+    """The max_codes scan budget cuts each query's probe set to ragged
+    rows; the fast-scan probe terms (LUTs quantized jointly over that
+    cut set) are built the same way on both routes, and the budget
+    scans fewer lists than the uncut search."""
+    idx = STATS_CELLS[codec](vectors)
+    full, st_full = search_with_parameters(idx, queries, 5, nprobe=8)
+    res, st = search_with_parameters(idx, queries, 5, nprobe=8, max_codes=100)
+    driver_rows = rows(res)
+    assert rows(full) and st.list_scans < st_full.list_scans
+    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
+    res2, _ = search_with_parameters(idx, queries, 5, nprobe=8, max_codes=100)
+    assert rows(res2) == driver_rows and driver_rows
 
 
-def test_sh_search_preassigned_equals_driver(vectors, queries, monkeypatch):
-    """IVFSpectralHash twin: probe selection + the per-(query, list)
-    periodic re-binarization run executor-side; Hamming join results
-    equal the driver plan, and the driver search auto-falls-back."""
-    from faiss_spark.operators.ivf import IVFSpectralHash, sh_search_preassigned
+def test_probe_table_columns_follow_the_terms_hook(vectors, queries, monkeypatch):
+    """A scanner without the probe_terms hook (IVF-PQ's ``_PQScanner``)
+    keeps the distributed probe table at exactly (qid, vec, list_no), so
+    its plan does not change; a fast-scan scanner adds one terms column."""
+    seen = []
+    real = ivfmod.cogrouped_cell_scan
 
-    idx = IVFSpectralHash.train(
-        vectors, nlist=8, nbit=32, period=1.0, threshold_type="median",
-        transform="pca", seed=42, niter=5,
-    ).add(vectors)
-    direct = rows(idx.search(queries, 5, nprobe=4))
-    assert rows(sh_search_preassigned(idx, queries, 5, nprobe=4)) == direct
-    calls = _spy_fallback(monkeypatch, "sh_search_preassigned")
-    assert rows(idx.search(queries, 5, nprobe=4)) == direct and direct
-    assert calls
+    def spy(index, probes, *a, **kw):
+        seen.append(probes.columns)
+        return real(index, probes, *a, **kw)
+
+    monkeypatch.setattr(ivfmod, "cogrouped_cell_scan", spy)
+    pq = IVFPQIndex.train(vectors, nlist=8, M=8, seed=42, niter=5).add(vectors)
+    pq_search_preassigned(pq, queries, 5, nprobe=2)
+    fastscan_search_preassigned(_pqfs(True)(vectors), queries, 5, nprobe=2)
+    assert seen == [["qid", "vec", "list_no"], ["qid", "vec", "list_no", "terms"]]
 
 
 def test_graph_routed_fallback_equals_driver(vectors, queries, monkeypatch):
