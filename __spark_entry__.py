@@ -722,7 +722,7 @@ def q_miq2_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = MIQ2IVFIndex.train(vecs, nbits=2, seed=42).add(vecs)
     qs = _queries_df(spark, sf_dir)
     np_ = idx.nlist
-    st = idx._probe_state()
+    st = {"sub_centroids": idx.sub_centroids, "assign_k2": idx.assign_k2}
     drv = _round(idx.search(qs, K, nprobe=np_)).withColumn(
         "mode", F.lit("driver")
     )

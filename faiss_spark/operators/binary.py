@@ -474,9 +474,9 @@ class BinaryIVFIndex:
         )
         bucket_meta = _os.path.join(path, "_bucket_meta.json")
         if fsio.exists(spark, bucket_meta):
-            from faiss_spark.operators.ivf import IVFIndex
+            from faiss_spark.operators.ivf import _IVFIndexBase
 
-            idx.codes = IVFIndex._bucketed_table(
+            idx.codes = _IVFIndexBase._bucketed_table(
                 spark, path, fsio.read_json(spark, bucket_meta)
             )
         else:

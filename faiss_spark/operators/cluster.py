@@ -143,6 +143,37 @@ class KMeansModel:
     d: int = 0
     spherical: bool = False
 
+    def assign_np(self, X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(labels, dist) of the nearest centroid per row of X: the
+        workspace-tiled GEMM argmin (argmax of the inner product when
+        spherical) behind ``assign`` and the IVF flat encode."""
+        from faiss_spark.kernels import _compute_block, _row_chunk
+
+        C = np.ascontiguousarray(self.centroids)
+        n = len(X)
+        xn = None if self.spherical else (X * X).sum(1)
+        cnorm = (C * C).sum(1)
+        labels = np.empty(n, dtype=np.int64)
+        dist = np.empty(n, dtype=np.float64)
+        chunk = _row_chunk(n, len(C), X.shape[1], "l2", X.dtype)
+        for r0 in range(0, n, chunk):
+            r1 = min(n, r0 + chunk)
+            rows = np.arange(r1 - r0)
+            if self.spherical:
+                D = _compute_block(X, C, r0, r1, "ip", None, None, X.dtype)
+                lab = np.argmax(D, axis=1)
+                dist[r0:r1] = D[rows, lab]
+            else:
+                # clip0=False: rank on the unclipped values (the exact
+                # full-matrix argmin order), clip at the end
+                D = _compute_block(
+                    X, C, r0, r1, "l2", xn, cnorm, X.dtype, clip0=False
+                )
+                lab = np.argmin(D, axis=1)
+                dist[r0:r1] = np.maximum(D[rows, lab], 0.0)
+            labels[r0:r1] = lab
+        return labels, dist
+
     def assign(
         self, df: DataFrame, vec_col: str = "vec", id_col: str = "id",
         keep_vec: bool = False,
@@ -159,49 +190,22 @@ class KMeansModel:
         is the encode primitive every IVF add path runs over the full
         100 TB table)."""
         spark = df.sparkSession
-        bc = spark.sparkContext.broadcast(self.centroids)
-        spherical = self.spherical
+        bc = spark.sparkContext.broadcast(self)
 
         def do_assign(batches):
             import pyarrow as pa
 
-            from faiss_spark.kernels import (
-                _compute_block,
-                _row_chunk,
-                arrow_list_matrix,
-            )
+            from faiss_spark.kernels import arrow_list_matrix
 
             f32_list = pa.list_(pa.float32())
-            C = np.ascontiguousarray(bc.value)
-            cnorm = (C * C).sum(1)
+            model = bc.value
             for b in batches:
                 if b.num_rows == 0:
                     continue
                 vec_arr = b.column(1)
                 if keep_vec and vec_arr.type != f32_list:
                     vec_arr = vec_arr.cast(f32_list)
-                X = arrow_list_matrix(b.column(1))
-                n = len(X)
-                xn = None if spherical else (X * X).sum(1)
-                labels = np.empty(n, dtype=np.int64)
-                dist = np.empty(n, dtype=np.float64)
-                chunk = _row_chunk(n, len(C), X.shape[1], "l2", X.dtype)
-                for r0 in range(0, n, chunk):
-                    r1 = min(n, r0 + chunk)
-                    rows = np.arange(r1 - r0)
-                    if spherical:
-                        D = _compute_block(X, C, r0, r1, "ip", None, None, X.dtype)
-                        lab = np.argmax(D, axis=1)
-                        dist[r0:r1] = D[rows, lab]
-                    else:
-                        # clip0=False: rank on the unclipped values (the
-                        # exact full-matrix argmin order), clip at the end
-                        D = _compute_block(
-                            X, C, r0, r1, "l2", xn, cnorm, X.dtype, clip0=False
-                        )
-                        lab = np.argmin(D, axis=1)
-                        dist[r0:r1] = np.maximum(D[rows, lab], 0.0)
-                    labels[r0:r1] = lab
+                labels, dist = model.assign_np(arrow_list_matrix(b.column(1)))
                 ids = np.asarray(
                     b.column(0).to_numpy(zero_copy_only=False), dtype=np.int64
                 )

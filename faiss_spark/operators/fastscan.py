@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from faiss_spark.kernels import (
     TopKAccumulator,
-    arrow_binary,
     arrow_binary_matrix,
     arrow_list,
     arrow_list_matrix,
@@ -51,11 +50,11 @@ from faiss_spark.kernels import (
 from faiss_spark.operators.codecs import ProductQuantizerModel
 from faiss_spark.operators.ivf import (
     IVFPQIndex,
+    _forwarded,
+    _IVFIndexBase,
     _ListScanner,
     _preassigned_cogrouped,
     _probe_pairs,
-    _probe_planner,
-    _scan_probed_lists,
     _window_topk,
     collect_queries_bounded,
 )
@@ -218,7 +217,7 @@ def pq_fastscan_search(
 
 
 @dataclass
-class IVFPQFastScanIndex:
+class IVFPQFastScanIndex(_IVFIndexBase):
     """IndexIVFPQFastScan semantics (reference faiss/IndexIVFPQFastScan.h):
     IVF partition pruning + quantized-LUT ADC, both by_residual modes.
 
@@ -240,6 +239,10 @@ class IVFPQFastScanIndex:
 
     base: IVFPQIndex
     by_residual: bool = True
+    # the lists live in the inner IVFPQ layout, for both modes
+    codes = _forwarded("codes", "base")
+    path = _forwarded("path", "base")
+    _twin = "fastscan_search_preassigned"
 
     @staticmethod
     def train(
@@ -289,106 +292,26 @@ class IVFPQFastScanIndex:
         )
         return IVFPQFastScanIndex(base=base, by_residual=False)
 
-    def add(self, vectors: DataFrame, **kw) -> "IVFPQFastScanIndex":
+    def _encoder(self):
+        """by_residual: the IVFPQ encode; otherwise assign the list for
+        pruning and PQ-encode the RAW vector (reference encode_vectors
+        with by_residual=false)."""
         if self.by_residual:
-            self.base.add(vectors, **kw)
-            return self
-        return self._add_raw(vectors, **kw)
+            return self.base._encoder()
 
-    def _add_raw(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFPQFastScanIndex":
-        """Map-only encode: assign list for pruning, PQ-encode the RAW
-        vector (reference encode_vectors with by_residual=false)."""
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(
-            (self.base.centroids, self.base.pq.codebooks)
-        )
-
-        def enc(batches):
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_id_vec_blocks
-
-            C, books = bc.value
-            pqm = ProductQuantizerModel(codebooks=books)
+        def encode(state, X):
+            C, books = state
             cn = (C * C).sum(1)
-            for ids, X, _ in arrow_id_vec_blocks(batches):
-                d2 = (X * X).sum(1)[:, None] + cn[None, :] - 2.0 * (X @ C.T)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(d2.argmin(1).astype(np.int32), pa.int32()),
-                        pa.array(ids, pa.int64()),
-                        arrow_binary(pqm.encode_np(X)),
-                    ],
-                    names=["list_no", "id", "code"],
-                )
+            d2 = (X * X).sum(1)[:, None] + cn[None, :] - 2.0 * (X @ C.T)
+            return d2.argmin(1), ProductQuantizerModel(codebooks=books).encode_np(X)
 
-        src = vectors.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            F.col(vec_col).alias("vec"),
-        )
-        codes = src.mapInArrow(
-            enc, schema="list_no int, id bigint, code binary"
-        )
-        if path is not None:
-            codes.repartition("list_no").write.mode("overwrite").partitionBy(
-                "list_no"
-            ).parquet(path)
-            codes = spark.read.parquet(path)
-            self.base.path = path
-        self.base.codes = codes
-        return self
+        return (self.base.centroids, self.base.pq.codebooks), encode
 
-    def save(self, path: str) -> "IVFPQFastScanIndex":
-        """write_index: the IVFPQ layout plus the by_residual flag —
-        reload reproduces the same LUT mode (per-probe residual LUTs vs
-        the shared flat LUT)."""
-        import os as _os
+    def _planner_state(self) -> tuple:
+        return self.base._planner_state()
 
-        from faiss_spark.sources import fsio
-
-        self.base.save(path)
-        fsio.write_json(
-            self.base.codes.sparkSession,
-            _os.path.join(path, "_ivfpqfs_meta.json"),
-            {"by_residual": bool(self.by_residual)},
-        )
-        return self
-
-    @staticmethod
-    def load(spark, path: str) -> "IVFPQFastScanIndex":
-        import os as _os
-
-        from faiss_spark.sources import fsio
-
-        meta = fsio.read_json(spark, _os.path.join(path, "_ivfpqfs_meta.json"))
-        return IVFPQFastScanIndex(
-            base=IVFPQIndex.load(spark, path),
-            by_residual=meta["by_residual"],
-        )
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Driver-route IVF fast-scan search (``_PQ4Scanner``); a query
-        side past the driver bound falls back to
-        ``fastscan_search_preassigned`` (looked up at call time)."""
-        return _scan_probed_lists(
-            self.base, queries, _probe_planner(self.base, nprobe),
-            _PQ4Scanner(self), "IVFPQFastScanIndex.search", qid_col,
-            qvec_col, k=k,
-            fallback=lambda: fastscan_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            ),
-        )
+    def _scanner(self, k: int, **kw):
+        return _PQ4Scanner(self)
 
 
 def _pack_terms(lut, biasq, *f64) -> np.ndarray:
@@ -520,8 +443,8 @@ def fastscan_search_preassigned(
     Arithmetic is the driver route's bit for bit, for both by_residual
     modes."""
     return _preassigned_cogrouped(
-        index.base, queries, _probe_planner(index.base, nprobe),
-        _PQ4Scanner(index), qid_col, qvec_col, max_cell_rows, k=k,
+        index, queries, index._planner(nprobe), _PQ4Scanner(index),
+        qid_col, qvec_col, max_cell_rows, k=k,
     )
 
 
@@ -793,7 +716,7 @@ def aq_quantize_lut_bias(
 
 
 @dataclass
-class IVFAQFastScanIndex:
+class IVFAQFastScanIndex(_IVFIndexBase):
     """IndexIVFAdditiveQuantizerFastScan semantics (reference
     faiss/IndexIVFAdditiveQuantizerFastScan.cpp:352-401): codes are the
     4-bit RQ of the RESIDUAL plus the 2×4-bit-encoded FULL-vector norm
@@ -817,6 +740,7 @@ class IVFAQFastScanIndex:
     #: aq_fastscan_search over the same codes; x4fsr opts into the
     #: residual encoding above
     by_residual: bool = True
+    _twin = "aq_fastscan_search_preassigned"
 
     @property
     def M(self) -> int:
@@ -884,159 +808,27 @@ class IVFAQFastScanIndex:
             ),
         )
 
-    def add(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFAQFastScanIndex":
-        spark = vectors.sparkSession
-        by_res = self.by_residual
-        # broadcast the MODEL, not bare codebooks: a ProductAQAdapter
-        # must encode per-split on executors (a flat beam search over its
-        # padded codebooks would produce different codes), and for plain
-        # RQ the broadcast model is the identical encoder
-        bc = spark.sparkContext.broadcast(
-            (self.centroids, self.rq, self.norm_books)
-        )
+    def _encoder(self):
+        def encode(state, X):
+            C, rqm, nbk, by_res = state
+            d2 = (X * X).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
+            lists = d2.argmin(1)
+            if by_res:
+                rcodes = rqm.encode_np(X - C[lists])
+                xhat = C[lists] + rqm.decode_np(rcodes)
+            else:
+                rcodes = rqm.encode_np(X)
+                xhat = rqm.decode_np(rcodes)
+            c0, c1 = _norm_encode((xhat * xhat).sum(1), nbk)
+            return lists, np.concatenate([rcodes, c0[:, None], c1[:, None]], axis=1)
 
-        def enc(batches):
-            import pyarrow as pa
+        # the MODEL travels, not bare codebooks: a ProductAQAdapter must
+        # encode per split on executors (a flat beam search over its
+        # padded codebooks would produce different codes)
+        return (self.centroids, self.rq, self.norm_books, self.by_residual), encode
 
-            from faiss_spark.kernels import arrow_id_vec_blocks
-
-            C, rqm, nbk = bc.value
-            cn = (C * C).sum(1)
-            for ids, X, _ in arrow_id_vec_blocks(batches):
-                d2 = (X * X).sum(1)[:, None] + cn[None, :] - 2.0 * (X @ C.T)
-                lists = d2.argmin(1)
-                if by_res:
-                    rcodes = rqm.encode_np(X - C[lists])
-                    xhat = C[lists] + rqm.decode_np(rcodes)
-                else:
-                    rcodes = rqm.encode_np(X)
-                    xhat = rqm.decode_np(rcodes)
-                c0, c1 = _norm_encode((xhat * xhat).sum(1), nbk)
-                codes = np.concatenate(
-                    [rcodes, c0[:, None], c1[:, None]], axis=1
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(lists.astype(np.int32), pa.int32()),
-                        pa.array(ids, pa.int64()),
-                        arrow_binary(codes),
-                    ],
-                    names=["list_no", "id", "code"],
-                )
-
-        src = vectors.select(
-            F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-        )
-        self.codes = src.mapInArrow(
-            enc, schema="list_no int, id bigint, code binary"
-        )
-        return self
-
-    def save(self, path: str) -> "IVFAQFastScanIndex":
-        """write_index: partitioned (rcodes ++ norm-code) table +
-        centroid/RQ-codebook/norm-codebook artifacts."""
-        import os as _os
-
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        self.codes.repartition("list_no").write.mode("overwrite").partitionBy(
-            "list_no"
-        ).parquet(path)
-        from faiss_spark.sources import fsio
-
-        fsio.write_npy(spark, _os.path.join(path, "_ivfaqfs_centroids.npy"), self.centroids)
-        fsio.write_npy(spark, _os.path.join(path, "_ivfaqfs_codebooks.npy"), self.rq.codebooks)
-        fsio.write_npy(spark, _os.path.join(path, "_ivfaqfs_norm_books.npy"), self.norm_books)
-        meta = {
-            "norm_scale": int(self.norm_scale),
-            "by_residual": bool(self.by_residual),
-            "beam": int(getattr(self.rq, "beam", 4)),
-        }
-        if isinstance(self.rq, ProductAQAdapter):
-            # stamp the split structure so load rebuilds the PER-SPLIT
-            # encoder (the padded codebooks alone reproduce decode/LUTs
-            # but not PRQ/PLSQ encoding)
-            from faiss_spark.operators.codecs import LocalSearchQuantizerModel
-
-            sub0 = self.rq.paq.subs[0]
-            # the meta stamps sub0's shape for ALL splits; a hand-built
-            # adapter with heterogeneous splits would silently round-trip
-            # to corrupted per-split slicing in _paq_adapter_from_books —
-            # fail loudly instead (the trainer always produces uniform
-            # splits, so this only rejects hand-built adapters)
-            for s in self.rq.paq.subs[1:]:
-                if (
-                    s.M != sub0.M
-                    or s.ksub != sub0.ksub
-                    or type(s) is not type(sub0)
-                    or int(getattr(s, "icm_iters", 3))
-                    != int(getattr(sub0, "icm_iters", 3))
-                ):
-                    raise ValueError(
-                        "IVFAQFastScanIndex.save: heterogeneous ProductAQ "
-                        "splits (M/ksub/type/icm_iters differ) cannot be "
-                        "persisted — the meta format stores one shared "
-                        "split shape. Retrain with uniform splits."
-                    )
-            meta["paq"] = {
-                "nsplits": len(self.rq.paq.subs),
-                "msub": int(sub0.M),
-                "lsq": isinstance(sub0, LocalSearchQuantizerModel),
-                "icm_iters": int(getattr(sub0, "icm_iters", 3)),
-            }
-        fsio.write_json(spark, _os.path.join(path, "_ivfaqfs_meta.json"), meta)
-        self.codes = spark.read.parquet(path)
-        return self
-
-    @staticmethod
-    def load(spark, path: str) -> "IVFAQFastScanIndex":
-        import os as _os
-
-        from faiss_spark.operators.codecs import ResidualQuantizerModel
-        from faiss_spark.sources import fsio
-
-        meta = fsio.read_json(spark, _os.path.join(path, "_ivfaqfs_meta.json"))
-        books = fsio.read_npy(
-            spark, _os.path.join(path, "_ivfaqfs_codebooks.npy")
-        )
-        if "paq" in meta:
-            pm = meta["paq"]
-            rq = _paq_adapter_from_books(
-                books, pm["nsplits"], pm["msub"], pm["lsq"], pm["icm_iters"]
-            )
-        else:
-            rq = ResidualQuantizerModel(codebooks=books, beam=meta["beam"])
-        return IVFAQFastScanIndex(
-            centroids=fsio.read_npy(spark, _os.path.join(path, "_ivfaqfs_centroids.npy")),
-            rq=rq,
-            norm_books=fsio.read_npy(spark, _os.path.join(path, "_ivfaqfs_norm_books.npy")),
-            norm_scale=meta["norm_scale"],
-            codes=spark.read.parquet(path),
-            by_residual=meta["by_residual"],
-        )
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Driver-route IVF AQ fast-scan search (``_AQ4Scanner``); a
-        query side past the driver bound falls back to
-        ``aq_fastscan_search_preassigned`` (looked up at call time)."""
-        return _scan_probed_lists(
-            self, queries, _probe_planner(self, nprobe), _AQ4Scanner(self),
-            "IVFAQFastScanIndex.search", qid_col, qvec_col, k=k,
-            fallback=lambda: aq_fastscan_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            ),
-        )
+    def _scanner(self, k: int, **kw):
+        return _AQ4Scanner(self)
 
 
 class _AQ4Scanner(_ListScanner):
@@ -1125,7 +917,7 @@ def aq_fastscan_search_preassigned(
     saturating sum. Covers both by_residual modes, PRQ/PLSQ included
     (the ProductAQAdapter rides inside rq)."""
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe), _AQ4Scanner(index),
+        index, queries, index._planner(nprobe), _AQ4Scanner(index),
         qid_col, qvec_col, max_cell_rows, k=k,
     )
 
@@ -1181,35 +973,6 @@ class ProductAQAdapter:
 
     def decode_np(self, codes: np.ndarray) -> np.ndarray:
         return self.paq.decode_np(codes)
-
-
-def _paq_adapter_from_books(
-    books: np.ndarray, nsplits: int, msub: int, lsq: bool, icm_iters: int = 3
-) -> ProductAQAdapter:
-    """Rebuild a ProductAQAdapter from the persisted PADDED codebooks by
-    slicing each split's block back out — save/load round-trips the
-    per-split encode semantics, not just the decode/LUT math."""
-    from faiss_spark.operators.codecs import (
-        LocalSearchQuantizerModel,
-        ProductAdditiveQuantizerModel,
-        ResidualQuantizerModel,
-    )
-
-    d = books.shape[2]
-    dsub = d // nsplits
-    subs = []
-    for s in range(nsplits):
-        blk = np.ascontiguousarray(
-            books[s * msub : (s + 1) * msub, :, s * dsub : (s + 1) * dsub]
-        )
-        subs.append(
-            LocalSearchQuantizerModel(codebooks=blk, icm_iters=icm_iters)
-            if lsq
-            else ResidualQuantizerModel(codebooks=blk, beam=4)
-        )
-    return ProductAQAdapter(
-        ProductAdditiveQuantizerModel(subs=subs, dsub=dsub)
-    )
 
 
 def train_paq_fastscan(

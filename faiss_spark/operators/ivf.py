@@ -5,25 +5,36 @@ faiss/IndexIVF.cpp:302-544 (search lifecycle, SURVEY §3.2),
 contrib/ivf_tools.py:26-57 (big-batch search grouped by probed list — the
 shape we use).
 
-The faiss mapping onto Spark:
+Every IVF family (the 11 here and fastscan.py's two) is a subclass of
+``_IVFIndexBase``, which writes the lifecycle once, as faiss's IndexIVF
+does; a family supplies only ``train``, an encode hook, its planner
+state and its scanner. The faiss mapping onto Spark:
 
   train   Level1Quantizer::train_q1 = our KMeans on a seeded sample
-          → centroids artifact (small, broadcastable).
-  add     encode_vectors → (list_no, id, vec|code) → **Parquet partitioned by
-          list_no** (reference ArrayInvertedLists/OnDiskInvertedLists ARE
-          this layout, faiss/invlists/InvertedLists.h:30-111).
+          → centroids artifact (small, broadcastable); per family.
+  add     encode_vectors (the family's ``_encoder``) → (list_no, id,
+          vec|code) in one map-only ``_encode_lists`` pass → **Parquet
+          partitioned by list_no** (reference ArrayInvertedLists/
+          OnDiskInvertedLists ARE this layout,
+          faiss/invlists/InvertedLists.h:30-111).
+  save    index_io's one writer: the codes table partitioned (or
+          bucketed) by list_no + the model state packed by
+          sources/state.py; ``load`` reads back the saved class.
   search  one lifecycle for every codec (IndexIVF::search_preassigned),
           written once as three parts:
 
-          planner  ``_probe_planner`` — stage A, the coarse top-nprobe
-                   per query (= quantizer->search, IndexIVF.cpp:330):
+          planner  ``_IVFIndexBase._planner`` — stage A, the coarse
+                   top-nprobe per query (= quantizer->search,
+                   IndexIVF.cpp:330) from the family's planner state:
                    k-means argsort by metric, RCQ/LSQ beam, IMI/MIQ2
-                   grid, nested or graph-routed router, plus the
-                   ``max_codes`` nearest-first scan budget.
+                   grid, nested router (or the factory's graph walk via
+                   ``_probe_planner``), plus the ``max_codes``
+                   nearest-first scan budget.
           scanner  one InvertedListScanner per codec (``_FlatScanner``,
                    ``_SQScanner``, ``_PQScanner``, ``_AQScanner``,
                    ``_PQRScanner``, ``_SHScanner``, and fastscan.py's
-                   ``_PQ4Scanner``/``_AQ4Scanner``): built on the driver,
+                   ``_PQ4Scanner``/``_AQ4Scanner``), the family's
+                   ``_scanner``: built on the driver,
                    broadcast once, ``bind(list_no, Q, qsel, acc, scratch,
                    T)`` then push code blocks into a TopKAccumulator
                    (flat also scans ranges). ``T`` carries the optional
@@ -53,6 +64,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import sys
 from dataclasses import dataclass
 
 import numpy as np
@@ -82,87 +94,22 @@ from faiss_spark.operators.codecs import ProductQuantizerModel
 MAX_DRIVER_QUERY_CELLS = 32_000_000
 
 
-def _write_bucketed_codes(
-    index, path: str, cols: tuple, prefix: str, nbuckets: int | None
+def _encode_lists(
+    vectors: DataFrame, id_col: str, vec_col: str, state, encode,
+    payload: str = "code binary",
 ):
-    """Shared CLUSTERED BY (list_no) writer behind every index's
-    ``save_bucketed`` (the reference's precomputed on-disk invlists
-    grouping, invlists/OnDiskInvertedLists.h:60): the bucketed scan
-    carries HashPartitioning(list_no), so the preassigned cogroups'
-    corpus side becomes scan-only — zero exchanges per search. ``cols``
-    is the index family's codes payload (raw ``vec``, SQ/PQ/AQ
-    ``code``, PQR ``code, rcode``)."""
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    spark = index.codes.sparkSession
-    if nbuckets is None:
-        nbuckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    name = prefix + hashlib.md5(path.encode()).hexdigest()[:12]
-    sel = index.codes.select(*cols)
-    ddl = sel._jdf.schema().toDDL()
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        # pre-shuffling to the bucket hash keeps it one file per
-        # bucket instead of (tasks × buckets) small files
-        sel.repartition(nbuckets, "list_no")
-        .write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(nbuckets, "list_no")
-        .saveAsTable(name)
-    )
-    index._save_artifact(spark, path)
-    fsio.write_json(
-        spark,
-        os.path.join(path, "_bucket_meta.json"),
-        {"nbuckets": int(nbuckets), "table": name, "ddl": ddl},
-    )
-    index.codes = spark.table(name)
-    index.path = path
-    return index
-
-
-def _attach_codes_table(spark: SparkSession, path: str) -> DataFrame:
-    """(Re)open a persisted codes location: the bucketed table when a
-    ``_bucket_meta.json`` marker exists (grouping provable → cogroups
-    skip the corpus exchange), plain partitioned parquet otherwise.
-    Shared by every index family's ``load``."""
-    bucket_meta = os.path.join(path, "_bucket_meta.json")
-    if fsio.exists(spark, bucket_meta):
-        return IVFIndex._bucketed_table(
-            spark, path, fsio.read_json(spark, bucket_meta)
-        )
-    return spark.read.parquet(path)
-
-
-def _store_codes(index, codes: DataFrame | None, path: str | None):
-    """Shared add/save tail of the IVF families: without a path the
-    in-memory frame becomes the codes table; with one, write it
-    partitioned by list_no (the layout partition pruning reads) plus the
-    family's ``_save_artifact`` files, and re-point the index at the
-    stored copy (write_index, reference faiss/index_io.h:38)."""
-    if codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    if path is None:
-        index.codes = codes
-        return index
-    spark = codes.sparkSession
-    codes.repartition("list_no").write.mode("overwrite").partitionBy(
-        "list_no"
-    ).parquet(path)
-    index._save_artifact(spark, path)
-    index.codes = spark.read.parquet(path)
-    index.path = path
-    return index
-
-
-def _encode_lists(vectors: DataFrame, id_col: str, vec_col: str, state, encode):
-    """Map-only frozen-artifact encode shared by the coded IVF families
-    (add() and the streaming incremental writer): broadcast ``state``,
-    run ``encode(state, X) -> (lists, codes)`` on each zero-copy Arrow
-    block, emit (list_no, id, code) rows — no per-row objects, no
-    shuffle."""
+    """Map-only frozen-artifact encode shared by every IVF family (add()
+    and the streaming incremental writer): broadcast ``state``, run
+    ``encode(state, X) -> (lists, *payload)`` on each zero-copy Arrow
+    block, emit (list_no, id, *payload) rows — no per-row objects, no
+    shuffle. ``payload`` is the family's column schema: a ``binary``
+    column takes a code matrix, an ``array<bigint>`` one an int64 word
+    matrix, and ``vec array<float>`` (raw-vector lists, ``encode``
+    returns only the lists) passes the input column through."""
     bc = vectors.sparkSession.sparkContext.broadcast(state)
+    names = [c.split()[0] for c in payload.split(",")]
+    types = [c.split()[1] for c in payload.split(",")]
+    raw = types == ["array<float>"]
 
     def enc(batches):
         import pyarrow as pa
@@ -170,21 +117,29 @@ def _encode_lists(vectors: DataFrame, id_col: str, vec_col: str, state, encode):
         from faiss_spark.kernels import arrow_id_vec_blocks
 
         st = bc.value
-        for ids, X, _ in arrow_id_vec_blocks(batches):
-            lists, codes = encode(st, X)
+        f32_list = pa.list_(pa.float32())
+        for ids, X, vec_arr in arrow_id_vec_blocks(batches):
+            lists, *cols = encode(st, X)
+            if raw:
+                cols = [vec_arr if vec_arr.type == f32_list else vec_arr.cast(f32_list)]
+            else:
+                cols = [
+                    arrow_binary(c) if t == "binary" else arrow_list(c)
+                    for t, c in zip(types, cols)
+                ]
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(lists.astype(np.int32), pa.int32()),
                     pa.array(ids, pa.int64()),
-                    arrow_binary(codes),
+                    *cols,
                 ],
-                names=["list_no", "id", "code"],
+                names=["list_no", "id", *names],
             )
 
     src = vectors.select(
         F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
     )
-    return src.mapInArrow(enc, schema="list_no int, id bigint, code binary")
+    return src.mapInArrow(enc, schema=f"list_no int, id bigint, {payload}")
 
 
 def _coarse_assign(X: np.ndarray, C, cq, metric: str) -> np.ndarray:
@@ -252,16 +207,317 @@ def collect_queries_bounded(
     return qids, Q
 
 
+#: the packed model state every IVF index stores next to its codes table
+_STATE_JSON = "_ivf_state.json"
+_STATE_NPZ = "_ivf_state.npz"
+_BUCKET_META = "_bucket_meta.json"
+
+
+def _forwarded(name: str, inner: str) -> property:
+    """An attribute that lives on the inner index ``inner`` (the wrapper
+    families keep their lists in an inner IVFPQIndex)."""
+    return property(
+        lambda self: getattr(getattr(self, inner), name),
+        lambda self, v: setattr(getattr(self, inner), name, v),
+    )
+
+
+class _IVFIndexBase:
+    """The IVF index lifecycle, written once (reference faiss/IndexIVF.h:
+    add, search and index_io's one writer are generic there too; a
+    family supplies only ``encode_vectors`` and
+    ``get_InvertedListScanner``). An index is model state (coarse
+    quantizer, codec), ``codes`` — the (list_no, id, payload) table —
+    and ``path``, where that table is stored, if it is. A family
+    supplies:
+
+      train              its fitted model (a static constructor)
+      _encoder()         ``(state, encode)``: ``encode(state, X) ->
+                         (lists, *payload)`` runs on every Arrow block of
+                         the vectors with ``state`` broadcast;
+                         ``_payload`` is the schema of the payload columns
+                         (``vec array<float>`` passes the input through)
+      _planner_state()   ``(kind, state, nlist, d)`` of its coarse
+                         quantizer (see ``_ProbePlanner``); the default is
+                         k-means ``centroids`` ranked by ``metric``
+      _scanner(k, **kw)  its ``_ListScanner`` (default: raw vectors)
+
+    plus ``_twin``, the name of its public ``*_search_preassigned``
+    function in its own module. ``add``, the streaming encode, ``save``,
+    ``save_bucketed``, ``load``, ``search``, ``nlist`` and ``d`` are
+    written here once.
+
+    On disk an index is its codes table, partitioned (``save``) or
+    bucketed (``save_bucketed``) by list_no, plus its model state
+    written by the allowlisted, pickle-free ``sources.state.pack``
+    (``_ivf_state.json`` + ``_ivf_state.npz``). ``codes``, ``path`` and
+    per-index caches are not model state (``__persist_skip__``)."""
+
+    codes = None
+    path = None
+    metric = "l2"
+    _payload = "code binary"
+    _twin = "search_preassigned"
+    __persist_skip__ = ("codes", "path", "_list_sizes_cache", "_subshard_cache")
+
+    # ------------------------------------------------------- family hooks
+    def _encoder(self):
+        raise NotImplementedError
+
+    def _planner_state(self) -> tuple:
+        C = self.centroids
+        return "centroids", (C, self.metric), len(C), C.shape[1]
+
+    def _scanner(self, k: int, **kw) -> "_ListScanner":
+        return _FlatScanner(self.metric)
+
+    @property
+    def nlist(self) -> int:
+        return self._planner_state()[2]
+
+    @property
+    def d(self) -> int:
+        return self._planner_state()[3]
+
+    def _shell(self):
+        """A codes-free copy of the model, to broadcast (a DataFrame
+        does not pickle)."""
+        s = object.__new__(type(self))
+        s.__dict__.update(
+            (k, v) for k, v in vars(self).items() if k not in self.__persist_skip__
+        )
+        return s
+
+    def _planner(self, nprobe: int, max_codes: int | None = None, router=None):
+        """The probe planner of the coarse quantizer (``router``
+        overrides it — the factory's graph walk). Every search starts
+        here, so this is also where an index without codes is refused.
+        nprobe is clamped to nlist (IndexIVF.cpp:315)."""
+        if self.codes is None:
+            raise ValueError("index has no codes table; call add() first")
+        if router is None:
+            kind, state, nlist, d = self._planner_state()
+        else:
+            kind, state, nlist, d = "router", router, router.nlist, router.d
+        sizes = _list_sizes(self) if max_codes is not None else None
+        return _ProbePlanner(kind, state, min(nprobe, nlist), d, sizes, max_codes)
+
+    # -------------------------------------------------------------- build
+    def add(
+        self,
+        vectors: DataFrame,
+        id_col: str = "id",
+        vec_col: str = "vec",
+        path: str | None = None,
+    ):
+        """Encode + layout: assign each vector to its list, encode it,
+        and (with ``path``) persist partitioned by list_no (reference
+        encode_vectors + invlists->add_entries, faiss/IndexIVF.h:173;
+        contrib/ivf_tools.py:9 add_preassigned)."""
+        return self._store(self._encode_df(vectors, id_col, vec_col), path)
+
+    def _encode_df(
+        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
+    ) -> DataFrame:
+        """Frozen-artifact encode to (list_no, id, payload) rows — the
+        shared core of add() and the streaming incremental writer. Map
+        only: the payload (raw vectors included) comes out of the
+        assignment map, so there is no join-back shuffle of the 100 TB
+        vector table; the only exchange is the partitioned write."""
+        state, encode = self._encoder()
+        return _encode_lists(vectors, id_col, vec_col, state, encode, self._payload)
+
+    def _store(self, codes: DataFrame | None, path: str | None):
+        if codes is None:
+            raise ValueError("index has no codes table; call add() first")
+        if path is None:
+            self.codes = codes
+            return self
+        spark = codes.sparkSession
+        codes.repartition("list_no").write.mode("overwrite").partitionBy(
+            "list_no"
+        ).parquet(path)
+        self._write_state(spark, path)
+        self.codes, self.path = spark.read.parquet(path), path
+        return self
+
+    def _write_state(self, spark, path: str) -> None:
+        from faiss_spark.sources.state import pack, write_npz
+
+        arrays, tables = {}, {}
+        tree = pack(self, arrays, tables, type(self).__name__)
+        if tables:
+            raise TypeError(
+                f"{type(self).__name__}: DataFrame model state is not persistable"
+            )
+        write_npz(spark, os.path.join(path, _STATE_NPZ), arrays)
+        fsio.write_json(spark, os.path.join(path, _STATE_JSON), tree)
+
+    # ---------------------------------------------------------------- I/O
+    def save(self, path: str):
+        """write_index for an already-built index (reference
+        faiss/index_io.h:38): persist the codes table partitioned by
+        list_no (the layout partition pruning reads) plus the model
+        state, and re-point the index at the stored copy."""
+        return self._store(self.codes, path)
+
+    def save_bucketed(self, path: str, nbuckets: int | None = None):
+        """write_index into a CLUSTERED BY (list_no) layout — the
+        reference's on-disk invlists (invlists/OnDiskInvertedLists.h:60,
+        the precomputed grouping ``merge_to_ondisk`` materializes for the
+        1T-scale pipeline, benchs/distributed_ondisk/README.md:139).
+
+        The plain partitioned layout groups the FILES by list_no but
+        Spark cannot prove the hash grouping, so every
+        ``*_search_preassigned`` call re-exchanges the whole codes table
+        into the cogroup. A bucketed table carries
+        ``HashPartitioning(list_no)`` in its scan, the cogroup's
+        ClusteredDistribution is already satisfied, and repeated
+        big-batch searches become scan-only on the corpus side — at
+        100 TB that is the difference between one corpus shuffle per
+        search and zero (the probe side, which is the small side, still
+        exchanges once)."""
+        if self.codes is None:
+            raise ValueError("index has no codes table; call add() first")
+        spark = self.codes.sparkSession
+        if nbuckets is None:
+            nbuckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        name = "ivf_codes_" + hashlib.md5(path.encode()).hexdigest()[:12]
+        payload = [c.split()[0] for c in self._payload.split(",")]
+        sel = self.codes.select("list_no", "id", *payload)
+        ddl = sel._jdf.schema().toDDL()
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            # pre-shuffling to the bucket hash keeps it one file per
+            # bucket instead of (tasks × buckets) small files
+            sel.repartition(nbuckets, "list_no")
+            .write.mode("overwrite")
+            .format("parquet")
+            .option("path", path)
+            .bucketBy(nbuckets, "list_no")
+            .saveAsTable(name)
+        )
+        self._write_state(spark, path)
+        fsio.write_json(
+            spark,
+            os.path.join(path, _BUCKET_META),
+            {"nbuckets": int(nbuckets), "table": name, "ddl": ddl},
+        )
+        self.codes, self.path = spark.table(name), path
+        return self
+
+    @staticmethod
+    def _bucketed_table(spark: SparkSession, path: str, bm: dict) -> DataFrame:
+        """(Re)attach a bucketed codes table. The FILES are the durable
+        artifact; the default in-memory catalog is session-scoped, so a
+        fresh session recreates the table DDL over the same location.
+        Also reads the NSG and binary IVF bucketed layouts."""
+        name = bm["table"]
+        key = bm.get("key", "list_no")  # NSG buckets by shard
+        if not spark.catalog.tableExists(name):
+            spark.sql(
+                f"CREATE TABLE {name} ({bm['ddl']}) USING PARQUET "
+                f"CLUSTERED BY ({key}) INTO {bm['nbuckets']} BUCKETS "
+                f"LOCATION '{path}'"
+            )
+        return spark.table(name)
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str):
+        """read_index: the packed model state — which names the saved
+        class, so an MIQ2 index comes back as one — then the codes
+        table: the bucketed table when ``save_bucketed`` left its marker
+        (grouping provable, so the cogroups skip the corpus exchange),
+        the partitioned parquet otherwise."""
+        from faiss_spark.sources.state import read_npz, unpack
+
+        tree = fsio.read_json(spark, os.path.join(path, _STATE_JSON))
+        idx = unpack(tree, read_npz(spark, os.path.join(path, _STATE_NPZ)), {})
+        if not isinstance(idx, cls):
+            raise TypeError(
+                f"{path!r} holds a {type(idx).__name__}, not a {cls.__name__}"
+            )
+        bucket_meta = os.path.join(path, _BUCKET_META)
+        if fsio.exists(spark, bucket_meta):
+            codes = cls._bucketed_table(spark, path, fsio.read_json(spark, bucket_meta))
+        else:
+            codes = spark.read.parquet(path)
+        idx.codes, idx.path = codes, path
+        return idx
+
+    # ------------------------------------------------------------- search
+    def search(
+        self,
+        queries: DataFrame,
+        k: int,
+        nprobe: int = 1,
+        qid_col: str = "qid",
+        qvec_col: str = "vec",
+    ) -> DataFrame:
+        """IVF k-NN (reference IndexIVF::search, faiss/IndexIVF.cpp:302).
+
+        Returns (qid, id, dist, rank). nprobe is clamped to nlist
+        (IndexIVF.cpp:315). With nprobe == nlist results are exact for
+        the raw-vector families.
+
+        The probe plan is computed on the DRIVER (the coarse quantizer
+        and the queries are both small in the intended regime); if the
+        query side exceeds MAX_DRIVER_QUERY_CELLS / d rows, this
+        automatically falls back to the family's fully-distributed
+        ``*_search_preassigned`` cogroup twin, whose planner runs the
+        SAME coarse assignment executor-side — the driver never
+        materializes an unbounded query frame."""
+        return self._search(queries, k, nprobe, qid_col, qvec_col)
+
+    def _search(self, queries, k, nprobe, qid_col, qvec_col, max_codes=None, **kw):
+        """The driver route with the family's planner and scanner;
+        ``max_codes`` and the scanner keywords ``kw`` reach the twin too,
+        which is looked up at call time."""
+
+        def twin():
+            fn = getattr(sys.modules[type(self).__module__], self._twin)
+            if max_codes is not None:
+                kw["max_codes"] = max_codes
+            return fn(
+                self, queries, k, nprobe=nprobe, qid_col=qid_col,
+                qvec_col=qvec_col, **kw,
+            )
+
+        return _scan_probed_lists(
+            self, queries, self._planner(nprobe, max_codes),
+            self._scanner(k, **kw), f"{type(self).__name__}.search",
+            qid_col, qvec_col, k=k, fallback=twin,
+        )
+
+
+def _ivf_families() -> list:
+    """Every IVF index class: the subclasses of _IVFIndexBase, found by a
+    walk (fastscan.py defines two of them)."""
+    import faiss_spark.operators.fastscan  # noqa: F401
+
+    out, todo = [], list(_IVFIndexBase.__subclasses__())
+    while todo:
+        c = todo.pop(0)
+        out.append(c)
+        todo.extend(c.__subclasses__())
+    return out
+
+
+def _beam_state(cq) -> tuple:
+    """Planner state of an additive (RCQ/LSQ) coarse quantizer."""
+    return "beam", cq, cq.nlist, cq.codebooks.shape[2]
+
+
 @dataclass
-class IVFIndex:
+class IVFIndex(_IVFIndexBase):
     """A fitted IVF index = centroid artifact + partitioned codes table."""
 
     centroids: np.ndarray  # (nlist, d)
     metric: str
     path: str | None = None  # partitioned parquet location (if persisted)
     codes: DataFrame | None = None  # the (list_no, id, vec) table
+    _payload = "vec array<float>"
 
-    # ------------------------------------------------------------------ build
     @staticmethod
     def train(
         vectors: DataFrame,
@@ -278,121 +534,16 @@ class IVFIndex:
         ).fit(vectors, vec_col=vec_col)
         return IVFIndex(centroids=km.centroids, metric=metric)
 
-    def add(
-        self,
-        vectors: DataFrame,
-        id_col: str = "id",
-        vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFIndex":
-        """Encode + layout: assign each vector to its nearest centroid and
-        (optionally) persist partitioned by list_no (reference
-        encode_vectors + invlists->add_entries, faiss/IndexIVF.h:173;
-        contrib/ivf_tools.py:9 add_preassigned)."""
-        return _store_codes(
-            self, self._encode_df(vectors, id_col=id_col, vec_col=vec_col), path
-        )
-
-    def _encode_df(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> DataFrame:
-        """Frozen-artifact encode: (list_no, id, vec) rows — the shared
-        core of add() and the streaming incremental writer. keep_vec:
-        the assignment map carries the vector through, so the
-        encode+layout stage is map-only (no join-back shuffle of the
-        100 TB vector table; the only exchange is the partitioned
-        write)."""
+    def _encoder(self):
+        # KMeansModel's workspace-tiled GEMM argmin (the assign every
+        # k-means caller runs)
         model = KMeansModel(
             centroids=self.centroids,
             k=len(self.centroids),
             d=self.centroids.shape[1],
             spherical=(self.metric == "cosine"),
         )
-        return model.assign(
-            vectors, vec_col=vec_col, id_col=id_col, keep_vec=True
-        ).select(F.col("cluster").alias("list_no"), "id", "vec")
-
-    def _save_artifact(self, spark, path: str) -> None:
-        """Model artifact = JSON + npy next to the codes table (SURVEY §2.I:
-        no faiss binary compat needed — write_index becomes this)."""
-        fsio.write_npy(spark, os.path.join(path, "_centroids.npy"), self.centroids)
-        fsio.write_json(spark, os.path.join(path, "_ivf_meta.json"), {
-                    "metric": self.metric,
-                    "nlist": int(len(self.centroids)),
-                    "d": int(self.centroids.shape[1]),
-                })
-
-    def save(self, path: str) -> "IVFIndex":
-        """write_index for an already-built index (reference
-        faiss/index_io.h:38): persist the in-memory codes table to the
-        partitioned layout + artifacts and re-point at the stored copy."""
-        return _store_codes(self, self.codes, path)
-
-    def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IVFIndex":
-        """write_index into a CLUSTERED BY (list_no) layout — the
-        reference's on-disk invlists (invlists/OnDiskInvertedLists.h:60,
-        the precomputed grouping ``merge_to_ondisk`` materializes for the
-        1T-scale pipeline, benchs/distributed_ondisk/README.md:139).
-
-        The plain partitioned layout groups the FILES by list_no but
-        Spark cannot prove the hash grouping, so every
-        ``search_preassigned`` call re-exchanges the whole codes table
-        into the cogroup. A bucketed table carries
-        ``HashPartitioning(list_no)`` in its scan, the cogroup's
-        ClusteredDistribution is already satisfied, and repeated
-        big-batch searches become scan-only on the corpus side — at
-        100 TB that is the difference between one corpus shuffle per
-        search and zero (the probe side, which is the small side, still
-        exchanges once)."""
-        return _write_bucketed_codes(
-            self, path, ("list_no", "id", "vec"), "ivf_codes_", nbuckets
-        )
-
-    @staticmethod
-    def _bucketed_table(spark: SparkSession, path: str, bm: dict) -> DataFrame:
-        """(Re)attach the bucketed codes table. The FILES are the durable
-        artifact; the default in-memory catalog is session-scoped, so a
-        fresh session recreates the table DDL over the same location."""
-        name = bm["table"]
-        key = bm.get("key", "list_no")  # NSG buckets by shard
-        if not spark.catalog.tableExists(name):
-            spark.sql(
-                f"CREATE TABLE {name} ({bm['ddl']}) USING PARQUET "
-                f"CLUSTERED BY ({key}) INTO {bm['nbuckets']} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-        return spark.table(name)
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFIndex":
-        meta = fsio.read_json(spark, os.path.join(path, "_ivf_meta.json"))
-        return IVFIndex(
-            centroids=fsio.read_npy(spark, os.path.join(path, "_centroids.npy")),
-            metric=meta["metric"],
-            path=path,
-            codes=_attach_codes_table(spark, path),
-        )
-
-    # ----------------------------------------------------------------- search
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """IVF k-NN (reference IndexIVF::search, faiss/IndexIVF.cpp:302).
-
-        Returns (qid, id, dist, rank). nprobe is clamped to nlist
-        (IndexIVF.cpp:315). With nprobe == nlist results are exact.
-
-        The probe plan is computed on the DRIVER (centroids × queries are
-        both small in the intended regime); if the query side exceeds
-        MAX_DRIVER_QUERY_CELLS / d rows, this automatically falls back to
-        the fully-distributed ``search_preassigned`` join plan — the
-        driver never materializes an unbounded query frame."""
-        return _flat_search(self, "IVFIndex.search", queries, k, nprobe, qid_col, qvec_col)
+        return model, lambda m, X: (m.assign_np(X)[0],)
 
 
 class IVFSearchStats:
@@ -452,7 +603,7 @@ def ivf_range_search(
     an IVFSearchStats out-param, straight to the distributed route, which
     fills the same counters)."""
     return _scan_probed_lists(
-        index, queries, _probe_planner(index, nprobe),
+        index, queries, index._planner(nprobe),
         _FlatScanner(index.metric), "ivf_range_search", qid_col, qvec_col,
         radius=float(radius), stats=stats,
         fallback=None if stats is not None else lambda: range_search_preassigned(
@@ -516,12 +667,9 @@ def search_with_parameters(
     populated only after the returned DataFrame is materialized (count /
     collect / write) — the lazy-plan analogue of the reference's
     "stats filled during the call" contract."""
-    # IVFPQR keeps its lists in the base IVFPQ, IVFPQFastScan in ``base``
-    lists = getattr(index, "ivfpq", None) or getattr(index, "base", index)
-    planner = _probe_planner(lists, nprobe, max_codes)
     stats = IVFSearchStats(queries.sparkSession)
     res = _scan_probed_lists(
-        lists, queries, planner, _scanner_for(index, k),
+        index, queries, index._planner(nprobe, max_codes), index._scanner(k),
         "search_with_parameters", qid_col, qvec_col, k=k, stats=stats,
     )
     return res, stats
@@ -534,8 +682,7 @@ def _list_sizes(index) -> np.ndarray:
     cached = getattr(index, "_list_sizes_cache", None)
     if cached is not None and cached[0] is index.codes:
         return cached[1]
-    nlist = getattr(index, "nlist", None) or len(index.centroids)
-    sizes = np.zeros(nlist, np.int64)
+    sizes = np.zeros(index.nlist, np.int64)
     for r in index.codes.groupBy("list_no").count().collect():
         sizes[int(r["list_no"])] = int(r["count"])
     index._list_sizes_cache = (index.codes, sizes)
@@ -602,36 +749,9 @@ class _ProbePlanner:
 def _probe_planner(
     index, nprobe: int, max_codes: int | None = None, router=None
 ) -> _ProbePlanner:
-    """The probe planner of an index's coarse quantizer (``router``
-    overrides it — the factory's graph walk). Every search starts here,
-    so this is also where an index without codes is refused. nprobe is
-    clamped to nlist (IndexIVF.cpp:315)."""
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    if router is None:
-        router = getattr(index, "router", None)
-    sub = getattr(index, "sub_centroids", None)
-    cq = getattr(index, "coarse_q", None)
-    if cq is None:
-        cq = getattr(index, "cq", None)
-    if router is not None:
-        kind, state, nlist, d = "router", router, router.nlist, router.d
-    elif sub is not None:
-        # codes-free grid shell; MIQ2's truncated grid rides via type()
-        state = (
-            type(index)(**index._probe_state())
-            if isinstance(index, IMIIVFIndex)
-            else IMIIVFIndex(sub_centroids=sub)
-        )
-        kind, nlist, d = "grid", state.nlist, 2 * sub.shape[2]
-    elif cq is not None:
-        kind, state, nlist, d = "beam", cq, cq.nlist, cq.codebooks.shape[2]
-    else:
-        C = index.centroids
-        kind, state = "centroids", (C, getattr(index, "metric", "l2"))
-        nlist, d = len(C), C.shape[1]
-    sizes = _list_sizes(index) if max_codes is not None else None
-    return _ProbePlanner(kind, state, min(nprobe, nlist), d, sizes, max_codes)
+    """``index._planner``: the entry point for callers that override the
+    coarse quantizer with a ``router`` (the factory's graph walk)."""
+    return index._planner(nprobe, max_codes, router)
 
 
 def _probe_pairs(order) -> tuple[np.ndarray, np.ndarray]:
@@ -658,8 +778,8 @@ _POP8 = (
 class _ListScanner:
     """One codec's InvertedListScanner (reference faiss/IndexIVF.h
     InvertedListScanner; SURVEY §3.2 search_preassigned): built on the
-    driver from index state, broadcast once per search, and driven by
-    both routes through ``_scan_lists``.
+    driver from index state by the family's ``_scanner`` hook, broadcast
+    once per search, and driven by both routes through ``_scan_lists``.
 
       code_cols          payload columns read from the codes table
       block(cols)        those Arrow columns → tuple of numpy blocks
@@ -936,33 +1056,6 @@ class _PQRScanner(_ListScanner):
         return push
 
 
-def _scanner_for(index, k: int) -> _ListScanner:
-    """The list scanner of an index's codec (search_with_parameters)."""
-    from faiss_spark.operators.fastscan import (
-        IVFAQFastScanIndex,
-        IVFPQFastScanIndex,
-        _AQ4Scanner,
-        _PQ4Scanner,
-    )
-
-    if isinstance(index, IVFPQFastScanIndex):
-        return _PQ4Scanner(index)
-    if isinstance(index, IVFAQFastScanIndex):
-        return _AQ4Scanner(index)
-    if isinstance(index, IVFSpectralHash):
-        return _SHScanner(index)
-    if getattr(index, "refine_pq", None) is not None:
-        return _PQRScanner(index, k)
-    index = getattr(index, "ivfpq", index)
-    if isinstance(index, (IVFPQIndex, IMIPQIndex)):
-        return _PQScanner(index)
-    if isinstance(index, IVFSQIndex):
-        return _SQScanner(index)
-    if isinstance(index, IVFAQIndex):
-        return _AQScanner(index)
-    return _FlatScanner(index.metric)
-
-
 def _scan_lists(scanner, groups, Q, l2q, k, radius, accs, l2t=None):
     """The one list-scan loop both routes run over ``(list_no, blocks,
     ids)`` groups: bind the scanner the first time a list appears (query
@@ -1097,24 +1190,8 @@ def _scan_probed_lists(
     return cands if radius is not None else _window_topk(cands, k, scanner.largest)
 
 
-def _flat_search(index, op, queries, k, nprobe, qid_col, qvec_col) -> DataFrame:
-    """Driver-route k-NN over raw-vector lists, shared by every flat IVF
-    family (k-means, RCQ beam, nested router, IMI/MIQ2 grid). Past the
-    driver bound it falls back to the public ``search_preassigned`` twin
-    (looked up at call time), whose planner runs the SAME coarse
-    assignment executor-side."""
-    return _scan_probed_lists(
-        index, queries, _probe_planner(index, nprobe),
-        _FlatScanner(index.metric), op, qid_col, qvec_col, k=k,
-        fallback=lambda: search_preassigned(
-            index, queries, k, nprobe=nprobe,
-            qid_col=qid_col, qvec_col=qvec_col,
-        ),
-    )
-
-
 @dataclass
-class IVFRCQIndex:
+class IVFRCQIndex(_IVFIndexBase):
     """IVF whose coarse quantizer is an additive quantizer (reference
     ResidualCoarseQuantizer / LocalSearchCoarseQuantizer,
     faiss/IndexAdditiveQuantizer.h:161,193 — the `IVF65536(RQ…)` factory
@@ -1137,6 +1214,7 @@ class IVFRCQIndex:
     metric: str = "l2"
     path: str | None = None
     codes: DataFrame | None = None
+    _payload = "vec array<float>"
 
     @staticmethod
     def train(
@@ -1159,74 +1237,16 @@ class IVFRCQIndex:
         )
         return IVFRCQIndex(cq=est.fit(vectors, vec_col=vec_col))
 
-    @property
-    def nlist(self) -> int:
-        return self.cq.nlist
+    def _encoder(self):
+        # beam-search assignment, map-only; empty virtual cells simply
+        # have no partition directory — exactly how faiss's RCQ IVF
+        # leaves most of its 2^16 invlists empty
+        return self.cq, lambda cq, X: (cq.assign_np(X),)
 
-    def add(
-        self,
-        vectors: DataFrame,
-        id_col: str = "id",
-        vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFRCQIndex":
-        """Beam-search assignment (distributed, no shuffle) + the same
-        list_no-partitioned layout as IVFIndex.add. Empty virtual cells
-        simply have no partition directory — exactly how faiss's RCQ IVF
-        leaves most of its 2^16 invlists empty."""
-        assigned = self.cq.assign(vectors, vec_col=vec_col, id_col=id_col).select(
-            "id", F.col("cluster").alias("list_no")
-        )
-        codes = (
-            vectors.select(
-                F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-            )
-            .join(assigned, "id")
-            .select("list_no", "id", "vec")
-        )
-        return _store_codes(self, codes, path)
-
-    def _save_artifact(self, spark, path: str) -> None:
-        fsio.write_npy(spark, os.path.join(path, "_rcq_codebooks.npy"), self.cq.codebooks)
-        fsio.write_json(spark, os.path.join(path, "_rcq_meta.json"), {
-                    "metric": self.metric,
-                    "beam_factor": self.cq.beam_factor,
-                    "nlist": self.nlist,
-                })
-
-    def save(self, path: str) -> "IVFRCQIndex":
-        """write_index for an already-built RCQ-coarse index."""
-        return _store_codes(self, self.codes, path)
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFRCQIndex":
-        from faiss_spark.operators.codecs import ResidualCoarseQuantizerModel
-
-        meta = fsio.read_json(spark, os.path.join(path, "_rcq_meta.json"))
-        return IVFRCQIndex(
-            cq=ResidualCoarseQuantizerModel(
-                codebooks=fsio.read_npy(spark, os.path.join(path, "_rcq_codebooks.npy")),
-                beam_factor=meta["beam_factor"],
-            ),
-            metric=meta["metric"],
-            path=path,
-            codes=spark.read.parquet(path),
-        )
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Stage A = ResidualCoarseQuantizer::search (beam of
-        beam_factor·nprobe, keep the nprobe best cells per query);
-        stages B+C shared with IVFIndex. A query side past the driver
-        bound auto-falls-back to the distributed cogroup twin with the
-        SAME beam assignment running executor-side."""
-        return _flat_search(self, "IVFRCQIndex.search", queries, k, nprobe, qid_col, qvec_col)
+    def _planner_state(self) -> tuple:
+        # stage A = ResidualCoarseQuantizer::search (beam of
+        # beam_factor·nprobe, keep the nprobe best cells per query)
+        return _beam_state(self.cq)
 
 
 @dataclass
@@ -1385,33 +1405,6 @@ class NestedCoarseRouter:
             d = ((Q[qi][None, :] - self.centroids[cc]) ** 2).sum(1)
             out[qi] = cc[np.argsort(d, kind="stable")[:nprobe]]
         return out
-
-    _ARRAY_FIELDS = (
-        "centroids", "pq_books", "cent_codes", "inner_centroids",
-        "cent_cell", "lsh_proj", "lsh_thr", "cent_bits",
-    )
-
-    def state(self) -> tuple[dict, dict]:
-        """(arrays, meta) for write_index — npy/json artifacts only."""
-        arrays = {
-            f: getattr(self, f)
-            for f in self._ARRAY_FIELDS
-            if getattr(self, f) is not None
-        }
-        meta = {
-            "router": "enum",
-            "kind": self.kind,
-            "nlist": self.nlist,
-            "d": self.d,
-            "arrays": sorted(arrays),
-        }
-        return arrays, meta
-
-    @staticmethod
-    def from_state(meta: dict, arrays: dict) -> "NestedCoarseRouter":
-        return NestedCoarseRouter(
-            kind=meta["kind"], nlist=meta["nlist"], d=meta["d"], **arrays
-        )
 
 
 @dataclass
@@ -1649,61 +1642,9 @@ class CompositeCoarseRouter:
                 out[qi] = cand[order[:nprobe]]
         return out
 
-    _ARRAY_FIELDS = (
-        "inner_centroids", "cent_cell", "centroids", "sq_codes",
-        "pq_books", "pq_codes", "lsh_proj", "lsh_thr", "cent_bits",
-        "ref_sq_codes", "ref_pq_books", "ref_pq_codes",
-    )
-
-    def state(self) -> tuple[dict, dict]:
-        """(arrays, meta) for write_index — npy/json artifacts only,
-        like every other family (no pickles)."""
-        arrays = {
-            f: getattr(self, f)
-            for f in self._ARRAY_FIELDS
-            if getattr(self, f) is not None
-        }
-        meta = {
-            "router": "composite",
-            "nlist": self.nlist,
-            "d": self.d,
-            "k_factor": self.k_factor,
-            "codec_kind": self.codec_kind,
-            "refine_kind": self.refine_kind,
-        }
-        for name, m in (("sq", self.sq_model), ("ref_sq", self.ref_sq_model)):
-            if m is not None:
-                arrays[f"{name}_vmin"] = np.asarray(m.vmin)
-                arrays[f"{name}_vdiff"] = np.asarray(m.vdiff)
-                meta[f"{name}_bits"] = int(m.bits)
-        meta["arrays"] = sorted(arrays)
-        return arrays, meta
-
-    @staticmethod
-    def from_state(meta: dict, arrays: dict) -> "CompositeCoarseRouter":
-        from faiss_spark.operators.codecs import ScalarQuantizerModel
-
-        kw = {
-            f: arrays[f]
-            for f in CompositeCoarseRouter._ARRAY_FIELDS
-            if f in arrays
-        }
-        for name, field in (("sq", "sq_model"), ("ref_sq", "ref_sq_model")):
-            if f"{name}_bits" in meta:
-                kw[field] = ScalarQuantizerModel(
-                    vmin=arrays[f"{name}_vmin"],
-                    vdiff=arrays[f"{name}_vdiff"],
-                    bits=meta[f"{name}_bits"],
-                )
-        return CompositeCoarseRouter(
-            nlist=meta["nlist"], d=meta["d"], k_factor=meta["k_factor"],
-            codec_kind=meta["codec_kind"], refine_kind=meta["refine_kind"],
-            **kw,
-        )
-
 
 @dataclass
-class IVFNestedIndex:
+class IVFNestedIndex(_IVFIndexBase):
     """IVF whose coarse quantizer is an arbitrary parenthesized
     sub-index (reference index_factory.cpp:241-289 — the generic
     `IVF<n>(<any sub-index>)` grammar the RCQ/LSQ special case belongs
@@ -1721,6 +1662,7 @@ class IVFNestedIndex:
     metric: str = "l2"
     codes: DataFrame | None = None
     path: str | None = None
+    _payload = "vec array<float>"
 
     @staticmethod
     def train(
@@ -1744,106 +1686,24 @@ class IVFNestedIndex:
         return IVFNestedIndex(router=router)
 
     @property
-    def nlist(self) -> int:
-        return self.router.nlist
-
-    @property
     def centroids(self) -> np.ndarray | None:
         """Raw coarse table; None for the PQ-routed variant (the router
         keeps only the compressed form — see NestedCoarseRouter)."""
         return self.router.centroids
 
-    def add(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> "IVFNestedIndex":
-        """Sub-index top-1 assignment, map-only (broadcast router, Arrow
-        zero-copy in, original vec column passed through)."""
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(self.router)
+    def _encoder(self):
+        # sub-index top-1 assignment, map-only (broadcast router)
+        return self.router, lambda r, X: (r.assign_np(X, 1)[:, 0],)
 
-        def do(batches):
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_id_vec_blocks
-
-            r = bc.value
-            f32_list = pa.list_(pa.float32())
-            for ids, X, vec_arr in arrow_id_vec_blocks(batches):
-                lists = r.assign_np(X, 1)[:, 0]
-                if vec_arr.type != f32_list:
-                    vec_arr = vec_arr.cast(f32_list)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(lists.astype(np.int32), pa.int32()),
-                        pa.array(ids, pa.int64()),
-                        vec_arr,
-                    ],
-                    names=["list_no", "id", "vec"],
-                )
-
-        src = vectors.select(
-            F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-        )
-        self.codes = src.mapInArrow(
-            do, schema="list_no int, id bigint, vec array<float>"
-        )
-        return self
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Stage A = sub-index ranking; stages B+C shared with IVFIndex.
-        A query side past the driver bound auto-falls-back to the
-        distributed cogroup twin with the SAME router assignment
-        running executor-side (the router state broadcasts whole — it
-        is the compressed form the grammar exists for)."""
-        return _flat_search(self, "IVFNestedIndex.search", queries, k, nprobe, qid_col, qvec_col)
-
-    def save(self, path: str) -> "IVFNestedIndex":
-        """write_index: partitioned codes + the router's npy/json state
-        (both router kinds — the enum NestedCoarseRouter and the
-        recursive CompositeCoarseRouter serialize the same way)."""
-        return _store_codes(self, self.codes, path)
-
-    def _save_artifact(self, spark, path: str) -> None:
-        arrays, meta = self.router.state()
-        for name, arr in arrays.items():
-            fsio.write_npy(
-                spark, os.path.join(path, f"_nested_{name}.npy"),
-                np.asarray(arr),
-            )
-        meta["metric"] = self.metric
-        fsio.write_json(spark, os.path.join(path, "_nested_meta.json"), meta)
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFNestedIndex":
-        meta = fsio.read_json(spark, os.path.join(path, "_nested_meta.json"))
-        arrays = {
-            name: fsio.read_npy(
-                spark, os.path.join(path, f"_nested_{name}.npy")
-            )
-            for name in meta["arrays"]
-        }
-        cls = (
-            CompositeCoarseRouter
-            if meta["router"] == "composite"
-            else NestedCoarseRouter
-        )
-        return IVFNestedIndex(
-            router=cls.from_state(meta, arrays),
-            metric=meta["metric"],
-            codes=spark.read.parquet(path),
-            path=path,
-        )
+    def _planner_state(self) -> tuple:
+        # stage A = the sub-index ranking; the router state broadcasts
+        # whole — it is the compressed form the grammar exists for
+        r = self.router
+        return "router", r, r.nlist, r.d
 
 
 @dataclass
-class IVFPQIndex:
+class IVFPQIndex(_IVFIndexBase):
     """IVF + PQ-on-residuals — the reference's flagship composite
     (IndexIVFPQ, faiss/IndexIVFPQ.h:34-49; search lifecycle SURVEY §3.2).
 
@@ -1862,6 +1722,7 @@ class IVFPQIndex:
     pq: ProductQuantizerModel
     codes: DataFrame | None = None
     path: str | None = None
+    _twin = "pq_search_preassigned"
 
     @staticmethod
     def train(
@@ -1904,25 +1765,9 @@ class IVFPQIndex:
             )
         return IVFPQIndex(centroids=C, pq=ProductQuantizerModel(codebooks=books))
 
-    def add(
-        self,
-        vectors: DataFrame,
-        id_col: str = "id",
-        vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFPQIndex":
-        """Encode: assign list, PQ-encode the residual, write partitioned
-        (reference IndexIVFPQ::encode_vectors)."""
-        return _store_codes(
-            self, self._encode_df(vectors, id_col=id_col, vec_col=vec_col), path
-        )
-
-    def _encode_df(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> DataFrame:
-        """Frozen-artifact encode to (list_no, id, code) rows — map-only
-        (Arrow-native input: zero-copy GEMM tiles, no per-row objects),
-        shared by add() and the streaming incremental writer."""
+    def _encoder(self):
+        """Assign list, PQ-encode the residual (reference
+        IndexIVFPQ::encode_vectors)."""
 
         def encode(state, X):
             C, pq = state
@@ -1930,44 +1775,10 @@ class IVFPQIndex:
             lists = d2.argmin(1)
             return lists, pq.encode_np(X - C[lists])
 
-        return _encode_lists(
-            vectors, id_col, vec_col, (self.centroids, self.pq), encode
-        )
+        return (self.centroids, self.pq), encode
 
-    def _save_artifact(self, spark, path: str) -> None:
-        fsio.write_npy(spark, os.path.join(path, "_ivfpq_centroids.npy"), self.centroids)
-        fsio.write_npy(spark, os.path.join(path, "_ivfpq_codebooks.npy"), self.pq.codebooks)
-        fsio.write_json(spark, os.path.join(path, "_ivfpq_meta.json"), {
-                    "nlist": int(len(self.centroids)),
-                    "d": int(self.centroids.shape[1]),
-                    "M": int(self.pq.M),
-                    "ksub": int(self.pq.ksub),
-                })
-
-    def save(self, path: str) -> "IVFPQIndex":
-        """write_index (reference faiss/index_io.h:38): partitioned codes
-        table + centroid/codebook artifacts — the train-once /
-        search-many deployment shape."""
-        return _store_codes(self, self.codes, path)
-
-    def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IVFPQIndex":
-        """write_index into the CLUSTERED BY (list_no) layout (see
-        IVFIndex.save_bucketed) — repeated ``pq_search_preassigned``
-        cogroups become scan-only on the codes side."""
-        return _write_bucketed_codes(
-            self, path, ("list_no", "id", "code"), "ivfpq_codes_", nbuckets
-        )
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFPQIndex":
-        return IVFPQIndex(
-            centroids=fsio.read_npy(spark, os.path.join(path, "_ivfpq_centroids.npy")),
-            pq=ProductQuantizerModel(
-                codebooks=fsio.read_npy(spark, os.path.join(path, "_ivfpq_codebooks.npy"))
-            ),
-            codes=_attach_codes_table(spark, path),
-            path=path,
-        )
+    def _scanner(self, k: int, polysemous_ht: int | None = None, **kw):
+        return _PQScanner(self, polysemous_ht)
 
     def search(
         self,
@@ -1991,19 +1802,12 @@ class IVFPQIndex:
         reference's IndexIVFPQ.cpp, so ht = M·8 can drop an all-bits-flipped
         candidate);
         tighter ht trades recall for scan-cost at 100 TB."""
-        return _scan_probed_lists(
-            self, queries, _probe_planner(self, nprobe),
-            _PQScanner(self, polysemous_ht), "IVFPQIndex.search",
-            qid_col, qvec_col, k=k,
-            fallback=lambda: pq_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-                polysemous_ht=polysemous_ht,
-            ),
+        return self._search(
+            queries, k, nprobe, qid_col, qvec_col, polysemous_ht=polysemous_ht
         )
 
 
-def _preassigned_subshards(index: IVFIndex, max_cell_rows: int | None) -> dict:
+def _preassigned_subshards(index, max_cell_rows: int | None) -> dict:
     """Hot-cell detection for the cogroup search: {list_no: nsub} for
     every cell above ``max_cell_rows``. The cogroup hands a whole cell
     to ONE task (AQE cannot split a pandas group), so a pathological
@@ -2092,7 +1896,7 @@ def search_preassigned(
     closure); it must select exactly the cells the driver path probes.
     """
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe),
+        index, queries, index._planner(nprobe),
         _FlatScanner(index.metric), qid_col, qvec_col, max_cell_rows, k=k,
         assign=None if assign_fn is None else (assign_payload, assign_fn),
     )
@@ -2129,7 +1933,7 @@ def range_search_preassigned(
     (every cell scanned), which is how the oracle pins it.
     """
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe),
+        index, queries, index._planner(nprobe),
         _FlatScanner(index.metric), qid_col, qvec_col, max_cell_rows,
         radius=float(radius),
     )
@@ -2385,29 +2189,8 @@ def cogrouped_cell_scan(
     return cands
 
 
-class _CoarseQuantized:
-    """nlist and d of the IVF families whose coarse quantizer is either
-    k-means ``centroids`` or a fitted additive ``coarse_q`` (SQ, AQ)."""
-
-    @property
-    def nlist(self) -> int:
-        return (
-            self.coarse_q.nlist
-            if self.coarse_q is not None
-            else len(self.centroids)
-        )
-
-    @property
-    def d(self) -> int:
-        return (
-            self.coarse_q.codebooks.shape[2]
-            if self.coarse_q is not None
-            else self.centroids.shape[1]
-        )
-
-
 @dataclass
-class IVFSQIndex(_CoarseQuantized):
+class IVFSQIndex(_IVFIndexBase):
     """IVF + per-component scalar-quantized codes (reference
     IndexIVFScalarQuantizer, faiss/IndexScalarQuantizer.h:64): the codes
     table stores SQ bytes instead of raw floats — 4× smaller scan at
@@ -2429,6 +2212,7 @@ class IVFSQIndex(_CoarseQuantized):
     codes: DataFrame | None = None
     path: str | None = None
     coarse_q: object | None = None  # ResidualCoarseQuantizerModel
+    _twin = "sq_search_preassigned"
 
     @staticmethod
     def train(
@@ -2472,24 +2256,10 @@ class IVFSQIndex(_CoarseQuantized):
             centroids=km_centroids, sq=sq, metric=metric, coarse_q=coarse_q
         )
 
-    def add(
-        self,
-        vectors: DataFrame,
-        id_col: str = "id",
-        vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFSQIndex":
-        return _store_codes(
-            self, self._encode_df(vectors, id_col=id_col, vec_col=vec_col), path
-        )
-
-    def _encode_df(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> DataFrame:
-        """Frozen-artifact encode to (list_no, id, code) rows — map-only,
-        shared by add() and the streaming incremental writer. With an
-        additive coarse, assignment is the beam over the broadcast
-        codebooks (same map-only shape, no nlist·d artifact)."""
+    def _encoder(self):
+        """SQ bytes of the raw vector; with an additive coarse,
+        assignment is the beam over the broadcast codebooks (same
+        map-only shape, no nlist·d artifact)."""
         from faiss_spark.operators.codecs import ScalarQuantizerModel
 
         def encode(state, X):
@@ -2501,108 +2271,17 @@ class IVFSQIndex(_CoarseQuantized):
             self.centroids, self.coarse_q, self.sq.vmin, self.sq.vdiff,
             self.sq.bits, self.metric,
         )
-        return _encode_lists(vectors, id_col, vec_col, state, encode)
+        return state, encode
 
-    def _save_artifact(self, spark, path: str) -> None:
-        meta = {
-            "metric": self.metric,
-            "bits": int(self.sq.bits),
-            "variant": self.sq.variant,
-        }
-        if self.coarse_q is not None:
-            fsio.write_npy(
-                spark,
-                os.path.join(path, "_ivfsq_rcq_codebooks.npy"),
-                self.coarse_q.codebooks,
-            )
-            meta["coarse"] = {
-                "beam_factor": self.coarse_q.beam_factor,
-                "nbits_list": (
-                    list(self.coarse_q.nbits_list)
-                    if self.coarse_q.nbits_list is not None
-                    else None
-                ),
-            }
-        else:
-            fsio.write_npy(
-                spark, os.path.join(path, "_ivfsq_centroids.npy"), self.centroids
-            )
-        fsio.write_npy(spark, os.path.join(path, "_ivfsq_vmin.npy"), self.sq.vmin)
-        fsio.write_npy(spark, os.path.join(path, "_ivfsq_vdiff.npy"), self.sq.vdiff)
-        fsio.write_json(spark, os.path.join(path, "_ivfsq_meta.json"), meta)
+    def _planner_state(self) -> tuple:
+        if self.coarse_q is None:
+            return super()._planner_state()
+        return _beam_state(self.coarse_q)
 
-    def save(self, path: str) -> "IVFSQIndex":
-        """write_index: partitioned SQ codes + centroid/range artifacts."""
-        return _store_codes(self, self.codes, path)
-
-    def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IVFSQIndex":
-        """write_index into the CLUSTERED BY (list_no) layout (see
-        IVFIndex.save_bucketed) — repeated ``sq_search_preassigned``
-        cogroups become scan-only on the codes side."""
-        return _write_bucketed_codes(
-            self, path, ("list_no", "id", "code"), "ivfsq_codes_", nbuckets
-        )
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFSQIndex":
-        from faiss_spark.operators.codecs import ScalarQuantizerModel
-
-        meta = fsio.read_json(spark, os.path.join(path, "_ivfsq_meta.json"))
-        coarse_q = None
-        centroids = None
-        if meta.get("coarse"):
-            from faiss_spark.operators.codecs import ResidualCoarseQuantizerModel
-
-            cm = meta["coarse"]
-            coarse_q = ResidualCoarseQuantizerModel(
-                codebooks=fsio.read_npy(
-                    spark, os.path.join(path, "_ivfsq_rcq_codebooks.npy")
-                ),
-                beam_factor=cm["beam_factor"],
-                nbits_list=(
-                    tuple(cm["nbits_list"]) if cm["nbits_list"] else None
-                ),
-            )
-        else:
-            centroids = fsio.read_npy(
-                spark, os.path.join(path, "_ivfsq_centroids.npy")
-            )
-        return IVFSQIndex(
-            centroids=centroids,
-            coarse_q=coarse_q,
-            sq=ScalarQuantizerModel(
-                vmin=fsio.read_npy(spark, os.path.join(path, "_ivfsq_vmin.npy")),
-                vdiff=fsio.read_npy(spark, os.path.join(path, "_ivfsq_vdiff.npy")),
-                bits=meta["bits"],
-                variant=meta["variant"],
-            ),
-            metric=meta["metric"],
-            codes=_attach_codes_table(spark, path),
-            path=path,
-        )
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Same plan as IVFIndex.search; the scan decodes SQ bytes to a
-        float block before the GEMM (asymmetric: queries stay exact).
-        Probe selection under an additive coarse is the RCQ beam
-        (reference ResidualCoarseQuantizer::search). A query side past
-        the driver bound auto-falls-back to the fully-distributed
-        ``sq_search_preassigned`` cogroup over the coded lists."""
-        return _scan_probed_lists(
-            self, queries, _probe_planner(self, nprobe), _SQScanner(self),
-            "IVFSQIndex.search", qid_col, qvec_col, k=k,
-            fallback=lambda: sq_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            ),
-        )
+    def _scanner(self, k: int, **kw):
+        # the scan decodes SQ bytes to a float block before the GEMM
+        # (asymmetric: queries stay exact)
+        return _SQScanner(self)
 
 
 def sq_search_preassigned(
@@ -2629,7 +2308,7 @@ def sq_search_preassigned(
     for an additive coarse (the fitted coarse model broadcasts whole:
     it is the same numpy state a driver-planned search holds)."""
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe), _SQScanner(index),
+        index, queries, index._planner(nprobe), _SQScanner(index),
         qid_col, qvec_col, max_cell_rows, k=k,
     )
 
@@ -2686,7 +2365,7 @@ def pq_search_preassigned(
     (ragged probe sets) and the in-scan ``polysemous_ht`` Hamming
     pre-filter."""
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe, max_codes),
+        index, queries, index._planner(nprobe, max_codes),
         _PQScanner(index, polysemous_ht), qid_col, qvec_col, max_cell_rows,
         k=k,
     )
@@ -2712,7 +2391,7 @@ def aq_search_preassigned(
     matches IVFAQIndex.search — metric argsort, or the RCQ/LSQ beam
     under an additive coarse."""
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe), _AQScanner(index),
+        index, queries, index._planner(nprobe), _AQScanner(index),
         qid_col, qvec_col, max_cell_rows, k=k,
     )
 
@@ -2740,8 +2419,8 @@ def pqr_search_preassigned(
             "pqr_search_preassigned needs a refine PQ; train with M_refine"
         )
     return _preassigned_cogrouped(
-        index.ivfpq, queries, _probe_planner(index.ivfpq, nprobe),
-        _PQRScanner(index, k), qid_col, qvec_col, max_cell_rows, k=k,
+        index, queries, index._planner(nprobe), _PQRScanner(index, k),
+        qid_col, qvec_col, max_cell_rows, k=k,
     )
 
 
@@ -2816,7 +2495,7 @@ def imi_assign(
 
 
 @dataclass
-class IMIIVFIndex:
+class IMIIVFIndex(_IVFIndexBase):
     """IVFFlat with a MultiIndexQuantizer coarse — the factory "IMI2x<b>"
     form (reference faiss/index_factory.cpp:241-289 parse path,
     faiss/IndexPQ.h:139 MultiIndexQuantizer): nlist = 2^(2b) cells from
@@ -2829,14 +2508,11 @@ class IMIIVFIndex:
     sub_centroids: np.ndarray  # (2, ksub, d/2)
     metric: str = "l2"
     codes: DataFrame | None = None
+    _payload = "vec array<float>"
 
     @property
     def ksub(self) -> int:
         return self.sub_centroids.shape[1]
-
-    @property
-    def nlist(self) -> int:
-        return self.ksub * self.ksub
 
     # duck-typed alias so helpers that read len(index.centroids) see the
     # virtual cell count
@@ -2855,47 +2531,15 @@ class IMIIVFIndex:
         sub = train_imi(vectors, 1 << nbits, vec_col=vec_col, seed=seed, niter=niter)
         return IMIIVFIndex(sub_centroids=sub)
 
-    def add(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec",
-        path: str | None = None,
-    ):
-        codes = imi_assign(
-            vectors, self.sub_centroids, id_col=id_col, vec_col=vec_col,
-            keep_vec=True,
-        ).select("list_no", "id", "vec")
-        if path is not None:
-            codes.repartition("list_no").write.mode("overwrite").partitionBy(
-                "list_no"
-            ).parquet(path)
-            spark = vectors.sparkSession
-            fsio.write_npy(spark, os.path.join(path, "_imi_sub_centroids.npy"), self.sub_centroids)
-            fsio.write_json(spark, os.path.join(path, "_imi_meta.json"), {"metric": self.metric, "ksub": int(self.ksub)})
-            self.codes = spark.read.parquet(path)
-        else:
-            self.codes = codes
-        return self
+    def _encoder(self):
+        # separable argmin over the product grid (imi_assign's arithmetic)
+        return self.sub_centroids, lambda sub, X: (_imi_cells(X, sub),)
 
-    def save(self, path: str) -> "IMIIVFIndex":
-        """write_index for an already-built IMI index."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        self.codes.repartition("list_no").write.mode("overwrite").partitionBy(
-            "list_no"
-        ).parquet(path)
-        fsio.write_npy(spark, os.path.join(path, "_imi_sub_centroids.npy"), self.sub_centroids)
-        fsio.write_json(spark, os.path.join(path, "_imi_meta.json"), {"metric": self.metric, "ksub": int(self.ksub)})
-        self.codes = spark.read.parquet(path)
-        return self
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IMIIVFIndex":
-        meta = fsio.read_json(spark, os.path.join(path, "_imi_meta.json"))
-        return IMIIVFIndex(
-            sub_centroids=fsio.read_npy(spark, os.path.join(path, "_imi_sub_centroids.npy")),
-            metric=meta["metric"],
-            codes=spark.read.parquet(path),
-        )
+    def _planner_state(self) -> tuple:
+        # the grid probe runs on a codes-free shell (MIQ2's truncated grid
+        # rides along as its type)
+        sub = self.sub_centroids
+        return "grid", self._shell(), sub.shape[1] ** 2, 2 * sub.shape[2]
 
     def _probe(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
         """Top-nprobe cells per query by product distance (reference
@@ -2911,21 +2555,6 @@ class IMIIVFIndex:
             (part, np.take_along_axis(flat, part, axis=1)), axis=1
         )
         return np.take_along_axis(part, order, axis=1)
-
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 1,
-        qid_col: str = "qid", qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Product-distance probing + flat scan; a query side past the
-        driver bound auto-falls-back to the distributed cogroup twin
-        with the SAME `_probe` grid (or MIQ2 truncated grid — the
-        subclass override rides along in the planner) executor-side."""
-        return _flat_search(self, "IMIIVFIndex.search", queries, k, nprobe, qid_col, qvec_col)
-
-    def _probe_state(self) -> dict:
-        """Constructor kwargs that reproduce this coarse quantizer's
-        `_probe` on an executor (no codes DataFrame — just the arrays)."""
-        return {"sub_centroids": self.sub_centroids}
 
 
 @dataclass
@@ -2946,12 +2575,6 @@ class MIQ2IVFIndex(IMIIVFIndex):
     MultiIndexQuantizer2(d, nbits, assign_index_0, assign_index_1)."""
 
     assign_k2: int | None = None
-
-    def _probe_state(self) -> dict:
-        return {
-            "sub_centroids": self.sub_centroids,
-            "assign_k2": self.assign_k2,
-        }
 
     @staticmethod
     def train(
@@ -2999,7 +2622,7 @@ class MIQ2IVFIndex(IMIIVFIndex):
 
 
 @dataclass
-class IMIPQIndex:
+class IMIPQIndex(_IVFIndexBase):
     """IMI coarse + PQ-on-residual codes — the reference's classic
     billion-scale composite (factory "IMI2x<b>,PQ<M>", IndexIVFPQ over a
     MultiIndexQuantizer: index_factory.cpp:466; the SIFT1B/Deep1B
@@ -3021,14 +2644,11 @@ class IMIPQIndex:
     pq: ProductQuantizerModel
     codes: DataFrame | None = None
     path: str | None = None
+    _twin = "pq_search_preassigned"
 
     @property
     def ksub(self) -> int:
         return self.sub_centroids.shape[1]
-
-    @property
-    def nlist(self) -> int:
-        return self.ksub * self.ksub
 
     @staticmethod
     def train(
@@ -3061,65 +2681,24 @@ class IMIPQIndex:
         idx.pq = ProductQuantizerModel(codebooks=books)
         return idx
 
-    def _encode_df(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> DataFrame:
-        """Map-only (list_no, id, code) encode — separable IMI assign +
-        PQ residual code in one Arrow-native pass (shared by add and
-        streaming)."""
+    def _encoder(self):
+        """Separable IMI assign + PQ residual code in one Arrow-native
+        pass."""
 
         def encode(state, X):
             sub, pq = state
             cells = _imi_cells(X, sub)
             return cells, pq.encode_np(X - _imi_centroids(sub, cells))
 
-        return _encode_lists(
-            vectors, id_col, vec_col, (self.sub_centroids, self.pq), encode
-        )
+        return (self.sub_centroids, self.pq), encode
 
-    def add(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IMIPQIndex":
-        return _store_codes(
-            self, self._encode_df(vectors, id_col=id_col, vec_col=vec_col), path
-        )
+    def _planner_state(self) -> tuple:
+        sub = self.sub_centroids
+        shell = IMIIVFIndex(sub_centroids=sub)
+        return "grid", shell, sub.shape[1] ** 2, 2 * sub.shape[2]
 
-    def _save_artifact(self, spark, path: str) -> None:
-        fsio.write_npy(
-            spark, os.path.join(path, "_imipq_sub_centroids.npy"), self.sub_centroids
-        )
-        fsio.write_npy(
-            spark, os.path.join(path, "_imipq_codebooks.npy"), self.pq.codebooks
-        )
-        fsio.write_json(
-            spark, os.path.join(path, "_imipq_meta.json"),
-            {"ksub": int(self.ksub), "M": int(self.pq.M)},
-        )
-
-    def save(self, path: str) -> "IMIPQIndex":
-        return _store_codes(self, self.codes, path)
-
-    def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IMIPQIndex":
-        """write_index into the CLUSTERED BY (list_no) layout (see
-        IVFIndex.save_bucketed) — repeated ``pq_search_preassigned``
-        cogroups become scan-only on the codes side."""
-        return _write_bucketed_codes(
-            self, path, ("list_no", "id", "code"), "imipq_codes_", nbuckets
-        )
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IMIPQIndex":
-        return IMIPQIndex(
-            sub_centroids=fsio.read_npy(
-                spark, os.path.join(path, "_imipq_sub_centroids.npy")
-            ),
-            pq=ProductQuantizerModel(
-                codebooks=fsio.read_npy(spark, os.path.join(path, "_imipq_codebooks.npy"))
-            ),
-            codes=_attach_codes_table(spark, path),
-            path=path,
-        )
+    def _scanner(self, k: int, polysemous_ht: int | None = None, **kw):
+        return _PQScanner(self, polysemous_ht)
 
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 1,
@@ -3136,15 +2715,9 @@ class IMIPQIndex:
         nearest-first once cumulative list sizes reach the budget,
         crossing list included — planned from cached per-list counts, so
         the pruned scan never reads the skipped partitions)."""
-        return _scan_probed_lists(
-            self, queries, _probe_planner(self, nprobe, max_codes),
-            _PQScanner(self, polysemous_ht), "IMIPQIndex.search",
-            qid_col, qvec_col, k=k,
-            fallback=lambda: pq_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-                polysemous_ht=polysemous_ht, max_codes=max_codes,
-            ),
+        return self._search(
+            queries, k, nprobe, qid_col, qvec_col, max_codes=max_codes,
+            polysemous_ht=polysemous_ht,
         )
 
 
@@ -3173,7 +2746,7 @@ def train_imi(
 
 
 @dataclass
-class IVFPQRIndex:
+class IVFPQRIndex(_IVFIndexBase):
     """IVFPQ + re-rank — the IVFPQR pattern (reference
     faiss/IndexIVFPQR.h:19: a second refinement stage re-ranks k·k_factor
     ADC candidates). Two rerank modes:
@@ -3204,6 +2777,15 @@ class IVFPQRIndex:
     vectors: DataFrame | None = None
     k_factor: int = 4
     refine_pq: ProductQuantizerModel | None = None
+    # the lists live in the base IVFPQ (its search reads only ``code``);
+    # the raw-vector table is deliberately NOT persisted — a reloaded
+    # index is codes-only and searches in the reference's own
+    # rerank='pqr_codes' mode (the 100 TB shape); re-attach ``vectors``
+    # after load to recover the exact raw rerank
+    codes = _forwarded("codes", "ivfpq")
+    path = _forwarded("path", "ivfpq")
+    _twin = "pqr_search_preassigned"
+    __persist_skip__ = _IVFIndexBase.__persist_skip__ + ("vectors",)
 
     @staticmethod
     def train(
@@ -3221,8 +2803,9 @@ class IVFPQRIndex:
             vec_col=vec_col, **kw,
         )
         if M_refine is None:
-            base.add(vectors, id_col=id_col, vec_col=vec_col)
-            return IVFPQRIndex(ivfpq=base, vectors=vectors, k_factor=k_factor)
+            return IVFPQRIndex(ivfpq=base, vectors=vectors, k_factor=k_factor).add(
+                vectors, id_col=id_col, vec_col=vec_col
+            )
 
         from faiss_spark.operators.codecs import _kmeans_np, _sampled_matrix
 
@@ -3244,68 +2827,43 @@ class IVFPQRIndex:
             books[m], _ = _kmeans_np(
                 r2[:, m * dsub : (m + 1) * dsub], ksub, pq_niter, seed + 101 + m
             )
-        idx = IVFPQRIndex(
+        return IVFPQRIndex(
             ivfpq=base, vectors=vectors, k_factor=k_factor,
             refine_pq=ProductQuantizerModel(codebooks=books),
-        )
-        idx._add_with_refine(vectors, id_col=id_col, vec_col=vec_col)
-        return idx
+        ).add(vectors, id_col=id_col, vec_col=vec_col)
 
-    def _add_with_refine(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFPQRIndex":
-        """Encode list assignment, PQ1 code AND refine code in one
-        map-only pass (reference IndexIVFPQR::add_core: add_core_o keeps
-        residual_2, refine_pq.compute_codes on it)."""
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(
-            (self.ivfpq.centroids, self.ivfpq.pq.codebooks,
-             self.refine_pq.codebooks)
-        )
+    @property
+    def _payload(self) -> str:
+        return "code binary" + (", rcode binary" if self.refine_pq is not None else "")
 
-        def enc(batches):
-            import pyarrow as pa
+    def _encoder(self):
+        """The base IVFPQ encode, and with a refine PQ the list
+        assignment, PQ1 code AND refine code in one map-only pass
+        (reference IndexIVFPQR::add_core: add_core_o keeps residual_2,
+        refine_pq.compute_codes on it)."""
+        if self.refine_pq is None:
+            return self.ivfpq._encoder()
 
-            from faiss_spark.kernels import arrow_id_vec_blocks
-
-            C, books1, books2 = bc.value
+        def encode(state, X):
+            C, books1, books2 = state
             pq1 = ProductQuantizerModel(codebooks=books1)
             pq2 = ProductQuantizerModel(codebooks=books2)
-            cn = (C * C).sum(1)
-            for ids, X, _ in arrow_id_vec_blocks(batches):
-                d2 = (X * X).sum(1)[:, None] + cn[None, :] - 2.0 * (X @ C.T)
-                lists = d2.argmin(1)
-                r1 = X - C[lists]
-                c1 = pq1.encode_np(r1)
-                r2 = r1 - pq1.decode_np(c1)
-                c2 = pq2.encode_np(r2)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(lists.astype(np.int32), pa.int32()),
-                        pa.array(ids, pa.int64()),
-                        arrow_binary(c1),
-                        arrow_binary(c2),
-                    ],
-                    names=["list_no", "id", "code", "rcode"],
-                )
+            d2 = (X * X).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
+            lists = d2.argmin(1)
+            r1 = X - C[lists]
+            c1 = pq1.encode_np(r1)
+            return lists, c1, pq2.encode_np(r1 - pq1.decode_np(c1))
 
-        src = vectors.select(
-            F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-        )
-        codes = src.mapInArrow(
-            enc, schema="list_no int, id bigint, code binary, rcode binary"
-        )
-        if path is not None:
-            codes.repartition("list_no").write.mode("overwrite").partitionBy(
-                "list_no"
-            ).parquet(path)
-            codes = spark.read.parquet(path)
-            self.ivfpq.path = path
-        # IVFPQIndex.search selects (list_no, id, code) explicitly, so the
-        # extra rcode column rides along harmlessly for ADC-only search
-        self.ivfpq.codes = codes
-        return self
+        state = (self.ivfpq.centroids, self.ivfpq.pq.codebooks, self.refine_pq.codebooks)
+        return state, encode
+
+    def _planner_state(self) -> tuple:
+        return self.ivfpq._planner_state()
+
+    def _scanner(self, k: int, **kw):
+        if self.refine_pq is None:
+            return _PQScanner(self.ivfpq)
+        return _PQRScanner(self, k)
 
     def search(
         self, queries: DataFrame, k: int, nprobe: int = 1,
@@ -3333,49 +2891,7 @@ class IVFPQRIndex:
             raise ValueError(
                 "rerank='pqr_codes' needs a refine PQ; train with M_refine"
             )
-        return _scan_probed_lists(
-            self.ivfpq, queries, _probe_planner(self.ivfpq, nprobe),
-            _PQRScanner(self, k), "IVFPQRIndex.search", qid_col, qvec_col,
-            k=k,
-            fallback=lambda: pqr_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            ),
-        )
-
-    def save(self, path: str) -> "IVFPQRIndex":
-        """write_index: the base IVFPQ layout (codes table including the
-        rcode column when M_refine was used) + refine-PQ artifacts. The
-        raw-vector table is deliberately NOT persisted — a reloaded index
-        is codes-only and searches in the reference's own
-        rerank='pqr_codes' mode (the 100 TB shape); re-attach ``vectors``
-        after load to recover the exact raw rerank."""
-        self.ivfpq.save(path)
-        spark = self.ivfpq.codes.sparkSession
-        if self.refine_pq is not None:
-            fsio.write_npy(
-                spark,
-                os.path.join(path, "_ivfpqr_refine_codebooks.npy"),
-                self.refine_pq.codebooks,
-            )
-        fsio.write_json(spark, os.path.join(path, "_ivfpqr_meta.json"), {"k_factor": int(self.k_factor)})
-        return self
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFPQRIndex":
-        meta = fsio.read_json(spark, os.path.join(path, "_ivfpqr_meta.json"))
-        rp = os.path.join(path, "_ivfpqr_refine_codebooks.npy")
-        refine = (
-            ProductQuantizerModel(codebooks=fsio.read_npy(spark, rp))
-            if fsio.exists(spark, rp)
-            else None
-        )
-        return IVFPQRIndex(
-            ivfpq=IVFPQIndex.load(spark, path),
-            vectors=None,
-            k_factor=meta["k_factor"],
-            refine_pq=refine,
-        )
+        return self._search(queries, k, nprobe, qid_col, qvec_col)
 
 
 @dataclass
@@ -3417,7 +2933,7 @@ class TwoLayerCodes:
         )
 
 
-class IVFSpectralHash:
+class IVFSpectralHash(_IVFIndexBase):
     """IVF + per-list spectral-hash binary codes scanned with Hamming
     (reference IndexIVFSpectralHash, faiss/IndexIVFSpectralHash.h:31-86,
     faiss/IndexIVFSpectralHash.cpp:70-207). The trained pipeline:
@@ -3435,6 +2951,9 @@ class IVFSpectralHash:
     query against each probed list's thresholds, cpp:244-258), so
     ``_SHScanner`` binarizes in ``bind``, once per (list, query group),
     on both shared routes."""
+
+    _payload = "code array<bigint>"
+    _twin = "sh_search_preassigned"
 
     def __init__(
         self,
@@ -3543,95 +3062,21 @@ class IVFSpectralHash:
         freq = 2.0 / self.period
         return (np.floor((Xt - c) * freq).astype(np.int64)) & 1
 
-    def add(self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"):
-        from faiss_spark.operators.binary import _bits_to_words
+    def _encoder(self):
+        def encode(sh, X):
+            from faiss_spark.operators.binary import _bits_to_words
 
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(self)
+            C = sh.centroids
+            d2 = (X * X).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
+            lists = d2.argmin(1)
+            Xt = X @ sh.A.T + (sh.b if sh.b is not None else 0.0)
+            return lists, _bits_to_words(sh._binarize(Xt, lists))
 
-        def enc(batches):
-            import pyarrow as pa
+        return self._shell(), encode
 
-            from faiss_spark.kernels import arrow_id_vec_blocks
-
-            idx = bc.value
-            C = idx.centroids
-            for ids, X, _ in arrow_id_vec_blocks(batches):
-                d2 = (
-                    (X * X).sum(1)[:, None]
-                    + (C * C).sum(1)[None, :]
-                    - 2.0 * (X @ C.T)
-                )
-                lists = d2.argmin(1)
-                Xt = X @ idx.A.T + (idx.b if idx.b is not None else 0.0)
-                words = _bits_to_words(idx._binarize(Xt, lists))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(lists.astype(np.int32), pa.int32()),
-                        pa.array(ids, pa.int64()),
-                        arrow_list(words),
-                    ],
-                    names=["list_no", "id", "code"],
-                )
-
-        src = vectors.select(
-            F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-        )
-        self.codes = src.mapInArrow(
-            enc, schema="list_no int, id bigint, code array<bigint>"
-        )
-        return self
-
-    def save(self, path: str) -> None:
-        """Persist codes (partitioned by list) + model artifacts."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        self.codes.repartition("list_no").write.mode("overwrite").partitionBy(
-            "list_no"
-        ).parquet(path)
-        fsio.write_npy(spark, os.path.join(path, "_sh_centroids.npy"), self.centroids)
-        fsio.write_npy(spark, os.path.join(path, "_sh_A.npy"), self.A)
-        if self.b is not None:
-            fsio.write_npy(spark, os.path.join(path, "_sh_b.npy"), self.b)
-        if self.trained is not None:
-            fsio.write_npy(spark, os.path.join(path, "_sh_trained.npy"), self.trained)
-        fsio.write_json(spark, os.path.join(path, "_sh_meta.json"), {"period": self.period, "threshold_type": self.threshold_type})
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFSpectralHash":
-        meta = fsio.read_json(spark, os.path.join(path, "_sh_meta.json"))
-
-        def opt(name):
-            p = os.path.join(path, name)
-            return fsio.read_npy(spark, p) if fsio.exists(spark, p) else None
-
-        idx = IVFSpectralHash(
-            centroids=fsio.read_npy(spark, os.path.join(path, "_sh_centroids.npy")),
-            A=fsio.read_npy(spark, os.path.join(path, "_sh_A.npy")),
-            b=opt("_sh_b.npy"),
-            trained=opt("_sh_trained.npy"),
-            period=meta["period"],
-            threshold_type=meta["threshold_type"],
-        )
-        idx.codes = spark.read.parquet(path)
-        return idx
-
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 1,
-        qid_col: str = "qid", qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Coarse L2 probes + Hamming scan of the binarized codes on the
-        driver route (``_SHScanner``). A query side past the driver
-        bound auto-falls-back to ``sh_search_preassigned``."""
-        return _scan_probed_lists(
-            self, queries, _probe_planner(self, nprobe), _SHScanner(self),
-            "IVFSpectralHash.search", qid_col, qvec_col, k=k,
-            fallback=lambda: sh_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            ),
-        )
+    def _scanner(self, k: int, **kw):
+        # coarse L2 probes + a Hamming scan of the binarized codes
+        return _SHScanner(self)
 
 
 _POP8_U8 = _POP8.astype(np.uint8)
@@ -3653,11 +3098,7 @@ class _SHScanner(_ListScanner):
 
     def __init__(self, index):
         # codes-free: the scanner is broadcast, the codes DataFrame is not
-        self.sh = IVFSpectralHash(
-            centroids=index.centroids, A=index.A, b=index.b,
-            trained=index.trained, period=index.period,
-            threshold_type=index.threshold_type,
-        )
+        self.sh = index._shell()
 
     def block(self, cols):
         return (arrow_list_matrix(cols[0], np.int64),)
@@ -3700,13 +3141,13 @@ def sh_search_preassigned(
     (``_SHScanner``, the scanner.set_list step, cpp:244-258) — the
     query side never collects."""
     return _preassigned_cogrouped(
-        index, queries, _probe_planner(index, nprobe), _SHScanner(index),
+        index, queries, index._planner(nprobe), _SHScanner(index),
         qid_col, qvec_col, k=k,
     )
 
 
 @dataclass
-class IVFAQIndex(_CoarseQuantized):
+class IVFAQIndex(_IVFIndexBase):
     """IVF + additive-quantizer (residual-quantizer) codes on residuals —
     the reference IndexIVFAdditiveQuantizer family
     (faiss/IndexIVFAdditiveQuantizer.h:26,64 — IVFRQ is the default
@@ -3742,6 +3183,7 @@ class IVFAQIndex(_CoarseQuantized):
     # ResidualCoarseQuantizerModel replaces the k-means centroids;
     # residuals are against its VIRTUAL centroids (beam reconstruct)
     coarse_q: object | None = None
+    _twin = "aq_search_preassigned"
 
     @staticmethod
     def train(
@@ -3839,26 +3281,10 @@ class IVFAQIndex(_CoarseQuantized):
             coarse_q=coarse_q,
         )
 
-    def add(
-        self,
-        vectors: DataFrame,
-        id_col: str = "id",
-        vec_col: str = "vec",
-        path: str | None = None,
-    ) -> "IVFAQIndex":
-        return _store_codes(
-            self, self._encode_df(vectors, id_col=id_col, vec_col=vec_col), path
-        )
-
-    def _encode_df(
-        self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> DataFrame:
-        """Frozen-artifact encode to (list_no, id, code) rows — map-only,
-        shared by add() and the streaming incremental writer."""
-
+    def _encoder(self):
         def encode(state, X):
             # the codec model travels whole: beam encode for RQ, ICM for
-            # LSQ — _encode_df must use the codec's OWN encoder
+            # LSQ — the encode must use the codec's OWN encoder
             C, cq, rqm, metric = state
             lists = _coarse_assign(X, C, cq, metric)
             # additive coarse: residual against the VIRTUAL centroid
@@ -3866,109 +3292,17 @@ class IVFAQIndex(_CoarseQuantized):
             base = cq.reconstruct_np(lists) if cq is not None else C[lists]
             return lists, rqm.encode_np(X - base)
 
-        state = (self.centroids, self.coarse_q, self.rq, self.metric)
-        return _encode_lists(vectors, id_col, vec_col, state, encode)
+        return (self.centroids, self.coarse_q, self.rq, self.metric), encode
 
-    def _save_artifact(self, spark, path: str) -> None:
-        if self.coarse_q is not None:
-            fsio.write_npy(
-                spark,
-                os.path.join(path, "_ivfaq_rcq_codebooks.npy"),
-                self.coarse_q.codebooks,
-            )
-        else:
-            fsio.write_npy(
-                spark, os.path.join(path, "_ivfaq_centroids.npy"), self.centroids
-            )
-        fsio.write_npy(spark, os.path.join(path, "_ivfaq_codebooks.npy"), self.rq.codebooks)
-        meta = {
-            "metric": self.metric,
-            "beam": int(getattr(self.rq, "beam", 4)),
-            "codec": (
-                "lsq" if type(self.rq).__name__ == "LocalSearchQuantizerModel"
-                else "rq"
-            ),
-            "search_type": self.search_type,
-        }
-        if self.coarse_q is not None:
-            meta["coarse"] = {
-                "beam_factor": self.coarse_q.beam_factor,
-                "nbits_list": (
-                    list(self.coarse_q.nbits_list)
-                    if self.coarse_q.nbits_list is not None
-                    else None
-                ),
-            }
-        if self.norm_q is not None:
-            meta["norm"] = {
-                "kind": self.norm_q.kind,
-                "min": self.norm_q.norm_min,
-                "max": self.norm_q.norm_max,
-            }
-            if self.norm_q.codebook is not None:
-                fsio.write_npy(
-                    spark,
-                    os.path.join(path, "_ivfaq_norm_codebook.npy"),
-                    self.norm_q.codebook,
-                )
-        fsio.write_json(spark, os.path.join(path, "_ivfaq_meta.json"), meta)
+    def _planner_state(self) -> tuple:
+        if self.coarse_q is None:
+            return super()._planner_state()
+        return _beam_state(self.coarse_q)
 
-    def save(self, path: str) -> "IVFAQIndex":
-        """write_index: partitioned RQ codes + centroid/codebook artifacts."""
-        return _store_codes(self, self.codes, path)
-
-    @staticmethod
-    def load(spark: SparkSession, path: str) -> "IVFAQIndex":
-        from faiss_spark.operators.codecs import (
-            AQNormQuantizer,
-            LocalSearchQuantizerModel,
-            ResidualQuantizerModel,
-        )
-
-        meta = fsio.read_json(spark, os.path.join(path, "_ivfaq_meta.json"))
-        books = fsio.read_npy(spark, os.path.join(path, "_ivfaq_codebooks.npy"))
-        if meta.get("codec") == "lsq":
-            codec = LocalSearchQuantizerModel(codebooks=books)
-        else:
-            codec = ResidualQuantizerModel(codebooks=books, beam=meta["beam"])
-        norm_q = None
-        if meta.get("norm"):
-            norm_q = AQNormQuantizer(meta["norm"]["kind"])
-            norm_q.norm_min = meta["norm"]["min"]
-            norm_q.norm_max = meta["norm"]["max"]
-            if norm_q.kind not in ("float", "qint8", "qint4"):
-                norm_q.codebook = fsio.read_npy(
-                    spark, os.path.join(path, "_ivfaq_norm_codebook.npy")
-                )
-        coarse_q = None
-        centroids = None
-        if meta.get("coarse"):
-            from faiss_spark.operators.codecs import ResidualCoarseQuantizerModel
-
-            cm = meta["coarse"]
-            coarse_q = ResidualCoarseQuantizerModel(
-                codebooks=fsio.read_npy(
-                    spark, os.path.join(path, "_ivfaq_rcq_codebooks.npy")
-                ),
-                beam_factor=cm["beam_factor"],
-                nbits_list=(
-                    tuple(cm["nbits_list"]) if cm["nbits_list"] else None
-                ),
-            )
-        else:
-            centroids = fsio.read_npy(
-                spark, os.path.join(path, "_ivfaq_centroids.npy")
-            )
-        return IVFAQIndex(
-            centroids=centroids,
-            coarse_q=coarse_q,
-            rq=codec,
-            metric=meta["metric"],
-            search_type=meta.get("search_type"),
-            norm_q=norm_q,
-            codes=spark.read.parquet(path),
-            path=path,
-        )
+    def _scanner(self, k: int, **kw):
+        # the scan decodes AQ codes (gather-sum + the list's centroid, or
+        # the virtual centroid under an additive coarse) before the GEMM
+        return _AQScanner(self)
 
     def reconstruct(self, ids: DataFrame | None = None) -> DataFrame:
         """Decode stored codes back to approximate vectors:
@@ -4018,25 +3352,4 @@ class IVFAQIndex(_CoarseQuantized):
             src = src.join(ids.select("id"), "id", "left_semi")
         return src.select("list_no", "id", "code").mapInArrow(
             dec, schema="id bigint, vec array<float>"
-        )
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Same partition-pruned plan as IVFSQIndex.search; the scan
-        decodes AQ codes (gather-sum + centroid) before the GEMM. Under
-        an additive coarse, probe selection is the RCQ beam and the
-        per-list base vector is the virtual centroid's reconstruction."""
-        return _scan_probed_lists(
-            self, queries, _probe_planner(self, nprobe), _AQScanner(self),
-            "IVFAQIndex.search", qid_col, qvec_col, k=k,
-            fallback=lambda: aq_search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            ),
         )

@@ -721,7 +721,7 @@ class NSGIndex:
     def load(spark: SparkSession, path: str, R: int = 16) -> "NSGIndex":
         import os as _os
 
-        from faiss_spark.operators.ivf import IVFIndex
+        from faiss_spark.operators.ivf import _IVFIndexBase
 
         bucket_meta = _os.path.join(path, "_bucket_meta.json")
         collocated = False
@@ -729,7 +729,7 @@ class NSGIndex:
             # bucketed layout (save_bucketed): the scan itself yields one
             # task per bucket, so the loaded index keeps the partition-
             # wise collocated search path — zero corpus exchange
-            t = IVFIndex._bucketed_table(
+            t = _IVFIndexBase._bucketed_table(
                 spark, path, fsio.read_json(spark, bucket_meta)
             )
             collocated = True

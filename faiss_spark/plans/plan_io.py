@@ -24,14 +24,12 @@ Layout under ``path``::
 
 from __future__ import annotations
 
-import io
 import os
 
-import numpy as np
 from pyspark.sql import SparkSession
 
 from faiss_spark.sources import fsio
-from faiss_spark.sources.state import pack, unpack
+from faiss_spark.sources.state import pack, read_npz, unpack, write_npz
 
 __all__ = ["save_plan", "load_plan", "save_binary_plan", "load_binary_plan"]
 
@@ -76,17 +74,13 @@ def _needs_transformed(plan) -> bool:
 def _write_payload(spark, path, meta, arrays, tables) -> None:
     for key, df in tables.items():
         df.write.mode("overwrite").parquet(os.path.join(path, f"tbl_{key}"))
-    buf = io.BytesIO()
-    np.savez(buf, **arrays)
-    fsio.write_bytes(spark, os.path.join(path, _ARRAYS), buf.getvalue())
+    write_npz(spark, os.path.join(path, _ARRAYS), arrays)
     fsio.write_json(spark, os.path.join(path, _META), meta)
 
 
 def _read_payload(spark, path):
     meta = fsio.read_json(spark, os.path.join(path, _META))
-    raw = fsio.read_bytes(spark, os.path.join(path, _ARRAYS))
-    with np.load(io.BytesIO(raw)) as z:
-        arrays = {k: z[k] for k in z.files}
+    arrays = read_npz(spark, os.path.join(path, _ARRAYS))
     tables = {
         key: spark.read.parquet(os.path.join(path, f"tbl_{key}"))
         for key in meta.get("tables", [])

@@ -30,7 +30,8 @@ def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSe
         # the r8 line_dedup skew probe measured a 50M-row sort-merge join
         # at fixed 32 partitions spilling into a 12.5× wall at 5× data,
         # restored to ~linear at 256 — but the r9 interleaved A/B
-        # (tools/aqe_ab.py, 5 paired draws × 15 headline queries at
+        # (SCALE.md, "Round-9 settlement of the AQE initialPartitionNum
+        # default": 5 paired draws × 15 headline queries at
         # sf0.1) measured the 256 default costing 1.24× overall with
         # consistent 4/5-sign losers up to 1.74× (knn_tabular) — AQE
         # coalescing does not refund the per-block overhead of 8× more

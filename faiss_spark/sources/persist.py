@@ -2,12 +2,23 @@
 
 The reference serializes any ``Index*`` into one binary blob behind two
 free functions; here an index is a partitioned parquet table (or tables)
-plus small JSON/npy model artifacts, so the generic pair delegates to
-each class's own ``save``/``load`` and stamps a ``_index_kind.json``
-marker that ``read_index`` dispatches on. No faiss binary compatibility
-is attempted (declared out of scope in SURVEY §2.I) — the contract is
-round-trip fidelity within this engine: ``read_index(spark,
-write_index(ix, path).path)`` searches identically to ``ix``.
+plus small model artifacts, so the generic pair delegates to the class's
+own ``save``/``load`` and stamps a ``_index_kind.json`` marker that
+``read_index`` dispatches on. No faiss binary compatibility is attempted
+(declared out of scope in SURVEY §2.I) — the contract is round-trip
+fidelity within this engine: ``read_index(spark, write_index(ix,
+path).path)`` searches identically to ``ix``.
+
+Dispatch: the IVF families are every subclass of
+``operators.ivf._IVFIndexBase`` (found by a walk, so a new family needs
+no entry here); the other kinds are listed in ``_registry``. Every IVF
+family shares one ``save``/``load``: the codes table partitioned (or,
+after ``save_bucketed``, bucketed) by list_no, plus ``_ivf_state.json``
+and ``_ivf_state.npz`` — the model state packed by the allowlisted,
+pickle-free ``sources.state.pack``. That layout replaced the earlier
+per-family ``_<family>_meta.json`` / ``*.npy`` files, which no reader
+accepts: an IVF index saved in that layout must be rebuilt and saved
+again.
 
 Scale note: save/load never collect the codes table — the heavy payload
 moves executor→parquet→executor; only the broadcast-class model
@@ -32,22 +43,7 @@ def _registry():
     # imported lazily: persist.py must stay importable without dragging
     # every operator module in at package-import time
     from faiss_spark.operators.binary import BinaryIVFIndex
-    from faiss_spark.operators.fastscan import (
-        IVFAQFastScanIndex,
-        IVFPQFastScanIndex,
-    )
-    from faiss_spark.operators.ivf import (
-        IMIIVFIndex,
-        IMIPQIndex,
-        IVFAQIndex,
-        IVFIndex,
-        IVFNestedIndex,
-        IVFPQIndex,
-        IVFPQRIndex,
-        IVFRCQIndex,
-        IVFSpectralHash,
-        IVFSQIndex,
-    )
+    from faiss_spark.operators.ivf import _ivf_families
     from faiss_spark.operators.lattice import LatticeIndex
     from faiss_spark.operators.nsg import NSGIndex
     from faiss_spark.plans.factory import BinaryIndexPlan, IndexPlan
@@ -55,21 +51,10 @@ def _registry():
     classes = [
         IndexPlan,
         BinaryIndexPlan,
-        IVFIndex,
-        IVFPQIndex,
-        IVFSQIndex,
-        IVFAQIndex,
-        IVFPQRIndex,
-        IVFRCQIndex,
-        IVFNestedIndex,
-        IMIIVFIndex,
-        IMIPQIndex,
-        IVFSpectralHash,
-        IVFPQFastScanIndex,
-        IVFAQFastScanIndex,
         NSGIndex,
         LatticeIndex,
         BinaryIVFIndex,
+        *_ivf_families(),
     ]
     return {c.__name__: c for c in classes if hasattr(c, "save")}
 

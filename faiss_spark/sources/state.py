@@ -17,10 +17,14 @@ DataFrame → parquet without touching the driver.
 
 from __future__ import annotations
 
+import io
+
 import numpy as np
 from pyspark.sql import DataFrame
 
-__all__ = ["pack", "unpack", "registered_classes"]
+from faiss_spark.sources import fsio
+
+__all__ = ["pack", "unpack", "registered_classes", "write_npz", "read_npz"]
 
 
 def registered_classes() -> dict:
@@ -50,6 +54,11 @@ def registered_classes() -> dict:
     from faiss_spark.operators.fastscan import (
         AQFastScanModel,
         ProductAQAdapter,
+    )
+    from faiss_spark.operators.ivf import (
+        CompositeCoarseRouter,
+        NestedCoarseRouter,
+        _ivf_families,
     )
     from faiss_spark.operators.lattice import LatticeIndex, LatticeModel
     from faiss_spark.operators.transforms import (
@@ -81,6 +90,8 @@ def registered_classes() -> dict:
         # index objects whose state is model arrays + one codes table
         LatticeModel, LatticeIndex, LSHIndex,
         BinaryHashIndex, BinaryMultiHashIndex,
+        # IVF coarse routers, and every IVF family (found by a walk)
+        NestedCoarseRouter, CompositeCoarseRouter, *_ivf_families(),
     ]
     return {c.__name__: c for c in classes}
 
@@ -177,3 +188,15 @@ def unpack(node, arrays: dict, tables: dict):
             rebuild()
         return obj
     raise TypeError(f"unrecognized persisted node {node!r}")
+
+
+def write_npz(spark, path: str, arrays: dict) -> None:
+    """The ``arrays`` collected by ``pack`` as one .npz file."""
+    buf = io.BytesIO()
+    np.savez(buf, **arrays)
+    fsio.write_bytes(spark, path, buf.getvalue())
+
+
+def read_npz(spark, path: str) -> dict:
+    with np.load(io.BytesIO(fsio.read_bytes(spark, path))) as z:
+        return {k: z[k] for k in z.files}

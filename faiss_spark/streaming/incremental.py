@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from faiss_spark.operators.cluster import KMeansModel
-from faiss_spark.operators.ivf import IVFIndex
+from faiss_spark.operators.ivf import IVFIndex, _IVFIndexBase
 
 
 def incremental_add_stream(
@@ -35,20 +35,19 @@ def incremental_add_stream(
     """Attach a streaming writer that encodes each micro-batch with the
     index's FROZEN artifacts and appends to its partitioned codes table.
 
-    Works for every index exposing ``_encode_df`` — IVFIndex (raw
-    vectors), IVFPQIndex (residual PQ codes), IVFSQIndex (SQ bytes),
-    IVFAQIndex (RQ codes): streaming ingestion into a persisted
-    COMPRESSED index is the 100 TB serving pattern (encode once on
-    arrival, scans stay 4-32× smaller than raw). The encode is the same
-    map-only plan as the index's batch add(); each micro-batch costs one
-    partitioned append, no shuffle of existing data.
+    Works for every IVF index (every family shares the base
+    ``_encode_df``), raw-vector or coded: streaming ingestion into a
+    persisted COMPRESSED index is the 100 TB serving pattern (encode
+    once on arrival, scans stay 4-32× smaller than raw). The encode is
+    the same map-only plan as the index's batch add(); each micro-batch
+    costs one partitioned append, no shuffle of existing data.
 
     Returns the StreamingQuery (caller awaits/stops it)."""
-    if not hasattr(index, "_encode_df"):
+    if not isinstance(index, _IVFIndexBase):
         raise TypeError(
             f"incremental_add_stream: {type(index).__name__} has no "
-            "_encode_df — supported: IVFIndex, IVFPQIndex, IVFSQIndex, "
-            "IVFAQIndex"
+            "_encode_df — supported: the IVF indexes of operators.ivf "
+            "and operators.fastscan"
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

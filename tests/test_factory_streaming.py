@@ -237,6 +237,40 @@ def test_streaming_incremental_add_into_ivfpq(vectors, spark, tmp_path):
     assert rows(re.search(qs, 5, nprobe=8)) == rows(mono.search(qs, 5, nprobe=8))
 
 
+def test_streaming_incremental_add_into_imipq(vectors, spark, tmp_path):
+    """Any IVF family streams through the shared encode: micro-batches
+    IMI-assigned and PQ-encoded with the frozen artifacts, then the
+    reloaded index returns the rows of a batch add."""
+    from faiss_spark.operators.ivf import IMIPQIndex
+
+    path = str(tmp_path / "imipq")
+    stream_dir = str(tmp_path / "imipq_incoming")
+
+    idx = IMIPQIndex.train(vectors, nbits=2, M=4, niter=5)
+    idx.add(vectors.filter("id < 250"), path=path)
+    extra = vectors.filter("id >= 250")
+    extra.write.mode("overwrite").parquet(stream_dir)
+    stream = spark.readStream.schema(extra.schema).parquet(stream_dir)
+    q = incremental_add_stream(
+        idx, stream, path=path, checkpoint=str(tmp_path / "imipq_ckpt")
+    )
+    q.awaitTermination(120)
+
+    re = IMIPQIndex.load(spark, path)
+    assert re.codes.count() == vectors.count()
+    batch = IMIPQIndex(sub_centroids=idx.sub_centroids, pq=idx.pq).add(vectors)
+    qs = vectors.filter("id < 10").select(F.col("id").alias("qid"), "vec")
+
+    def rows(df):
+        return sorted(
+            (r["qid"], r["rank"], r["id"], round(r["dist"], 6))
+            for r in df.collect()
+        )
+
+    got = rows(re.search(qs, 5, nprobe=8))
+    assert got == rows(batch.search(qs, 5, nprobe=8)) and got
+
+
 def test_streaming_incremental_add_rejects_unencodable(vectors, spark, tmp_path):
     with pytest.raises(TypeError, match="_encode_df"):
         incremental_add_stream(

@@ -242,19 +242,32 @@ def test_search_preassigned_bucketed_codes_skip_shuffle(emb, queries, tmp_path):
     assert sorted((r.qid, r.id, round(r.dist, 9)) for r in res2.collect()) == expect
 
 
-def test_search_preassigned_hot_cell_subshards(emb, queries, tmp_path):
+def _ivf4(emb):
+    from faiss_spark.operators.ivf import IVFIndex
+
+    return IVFIndex.train(emb, nlist=4, seed=7, niter=5).add(emb)
+
+
+def _imi4(emb):
+    from faiss_spark.operators.ivf import IMIIVFIndex
+
+    return IMIIVFIndex.train(emb, nbits=1, seed=7, niter=5).add(emb)
+
+
+@pytest.mark.parametrize("build", [_ivf4, _imi4], ids=["ivf", "imi"])
+def test_search_preassigned_hot_cell_subshards(build, emb, queries, tmp_path):
     """A cell above max_cell_rows must split into >1 bounded sub-shard
     tasks (probes replicated per shard, codes hash-salted — the dedup
     _hot_cell_shards answer ported to the cogroup search) with results
-    identical to the unsplit scan, including at full probe == exact."""
+    identical to the unsplit scan, including at full probe == exact —
+    for a k-means and an IMI coarse quantizer alike."""
     from faiss_spark.operators.ivf import (
-        IVFIndex,
         _preassigned_subshards,
         search_preassigned,
     )
 
     # skew: collapse most vectors onto one cell by training on few cells
-    idx = IVFIndex.train(emb, nlist=4, seed=7, niter=5).add(emb)
+    idx = build(emb)
     idx.save(str(tmp_path / "skew"))  # file-backed: detection is active
     expect = sorted(
         (r.qid, r.id, round(r.dist, 9))
@@ -271,7 +284,7 @@ def test_search_preassigned_hot_cell_subshards(emb, queries, tmp_path):
     assert got == expect
     # unsaved (in-memory) index: detection must stay OFF — counting an
     # unpersisted codes frame would re-run the assign GEMM
-    idx_mem = IVFIndex.train(emb, nlist=4, seed=7, niter=5).add(emb)
+    idx_mem = build(emb)
     assert _preassigned_subshards(idx_mem, 40) == {}
 
 

@@ -300,8 +300,6 @@ def test_stats_equal_across_routes(codec, vectors, queries, monkeypatch, tmp_pat
     layout and one cogroup cell) and ndis (faiss IndexIVFStats)."""
     idx = STATS_CELLS[codec](vectors)
     idx.save(str(tmp_path / codec))
-    if codec == "sh":  # its save leaves the in-memory codes attached
-        idx = IVFSpectralHash.load(vectors.sparkSession, str(tmp_path / codec))
     res, st = search_with_parameters(idx, queries, 5, nprobe=3)
     driver_rows = rows(res)
     monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
