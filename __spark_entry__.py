@@ -2013,12 +2013,13 @@ def q_bivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference faiss/index_factory.cpp:895-915 + IndexBinaryIVF.h:33,106):
     `BIVF8` (exact Hamming probe order), `BIVF8_HNSW8` (graph-routed —
     beam walk over the float-cast centroid bits, where 0/1 squared-L2 ==
-    Hamming exactly), and `BIVF8:bigbatch` (the fully-distributed
-    binary_search_preassigned cogroup — IndexBinaryIVF::search_preassigned
-    — queries never collect, new r12). ORACLE-EXACT for all: nprobe =
-    nlist probes every list, so each variant's rows equal brute-force
-    Hamming knn — the tagged union of three copies of the hamming_knn
-    SQL twin."""
+    Hamming exactly), both on the shared IVF driver route, and
+    `BIVF8:bigbatch` (the shared distributed route through
+    binary_search_preassigned — IndexBinaryIVF::search_preassigned —
+    queries never collect). Every mode scans its lists with the Python
+    Hamming list scanner. ORACLE-EXACT for all: nprobe = nlist probes
+    every list, so each variant's rows equal brute-force Hamming knn —
+    the tagged union of three copies of the hamming_knn SQL twin."""
     from faiss_spark.operators.binary import (
         BinaryIVFIndex,
         binary_search_preassigned,

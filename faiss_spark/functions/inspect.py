@@ -10,6 +10,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from faiss_spark.kernels import arrow_i64
+from faiss_spark.operators.ivf import _list_sizes
+
 
 def get_invlist(index, list_no: int):
     """Content of one inverted list as (ids, payload) numpy arrays —
@@ -20,29 +23,23 @@ def get_invlist(index, list_no: int):
     if codes is None:
         raise ValueError("index has no codes table; call add() first")
     payload_col = next(c for c in codes.columns if c not in ("list_no", "id"))
-    pdf = (
+    tbl = (
         codes.filter(F.col("list_no") == int(list_no))
         .select("id", payload_col)
         .orderBy("id")
-        .toPandas()
+        .toArrow()
     )
-    ids = pdf["id"].to_numpy(dtype=np.int64)
-    payload = pdf[payload_col].to_numpy()
-    return ids, payload
+    return arrow_i64(tbl.column(0)), tbl.column(1).to_numpy()
 
 
 def get_invlist_sizes(index) -> np.ndarray:
     """Array of inverted-list sizes, indexed by list_no — reference
     get_invlist_sizes (contrib/inspect_tools.py:41). Lists with no
-    entries report 0. One partition-wise count aggregation."""
-    codes = index.codes
-    if codes is None:
+    entries report 0. One partition-wise count aggregation, cached on
+    the index (the max_codes scan budget reads the same counts)."""
+    if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
-    nlist = index.nlist if hasattr(index, "nlist") else len(index.centroids)
-    sizes = np.zeros(int(nlist), dtype=np.int64)
-    for r in codes.groupBy("list_no").count().collect():
-        sizes[int(r["list_no"])] = int(r["count"])
-    return sizes
+    return _list_sizes(index).copy()
 
 
 def get_pq_centroids(pqm) -> np.ndarray:

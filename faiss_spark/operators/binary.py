@@ -9,8 +9,10 @@ binarization), IndexBinaryFromFloat (faiss/IndexBinaryFromFloat.h:26).
 Representation: codes are ``array<bigint>`` of 32-bit words (word w holds
 dims 32w+1..32w+32, bit j = dim value > threshold). 32-bit words keep
 every arithmetic step exact in doubles, so the same expression runs
-byte-identical on any SQL engine (the DuckDB oracle included) — and
-XOR+bit_count stays whole-stage-codegen'd JVM work, no Python in the scan.
+byte-identical on any SQL engine (the DuckDB oracle included). The flat
+and hash searches keep XOR+bit_count whole-stage-codegen'd JVM work, no
+Python in the scan; BinaryIVFIndex is one more IVF family, whose lists
+are scanned by ivf.py's ``_HammingScanner`` on the shared IVF routes.
 
 Distances (reference faiss/utils/hamming.h:113-170, binary_distances.h):
   hamming  = Σ_w popcount(a_w XOR b_w)           (smaller better)
@@ -20,11 +22,21 @@ Distances (reference faiss/utils/hamming.h:113-170, binary_distances.h):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
+from faiss_spark.operators.ivf import (
+    _GraphRouter,
+    _hamming,
+    _HammingScanner,
+    _IVFIndexBase,
+    _preassigned_cogrouped,
+    _scan_probed_lists,
+    _window_topk,
+)
 
 WORD_BITS = 32
 
@@ -62,13 +74,28 @@ def signbit_code_expr(vec: Column, d: int, threshold=0.0) -> Column:
     )
 
 
+def _same_words(a: Column, b: Column, dist: Column) -> Column:
+    """``dist``, or a job error naming both word counts when two non-null
+    codes differ in length (zip_with would pad the shorter with nulls
+    and score the pair null)."""
+    return F.when(
+        a.isNotNull() & b.isNotNull() & (F.size(a) != F.size(b)),
+        F.raise_error(
+            F.format_string(
+                "binary codes differ in length: %d words against %d words",
+                F.size(a), F.size(b),
+            )
+        ),
+    ).otherwise(dist)
+
+
 def hamming_expr(a: Column, b: Column) -> Column:
     """Σ_w popcount(a_w XOR b_w) — JVM bit ops, codegen'd."""
-    return F.aggregate(
+    return _same_words(a, b, F.aggregate(
         F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseXOR(y))),
         F.lit(0),
         lambda s, v: s + v,
-    )
+    ))
 
 
 def jaccard_dist_expr(a: Column, b: Column) -> Column:
@@ -84,7 +111,9 @@ def jaccard_dist_expr(a: Column, b: Column) -> Column:
         F.lit(0),
         lambda s, v: s + v,
     ).cast("double")
-    return F.when(union == 0.0, F.lit(0.0)).otherwise(1.0 - inter / union)
+    return _same_words(
+        a, b, F.when(union == 0.0, F.lit(0.0)).otherwise(1.0 - inter / union)
+    )
 
 
 def binarize(
@@ -227,67 +256,42 @@ def _bits_to_words(bits: np.ndarray) -> np.ndarray:
     ).sum(2)
 
 
-def _hamming_words(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(n, m) Hamming distances between two packed int64-word code
-    matrices — XOR then numpy popcount (shift-and-mask loop over the at
-    most 64 set-bit positions actually present)."""
-    xor = a[:, None, :] ^ b[None, :, :]
-    pc = np.zeros(xor.shape[:2], np.int64)
-    v = xor
-    while v.any():
-        pc += (v & 1).sum(2)
-        v = v >> 1
-    return pc
+@dataclass
+class _HammingRouter:
+    """Exact binary coarse assignment: every cell ranked by the Hamming
+    distance of its centroid words, ties by list number (stable
+    argsort) — the same order on the driver and in the probe map."""
+
+    C: np.ndarray  # (nlist, nwords) int64 centroid words
+
+    def assign_np(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
+        return np.argsort(_hamming(Q, self.C), axis=1, kind="stable")[:, :nprobe]
 
 
-def _routed_probes_np(
-    cbits: np.ndarray, cgraph: np.ndarray, cep: int,
-    nlist: int, nbits: int, qwords: np.ndarray, nprobe: int,
-) -> np.ndarray:
-    """Beam-walk probe selection over the centroid graph, padded to
-    exactly nprobe DISTINCT cells per query (a short pool fills with
-    unvisited cells — scanning extras is a superset, a duplicate would
-    double-count candidates downstream). Module-level so the distributed
-    probe assignment (binary_search_preassigned) runs the IDENTICAL
-    selection on executors."""
-    from faiss_spark.operators.nsg import _beam_search_all
-
-    Qb = _words_to_bits(qwords, nbits).astype(np.float64)
-    probes, _ = _beam_search_all(
-        cbits, cgraph, cep, Qb, nprobe, search_L=max(2 * nprobe, 16),
-    )
-    for r in range(len(probes)):
-        row = probes[r]
-        if (row >= 0).all():
-            continue
-        used = set(int(c) for c in row[row >= 0])
-        fill = (c for c in range(nlist) if c not in used)
-        for j in range(len(row)):
-            if row[j] < 0:
-                row[j] = next(fill)
-    return probes
-
-
-class BinaryIVFIndex:
+class BinaryIVFIndex(_IVFIndexBase):
     """IVF over binary codes with Hamming scan (reference IndexBinaryIVF,
     faiss/IndexBinaryIVF.h:33: the coarse quantizer is k-means on the
     float-cast bits, centroids re-binarized; lists are scanned with
     Hamming distance).
 
-    Same partitioned-table layout as IVFIndex — (list_no, id, code) —
-    so partition pruning does the nprobe cell selection."""
+    One more IVF family: the lifecycle (add, save, save_bucketed, load,
+    both search routes, stats, max_codes, hot-cell sub-sharding) is
+    ``_IVFIndexBase``'s. The family adds the Hamming argmin encode, its
+    router (``_HammingRouter``, or after ``build_coarse_graph`` a
+    ``_GraphRouter`` walk) and ``_HammingScanner``, the reference's
+    BinaryInvertedListScanner (faiss/IndexBinaryIVF.h:211). Inputs and
+    queries are int64 code words (``_dtype``); the codes table is
+    (list_no, id, code array<bigint>)."""
+
+    _payload = "code array<bigint>"
+    _dtype = np.int64
+    _twin = "binary_search_preassigned"
+    _router = None  # a _GraphRouter after build_coarse_graph
+    coarse_graph_r = None
 
     def __init__(self, centroid_words: np.ndarray, nbits: int):
         self.centroid_words = centroid_words  # (nlist, nwords) int64
         self.nbits = nbits
-        self.codes: DataFrame | None = None
-        self.path: str | None = None  # file-backed ⇒ hot-cell detection on
-        # graph-routed coarse assignment (BIVF<n>_HNSW<m>), see
-        # build_coarse_graph
-        self._cgraph: np.ndarray | None = None
-        self._cep: int | None = None
-        self._cbits: np.ndarray | None = None
-        self.coarse_graph_r: int | None = None
 
     def build_coarse_graph(self, R: int = 32) -> "BinaryIVFIndex":
         """`BIVF<n>_HNSW<m>` (reference index_factory.cpp:895-915: the
@@ -299,19 +303,12 @@ class BinaryIVFIndex:
         the assign cost drops from nq·nlist to nq·L·R word ops."""
         from faiss_spark.operators.nsg import _build_shard_graph
 
-        C = _words_to_bits(self.centroid_words, self.nbits).astype(np.float64)
+        C = _words_to_bits(self.centroid_words, self.nbits)
         R = max(1, min(R, len(C) - 1)) if len(C) > 1 else 1
-        self._coarse_R = R  # persisted so save/load rebuilds the routing
-        self._cbits = C
-        self._cgraph, self._cep = _build_shard_graph(C, R=R, knn_k=max(2 * R, 16))
+        cgraph, cep = _build_shard_graph(C, R=R, knn_k=max(2 * R, 16))
+        self._router = _GraphRouter(C, cgraph, cep, nbits=self.nbits)
         self.coarse_graph_r = R
         return self
-
-    def _routed_probes(self, qwords: np.ndarray, nprobe: int) -> np.ndarray:
-        return _routed_probes_np(
-            self._cbits, self._cgraph, self._cep,
-            len(self.centroid_words), self.nbits, qwords, nprobe,
-        )
 
     @staticmethod
     def train(
@@ -334,205 +331,35 @@ class BinaryIVFIndex:
         cw = _bits_to_words((C > 0.5).astype(np.int64))
         return BinaryIVFIndex(centroid_words=cw, nbits=nbits)
 
-    def _hamming_to_centroids(self, words: np.ndarray) -> np.ndarray:
-        return _hamming_words(words, self.centroid_words)
+    def _encoder(self):
+        # nearest centroid by Hamming; the input words are the payload
+        return self.centroid_words, lambda C, X: (_hamming(X, C).argmin(1),)
+
+    def _planner_state(self) -> tuple:
+        nlist, nwords = self.centroid_words.shape
+        router = self._router
+        if router is None:
+            router = _HammingRouter(self.centroid_words)
+        return "router", router, nlist, nwords
+
+    def _scanner(self, k: int, **kw):
+        return _HammingScanner()
 
     def add(
         self, codes: DataFrame, id_col: str = "id", code_col: str = "code",
         path: str | None = None,
     ) -> "BinaryIVFIndex":
-        spark = codes.sparkSession
-        bc = spark.sparkContext.broadcast(self.centroid_words)
-
-        def enc(batches):
-            # Arrow-native (r14): word matrix straight from the list
-            # column's values buffer; the code column passes through
-            # zero-copy. Same popcount/argmin arithmetic as before.
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_i64, arrow_list_matrix
-
-            C = bc.value
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                code_arr = b.column(1)
-                words = arrow_list_matrix(code_arr, np.int64)
-                xor = words[:, None, :] ^ C[None, :, :]
-                pc = np.zeros(xor.shape[:2], np.int64)
-                v = xor.copy()
-                while v.any():
-                    pc += (v & 1).sum(2)
-                    v >>= 1
-                lists = pc.argmin(1)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(lists.astype(np.int32), pa.int32()),
-                        pa.array(arrow_i64(b.column(0)), pa.int64()),
-                        code_arr,
-                    ],
-                    ["list_no", "id", "code"],
-                )
-
-        src = codes.select(
-            F.col(id_col).cast("bigint").alias("id"), F.col(code_col).alias("code")
-        )
-        out = src.mapInArrow(
-            enc, schema="list_no int, id bigint, code array<bigint>"
-        )
-        if path is not None:
-            out.repartition("list_no").write.mode("overwrite").partitionBy("list_no").parquet(path)
-            self.codes = codes.sparkSession.read.parquet(path)
-            self.path = path
-        else:
-            self.codes = out
-        return self
-
-    def _write_artifacts(self, spark, path: str) -> None:
-        import os as _os
-
-        from faiss_spark.sources import fsio
-
-        fsio.write_npy(spark, _os.path.join(path, "_bivf_centroid_words.npy"), self.centroid_words)
-        # the graph-routed coarse (BIVF<n>_HNSW<m>) rebuilds
-        # deterministically from the centroid words — persist only R
-        fsio.write_json(
-            spark,
-            _os.path.join(path, "_bivf_meta.json"),
-            {
-                "nbits": int(self.nbits),
-                "coarse_R": (
-                    int(self._coarse_R)
-                    if getattr(self, "_coarse_R", None) is not None
-                    else None
-                ),
-            },
-        )
-
-    def save(self, path: str) -> "BinaryIVFIndex":
-        """write_index: partitioned code-words table + centroid artifact."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        self.codes.repartition("list_no").write.mode("overwrite").partitionBy(
-            "list_no"
-        ).parquet(path)
-        self._write_artifacts(spark, path)
-        self.codes = spark.read.parquet(path)
-        self.path = path
-        return self
-
-    def save_bucketed(self, path: str, nbuckets: int | None = None) -> "BinaryIVFIndex":
-        """write_index into a CLUSTERED BY (list_no) layout — the binary
-        twin of IVFIndex.save_bucketed (reference on-disk invlists,
-        invlists/OnDiskInvertedLists.h:60): the scan itself proves the
-        hash grouping, so ``binary_search_preassigned`` /
-        ``binary_range_search_preassigned`` cogroup straight off the
-        files with ZERO corpus-side exchange per big-batch search."""
-        import hashlib as _hashlib
-        import os as _os
-
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        if nbuckets is None:
-            nbuckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        name = "bivf_codes_" + _hashlib.md5(path.encode()).hexdigest()[:12]
-        cols = self.codes.select("list_no", "id", "code")
-        ddl = cols._jdf.schema().toDDL()
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            cols.repartition(nbuckets, "list_no")
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .bucketBy(nbuckets, "list_no")
-            .saveAsTable(name)
-        )
-        self._write_artifacts(spark, path)
-        from faiss_spark.sources import fsio
-
-        fsio.write_json(
-            spark,
-            _os.path.join(path, "_bucket_meta.json"),
-            {"nbuckets": int(nbuckets), "table": name, "ddl": ddl},
-        )
-        self.codes = spark.table(name)
-        self.path = path
-        return self
-
-    @staticmethod
-    def load(spark, path: str) -> "BinaryIVFIndex":
-        import os as _os
-
-        from faiss_spark.sources import fsio
-
-        meta = fsio.read_json(spark, _os.path.join(path, "_bivf_meta.json"))
-        idx = BinaryIVFIndex(
-            centroid_words=fsio.read_npy(spark, _os.path.join(path, "_bivf_centroid_words.npy")),
-            nbits=meta["nbits"],
-        )
-        bucket_meta = _os.path.join(path, "_bucket_meta.json")
-        if fsio.exists(spark, bucket_meta):
-            from faiss_spark.operators.ivf import _IVFIndexBase
-
-            idx.codes = _IVFIndexBase._bucketed_table(
-                spark, path, fsio.read_json(spark, bucket_meta)
-            )
-        else:
-            idx.codes = spark.read.parquet(path)
-        idx.path = path
-        if meta.get("coarse_R") is not None:
-            idx.build_coarse_graph(R=meta["coarse_R"])
-        return idx
+        return super().add(codes, id_col, code_col, path)
 
     def search(
         self, qcodes: DataFrame, k: int, nprobe: int = 1,
         qid_col: str = "qid", qcode_col: str = "qcode",
     ) -> DataFrame:
-        """Coarse Hamming top-nprobe -> pruned partitions -> JVM bit-op
-        Hamming scan -> window top-k. A query side past the driver bound
-        auto-falls-back to the fully-distributed
-        ``binary_search_preassigned`` cogroup plan."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        from faiss_spark.operators.ivf import collect_queries_bounded
-
-        collected = collect_queries_bounded(
-            qcodes, qid_col, qcode_col, "binary_ivf_search",
-            d=self.centroid_words.shape[1], dtype=np.int64,
-            fallback=lambda: binary_search_preassigned(
-                self, qcodes, k, nprobe=nprobe,
-                qid_col=qid_col, qcode_col=qcode_col,
-            ),
-        )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, qwords = collected
-        nprobe_ = min(nprobe, len(self.centroid_words))
-        if self._cgraph is not None:
-            order = self._routed_probes(qwords, nprobe_)
-        else:
-            pc = self._hamming_to_centroids(qwords)
-            order = np.argsort(pc, axis=1, kind="stable")[:, :nprobe_]
-        probed = sorted({int(c) for c in order.ravel()})
-        # probe table joined on list_no keeps everything JVM-side
-        spark = self.codes.sparkSession
-        probe_rows = [
-            (int(qids[i]), qwords[i].tolist(), int(c))
-            for i in range(len(qids))
-            for c in order[i]
-        ]
-        probes = spark.createDataFrame(
-            probe_rows, "qid bigint, qcode array<bigint>, list_no int"
-        )
-        pruned = self.codes.filter(F.col("list_no").isin(probed))
-        joined = pruned.join(F.broadcast(probes), "list_no").select(
-            "qid",
-            "id",
-            hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
-        )
-        return _window_topk(joined, k, largest=False)
+        """Coarse Hamming top-nprobe -> pruned partitions -> Hamming
+        list scan -> window top-k (the shared driver route). A query
+        side past the driver bound auto-falls-back to the
+        fully-distributed ``binary_search_preassigned`` cogroup plan."""
+        return self._search(qcodes, k, nprobe, qid_col, qcode_col)
 
     def range_search(
         self, qcodes: DataFrame, radius: int, nprobe: int = 1,
@@ -541,115 +368,18 @@ class BinaryIVFIndex:
         """Binary IVF range search (reference IndexBinaryIVF::range_search,
         faiss/IndexBinaryIVF.h:129): every (qid, id, dist) in the probed
         lists with Hamming < radius. Driver-planned probes + pruned
-        partition scan + codegen'd hamming filter — map-side after the
-        prune, no shuffle (no ranking). nprobe == nlist degenerates to
-        exact flat hamming_range_search. A query side past the driver
-        bound auto-falls-back to binary_range_search_preassigned."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        from faiss_spark.operators.ivf import collect_queries_bounded
-
-        collected = collect_queries_bounded(
-            qcodes, qid_col, qcode_col, "binary_ivf_range_search",
-            d=self.centroid_words.shape[1], dtype=np.int64,
+        partition scan, map-side after the prune, no shuffle (no
+        ranking). nprobe == nlist degenerates to exact flat
+        hamming_range_search. A query side past the driver bound
+        auto-falls-back to binary_range_search_preassigned."""
+        return _scan_probed_lists(
+            self, qcodes, self._planner(nprobe), _HammingScanner(),
+            "BinaryIVFIndex.range_search", qid_col, qcode_col,
+            radius=float(radius),
             fallback=lambda: binary_range_search_preassigned(
-                self, qcodes, radius, nprobe=nprobe,
-                qid_col=qid_col, qcode_col=qcode_col,
+                self, qcodes, radius, nprobe, qid_col, qcode_col
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, qwords = collected
-        nprobe_ = min(nprobe, len(self.centroid_words))
-        if self._cgraph is not None:
-            order = self._routed_probes(qwords, nprobe_)
-        else:
-            pc = self._hamming_to_centroids(qwords)
-            order = np.argsort(pc, axis=1, kind="stable")[:, :nprobe_]
-        probed = sorted({int(c) for c in order.ravel()})
-        spark = self.codes.sparkSession
-        probe_rows = [
-            (int(qids[i]), qwords[i].tolist(), int(c))
-            for i in range(len(qids))
-            for c in order[i]
-        ]
-        probes = spark.createDataFrame(
-            probe_rows, "qid bigint, qcode array<bigint>, list_no int"
-        )
-        pruned = self.codes.filter(F.col("list_no").isin(probed))
-        return (
-            pruned.join(F.broadcast(probes), "list_no")
-            .select(
-                "qid",
-                "id",
-                hamming_expr(F.col("code"), F.col("qcode"))
-                .cast("double")
-                .alias("dist"),
-            )
-            .filter(F.col("dist") < radius)
-        )
-
-
-def _binary_probe_frame(
-    index: BinaryIVFIndex,
-    qcodes: DataFrame,
-    nprobe: int,
-    qid_col: str,
-    qcode_col: str,
-) -> DataFrame:
-    """Distributed probe assignment for the binary preassigned searches:
-    each executor batch ranks cells by exact Hamming to the broadcast
-    centroid words (or the identical beam walk for a graph-routed
-    coarse) and replicates (qid, qcode) once per probed list_no."""
-    spark = qcodes.sparkSession
-    nlist = len(index.centroid_words)
-    nprobe_ = min(nprobe, nlist)
-    nbits = index.nbits
-    routing = (
-        (index._cbits, index._cgraph, index._cep)
-        if index._cgraph is not None
-        else None
-    )
-    bc = spark.sparkContext.broadcast((index.centroid_words, routing))
-
-    def assign_probes(batches):
-        # Arrow-native (r14): the word matrix comes straight off the
-        # list column's values buffer and the nprobe-way row replication
-        # is an Arrow `take` — no per-row pandas objects.
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_i64, arrow_list_matrix
-
-        cw, routing_ = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            qw = arrow_list_matrix(b.column(1), np.int64)
-            if routing_ is None:
-                pc = _hamming_words(qw, cw)
-                order = np.argsort(pc, axis=1, kind="stable")[:, :nprobe_]
-            else:
-                cbits, cgraph, cep = routing_
-                order = _routed_probes_np(
-                    cbits, cgraph, cep, len(cw), nbits, qw, nprobe_
-                )
-            rep = np.repeat(np.arange(len(qw)), nprobe_)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(arrow_i64(b.column(0))[rep], pa.int64()),
-                    b.column(1).take(pa.array(rep, pa.int64())),
-                    pa.array(order.astype(np.int32).ravel(), pa.int32()),
-                ],
-                ["qid", "qcode", "list_no"],
-            )
-
-    q = qcodes.select(
-        F.col(qid_col).cast("bigint").alias("qid"),
-        F.col(qcode_col).alias("qcode"),
-    )
-    return q.mapInArrow(
-        assign_probes, schema="qid bigint, qcode array<bigint>, list_no int"
-    )
 
 
 def binary_search_preassigned(
@@ -662,55 +392,15 @@ def binary_search_preassigned(
     max_cell_rows: int | None = 1_000_000,
 ) -> DataFrame:
     """Fully-distributed big-batch binary IVF search (reference
-    IndexBinaryIVF::search_preassigned, faiss/IndexBinaryIVF.h:106):
-    the Hamming twin of ivf.search_preassigned, sharing its cogroup
-    skeleton (``ivf.cogrouped_cell_scan``: left-semi cell prune,
-    hot-cell sub-sharding, probes⟂⟂codes cogrouped on list_no).
-
-    Probe assignment never collects queries: each executor batch ranks
-    cells by exact Hamming to the broadcast centroid words — or by the
-    IDENTICAL beam walk when the index has a graph-routed coarse
-    (``_routed_probes_np`` is shared with the driver-planned path, so
-    both modes probe the same cells). The per-cell scan expands packed
-    words to 0/1 float bits in bounded chunks and pushes them through
-    the tiled TopKAccumulator: squared L2 on 0/1 vectors IS Hamming
-    (integer-exact in f64), so distances match the driver-planned
-    ``hamming_expr`` scan bit for bit."""
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    nbits = index.nbits
-    probes = _binary_probe_frame(index, qcodes, nprobe, qid_col, qcode_col)
-    codes = index.codes.select("list_no", "id", "code")
-    k_ = k
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import (
-            TopKAccumulator,
-            _cand_table,
-            _empty_cand_table,
-            arrow_i64,
-            arrow_list_matrix,
-        )
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        qw = arrow_list_matrix(ptab.column("qcode"), dtype=np.int64)
-        Qb = _words_to_bits(qw, nbits).astype(np.float64)
-        acc = TopKAccumulator(len(Qb), k_, largest=False)
-        acc.bind_queries(Qb, "l2")
-        ids = arrow_i64(ctab.column("id"))
-        cw = arrow_list_matrix(ctab.column("code"), dtype=np.int64)
-        # expand the cell's packed words chunkwise (~32 MB of f64 bit
-        # rows) — a hot cell never materializes its full bit matrix
-        chunk = max(1, (1 << 22) // max(1, nbits))
-        for s in range(0, len(ids), chunk):
-            Xb = _words_to_bits(cw[s:s + chunk], nbits).astype(np.float64)
-            acc.push_block(Xb, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(arrow_i64(ptab.column("qid"))[qidx], nid, nd)
-
-    cands = cogrouped_cell_scan(index, probes, codes, max_cell_rows, scan_cell)
-    return _window_topk(cands, k, largest=False)
+    IndexBinaryIVF::search_preassigned, faiss/IndexBinaryIVF.h:106): the
+    shared distributed route — probes assigned executor-side by the
+    index's router (the same cells the driver route probes), probes ⟂⟂
+    codes cogrouped on list_no with hot-cell sub-sharding, and the
+    Hamming list scan per cell."""
+    return _preassigned_cogrouped(
+        index, qcodes, index._planner(nprobe), _HammingScanner(),
+        qid_col, qcode_col, max_cell_rows, k=k,
+    )
 
 
 def binary_range_search_preassigned(
@@ -724,51 +414,13 @@ def binary_range_search_preassigned(
 ) -> DataFrame:
     """Fully-distributed big-batch binary IVF RANGE search (reference
     IndexBinaryIVF::range_search_preassigned, faiss/IndexBinaryIVF.h:136):
-    every (qid, id) in the probed lists with Hamming < radius. Same
-    cogroup skeleton as the k-NN twin but the per-cell scan emits pairs
-    through the tiled ``range_pairs`` kernel on the 0/1 bit expansion
-    (squared L2 == Hamming, integer-exact) — no top-k, and because
+    every (qid, id) in the probed lists with Hamming < radius. Because
     inverted lists partition the ids the plan ends map-only after the
     cogroup, exactly like the float ``range_search_preassigned``."""
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    nbits = index.nbits
-    radius_ = float(radius)
-    probes = _binary_probe_frame(index, qcodes, nprobe, qid_col, qcode_col)
-    codes = index.codes.select("list_no", "id", "code")
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import (
-            _cand_table,
-            _empty_cand_table,
-            arrow_i64,
-            arrow_list_matrix,
-            range_pairs,
-        )
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        qw = arrow_list_matrix(ptab.column("qcode"), dtype=np.int64)
-        Qb = _words_to_bits(qw, nbits)
-        qids = arrow_i64(ptab.column("qid"))
-        ids = arrow_i64(ctab.column("id"))
-        cw = arrow_list_matrix(ctab.column("code"), dtype=np.int64)
-        chunk = max(1, (1 << 22) // max(1, nbits))
-        out_q, out_i, out_d = [], [], []
-        for s in range(0, len(ids), chunk):
-            Xb = _words_to_bits(cw[s:s + chunk], nbits)
-            rq, rc, vals = range_pairs(Qb, Xb, "l2", radius_)
-            if len(rq):
-                out_q.append(qids[rq])
-                out_i.append(ids[s:s + chunk][rc])
-                out_d.append(vals)
-        if not out_q:
-            return _empty_cand_table()
-        return _cand_table(
-            np.concatenate(out_q), np.concatenate(out_i), np.concatenate(out_d)
-        )
-
-    return cogrouped_cell_scan(index, probes, codes, max_cell_rows, scan_cell)
+    return _preassigned_cogrouped(
+        index, qcodes, index._planner(nprobe), _HammingScanner(),
+        qid_col, qcode_col, max_cell_rows, radius=float(radius),
+    )
 
 
 # ----------------------------------------------------------- IndexBinaryHash

@@ -5,10 +5,11 @@ faiss/IndexIVF.cpp:302-544 (search lifecycle, SURVEY §3.2),
 contrib/ivf_tools.py:26-57 (big-batch search grouped by probed list — the
 shape we use).
 
-Every IVF family (the 11 here and fastscan.py's two) is a subclass of
-``_IVFIndexBase``, which writes the lifecycle once, as faiss's IndexIVF
-does; a family supplies only ``train``, an encode hook, its planner
-state and its scanner. The faiss mapping onto Spark:
+Every IVF family (the 11 here, fastscan.py's two and binary.py's
+BinaryIVFIndex) is a subclass of ``_IVFIndexBase``, which writes the
+lifecycle once, as faiss's IndexIVF does; a family supplies only
+``train``, an encode hook, its planner state and its scanner. The faiss
+mapping onto Spark:
 
   train   Level1Quantizer::train_q1 = our KMeans on a seeded sample
           → centroids artifact (small, broadcastable); per family.
@@ -27,12 +28,15 @@ state and its scanner. The faiss mapping onto Spark:
                    top-nprobe per query (= quantizer->search,
                    IndexIVF.cpp:330) from the family's planner state:
                    k-means argsort by metric, RCQ/LSQ beam, IMI/MIQ2
-                   grid, nested router (or the factory's graph walk via
-                   ``_probe_planner``), plus the ``max_codes``
+                   grid, nested router, binary IVF's Hamming ranking or
+                   ``_GraphRouter``'s walk over a coarse graph (the
+                   factory's float IVF<n>_NSG/HNSW via ``_probe_planner``,
+                   binary IVF's BIVF<n>_HNSW<m>), plus the ``max_codes``
                    nearest-first scan budget.
           scanner  one InvertedListScanner per codec (``_FlatScanner``,
                    ``_SQScanner``, ``_PQScanner``, ``_AQScanner``,
-                   ``_PQRScanner``, ``_SHScanner``, and fastscan.py's
+                   ``_PQRScanner``, ``_HammingScanner`` (binary IVF) and
+                   its ``_SHScanner``, and fastscan.py's
                    ``_PQ4Scanner``/``_AQ4Scanner``), the family's
                    ``_scanner``: built on the driver,
                    broadcast once, ``bind(list_no, Q, qsel, acc, scratch,
@@ -96,20 +100,20 @@ MAX_DRIVER_QUERY_CELLS = 32_000_000
 
 def _encode_lists(
     vectors: DataFrame, id_col: str, vec_col: str, state, encode,
-    payload: str = "code binary",
+    payload: str = "code binary", dtype=np.float64,
 ):
     """Map-only frozen-artifact encode shared by every IVF family (add()
     and the streaming incremental writer): broadcast ``state``, run
     ``encode(state, X) -> (lists, *payload)`` on each zero-copy Arrow
-    block, emit (list_no, id, *payload) rows — no per-row objects, no
-    shuffle. ``payload`` is the family's column schema: a ``binary``
-    column takes a code matrix, an ``array<bigint>`` one an int64 word
-    matrix, and ``vec array<float>`` (raw-vector lists, ``encode``
-    returns only the lists) passes the input column through."""
+    block (X in the family's ``dtype``), emit (list_no, id, *payload)
+    rows — no per-row objects, no shuffle. ``payload`` is the family's
+    column schema: a ``binary`` column takes a code matrix, an
+    ``array<bigint>`` one an int64 word matrix; when ``encode`` returns
+    only the lists (raw-vector lists, binary IVF's input words) the one
+    payload column is the input column passed through."""
     bc = vectors.sparkSession.sparkContext.broadcast(state)
     names = [c.split()[0] for c in payload.split(",")]
     types = [c.split()[1] for c in payload.split(",")]
-    raw = types == ["array<float>"]
 
     def enc(batches):
         import pyarrow as pa
@@ -117,11 +121,11 @@ def _encode_lists(
         from faiss_spark.kernels import arrow_id_vec_blocks
 
         st = bc.value
-        f32_list = pa.list_(pa.float32())
-        for ids, X, vec_arr in arrow_id_vec_blocks(batches):
+        raw_t = pa.list_(pa.float32() if types[0] == "array<float>" else pa.int64())
+        for ids, X, vec_arr in arrow_id_vec_blocks(batches, dtype):
             lists, *cols = encode(st, X)
-            if raw:
-                cols = [vec_arr if vec_arr.type == f32_list else vec_arr.cast(f32_list)]
+            if not cols:
+                cols = [vec_arr if vec_arr.type == raw_t else vec_arr.cast(raw_t)]
             else:
                 cols = [
                     arrow_binary(c) if t == "binary" else arrow_list(c)
@@ -236,14 +240,18 @@ class _IVFIndexBase:
                          (lists, *payload)`` runs on every Arrow block of
                          the vectors with ``state`` broadcast;
                          ``_payload`` is the schema of the payload columns
-                         (``vec array<float>`` passes the input through)
+                         (an encode that returns only the lists passes
+                         the input column through)
       _planner_state()   ``(kind, state, nlist, d)`` of its coarse
                          quantizer (see ``_ProbePlanner``); the default is
                          k-means ``centroids`` ranked by ``metric``
       _scanner(k, **kw)  its ``_ListScanner`` (default: raw vectors)
 
     plus ``_twin``, the name of its public ``*_search_preassigned``
-    function in its own module. ``add``, the streaming encode, ``save``,
+    function in its own module, and ``_dtype``, the dtype of its input
+    and query vectors (int64 words for binary IVF; the encode, the
+    query collect, the probe table and the cell scan read it).
+    ``add``, the streaming encode, ``save``,
     ``save_bucketed``, ``load``, ``search``, ``nlist`` and ``d`` are
     written here once.
 
@@ -258,6 +266,7 @@ class _IVFIndexBase:
     metric = "l2"
     _payload = "code binary"
     _twin = "search_preassigned"
+    _dtype = np.float64
     __persist_skip__ = ("codes", "path", "_list_sizes_cache", "_subshard_cache")
 
     # ------------------------------------------------------- family hooks
@@ -325,7 +334,9 @@ class _IVFIndexBase:
         assignment map, so there is no join-back shuffle of the 100 TB
         vector table; the only exchange is the partitioned write."""
         state, encode = self._encoder()
-        return _encode_lists(vectors, id_col, vec_col, state, encode, self._payload)
+        return _encode_lists(
+            vectors, id_col, vec_col, state, encode, self._payload, self._dtype
+        )
 
     def _store(self, codes: DataFrame | None, path: str | None):
         if codes is None:
@@ -475,13 +486,11 @@ class _IVFIndexBase:
         which is looked up at call time."""
 
         def twin():
+            # positional columns: binary IVF's twin names its qcode_col
             fn = getattr(sys.modules[type(self).__module__], self._twin)
             if max_codes is not None:
                 kw["max_codes"] = max_codes
-            return fn(
-                self, queries, k, nprobe=nprobe, qid_col=qid_col,
-                qvec_col=qvec_col, **kw,
-            )
+            return fn(self, queries, k, nprobe, qid_col, qvec_col, **kw)
 
         return _scan_probed_lists(
             self, queries, self._planner(nprobe, max_codes),
@@ -492,7 +501,8 @@ class _IVFIndexBase:
 
 def _ivf_families() -> list:
     """Every IVF index class: the subclasses of _IVFIndexBase, found by a
-    walk (fastscan.py defines two of them)."""
+    walk (fastscan.py defines two of them, binary.py one)."""
+    import faiss_spark.operators.binary  # noqa: F401
     import faiss_spark.operators.fastscan  # noqa: F401
 
     out, todo = [], list(_IVFIndexBase.__subclasses__())
@@ -645,7 +655,8 @@ def search_with_parameters(
     (reference faiss/IVFlib.h:129-141 ``search_with_parameters`` /
     ``ivf_search_precomputed`` — the variant that outputs IndexIVFStats).
     Works for every IVF family (flat, SQ, PQ, IMI-PQ, AQ, PQR codes, the
-    PQ/AQ/PRQ/PLSQ fast-scan indexes and IVFSpectralHash) on both
+    PQ/AQ/PRQ/PLSQ fast-scan indexes, IVFSpectralHash and BinaryIVFIndex,
+    whose queries are code words: pass ``qvec_col="qcode"``) on both
     routes: the driver route, or past the query bound the distributed
     route, each filling the same counters.
 
@@ -746,6 +757,58 @@ class _ProbePlanner:
         return [order[qi][keep[qi]] for qi in range(len(order))]
 
 
+@dataclass
+class _GraphRouter:
+    """Graph-routed coarse assignment (reference IVF<n>_NSG<R>,
+    index_factory.cpp:253-268, and the binary factory's BIVF<n>_HNSW<m>,
+    index_factory.cpp:895-915) as a probe-planner router: beam walk over
+    the centroid graph, then each row's -1 pads filled with DISTINCT
+    unvisited lists (scanning an extra list is a superset — but a
+    duplicate probe would double-count candidates in the downstream
+    accumulator, so fills must be unique per row). Picklable and
+    pure-numpy so the driver plan and the distributed twin probe
+    IDENTICAL cells.
+
+    With ``nbits`` the queries arrive as int64 code words and ``C``
+    holds the 0/1 centroid bits: the walk runs on the float-cast query
+    bits, where squared L2 equals Hamming exactly."""
+
+    C: np.ndarray
+    cgraph: object
+    cep: object
+    nbits: int | None = None
+
+    @property
+    def nlist(self) -> int:
+        return len(self.C)
+
+    @property
+    def d(self) -> int:
+        return self.C.shape[1] if self.nbits is None else -(-self.nbits // 32)
+
+    def assign_np(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
+        from faiss_spark.operators.nsg import _beam_search_all
+
+        if self.nbits is not None:
+            from faiss_spark.operators.binary import _words_to_bits
+
+            Q = _words_to_bits(Q, self.nbits)
+        probes, _ = _beam_search_all(
+            self.C, self.cgraph, self.cep, Q, nprobe,
+            search_L=max(2 * nprobe, 16),
+        )
+        for r in range(len(probes)):
+            row = probes[r]
+            if (row >= 0).all():
+                continue
+            used = set(int(c) for c in row[row >= 0])
+            fill = (c for c in range(self.nlist) if c not in used)
+            for j in range(len(row)):
+                if row[j] < 0:
+                    row[j] = next(fill)
+        return probes
+
+
 def _probe_planner(
     index, nprobe: int, max_codes: int | None = None, router=None
 ) -> _ProbePlanner:
@@ -773,6 +836,7 @@ _POP8 = (
     .sum(1)
     .astype(np.int64)
 )
+_POP8_U8 = _POP8.astype(np.uint8)
 
 
 class _ListScanner:
@@ -1056,6 +1120,47 @@ class _PQRScanner(_ListScanner):
         return push
 
 
+def _hamming(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(a), len(b)) float64 Hamming distances between two int64 code
+    word matrices: XOR, then the byte popcount table, in row chunks of
+    about 32 MB of XOR words."""
+    out = np.empty((len(a), len(b)))
+    rows = max(1, (1 << 22) // max(1, b.size))
+    for s in range(0, len(a), rows):
+        x = np.bitwise_xor(a[s : s + rows, None, :], b[None, :, :])
+        out[s : s + rows] = _POP8_U8[x.view(np.uint8)].sum(axis=2)
+    return out
+
+
+class _HammingScanner(_ListScanner):
+    """Packed int64 code words scored by Hamming distance (reference
+    BinaryInvertedListScanner, faiss/IndexBinaryIVF.h:211): the queries
+    are code words too (binary IVF), a push XORs them against a block of
+    codes and ranks the popcounts, as doubles; ``range`` keeps every
+    pair below the radius."""
+
+    def block(self, cols):
+        return (arrow_list_matrix(cols[0], np.int64),)
+
+    def block_rows(self, nq, d):
+        # the XOR block is (nq, rows, words) int64
+        return max(16, (1 << 22) // max(1, nq))
+
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
+        qw = Q[qsel]
+        return lambda blk, ids: acc.push(_hamming(qw, blk[0]), ids)
+
+    def range(self, Q, qsel, blk, radius: float):
+        qw, W = Q[qsel], blk[0]
+        rows = self.block_rows(len(qw), W.shape[1])
+        parts = [(np.empty(0, np.int64),) * 2 + (np.empty(0),)]
+        for s in range(0, len(W), rows):
+            D = _hamming(qw, W[s : s + rows])
+            rq, rc = np.nonzero(D < radius)
+            parts.append((rq, rc + s, D[rq, rc]))
+        return tuple(np.concatenate(p) for p in zip(*parts))
+
+
 def _scan_lists(scanner, groups, Q, l2q, k, radius, accs, l2t=None):
     """The one list-scan loop both routes run over ``(list_no, blocks,
     ids)`` groups: bind the scanner the first time a list appears (query
@@ -1128,7 +1233,7 @@ def _scan_probed_lists(
     lists, then the window top-k. Range mode (``radius``) ends map-side:
     inverted lists partition the ids, so no pair repeats."""
     collected = collect_queries_bounded(
-        queries, qid_col, qvec_col, op, d=planner.d,
+        queries, qid_col, qvec_col, op, d=planner.d, dtype=lists._dtype,
         fallback=fallback or (lambda: _preassigned_cogrouped(
             lists, queries, planner, scanner, qid_col, qvec_col,
             k=k, radius=radius, stats=stats,
@@ -1939,11 +2044,9 @@ def range_search_preassigned(
     )
 
 
-def _cand_queries(ptab):
-    """(qids int64, Q (n,d) f64) from a probe-side cogroup table."""
-    from faiss_spark.kernels import arrow_i64, arrow_list_matrix
-
-    return arrow_i64(ptab.column("qid")), arrow_list_matrix(ptab.column("vec"))
+def _cand_queries(ptab, dtype=np.float64):
+    """(qids int64, Q (n, d) ``dtype``) from a probe-side cogroup table."""
+    return arrow_i64(ptab.column("qid")), arrow_list_matrix(ptab.column("vec"), dtype)
 
 
 def _window_topk(cands: DataFrame, k: int, largest: bool) -> DataFrame:
@@ -1971,6 +2074,7 @@ def _probe_table(
     assign_fn,
     acc_nq=None,
     terms_fn=None,
+    dtype=np.float64,
 ) -> DataFrame:
     """Distributed probe assignment shared by every preassigned search:
     broadcast the (small) quantizer state, map each query batch through
@@ -1978,12 +2082,14 @@ def _probe_table(
     (ragged when a per-query budget like max_codes trims the probe set),
     and emit one (qid, vec, list_no) row per probe via Arrow take — no
     per-row Python objects (at 100 TB the query side is itself huge;
-    this map is the whole plan's fan-out). ``assign_payload`` may
-    already be a Broadcast (callers whose cell scan shares the same
-    artifacts broadcast once and reuse the handle). A query vector
-    whose length is not the index dimension ``d``, or one with a
-    non-finite component, fails the job with a clear message before any
-    Python worker sees it; ``acc_nq`` counts the queries for
+    this map is the whole plan's fan-out). ``vec`` is ``array<float>``,
+    or for an int64 ``dtype`` (binary IVF's code words) ``array<bigint>``
+    carried as it is. ``assign_payload`` may already be a Broadcast
+    (callers whose cell scan shares the same artifacts broadcast once and
+    reuse the handle). A query vector whose length is not the index
+    dimension ``d`` (for code words, the word count), or a float one
+    with a non-finite component, fails the job with a clear message
+    before any Python worker sees it; ``acc_nq`` counts the queries for
     IVFSearchStats. ``terms_fn(Q, probes)`` (a scanner's probe_terms)
     adds one ``terms binary`` column, a row per probe."""
     from pyspark.broadcast import Broadcast
@@ -1994,6 +2100,7 @@ def _probe_table(
         if isinstance(assign_payload, Broadcast)
         else spark.sparkContext.broadcast(assign_payload)
     )
+    floats = np.dtype(dtype).kind == "f"
 
     def assign_probes(batches):
         import pyarrow as pa
@@ -2001,18 +2108,19 @@ def _probe_table(
         from faiss_spark.kernels import arrow_id_vec_blocks
 
         payload = bc.value
-        f32_list = pa.list_(pa.float32())
+        vec_t = pa.list_(pa.float32() if floats else pa.int64())
         names = ["qid", "vec", "list_no"] + (["terms"] if terms_fn else [])
-        for qids, Q, vec_arr in arrow_id_vec_blocks(batches):
+        for qids, Q, vec_arr in arrow_id_vec_blocks(batches, dtype):
             if acc_nq is not None:
                 acc_nq.add(len(qids))
             order = assign_fn(payload, Q)
             rep, cells = _probe_pairs(order)
-            # the declared output schema is array<float>; an array<double>
-            # input (DataFrames built from Python floats) must cast before
-            # the zero-copy pass-through, as imi_assign/KMeansModel.assign do
-            if vec_arr.type != f32_list:
-                vec_arr = vec_arr.cast(f32_list)
+            # the declared output schema is array<float> (array<bigint>
+            # for words); an array<double> input (DataFrames built from
+            # Python floats) must cast before the zero-copy pass-through,
+            # as imi_assign/KMeansModel.assign do
+            if vec_arr.type != vec_t:
+                vec_arr = vec_arr.cast(vec_t)
             cols = [
                 pa.array(qids[rep], pa.int64()),
                 vec_arr.take(pa.array(rep, pa.int64())),
@@ -2024,18 +2132,17 @@ def _probe_table(
 
     vec = F.col(qvec_col)
     qid = F.col(qid_col).cast("bigint")
-    q = queries.select(
-        qid.alias("qid"),
-        F.when(
-            ~F.coalesce(F.size(vec) == d, F.lit(False)),
-            F.raise_error(
-                F.format_string(
-                    f"query vector has %d components but the index has d={d}",
-                    F.size(vec),
-                )
-            ),
-        )
-        .when(
+    checked = F.when(
+        ~F.coalesce(F.size(vec) == d, F.lit(False)),
+        F.raise_error(
+            F.format_string(
+                f"query vector has %d components but the index has d={d}",
+                F.size(vec),
+            )
+        ),
+    )
+    if floats:
+        checked = checked.when(
             F.exists(vec, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))),
             F.raise_error(
                 F.format_string(
@@ -2045,10 +2152,8 @@ def _probe_table(
                 )
             ),
         )
-        .otherwise(vec)
-        .alias("vec"),
-    )
-    schema = "qid bigint, vec array<float>, list_no int"
+    q = queries.select(qid.alias("qid"), checked.otherwise(vec).alias("vec"))
+    schema = f"qid bigint, vec array<{'float' if floats else 'bigint'}>, list_no int"
     if terms_fn is not None:
         schema += ", terms binary"
     return q.mapInArrow(assign_probes, schema=schema)
@@ -2085,9 +2190,11 @@ def _preassigned_cogrouped(
     if scanner.probe_terms is not None:
         def terms_fn(Q, order):
             return bc.value[1].probe_terms(Q, order)
+    dtype = lists._dtype
     probes = _probe_table(
         queries, qid_col, qvec_col, planner.d, payload, assign_fn,
         acc_nq=None if stats is None else stats._acc_nq, terms_fn=terms_fn,
+        dtype=dtype,
     )
     codes = lists.codes.select("list_no", "id", *scanner.code_cols)
     def scan_cell(key, ptab, ctab):
@@ -2095,7 +2202,7 @@ def _preassigned_cogrouped(
             return _empty_cand_table()
         sc = bc.value[1]
         list_no = key[0].as_py()
-        qids, Qg = _cand_queries(ptab)
+        qids, Qg = _cand_queries(ptab, dtype)
         group = (
             list_no,
             sc.block([ctab.column(c) for c in sc.code_cols]),
@@ -2127,12 +2234,10 @@ def cogrouped_cell_scan(
     """Generic cell-cogroup tail of the preassigned searches: left-semi
     cell prune + hot/cold cogroup on ``list_no``, parameterized by the
     per-cell scan. ``probes`` carries ``list_no`` plus whatever
-    query payload the scan reads (float ``vec`` and, with a scanner's
-    probe_terms hook, binary ``terms``; binary ``qcode``); ``codes``
-    likewise. Its users: ``_preassigned_cogrouped`` (every float-query
-    IVF twin — flat, SQ, PQ, AQ, PQR, the fast-scan indexes and the
-    spectral hash) and the binary Hamming twins
-    (binary.binary_search_preassigned, binary_range_search_preassigned).
+    query payload the scan reads (the ``vec`` query — floats, or binary
+    IVF's code words — and, with a scanner's probe_terms hook, binary
+    ``terms``); ``codes`` likewise. Its one user is
+    ``_preassigned_cogrouped``, the distributed route of every IVF twin.
 
     The scan is Arrow-native (``applyInArrow``, r13 — VERDICT r12 #3):
     ``scan_cell(key, probe_table, code_table) -> pa.Table`` with columns
@@ -3079,14 +3184,10 @@ class IVFSpectralHash(_IVFIndexBase):
         return _SHScanner(self)
 
 
-_POP8_U8 = _POP8.astype(np.uint8)
-
-
-class _SHScanner(_ListScanner):
+class _SHScanner(_HammingScanner):
     """IVFSpectralHash codes (reference IndexIVFSpectralHash.cpp:244-258
     ``set_list``): binding a list re-binarizes its queries against that
-    list's thresholds; a push scores Hamming distances over the packed
-    int64 code words, as doubles.
+    list's thresholds into code words; the Hamming scan is inherited.
 
     The transform ``Q @ vt`` comes from ``probe_terms``, i.e. from the
     query batch the query enters with (the driver's collected matrix,
@@ -3100,13 +3201,6 @@ class _SHScanner(_ListScanner):
         # codes-free: the scanner is broadcast, the codes DataFrame is not
         self.sh = index._shell()
 
-    def block(self, cols):
-        return (arrow_list_matrix(cols[0], np.int64),)
-
-    def block_rows(self, nq, d):
-        # the XOR block is (nq, rows, words) int64
-        return max(16, (1 << 22) // max(1, nq))
-
     def probe_terms(self, Q, probes):
         sh = self.sh
         Qt = Q @ sh.A.T + (sh.b if sh.b is not None else 0.0)
@@ -3118,13 +3212,7 @@ class _SHScanner(_ListScanner):
 
         Qt = T.copy().view(np.float64)  # aligned copy of the term rows
         qw = _bits_to_words(self.sh._binarize(Qt, np.full(len(qsel), list_no)))
-
-        def push(blk, ids):
-            x = np.bitwise_xor(qw[:, None, :], blk[0][None, :, :])
-            D = _POP8_U8[x.view(np.uint8)].sum(axis=2, dtype=np.float64)
-            acc.push(D, ids)
-
-        return push
+        return super().bind(list_no, qw, slice(None), acc, scratch, None)
 
 
 def sh_search_preassigned(

@@ -71,48 +71,6 @@ _TRANSFORM_RES = [
 
 
 @dataclass
-class _GraphRouter:
-    """Graph-routed coarse assignment (reference IVF<n>_NSG<R>,
-    index_factory.cpp:253-268) as a probe-planner router: beam walk over
-    the centroid graph, then each row's -1 pads filled with DISTINCT
-    unvisited lists (scanning an extra list is a superset — but a
-    duplicate probe would double-count candidates in the downstream
-    accumulator, so fills must be unique per row). Picklable and
-    pure-numpy so the driver plan and the search_preassigned fallback
-    probe IDENTICAL cells."""
-
-    C: np.ndarray
-    cgraph: object
-    cep: object
-
-    @property
-    def nlist(self) -> int:
-        return len(self.C)
-
-    @property
-    def d(self) -> int:
-        return self.C.shape[1]
-
-    def assign_np(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
-        from faiss_spark.operators.nsg import _beam_search_all
-
-        probes, _ = _beam_search_all(
-            self.C, self.cgraph, self.cep, Q, nprobe,
-            search_L=max(2 * nprobe, 16),
-        )
-        for r in range(len(probes)):
-            row = probes[r]
-            if (row >= 0).all():
-                continue
-            used = set(int(c) for c in row[row >= 0])
-            fill = (c for c in range(self.nlist) if c not in used)
-            for j in range(len(row)):
-                if row[j] < 0:
-                    row[j] = next(fill)
-        return probes
-
-
-@dataclass
 class IndexPlan:
     """Parsed factory string: transform estimators + index config."""
 
@@ -781,6 +739,7 @@ class IndexPlan:
         exact-assign plan (partition-pruned, broadcast probes)."""
         from faiss_spark.operators.ivf import (
             _FlatScanner,
+            _GraphRouter,
             _probe_planner,
             _scan_probed_lists,
             search_preassigned,

@@ -18,7 +18,11 @@ and ``_ivf_state.npz`` — the model state packed by the allowlisted,
 pickle-free ``sources.state.pack``. That layout replaced the earlier
 per-family ``_<family>_meta.json`` / ``*.npy`` files, which no reader
 accepts: an IVF index saved in that layout must be rebuilt and saved
-again.
+again. The binary IVF index (``operators.binary.BinaryIVFIndex``) is one
+of these families: its ``_bivf_meta.json`` and
+``_bivf_centroid_words.npy`` are gone too, and its coarse graph
+(``BIVF<n>_HNSW<m>``) is saved in the packed state instead of being
+rebuilt on load.
 
 Scale note: save/load never collect the codes table — the heavy payload
 moves executor→parquet→executor; only the broadcast-class model
@@ -42,7 +46,6 @@ _KIND_FILE = "_index_kind.json"
 def _registry():
     # imported lazily: persist.py must stay importable without dragging
     # every operator module in at package-import time
-    from faiss_spark.operators.binary import BinaryIVFIndex
     from faiss_spark.operators.ivf import _ivf_families
     from faiss_spark.operators.lattice import LatticeIndex
     from faiss_spark.operators.nsg import NSGIndex
@@ -53,7 +56,6 @@ def _registry():
         BinaryIndexPlan,
         NSGIndex,
         LatticeIndex,
-        BinaryIVFIndex,
         *_ivf_families(),
     ]
     return {c.__name__: c for c in classes if hasattr(c, "save")}

@@ -58,6 +58,7 @@ def registered_classes() -> dict:
     from faiss_spark.operators.ivf import (
         CompositeCoarseRouter,
         NestedCoarseRouter,
+        _GraphRouter,
         _ivf_families,
     )
     from faiss_spark.operators.lattice import LatticeIndex, LatticeModel
@@ -91,7 +92,8 @@ def registered_classes() -> dict:
         LatticeModel, LatticeIndex, LSHIndex,
         BinaryHashIndex, BinaryMultiHashIndex,
         # IVF coarse routers, and every IVF family (found by a walk)
-        NestedCoarseRouter, CompositeCoarseRouter, *_ivf_families(),
+        NestedCoarseRouter, CompositeCoarseRouter, _GraphRouter,
+        *_ivf_families(),
     ]
     return {c.__name__: c for c in classes}
 

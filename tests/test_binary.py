@@ -6,8 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from faiss_spark.operators.binary import (
+    BinaryHashIndex,
+    BinaryIVFIndex,
     binarize,
     binarize_rotated,
+    binary_range_search_preassigned,
+    binary_search_preassigned,
     hamming_knn,
     hamming_range_search,
     jaccard_knn,
@@ -283,3 +287,47 @@ def test_binary_ivf_range_partial_probe_is_subset(codes):
     }
     assert a == b
     assert a <= full
+
+
+def _ivf(codes):
+    return BinaryIVFIndex.train(codes, nlist=4, nbits=64, seed=11, niter=8).add(codes)
+
+
+IVF_WIDTH = "1 components but the index has d=2"
+FLAT_WIDTH = "differ in length: 2 words against 1 words"
+
+# entry point -> (search of 1-word queries against the 2-word codes,
+# the message naming both word counts)
+WIDTH_CELLS = {
+    "ivf_search": (lambda c, q: _ivf(c).search(q, 5, nprobe=2), IVF_WIDTH),
+    "ivf_range_search": (lambda c, q: _ivf(c).range_search(q, 10, nprobe=2), IVF_WIDTH),
+    "binary_search_preassigned": (
+        lambda c, q: binary_search_preassigned(_ivf(c), q, 5, nprobe=2), IVF_WIDTH
+    ),
+    "binary_range_search_preassigned": (
+        lambda c, q: binary_range_search_preassigned(_ivf(c), q, 10, nprobe=2),
+        IVF_WIDTH,
+    ),
+    "hamming_knn": (lambda c, q: hamming_knn(c, q, 5), FLAT_WIDTH),
+    "jaccard_knn": (lambda c, q: jaccard_knn(c, q, 5), FLAT_WIDTH),
+    "hamming_range_search": (lambda c, q: hamming_range_search(c, q, 10), FLAT_WIDTH),
+    "binary_hash_search": (
+        lambda c, q: BinaryHashIndex(8).add(c).search(q, 5), FLAT_WIDTH
+    ),
+}
+
+
+@pytest.mark.parametrize("cell", sorted(WIDTH_CELLS))
+def test_unequal_word_counts_fail_with_message(cell, codes):
+    """Queries of one 32-bit word against 64-bit codes fail with a
+    message naming both word counts — never a row with a null distance,
+    a silently empty result or a worker stack trace."""
+    from pyspark.errors import PythonException
+
+    search, match = WIDTH_CELLS[cell]
+    q = codes.filter(F.col("id") < 10).select(
+        F.col("id").alias("qid"), F.slice("code", 1, 1).alias("qcode")
+    )
+    with pytest.raises(Exception, match=match) as ei:
+        search(codes, q).collect()
+    assert not isinstance(ei.value, PythonException)

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 import faiss_spark.operators.ivf as ivfmod
+from faiss_spark.operators.binary import BinaryIVFIndex, binarize
 from faiss_spark.operators.fastscan import (
     IVFAQFastScanIndex,
     IVFPQFastScanIndex,
@@ -54,6 +55,21 @@ def _pqr(v):
     return idx
 
 
+def _bivf(v):
+    # sign bits of the float fixture; the graph-routed coarse
+    # (BIVF<n>_HNSW<m>) so its router is part of the saved state
+    codes = binarize(v, D)
+    idx = BinaryIVFIndex.train(codes, nlist=8, nbits=D, seed=1, niter=5)
+    return idx.build_coarse_graph(R=4).add(codes)
+
+
+def _queries_for(idx, queries):
+    """Binary IVF searches code words: the queries' sign bits."""
+    if not isinstance(idx, BinaryIVFIndex):
+        return queries
+    return binarize(queries, D, id_col="qid").toDF("qid", "qcode")
+
+
 # family name -> build (train + in-memory add); a family without an entry
 # fails the matrix
 BUILD = {
@@ -78,6 +94,7 @@ BUILD = {
     "IVFAQFastScanIndex": lambda v: IVFAQFastScanIndex.train(
         v, nlist=8, M=4, seed=1, niter=5
     ),
+    "BinaryIVFIndex": _bivf,
 }
 
 FAMILIES = sorted(c.__name__ for c in _ivf_families())
@@ -110,12 +127,14 @@ def test_save_load_roundtrip_rows(family, route, spark, vectors, queries, tmp_pa
     idx = _index(family, vectors)
     assert type(idx).__name__ == family
     if route == "distributed":
-        # one query row fits the driver bound at d=8: every search falls
-        # back to the family's distributed twin
+        # one query row fits the driver bound at d=8 (eight one-word
+        # binary queries): every search falls back to the family's
+        # distributed twin
         monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", D)
+    q = _queries_for(idx, queries)
 
     def search(i):
-        return rows(i.search(queries, 5, nprobe=4))
+        return rows(i.search(q, 5, nprobe=4))
 
     mem = search(idx)
     assert mem

@@ -449,9 +449,10 @@ def test_dedup_against_is_left_anti_on_keys(tables):
 
 def test_package_python_boundary_is_arrow_only():
     """One Python boundary idiom: every worker map and query collect in
-    the package goes through Arrow. No module calls mapInPandas or
-    applyInPandas, and none imports pandas, except the stateful
-    streaming operators (applyInPandasWithState has no Arrow twin)."""
+    the package goes through Arrow. No module calls mapInPandas,
+    applyInPandas or toPandas, and none imports pandas, except the
+    stateful streaming operators (applyInPandasWithState has no Arrow
+    twin)."""
     import ast
     import pathlib
 
@@ -465,7 +466,7 @@ def test_package_python_boundary_is_arrow_only():
             continue
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.Attribute) and node.attr in (
-                "mapInPandas", "applyInPandas",
+                "mapInPandas", "applyInPandas", "toPandas",
             ):
                 hits.append((path.name, node.lineno, node.attr))
             elif isinstance(node, ast.Import):

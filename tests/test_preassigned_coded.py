@@ -16,6 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 import faiss_spark.operators.ivf as ivfmod
+from faiss_spark.operators.binary import (
+    BinaryIVFIndex,
+    binarize,
+    binary_search_preassigned,
+)
 from faiss_spark.operators.fastscan import (
     IVFAQFastScanIndex,
     IVFPQFastScanIndex,
@@ -75,7 +80,7 @@ def _spy_fallback(monkeypatch, twin_name, mod=ivfmod):
         return real(*a, **kw)
 
     monkeypatch.setattr(mod, twin_name, spy)
-    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
+    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 1)  # 1 row at any d
     return calls
 
 
@@ -136,6 +141,25 @@ def _sh(v):
         v, nlist=8, nbit=32, period=1.0, threshold_type="median",
         transform="pca", seed=42, niter=5,
     ).add(v)
+
+
+def _bivf(graph):
+    """Binary IVF over the fixture's sign bits (centred at 0.5, where
+    the embeddings live); ``graph`` adds the BIVF<n>_HNSW<m> coarse."""
+
+    def build(v):
+        codes = binarize(v, 64, threshold=0.5)
+        idx = BinaryIVFIndex.train(codes, nlist=8, nbits=64, seed=42, niter=5)
+        return (idx.build_coarse_graph(R=4) if graph else idx).add(codes)
+
+    return build
+
+
+def _queries_for(idx, queries):
+    """Binary IVF searches code words: the queries' sign bits."""
+    if not isinstance(idx, BinaryIVFIndex):
+        return queries
+    return binarize(queries, 64, id_col="qid", threshold=0.5).toDF("qid", "qcode")
 
 
 def _graph_plan(vectors):
@@ -244,6 +268,20 @@ ROUTE_CELLS = {
         sh_search_preassigned, ("sh_search_preassigned", dict(nprobe=4)),
         [dict(nprobe=1), dict(nprobe=4), dict(nprobe=8)],
     ),
+    # binary IVF: Hamming probe order, or the walk over the coarse graph
+    # (the float IVF<n>_NSG router with a words -> bits step)
+    "bivf": (
+        _bivf(False),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        binary_search_preassigned, ("binary_search_preassigned", dict(nprobe=4)),
+        [dict(nprobe=1), dict(nprobe=4), dict(nprobe=8)],
+    ),
+    "bivf_graph": (
+        _bivf(True),
+        lambda idx, q, k, **kw: idx.search(q, k, **kw),
+        binary_search_preassigned, ("binary_search_preassigned", dict(nprobe=4)),
+        [dict(nprobe=2), dict(nprobe=4)],
+    ),
     # the factory's graph-routed plan: the same beam walk both routes
     "graph_routed": (
         _graph_plan,
@@ -263,6 +301,7 @@ def test_routes_agree(cell, vectors, queries, monkeypatch):
     it past the query bound."""
     build, driver, twin, spy, params = ROUTE_CELLS[cell]
     idx = build(vectors)
+    queries = _queries_for(idx, queries)
     if twin is None:
         twin_rows = _graph_distributed(monkeypatch)
     else:
@@ -289,21 +328,25 @@ STATS_CELLS = {
     "pqfs": _pqfs(True),
     "aqfs": _aqfs(True),
     "sh": _sh,
+    "bivf": _bivf(False),
 }
 
 
 @pytest.mark.parametrize("codec", sorted(STATS_CELLS))
 def test_stats_equal_across_routes(codec, vectors, queries, monkeypatch, tmp_path):
     """IVFSearchStats counters live in the two shared routes, so every
-    codec reports them and both routes count the same work: nq,
+    codec (binary IVF's Hamming scan included) reports them and both
+    routes count the same work: nq,
     list_scans (one scan per list — each list is one file in the saved
     layout and one cogroup cell) and ndis (faiss IndexIVFStats)."""
     idx = STATS_CELLS[codec](vectors)
     idx.save(str(tmp_path / codec))
-    res, st = search_with_parameters(idx, queries, 5, nprobe=3)
+    q = _queries_for(idx, queries)
+    col = "qcode" if q is not queries else "vec"
+    res, st = search_with_parameters(idx, q, 5, nprobe=3, qvec_col=col)
     driver_rows = rows(res)
-    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 64)  # 1 row at d=64
-    res2, st2 = search_with_parameters(idx, queries, 5, nprobe=3)
+    monkeypatch.setattr(ivfmod, "MAX_DRIVER_QUERY_CELLS", 1)  # 1 row at any d
+    res2, st2 = search_with_parameters(idx, q, 5, nprobe=3, qvec_col=col)
     assert rows(res2) == driver_rows and driver_rows
     assert st.as_dict() == st2.as_dict()
     assert st.nq == 20 and st.list_scans >= 20 and st.ndis > 0
@@ -330,25 +373,34 @@ def dim8_indexes(spark):
                  aq_fastscan_search_preassigned),
         "sh": (IVFSpectralHash.train(v, nlist=4, seed=1, niter=3).add(v),
                sh_search_preassigned),
+        "bivf": (BinaryIVFIndex.train(binarize(v, 8), nlist=4, nbits=8, seed=1,
+                                      niter=3).add(binarize(v, 8)),
+                 binary_search_preassigned),
     }
 
 
 @pytest.mark.parametrize("route", ["driver", "distributed"])
-@pytest.mark.parametrize("codec", ["flat", "sq", "pq", "pqfs", "aqfs", "sh"])
+@pytest.mark.parametrize("codec", ["flat", "sq", "pq", "pqfs", "aqfs", "sh", "bivf"])
 def test_wrong_dimension_queries_fail_with_message(codec, route, dim8_indexes, spark):
-    """5-d queries against an 8-d index fail with a message naming both
-    dimensions — on the driver before any job (driver route), or from
-    the probe map's size guard before any Python worker sees the
-    vectors (distributed route) — never as a worker stack trace."""
+    """5-d queries against an 8-d index (2-word codes against binary IVF's
+    1-word codes) fail with a message naming both dimensions — on the
+    driver before any job (driver route), or from the probe map's size
+    guard before any Python worker sees the vectors (distributed route)
+    — never as a worker stack trace."""
     from pyspark.errors import PythonException
 
     idx, twin = dim8_indexes[codec]
-    q5 = spark.createDataFrame([(0, [0.1] * 5)], "qid bigint, vec array<float>")
-    with pytest.raises(Exception, match="5 components but the index has d=8") as ei:
+    if codec == "bivf":
+        q = spark.createDataFrame([(0, [1, 2])], "qid bigint, qcode array<bigint>")
+        match = "2 components but the index has d=1"
+    else:
+        q = spark.createDataFrame([(0, [0.1] * 5)], "qid bigint, vec array<float>")
+        match = "5 components but the index has d=8"
+    with pytest.raises(Exception, match=match) as ei:
         if route == "driver":
-            idx.search(q5, 3, nprobe=2).collect()
+            idx.search(q, 3, nprobe=2).collect()
         else:
-            twin(idx, q5, 3, nprobe=2).collect()
+            twin(idx, q, 3, nprobe=2).collect()
     assert not isinstance(ei.value, PythonException)
 
 
@@ -422,20 +474,29 @@ def test_fastscan_max_codes_routes_agree(codec, vectors, queries, monkeypatch):
 
 def test_probe_table_columns_follow_the_terms_hook(vectors, queries, monkeypatch):
     """A scanner without the probe_terms hook (IVF-PQ's ``_PQScanner``)
-    keeps the distributed probe table at exactly (qid, vec, list_no), so
-    its plan does not change; a fast-scan scanner adds one terms column."""
+    keeps the distributed probe table at exactly (qid, vec, list_no)
+    with ``vec array<float>``, so its plan does not change; a fast-scan
+    scanner adds one terms column; binary IVF's code words travel as
+    ``array<bigint>``, never through a float cast."""
     seen = []
     real = ivfmod.cogrouped_cell_scan
 
     def spy(index, probes, *a, **kw):
-        seen.append(probes.columns)
+        seen.append([(f.name, f.dataType.simpleString()) for f in probes.schema])
         return real(index, probes, *a, **kw)
 
     monkeypatch.setattr(ivfmod, "cogrouped_cell_scan", spy)
     pq = IVFPQIndex.train(vectors, nlist=8, M=8, seed=42, niter=5).add(vectors)
     pq_search_preassigned(pq, queries, 5, nprobe=2)
     fastscan_search_preassigned(_pqfs(True)(vectors), queries, 5, nprobe=2)
-    assert seen == [["qid", "vec", "list_no"], ["qid", "vec", "list_no", "terms"]]
+    bivf = _bivf(False)(vectors)
+    binary_search_preassigned(bivf, _queries_for(bivf, queries), 5, nprobe=2)
+    head = [("qid", "bigint"), ("vec", "array<float>"), ("list_no", "int")]
+    assert seen == [
+        head,
+        head + [("terms", "binary")],
+        [("qid", "bigint"), ("vec", "array<bigint>"), ("list_no", "int")],
+    ]
 
 
 def test_graph_routed_fallback_equals_driver(vectors, queries, monkeypatch):
