@@ -806,21 +806,6 @@ class TopKAccumulator:
         return qidx, nid, nd
 
 
-def topk_merge(dist: np.ndarray, ids: np.ndarray, k: int, largest: bool):
-    """One-shot top-k of a (nq, m) block with 1-D shared ids or per-row
-    (nq, m) ids; returns flat (qidx, id, dist) with (dist, id) tie-break."""
-    nq, m = dist.shape
-    acc = TopKAccumulator(nq, k, largest)
-    if ids.ndim == 1:
-        acc.push(dist, ids)
-    else:
-        acc._q = [np.repeat(np.arange(nq, dtype=np.int64), m)]
-        acc._i = [ids.ravel().astype(np.int64, copy=False)]
-        acc._d = [dist.ravel().astype(np.float64, copy=False)]
-        acc._n = nq * m
-    return acc.emit()
-
-
 # --- MD5 over columns of messages (MinHash signatures) ----------------------
 #
 # RFC 1321 MD5, vectorized across messages: each of the 16 little-endian

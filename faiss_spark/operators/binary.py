@@ -187,7 +187,14 @@ def _binary_knn(
     """Broadcast-join + window top-k. Spark ≥3.5 plans the rank filter as
     WindowGroupLimit (partial per-partition limit before the shuffle), so
     the shuffled candidate set is ≤ partitions × nq × k — the same shape
-    as the GEMM knn's merge stage."""
+    as the GEMM knn's merge stage.
+
+    This stays the one JVM scan rather than a ``_HammingScanner`` on the
+    shared driver route: it is the only brute-force search with no
+    driver-side query collect (the query codes reach the executors as a
+    broadcast join side), so moving it onto the driver route would add
+    the MAX_DRIVER_QUERY_CELLS bound to ``hamming_knn``, ``jaccard_knn``
+    and ``LSHIndex.search``."""
     joined = codes.crossJoin(F.broadcast(qcodes)).select(
         "qid", "id", dist.alias("dist")
     )
@@ -373,9 +380,9 @@ class BinaryIVFIndex(_IVFIndexBase):
         hamming_range_search. A query side past the driver bound
         auto-falls-back to binary_range_search_preassigned."""
         return _scan_probed_lists(
-            self, qcodes, self._planner(nprobe), _HammingScanner(),
-            "BinaryIVFIndex.range_search", qid_col, qcode_col,
-            radius=float(radius),
+            self.codes, self._dtype, qcodes, self._planner(nprobe),
+            _HammingScanner(), "BinaryIVFIndex.range_search", qid_col,
+            qcode_col, radius=float(radius),
             fallback=lambda: binary_range_search_preassigned(
                 self, qcodes, radius, nprobe, qid_col, qcode_col
             ),

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from faiss_spark.kernels import (
-    TopKAccumulator,
     arrow_binary,
     arrow_binary_matrix,
     arrow_list,
@@ -489,23 +488,25 @@ class ProductQuantizerModel(_CodecFace):
         qvec_col: str = "vec",
         polysemous_ht: int | None = None,
     ) -> DataFrame:
-        """Asymmetric-distance top-k over an encoded table: per-partition
-        LUT gather-sum (the IndexPQ ADC scan, reference faiss/IndexPQ.h:24;
-        LUT trick of faiss/impl/ProductQuantizer.h:117 'search').
+        """Asymmetric-distance top-k over an encoded ``(id, code)`` table
+        (the IndexPQ ADC scan, reference faiss/IndexPQ.h:24; LUT trick of
+        faiss/impl/ProductQuantizer.h:117 'search'): the table is scanned
+        as the one list of the shared IVF driver route — each query's
+        ``distance_table`` built once on the driver, then a per-m LUT
+        gather-sum per code block (ivf._PQLUTScanner) and the window
+        top-k. Past the driver query bound it raises.
 
         polysemous_ht: with polysemous-trained codebooks, skip candidates
         whose code Hamming distance to the query's own code exceeds ht
         (reference faiss/IndexPQ.h:35 search_core polysemous filter; the
         SIFT1M rows of BASELINE.md). ht > M·8 disables the filter (strict hd < ht, as the reference)."""
-        from faiss_spark.operators.ivf import collect_queries_bounded
+        from faiss_spark.operators.ivf import _PQLUTScanner, _scan_flat_codes
 
-        qids, Q = collect_queries_bounded(
-            queries, qid_col, qvec_col, "pq_adc_search",
-            d=self.M * self.dsub,
+        return _scan_flat_codes(
+            codes_df, queries, self.M * self.dsub,
+            _PQLUTScanner(self, polysemous_ht=polysemous_ht),
+            "pq_adc_search", qid_col, qvec_col, k,
         )
-        luts = np.stack([self.distance_table(q) for q in Q])  # (nq, M, ksub)
-        qcodes = self.encode_np(Q) if polysemous_ht is not None else None
-        return self._lut_search(codes_df, qids, luts, k, qcodes, polysemous_ht)
 
     def sdc_table(self) -> np.ndarray:
         """(M, ksub, ksub) symmetric inter-centroid squared-L2 tables
@@ -531,99 +532,15 @@ class ProductQuantizerModel(_CodecFace):
         both sides quantized, no query-time subvector arithmetic
         (reference IndexPQ SDC search, faiss/IndexPQ.h:49
         ``search_core`` with ``st == ST_SDC``; the BASELINE.md SIFT1M
-        PQ64-SDC row). After the per-query row gather the scan is
-        byte-identical to the ADC path, so it shares ``_lut_search``."""
-        from faiss_spark.operators.ivf import collect_queries_bounded
+        PQ64-SDC row). A query's LUT is the ``sdc_table`` row gather of
+        its code; the scan is then the ADC one (the same one-list route
+        and ivf._PQLUTScanner push)."""
+        from faiss_spark.operators.ivf import _PQLUTScanner, _scan_flat_codes
 
-        qids, Q = collect_queries_bounded(
-            queries, qid_col, qvec_col, "pq_sdc_search",
-            d=self.M * self.dsub,
+        return _scan_flat_codes(
+            codes_df, queries, self.M * self.dsub, _PQLUTScanner(self, sdc=True),
+            "pq_sdc_search", qid_col, qvec_col, k,
         )
-        qcodes = self.encode_np(Q).astype(np.int64)  # (nq, M)
-        sdc = self.sdc_table()
-        # luts[q, m, :] = sdc[m, qcode[q, m], :]
-        luts = sdc[np.arange(self.M)[None, :], qcodes]
-        return self._lut_search(codes_df, qids, luts, k)
-
-    def _lut_search(
-        self,
-        codes_df: DataFrame,
-        qids: np.ndarray,
-        luts: np.ndarray,
-        k: int,
-        qcodes: np.ndarray | None = None,
-        polysemous_ht: int | None = None,
-    ) -> DataFrame:
-        """Shared LUT top-k scan over the codes table (ADC and SDC both
-        reduce to D[q, x] = Σ_m lut[q, m, code[x, m]]). Arrow-native:
-        the binary code column reshapes zero-copy into the (n, M) uint8
-        matrix (kernels.arrow_binary_matrix) — no per-row frombuffer."""
-        from faiss_spark.operators.ivf import _window_topk
-
-        spark = codes_df.sparkSession
-        bc = spark.sparkContext.broadcast((qids, luts, qcodes))
-        k_ = k
-        ht = polysemous_ht
-
-        def scan(batches):
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_binary_matrix
-
-            qids_, luts_, qcodes_ = bc.value
-            nq, M, ksub = luts_.shape
-            flat = luts_.reshape(nq, M * ksub)
-            offs = (np.arange(M) * ksub).astype(np.int64)
-            pop8 = np.unpackbits(
-                np.arange(256, dtype=np.uint8)[:, None], axis=1
-            ).sum(1).astype(np.int64)
-            acc = TopKAccumulator(nq, k_, largest=False)
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                codes = arrow_binary_matrix(b.column(1))
-                if ksub > 256:
-                    # 9..16-bit sub-codes: two LE bytes each (code_dtype)
-                    codes = np.ascontiguousarray(codes).view(np.uint16)
-                # D[q, x] = sum_m lut[q, m, code[x, m]] — accumulated per
-                # sub-quantizer so no (nq, n, M) gather temp materializes
-                D = np.zeros((nq, len(codes)), np.float64)
-                for m in range(M):
-                    D += flat[:, codes[:, m].astype(np.int64) + offs[m]]
-                if qcodes_ is not None:
-                    # polysemous filter: per-byte popcount of q⊕x codes,
-                    # accumulated per sub-quantizer (no (nq, n, M) temp)
-                    ham = np.zeros(D.shape, np.int64)
-                    for m in range(M):
-                        ham += pop8[
-                            np.bitwise_xor(
-                                qcodes_[:, m][:, None], codes[None, :, m]
-                            )
-                        ]
-                    # strict keep hd < ht, as the reference (IndexIVFPQ.cpp /
-                    # IndexPQ.cpp `if (hd < ht)`); ht > M*8 keeps everything
-                    D[ham >= ht] = np.inf
-                acc.push(
-                    D,
-                    np.asarray(
-                        b.column(0).to_numpy(zero_copy_only=False), np.int64
-                    ),
-                )
-            qidx, nid, nd = acc.emit()
-            fin = np.isfinite(nd)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids_[qidx[fin]], pa.int64()),
-                    pa.array(nid[fin], pa.int64()),
-                    pa.array(nd[fin], pa.float64()),
-                ],
-                names=["qid", "id", "dist"],
-            )
-
-        cands = codes_df.select("id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        return _window_topk(cands, k_, largest=False)
 
 
 def _hamming_table(nbits: int) -> np.ndarray:

@@ -21,18 +21,20 @@ The physical half (register layout) is out of scope per SURVEY §2.B —
 numpy's vectorized gather over Arrow batches is this engine's vector
 unit, and Tungsten/whole-stage-codegen owns the layout above it.
 
-Scale shape: the flat scans build their LUTs on the driver (ksub is 16
-for 4-bit codes — a few MB even at nq=10k), broadcast once, and scan the
-codes table map-only with per-worker top-k partials. The IVF indexes
-(``IVFPQFastScanIndex``, ``IVFAQFastScanIndex``) are list scanners
-(``_PQ4Scanner``, ``_AQ4Scanner``) on the two shared IVF routes of
-operators/ivf.py. Their LUTs are quantized per query over its whole
-probe set, so they come from the scanner's ``probe_terms`` hook: built
-on the driver and broadcast with the list → queries map (driver route),
-or built in the probe map and carried as a ``terms`` column through the
-cogroup (distributed route). Both routes then share the partition-pruned
-scan, hot-cell sub-sharding, IVFSearchStats and the max_codes budget of
-every other IVF codec.
+Scale shape: every search here is a list scanner (``_PQ4Scanner``,
+``_AQ4Scanner``) on the shared IVF routes of operators/ivf.py. The LUTs
+are quantized per query over its whole probe set, so they come from the
+scanner's ``probe_terms`` hook: built on the driver and broadcast with
+the list → queries map (driver route), or built in the probe map and
+carried as a ``terms`` column through the cogroup (distributed route).
+The IVF indexes (``IVFPQFastScanIndex``, ``IVFAQFastScanIndex``) run on
+both routes and share the partition-pruned scan, hot-cell sub-sharding,
+IVFSearchStats and the max_codes budget of every other IVF codec. The
+flat searches (``pq_fastscan_search``, ``aq_fastscan_search``) are the
+same scanners with ``by_residual=False`` on the driver route, reading
+the ``(id, code)`` table whole as one list (ksub is 16 for 4-bit codes,
+so a query's LUT is a few hundred bytes); they have no distributed twin
+and raise past the driver query bound.
 """
 
 from __future__ import annotations
@@ -41,12 +43,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from faiss_spark.kernels import (
-    TopKAccumulator,
-    arrow_binary_matrix,
-    arrow_list,
-    arrow_list_matrix,
-)
+from faiss_spark.kernels import arrow_binary_matrix, arrow_list, arrow_list_matrix
 from faiss_spark.operators.codecs import ProductQuantizerModel
 from faiss_spark.operators.ivf import (
     IVFPQIndex,
@@ -55,8 +52,7 @@ from faiss_spark.operators.ivf import (
     _ListScanner,
     _preassigned_cogrouped,
     _probe_pairs,
-    _window_topk,
-    collect_queries_bounded,
+    _scan_flat_codes,
 )
 
 
@@ -161,56 +157,16 @@ def pq_fastscan_search(
     top-k over de-quantized uint16 LUT sums. 4-bit codes (ksub ≤ 16) per
     the reference's fast-scan constraint.
 
-    Plan: broadcast quantized LUTs, one map-only pass over the codes
-    table with per-worker top-k partials, then the k-row window merge —
-    the same shape as ProductQuantizerModel._lut_search.
+    Plan: the ``(id, code)`` table is the one list of the shared IVF
+    driver route, scanned by ``_PQ4Scanner`` with ``by_residual=False``
+    (one quantize_lut_flat LUT per query, built on the driver), then the
+    window top-k.
     """
-    if model.ksub > 16:
-        raise ValueError(
-            f"fast-scan requires 4-bit codes (ksub ≤ 16), got ksub={model.ksub}"
-        )
-    spark = codes_df.sparkSession
-    qids, Q = collect_queries_bounded(
-        queries, qid_col, qvec_col, "pq_fastscan_search",
-        d=model.codebooks.shape[0] * model.codebooks.shape[2],
+    scanner = _PQ4Scanner(model, None, False)  # refuses ksub > 16 first
+    return _scan_flat_codes(
+        codes_df, queries, model.M * model.dsub, scanner,
+        "pq_fastscan_search", qid_col, qvec_col, k,
     )
-    luts = np.stack([model.distance_table(q) for q in Q])  # (nq, M, ksub)
-    lutq, a, b = quantize_lut_flat(luts)
-    bc = spark.sparkContext.broadcast((qids, lutq, a, b))
-    k_ = k
-
-    def scan(batches):
-        import pyarrow as pa
-
-        qids_, lutq_, a_, b_ = bc.value
-        nq = len(qids_)
-        acc = TopKAccumulator(nq, k_, largest=False)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes = arrow_binary_matrix(batch.column(1))
-            D16 = _saturating_lut_sum(lutq_, codes)
-            est = D16 / a_[:, None] + b_[:, None]
-            acc.push(
-                est,
-                np.asarray(
-                    batch.column(0).to_numpy(zero_copy_only=False), np.int64
-                ),
-            )
-        qidx, nid, nd = acc.emit()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids_[qidx], pa.int64()),
-                pa.array(nid, pa.int64()),
-                pa.array(nd, pa.float64()),
-            ],
-            names=["qid", "id", "dist"],
-        )
-
-    cands = codes_df.select("id", "code").mapInArrow(
-        scan, schema="qid bigint, id bigint, dist double"
-    )
-    return _window_topk(cands, k_, largest=False)
 
 
 # ------------------------------------------------------------ IVFPQ scan
@@ -311,7 +267,7 @@ class IVFPQFastScanIndex(_IVFIndexBase):
         return self.base._planner_state()
 
     def _scanner(self, k: int, **kw):
-        return _PQ4Scanner(self)
+        return _PQ4Scanner(self.base.pq, self.base.centroids, self.by_residual)
 
 
 def _pack_terms(lut, biasq, *f64) -> np.ndarray:
@@ -346,34 +302,30 @@ class _PQ4Scanner(_ListScanner):
     distances from different lists stay comparable in the merge, or one
     flat LUT shared by every probe (quantize_lut_flat, the
     by_residual=false branch — at full probe bit-identical to
-    pq_fastscan_search). A push is the saturating uint16 LUT sum,
-    de-quantized as acc / a + b."""
+    pq_fastscan_search, whose one-list scan this scanner is). A push is
+    the saturating uint16 LUT sum, de-quantized as acc / a + b.
+    ``centroids`` are read by the residual mode only."""
 
-    def __init__(self, index: IVFPQFastScanIndex):
-        ksub = index.base.pq.ksub
-        if ksub > 16:
-            raise ValueError(f"fast-scan requires 4-bit codes, got ksub={ksub}")
-        self.pq, self.centroids = index.base.pq, index.base.centroids
-        self.by_residual = index.by_residual
+    def __init__(self, pq: ProductQuantizerModel, centroids, by_residual: bool):
+        if pq.ksub > 16:
+            raise ValueError(
+                f"fast-scan requires 4-bit codes (ksub ≤ 16), got ksub={pq.ksub}"
+            )
+        self.pq, self.centroids, self.by_residual = pq, centroids, by_residual
 
     def block(self, cols):
         return (arrow_binary_matrix(cols[0]),)
-
-    def block_rows(self, nq, d):
-        # saturation is per element: chunking the codes keeps the uint16
-        # chain bit-equal while bounding the uint32 scratch
-        return max(16, (1 << 22) // max(1, nq))
 
     def probe_terms(self, Q, probes):
         books = self.pq.codebooks
         M, ksub, dsub = books.shape
         rep, _ = _probe_pairs(probes)
         if not self.by_residual:
-            # LUT via the SAME distance_table arithmetic as
-            # pq_fastscan_search: the full-probe == flat-scan bit-identity
-            # needs IDENTICAL floats entering uint8 quantization — an
-            # algebraically-equal expanded form (|q|²+|c|²−2⟨q,c⟩) can land
-            # a value on the other side of a bin boundary
+            # LUT via distance_table, the flat IndexPQ LUT: the
+            # full-probe == flat-scan bit-identity needs IDENTICAL floats
+            # entering uint8 quantization — an algebraically-equal
+            # expanded form (|q|²+|c|²−2⟨q,c⟩) can land a value on the
+            # other side of a bin boundary
             luts = np.stack([self.pq.distance_table(q) for q in Q])
             lutq, a, b = quantize_lut_flat(luts)
             return _pack_terms(
@@ -443,7 +395,7 @@ def fastscan_search_preassigned(
     Arithmetic is the driver route's bit for bit, for both by_residual
     modes."""
     return _preassigned_cogrouped(
-        index, queries, index._planner(nprobe), _PQ4Scanner(index),
+        index, queries, index._planner(nprobe), index._scanner(k),
         qid_col, qvec_col, max_cell_rows, k=k,
     )
 
@@ -628,52 +580,14 @@ def aq_fastscan_search(
 ) -> DataFrame:
     """L2 top-k over AQ fast-scan codes: quantized-LUT accumulation with
     the norm rows re-scaled during the scan; reported distance is the
-    de-quantized estimate plus the per-query ‖q‖² constant."""
-    spark = codes_df.sparkSession
-    qids, Q = collect_queries_bounded(
-        queries, qid_col, qvec_col, "aq_fastscan_search",
-        d=model.rq.codebooks.shape[2],
+    de-quantized estimate plus the per-query ‖q‖² constant. The
+    ``(id, code)`` table is the one list of the shared IVF driver route,
+    scanned by ``_AQ4Scanner`` with ``by_residual=False``."""
+    return _scan_flat_codes(
+        codes_df, queries, model.rq.codebooks.shape[2],
+        _AQ4Scanner(model, None, False), "aq_fastscan_search", qid_col,
+        qvec_col, k,
     )
-    luts = model.float_luts(Q)
-    lutq, a, b = aq_quantize_lut(luts, M_norm=2, norm_scale=model.norm_scale)
-    qsq = (Q * Q).sum(1)
-    weights = np.ones(model.M + 2, np.int64)
-    weights[model.M :] = model.norm_scale
-    bc = spark.sparkContext.broadcast((qids, lutq, a, b, qsq, weights))
-    k_ = k
-
-    def scan(batches):
-        import pyarrow as pa
-
-        qids_, lutq_, a_, b_, qsq_, w_ = bc.value
-        nq = len(qids_)
-        acc = TopKAccumulator(nq, k_, largest=False)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes = arrow_binary_matrix(batch.column(1))
-            D16 = _saturating_lut_sum(lutq_, codes, row_weights=w_)
-            est = D16 / a_[:, None] + b_[:, None] + qsq_[:, None]
-            acc.push(
-                est,
-                np.asarray(
-                    batch.column(0).to_numpy(zero_copy_only=False), np.int64
-                ),
-            )
-        qidx, nid, nd = acc.emit()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids_[qidx], pa.int64()),
-                pa.array(nid, pa.int64()),
-                pa.array(nd, pa.float64()),
-            ],
-            names=["qid", "id", "dist"],
-        )
-
-    cands = codes_df.select("id", "code").mapInArrow(
-        scan, schema="qid bigint, id bigint, dist double"
-    )
-    return _window_topk(cands, k_, largest=False)
 
 
 # ------------------------------------------------------- IVF AQ fast-scan
@@ -828,7 +742,10 @@ class IVFAQFastScanIndex(_IVFIndexBase):
         return (self.centroids, self.rq, self.norm_books, self.by_residual), encode
 
     def _scanner(self, k: int, **kw):
-        return _AQ4Scanner(self)
+        model = AQFastScanModel(
+            rq=self.rq, norm_books=self.norm_books, norm_scale=self.norm_scale
+        )
+        return _AQ4Scanner(model, self.centroids, self.by_residual)
 
 
 class _AQ4Scanner(_ListScanner):
@@ -839,22 +756,15 @@ class _AQ4Scanner(_ListScanner):
     (AQFastScanModel.float_luts): by_residual quantizes it with the
     per-probe −2⟨q, c_j⟩ bias (aq_quantize_lut_bias), otherwise exactly
     as the flat aq_fastscan LUT, so at full probe results equal
-    aq_fastscan_search. A push is the NormTableScaler saturating sum,
-    de-quantized, plus ‖q‖²."""
+    aq_fastscan_search (whose one-list scan this scanner is). A push is
+    the NormTableScaler saturating sum, de-quantized, plus ‖q‖².
+    ``centroids`` are read by the residual mode only."""
 
-    def __init__(self, index: IVFAQFastScanIndex):
-        self.model = AQFastScanModel(
-            rq=index.rq, norm_books=index.norm_books,
-            norm_scale=index.norm_scale,
-        )
-        self.centroids = index.centroids
-        self.by_residual = index.by_residual
+    def __init__(self, model: AQFastScanModel, centroids, by_residual: bool):
+        self.model, self.centroids, self.by_residual = model, centroids, by_residual
 
     def block(self, cols):
         return (arrow_binary_matrix(cols[0]),)
-
-    def block_rows(self, nq, d):
-        return max(16, (1 << 22) // max(1, nq))
 
     def probe_terms(self, Q, probes):
         m = self.model
@@ -917,7 +827,7 @@ def aq_fastscan_search_preassigned(
     saturating sum. Covers both by_residual modes, PRQ/PLSQ included
     (the ProductAQAdapter rides inside rq)."""
     return _preassigned_cogrouped(
-        index, queries, index._planner(nprobe), _AQ4Scanner(index),
+        index, queries, index._planner(nprobe), index._scanner(k),
         qid_col, qvec_col, max_cell_rows, k=k,
     )
 

@@ -59,6 +59,13 @@ mapping onto Spark:
           scanner + route call; a driver search past the query bound
           falls back to its public distributed twin.
 
+  flat    a flat codes table (IndexFlatCodes, faiss/IndexFlatCodes.h:23)
+          is an IVF scan with ONE list: the flat PQ ADC/SDC and PQ/AQ
+          fast-scan searches are the planner kind ``all`` plus a scanner
+          (``_PQLUTScanner``; the fast-scan ones with by_residual=False)
+          on the driver route. A one-list cogroup would run the whole
+          corpus as one task, so past the query bound they raise.
+
 At 100 TB: the codes table is partition-pruned to nprobe/nlist of its
 files; the probe set (qid → list_no) stays a broadcast; the only shuffle
 is the final candidate merge. nprobe=nlist degenerates to exact search.
@@ -493,7 +500,7 @@ class _IVFIndexBase:
             return fn(self, queries, k, nprobe, qid_col, qvec_col, **kw)
 
         return _scan_probed_lists(
-            self, queries, self._planner(nprobe, max_codes),
+            self.codes, self._dtype, queries, self._planner(nprobe, max_codes),
             self._scanner(k, **kw), f"{type(self).__name__}.search",
             qid_col, qvec_col, k=k, fallback=twin,
         )
@@ -566,10 +573,9 @@ class IVFSearchStats:
     after the result is materialized.
 
     nq: queries searched; ndis: distances computed (exact); list_scans:
-    per-task (list, query-group) scans — equals lists-visited when each
-    inverted list lands in one scan partition or cogroup cell (the
-    partitioned-parquet layout), an upper bound when a list spans
-    several."""
+    an UPPER BOUND on the (query, list) scans — each scan task counts
+    its lists once per probing query, so a list split over several
+    tasks (an in-memory codes frame) counts once per task."""
 
     def __init__(self, spark, nq: int = 0):
         sc = spark.sparkContext
@@ -611,16 +617,42 @@ def ivf_range_search(
     range_search. A query side past the driver bound auto-falls-back to
     the fully-distributed ``range_search_preassigned`` cogroup plan (with
     an IVFSearchStats out-param, straight to the distributed route, which
-    fills the same counters)."""
+    fills the same counters). Raw-vector families only
+    (``_range_scanner``)."""
+    scanner = _range_scanner(index, "ivf_range_search")
+    planner = index._planner(nprobe)
+
+    def fallback():
+        if stats is None:
+            return range_search_preassigned(
+                index, queries, radius, nprobe=nprobe,
+                qid_col=qid_col, qvec_col=qvec_col,
+            )
+        return _preassigned_cogrouped(
+            index, queries, planner, scanner, qid_col, qvec_col,
+            radius=float(radius), stats=stats,
+        )
+
     return _scan_probed_lists(
-        index, queries, index._planner(nprobe),
-        _FlatScanner(index.metric), "ivf_range_search", qid_col, qvec_col,
-        radius=float(radius), stats=stats,
-        fallback=None if stats is not None else lambda: range_search_preassigned(
-            index, queries, radius, nprobe=nprobe,
-            qid_col=qid_col, qvec_col=qvec_col,
-        ),
+        index.codes, index._dtype, queries, planner, scanner,
+        "ivf_range_search", qid_col, qvec_col, radius=float(radius),
+        stats=stats, fallback=fallback,
     )
+
+
+def _range_scanner(index, op: str) -> "_FlatScanner":
+    """The raw-vector scanner of IVF range search. A family whose lists
+    hold codes is refused before any job (BinaryIVFIndex is pointed to
+    its own range_search)."""
+    scanner = index._scanner(1)
+    if type(scanner) is not _FlatScanner:
+        name = type(index).__name__
+        own = f"; use {name}.range_search" if hasattr(index, "range_search") else ""
+        raise ValueError(
+            f"{op}: {name} lists hold codes, and IVF range search scans "
+            f"raw-vector lists only{own}"
+        )
+    return scanner
 
 
 def range_search_with_parameters(
@@ -679,9 +711,14 @@ def search_with_parameters(
     collect / write) — the lazy-plan analogue of the reference's
     "stats filled during the call" contract."""
     stats = IVFSearchStats(queries.sparkSession)
+    planner, scanner = index._planner(nprobe, max_codes), index._scanner(k)
     res = _scan_probed_lists(
-        index, queries, index._planner(nprobe, max_codes), index._scanner(k),
+        index.codes, index._dtype, queries, planner, scanner,
         "search_with_parameters", qid_col, qvec_col, k=k, stats=stats,
+        fallback=lambda: _preassigned_cogrouped(
+            index, queries, planner, scanner, qid_col, qvec_col,
+            k=k, stats=stats,
+        ),
     )
     return res, stats
 
@@ -721,6 +758,8 @@ class _ProbePlanner:
       grid       IMI / MIQ2 product grid (``state`` a codes-free shell)
       router     ``state.assign_np(Q, nprobe)`` — nested sub-index
                  routers and the factory's graph-routed walk
+      all        every query on list 0: a flat codes table scanned as
+                 one list (``state`` unused, nprobe 1)
 
     With ``max_codes`` each row is cut nearest-first once the cumulative
     probed-list sizes reach the budget, crossing list included (ragged
@@ -745,6 +784,8 @@ class _ProbePlanner:
             order = s.search_np(Q, n)[0]
         elif self.kind == "grid":
             order = s._probe(Q, n)
+        elif self.kind == "all":
+            order = np.zeros((len(Q), 1), np.int64)
         else:
             order = s.assign_np(Q, n)
         if self.max_codes is None:
@@ -877,7 +918,11 @@ class _ListScanner:
     probe_terms = None
 
     def block_rows(self, nq: int, d: int) -> int | None:
-        return None
+        # codes are scored in bounded chunks, so a hot cell never holds its
+        # full (nq, n_codes) distance (or Hamming XOR) block; LUT sums,
+        # saturating fast-scan sums and popcounts are per element, so they
+        # come out the same in any chunking
+        return max(16, (1 << 22) // max(1, nq))
 
 
 class _FlatScanner(_ListScanner):
@@ -890,6 +935,9 @@ class _FlatScanner(_ListScanner):
     def __init__(self, metric: str):
         self.metric = metric
         self.largest = metric in SIMILARITY_METRICS
+
+    def block_rows(self, nq, d):
+        return None  # the fused GEMM tiles its own scratch
 
     def block(self, cols):
         return (arrow_list_matrix(cols[0]),)
@@ -1013,11 +1061,6 @@ class _PQScanner(_ListScanner):
     def block(self, cols):
         return (_pq_code_view(arrow_binary_matrix(cols[0]), self.pq.M),)
 
-    def block_rows(self, nq, d):
-        # gather-sum in bounded chunks: a hot cell never materializes
-        # its full (nq, n_codes) distance block
-        return max(16, (1 << 22) // max(1, nq))
-
     def bind(self, list_no, Q, qsel, acc, scratch, T):
         books = self.pq.codebooks
         M, ksub, dsub = books.shape
@@ -1049,14 +1092,66 @@ class _PQScanner(_ListScanner):
         def push(blk, ids):
             codes = blk[0]
             D = np.broadcast_to(coarse[:, None], (len(R), len(codes))).copy()
-            for m in range(M):
-                D += luts[:, m, codes[:, m].astype(np.int64)]
-            if qc is not None:
-                ham = np.zeros(D.shape, np.int64)
-                for m in range(M):
-                    ham += _POP8[np.bitwise_xor(qc[:, m][:, None], codes[None, :, m])]
-                D[ham >= self.ht] = np.inf
-            acc.push(D, ids)
+            acc.push(_pq_lut_sum(D, luts, codes, qc, self.ht), ids)
+
+        return push
+
+
+def _pq_lut_sum(D, luts, codes, qc=None, ht=None) -> np.ndarray:
+    """``D += Σ_m luts[:, m, code[:, m]]``, accumulated per sub-quantizer
+    (no (nq, n, M) gather temp), for a (nq, M, ksub) LUT block and (n, M)
+    sub-codes. With the queries' own codes ``qc`` this is also the
+    polysemous filter (faiss/IndexPQ.h:35, IndexIVFPQ.cpp QueryTables): a
+    candidate whose code is at Hamming ≥ ``ht`` from the query's goes to
+    +inf (strict keep hd < ht, as the reference's ``if (hd < ht)``; ht >
+    M·8 keeps everything)."""
+    for m in range(luts.shape[1]):
+        D += luts[:, m, codes[:, m].astype(np.int64)]
+    if qc is not None:
+        ham = np.zeros(D.shape, np.int64)
+        for m in range(codes.shape[1]):
+            ham += _POP8[np.bitwise_xor(qc[:, m][:, None], codes[None, :, m])]
+        D[ham >= ht] = np.inf
+    return D
+
+
+class _PQLUTScanner(_ListScanner):
+    """IndexPQ's flat ADC and SDC search (faiss/IndexPQ.h:24,49): each
+    query's (M, ksub) float LUT — ``distance_table``, or for SDC the
+    ``sdc_table`` rows of its code — and, with ``polysemous_ht``, its
+    code are built once on the driver as float64 terms rows; a push is
+    the LUT gather-sum from zeros."""
+
+    def __init__(self, pq, sdc: bool = False, polysemous_ht: int | None = None):
+        self.pq, self.sdc, self.ht = pq, sdc, polysemous_ht
+
+    def block(self, cols):
+        return (_pq_code_view(arrow_binary_matrix(cols[0]), self.pq.M),)
+
+    def probe_terms(self, Q, probes):
+        pq = self.pq
+        rep, _ = _probe_pairs(probes)
+        if self.sdc:
+            qc = pq.encode_np(Q).astype(np.int64)
+            luts = pq.sdc_table()[np.arange(pq.M)[None, :], qc]
+        else:
+            luts = np.stack([pq.distance_table(q) for q in Q])
+        terms = luts.reshape(len(Q), -1)
+        if self.ht is not None:
+            terms = np.concatenate([terms, pq.encode_np(Q).astype(np.float64)], 1)
+        return terms[rep].view(np.uint8)
+
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
+        M, ksub = self.pq.M, self.pq.ksub
+        terms = np.ascontiguousarray(T).view(np.float64)
+        luts = terms[:, : M * ksub].reshape(-1, M, ksub)
+        qc = None
+        if self.ht is not None:
+            qc = terms[:, M * ksub :].astype(self.pq.code_dtype)
+
+        def push(blk, ids):
+            D = np.zeros((len(luts), len(blk[0])), np.float64)
+            acc.push(_pq_lut_sum(D, luts, blk[0], qc, self.ht), ids)
 
         return push
 
@@ -1082,9 +1177,6 @@ class _PQRScanner(_ListScanner):
             _pq_code_view(arrow_binary_matrix(cols[1]), self.pq2.M),
         )
 
-    def block_rows(self, nq, d):
-        return max(16, (1 << 22) // max(1, nq))
-
     def bind(self, list_no, Q, qsel, acc, scratch, T):
         books1 = self.pq1.codebooks
         M, _, dsub = books1.shape
@@ -1098,9 +1190,7 @@ class _PQRScanner(_ListScanner):
 
         def push(blk, ids):
             cc1, cc2 = blk
-            D = np.zeros((len(R), len(cc1)), np.float64)
-            for m in range(M):
-                D += luts[:, m, cc1[:, m].astype(np.int64)]
+            D = _pq_lut_sum(np.zeros((len(R), len(cc1))), luts, cc1)
             ns = min(len(cc1), self.shortlist)
             if ns < len(cc1):
                 short = np.argpartition(D, ns - 1, axis=1)[:, :ns]
@@ -1141,10 +1231,6 @@ class _HammingScanner(_ListScanner):
 
     def block(self, cols):
         return (arrow_list_matrix(cols[0], np.int64),)
-
-    def block_rows(self, nq, d):
-        # the XOR block is (nq, rows, words) int64
-        return max(16, (1 << 22) // max(1, nq))
 
     def bind(self, list_no, Q, qsel, acc, scratch, T):
         qw = Q[qsel]
@@ -1211,7 +1297,8 @@ _CAND_SCHEMA = "qid bigint, id bigint, dist double"
 
 
 def _scan_probed_lists(
-    lists,
+    codes: DataFrame,
+    dtype,
     queries: DataFrame,
     planner: _ProbePlanner,
     scanner: _ListScanner,
@@ -1223,21 +1310,20 @@ def _scan_probed_lists(
     fallback=None,
     stats: IVFSearchStats | None = None,
 ) -> DataFrame:
-    """The driver route, shared by every IVF family: one bounded query
-    collect (past MAX_DRIVER_QUERY_CELLS it returns ``fallback()`` — the
-    caller's public distributed twin — or, without one, the distributed
-    route itself, carrying ``stats``), the dimension check, probes
-    planned on the driver, the list → queries map (the ivf_tools
+    """The driver route, shared by every IVF family and the flat codes
+    searches: one bounded query collect of ``dtype`` vectors (past
+    MAX_DRIVER_QUERY_CELLS it returns ``fallback()`` — an IVF caller's
+    distributed route — or, without one, raises), the dimension check,
+    probes planned on the driver, the list → queries map (the ivf_tools
     big-batch regrouping, contrib/ivf_tools.py:26) broadcast with the
-    scanner, ONE partition-pruned mapInArrow scan of only the probed
-    lists, then the window top-k. Range mode (``radius``) ends map-side:
-    inverted lists partition the ids, so no pair repeats."""
+    scanner, ONE mapInArrow scan of the ``codes`` table, then the window
+    top-k. The scan reads only the probed lists (partition pruning), or
+    with the planner kind ``all`` a flat ``(id, code)`` table whole, as
+    list 0. Range mode (``radius``) ends map-side: inverted lists
+    partition the ids, so no pair repeats."""
     collected = collect_queries_bounded(
-        queries, qid_col, qvec_col, op, d=planner.d, dtype=lists._dtype,
-        fallback=fallback or (lambda: _preassigned_cogrouped(
-            lists, queries, planner, scanner, qid_col, qvec_col,
-            k=k, radius=radius, stats=stats,
-        )),
+        queries, qid_col, qvec_col, op, d=planner.d, dtype=dtype,
+        fallback=fallback,
     )
     if isinstance(collected, DataFrame):
         return collected
@@ -1263,7 +1349,7 @@ def _scan_probed_lists(
     if stats is not None:
         stats._acc_nq.add(len(qids))
         accs = (stats._acc_list_scans, stats._acc_ndis)
-    bc = lists.codes.sparkSession.sparkContext.broadcast(
+    bc = codes.sparkSession.sparkContext.broadcast(
         (qids, Q, l2q, l2t, scanner)
     )
     def scan(batches):
@@ -1285,14 +1371,33 @@ def _scan_probed_lists(
                 names=["qid", "id", "dist"],
             )
 
-    # stage B — partition-pruned scan: Catalyst turns the IN-filter on
-    # the partitioning column into reading only nprobe'd directories
-    cands = (
-        lists.codes.filter(F.col("list_no").isin(sorted(l2q)))
-        .select("list_no", "id", *scanner.code_cols)
-        .mapInArrow(scan, schema=_CAND_SCHEMA)
-    )
+    if planner.kind == "all":
+        # one list, no pruning: the literal filter folds away (or, with
+        # no queries, to an empty relation)
+        src = codes.filter(F.lit(bool(l2q))).select(
+            F.lit(0).alias("list_no"), "id", *scanner.code_cols
+        )
+    else:
+        # stage B — partition-pruned scan: Catalyst turns the IN-filter on
+        # the partitioning column into reading only nprobe'd directories
+        src = codes.filter(F.col("list_no").isin(sorted(l2q))).select(
+            "list_no", "id", *scanner.code_cols
+        )
+    cands = src.mapInArrow(scan, schema=_CAND_SCHEMA)
     return cands if radius is not None else _window_topk(cands, k, scanner.largest)
+
+
+def _scan_flat_codes(
+    codes: DataFrame, queries: DataFrame, d: int, scanner: _ListScanner,
+    op: str, qid_col: str, qvec_col: str, k: int,
+) -> DataFrame:
+    """A flat ``(id, code)`` table searched as one inverted list: the
+    planner kind ``all`` and ``scanner`` on the driver route, with no
+    fallback — past the query bound it raises."""
+    return _scan_probed_lists(
+        codes, np.float64, queries, _ProbePlanner("all", None, 1, d), scanner,
+        op, qid_col, qvec_col, k=k,
+    )
 
 
 @dataclass
@@ -1477,9 +1582,7 @@ class NestedCoarseRouter:
                 + (books * books).sum(2)[None, :, :]
                 - 2.0 * np.einsum("qmd,mkd->qmk", Qs, books)
             )
-            D = np.zeros((len(Q), len(codes)), np.float64)
-            for m in range(M):
-                D += luts[:, m, codes[:, m]]
+            D = _pq_lut_sum(np.zeros((len(Q), len(codes))), luts, codes)
             return np.argsort(D, axis=1, kind="stable")[:, :nprobe]
         if self.kind == "lsh":
             Qp = Q @ self.lsh_proj if self.lsh_proj is not None else Q
@@ -2035,12 +2138,13 @@ def range_search_preassigned(
     side is itself a huge DataFrame that must never collect.
 
     nprobe == nlist degenerates to the exact distributed range join
-    (every cell scanned), which is how the oracle pins it.
+    (every cell scanned), which is how the oracle pins it. Raw-vector
+    families only (``_range_scanner``).
     """
+    scanner = _range_scanner(index, "range_search_preassigned")
     return _preassigned_cogrouped(
-        index, queries, index._planner(nprobe),
-        _FlatScanner(index.metric), qid_col, qvec_col, max_cell_rows,
-        radius=float(radius),
+        index, queries, index._planner(nprobe), scanner, qid_col, qvec_col,
+        max_cell_rows, radius=float(radius),
     )
 
 

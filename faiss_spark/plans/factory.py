@@ -752,8 +752,8 @@ class IndexPlan:
         # past the driver bound: the cogroup twin with the SAME beam walk
         # (and pad fill) running executor-side
         return _scan_probed_lists(
-            self.index, q, planner, _FlatScanner(self.metric),
-            "graph_routed_search", "qid", "vec", k=k,
+            self.index.codes, self.index._dtype, q, planner,
+            _FlatScanner(self.metric), "graph_routed_search", "qid", "vec", k=k,
             fallback=lambda: search_preassigned(
                 self.index, q, k, nprobe=nprobe,
                 assign_payload=planner, assign_fn=lambda p, Q: p(Q),

@@ -17,6 +17,14 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` unless SPARK_DRIVER_MEM is set: half of
+    physical memory, capped at 16g, so the JVM collects garbage (or
+    raises OutOfMemoryError) before the kernel's OOM killer ends it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -63,7 +71,10 @@ def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSe
         # small files share a task; large-file splitting is governed by
         # maxPartitionBytes/minPartitionNum as before.
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # runtime bloom filters ≈ faiss IDSelectorBatch's bloom front
         # (reference faiss/impl/IDSelector.h:80-98)

@@ -5,6 +5,8 @@ in memory, after ``save`` → ``load`` and after ``save_bucketed`` →
 (reference tests/test_io.py: every index survives write_index →
 read_index → identical search)."""
 
+import copy
+
 import numpy as np
 import pytest
 
@@ -179,3 +181,45 @@ def test_heterogeneous_product_aq_roundtrips(spark, vectors, queries, tmp_path):
     X = np.random.default_rng(0).standard_normal((32, D))
     assert np.array_equal(idx.rq.encode_np(X), re.rq.encode_np(X))
     assert rows(re.search(queries, 5, nprobe=4)) == mem and mem
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_ivf_range_search_scans_raw_vector_lists_only(family, spark, vectors, queries):
+    """IVF range search scans raw-vector lists: those families match the
+    brute-force range_search at full probe, and every family whose lists
+    hold codes is refused on the driver, before any job, by all three
+    range entry points (binary IVF pointed to its own range_search)."""
+    from faiss_spark.operators.knn import range_search
+
+    idx = _index(family, vectors)
+    q = _queries_for(idx, queries)
+    if type(idx._scanner(1)) is ivfmod._FlatScanner:
+        if getattr(idx, "assign_k2", None):
+            # MIQ2 probes at most k2² cells; the full grid probes them all
+            idx = copy.copy(idx)
+            idx.assign_k2 = None
+        got = ivfmod.ivf_range_search(idx, q, 6.0, nprobe=idx.nlist)
+        expect = range_search(vectors, queries, 6.0)
+        assert rows_set(got) == rows_set(expect) and rows_set(expect)
+        return
+    sc = spark.sparkContext
+    group = f"range-refusal-{family}"
+    sc.setJobGroup(group, "range search refusal")
+    try:
+        for fn in (
+            ivfmod.ivf_range_search,
+            ivfmod.range_search_with_parameters,
+            ivfmod.range_search_preassigned,
+        ):
+            with pytest.raises(ValueError, match=f"{family} lists hold codes") as e:
+                fn(idx, q, 6.0, nprobe=2)
+            if family == "BinaryIVFIndex":
+                assert "BinaryIVFIndex.range_search" in str(e.value)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def rows_set(df):
+    return {(r["qid"], r["id"], round(r["dist"], 6)) for r in df.collect()}

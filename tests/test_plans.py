@@ -482,6 +482,34 @@ def test_package_python_boundary_is_arrow_only():
     assert not hits, hits
 
 
+def test_one_topk_scan_loop():
+    """One scan loop: a TopKAccumulator is constructed only in the shared
+    IVF list-scan loop (``ivf._scan_lists``, which every IVF family and
+    the flat codes searches run), the exact ``knn.knn`` and the
+    ``graph.knn_graph_bucketed`` cell scan."""
+    import ast
+    import pathlib
+
+    import faiss_spark
+
+    root = pathlib.Path(faiss_spark.__file__).parent
+    allowed = {("ivf", "_scan_lists"), ("knn", "knn"), ("graph", "knn_graph_bucketed")}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                func = getattr(node, "func", None)
+                name = getattr(func, "id", None) or getattr(func, "attr", None)
+                if (
+                    isinstance(node, ast.Call)
+                    and name == "TopKAccumulator"
+                    and (path.stem, getattr(top, "name", None)) not in allowed
+                ):
+                    hits.append((path.name, node.lineno))
+    assert not hits, hits
+
+
 def test_binary_preassigned_bucketed_codes_skip_shuffle(emb, queries, tmp_path):
     """BinaryIVFIndex.save_bucketed must feed the binary cogroup straight
     off the scan, same as the float twin: the codes-side list_no
