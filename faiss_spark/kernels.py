@@ -495,11 +495,11 @@ class TopKAccumulator:
         X: np.ndarray,
         ids: np.ndarray,
         qids: np.ndarray | None = None,
-        exclude_same_id: bool = False,
     ) -> None:
         """Compute distances Q×X and fold them in, never materializing the
         full (nq, m) block: query rows are processed in scratch-sized
-        chunks (GEMM tile ≈ 32 MB), each selected tie-safely in place."""
+        chunks (GEMM tile ≈ 32 MB), each selected tie-safely in place.
+        With the queries' ids ``qids`` a query never matches its own id."""
         Q, metric = self._Q, self._metric
         nq, m = Q.shape[0], X.shape[0]
         if m == 0:
@@ -523,11 +523,7 @@ class TopKAccumulator:
         # tile while cache-hot — one DRAM pass over the block instead
         # of three. Values and admissions are bit-identical (the same
         # elementwise ops in the same per-element order).
-        fusable = (
-            self._defer_qn
-            and not (exclude_same_id and qids is not None)
-            and m > 2 * min(self.k, m)
-        )
+        fusable = self._defer_qn and qids is None and m > 2 * min(self.k, m)
         xn_min = float(xn.min()) if fusable and xn is not None and m else 0.0
         for r0 in range(0, nq, chunk):
             r1 = min(nq, r0 + chunk)
@@ -541,7 +537,7 @@ class TopKAccumulator:
             D = _compute_block(Q, X, r0, r1, metric, self._qn, xn, dt,
                                metric_arg=self._metric_arg,
                                defer_qn=self._defer_qn)
-            if exclude_same_id and qids is not None:
+            if qids is not None:
                 hit = qids[r0:r1, None] == ids[None, :]
                 D[hit] = -np.inf if self.largest else np.inf
             self._select(r0, D, ids)

@@ -364,7 +364,7 @@ def knn_graph_bucketed(
         # (time is still quadratic — dedup first, see above)
         acc = TopKAccumulator(m, kk, largest)
         acc.bind_queries(X, metric)
-        acc.push_block(X, ids, qids=ids, exclude_same_id=True)
+        acc.push_block(X, ids, qids=ids)
         qidx, nid, nd = acc.emit()
         fin = np.isfinite(nd)
         return pa.table(

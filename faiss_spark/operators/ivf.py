@@ -34,7 +34,7 @@ mapping onto Spark:
                    binary IVF's BIVF<n>_HNSW<m>), plus the ``max_codes``
                    nearest-first scan budget.
           scanner  one InvertedListScanner per codec (``_FlatScanner``,
-                   ``_SQScanner``, ``_PQScanner``, ``_AQScanner``,
+                   ``_CodecScanner``, ``_PQScanner``, ``_AQScanner``,
                    ``_PQRScanner``, ``_HammingScanner`` (binary IVF) and
                    its ``_SHScanner``, and fastscan.py's
                    ``_PQ4Scanner``/``_AQ4Scanner``), the family's
@@ -60,11 +60,13 @@ mapping onto Spark:
           falls back to its public distributed twin.
 
   flat    a flat codes table (IndexFlatCodes, faiss/IndexFlatCodes.h:23)
-          is an IVF scan with ONE list: the flat PQ ADC/SDC and PQ/AQ
-          fast-scan searches are the planner kind ``all`` plus a scanner
-          (``_PQLUTScanner``; the fast-scan ones with by_residual=False)
-          on the driver route. A one-list cogroup would run the whole
-          corpus as one task, so past the query bound they raise.
+          is an IVF scan with ONE list: ``_scan_flat_codes``, the planner
+          kind ``all`` plus a scanner on the driver route. IndexFlat
+          (knn/range_search) is the raw-vector ``_FlatScanner``; flat PQ
+          ADC/SDC ``_PQLUTScanner``; PQ/AQ fast-scan the by_residual=False
+          ``_PQ4Scanner``/``_AQ4Scanner``; the factory's flat SQ, RQ/LSQ
+          and PAQ ``_CodecScanner``. A one-list cogroup would run the
+          whole corpus as one task, so past the query bound they raise.
 
 At 100 TB: the codes table is partition-pruned to nprobe/nlist of its
 files; the probe set (qid → list_no) stays a broadcast; the only shuffle
@@ -83,6 +85,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from faiss_spark.kernels import (
+    METRICS,
     SIMILARITY_METRICS,
     TopKAccumulator,
     _cand_table,
@@ -93,6 +96,7 @@ from faiss_spark.kernels import (
     arrow_list,
     arrow_list_matrix,
     pairwise_distances,
+    range_pairs,
 )
 from faiss_spark.operators.cluster import KMeans, KMeansModel
 from faiss_spark.sources import fsio
@@ -893,7 +897,8 @@ class _ListScanner:
                          ``push`` scores a block of codes into the
                          TopKAccumulator ``acc``. ``scratch`` lives for
                          one task (driver route) or one cell (cogroup)
-                         and holds list-independent per-query terms.
+                         and holds list-independent per-query terms
+                         (from the start, the query ids as ``"qids"``).
                          ``T`` holds the ``probe_terms`` rows of
                          (qsel, list_no), or None without the hook.
       block_rows(nq, d)  rows per push — bounds the scratch of a hot
@@ -911,11 +916,13 @@ class _ListScanner:
                          runs it on the driver and broadcasts the rows
                          with the list → queries map; the distributed
                          route runs it in the probe map, as a ``terms``
-                         column of the probe table."""
+                         column of the probe table.
+      dtype              the queries' compute dtype (flat route)"""
 
     code_cols = ("code",)
     largest = False
     probe_terms = None
+    dtype = np.float64
 
     def block_rows(self, nq: int, d: int) -> int | None:
         # codes are scored in bounded chunks, so a hot cell never holds its
@@ -926,71 +933,104 @@ class _ListScanner:
 
 
 class _FlatScanner(_ListScanner):
-    """Raw-vector lists: the fused bind_queries/push_block GEMM scan
-    (f64, the exact pairwise_distances op order the oracle hashes), plus
-    the range variant. Subclasses decode codes to such a block first."""
+    """Raw-vector lists (and IndexFlat): the fused bind_queries/push_block
+    GEMM scan in ``dtype`` (f64, the exact pairwise_distances op order
+    the oracle hashes, or f32, read zero-copy from array<float>), plus
+    the range variant. ``exclude_same_id`` drops a query's own id, read
+    from ``scratch["qids"]``. Subclasses decode codes to a block first."""
 
     code_cols = ("vec",)
 
-    def __init__(self, metric: str):
-        self.metric = metric
+    def __init__(self, metric: str, metric_arg=None, dtype=np.float64,
+                 exclude_same_id: bool = False):
+        if metric not in METRICS:
+            raise ValueError(
+                f"unknown metric {metric!r}; expected one of {sorted(METRICS)}"
+            )
+        if metric == "lp" and metric_arg is None:
+            raise ValueError("metric 'lp' needs metric_arg (the exponent p)")
+        self.metric, self.metric_arg, self.dtype = metric, metric_arg, dtype
+        self.exclude_same_id = exclude_same_id
         self.largest = metric in SIMILARITY_METRICS
 
     def block_rows(self, nq, d):
         return None  # the fused GEMM tiles its own scratch
 
     def block(self, cols):
-        return (arrow_list_matrix(cols[0]),)
+        return (arrow_list_matrix(cols[0], self.dtype),)
 
     def decode(self, list_no: int, blk) -> np.ndarray:
         return blk[0]
 
     def bind(self, list_no, Q, qsel, acc, scratch, T):
-        acc.bind_queries(np.ascontiguousarray(Q[qsel]), self.metric)
-        return lambda blk, ids: acc.push_block(self.decode(list_no, blk), ids)
+        acc.bind_queries(np.ascontiguousarray(Q[qsel]), self.metric, self.metric_arg)
+        qids = scratch["qids"][qsel] if self.exclude_same_id else None
+        return lambda blk, ids: acc.push_block(self.decode(list_no, blk), ids, qids)
 
     def range(self, Q, qsel, blk, radius: float):
-        from faiss_spark.kernels import range_pairs
-
         return range_pairs(
-            np.ascontiguousarray(Q[qsel]), blk[0], self.metric, radius
+            np.ascontiguousarray(Q[qsel]), blk[0], self.metric, radius,
+            self.metric_arg,
         )
 
 
 class _DecodeScanner(_FlatScanner):
     """Coded lists scanned by decoding a bounded chunk to floats, then
-    the fused GEMM (asymmetric: queries stay exact)."""
+    the fused GEMM (asymmetric: queries stay exact). With ``est`` (an AQ
+    '_N*' search_type under L2, reference AdditiveQuantizer search_type)
+    it ranks by ‖q‖² − 2⟨q,x̂⟩ + N(‖x̂‖²) instead, N = ``norm_q`` (None
+    for '_Nnone': N ≡ 0); IP has no norm term."""
 
     code_cols = ("code",)
+    est = False
+    norm_q = None
 
     def block_rows(self, nq, d):
         # decode inflates the stored bytes 4-8x: a hot cell never holds
         # its full float expansion
         return max(1, (1 << 22) // max(1, d))
 
+    def bind(self, list_no, Q, qsel, acc, scratch, T):
+        if not self.est:
+            return super().bind(list_no, Q, qsel, acc, scratch, T)
+        Qg = np.ascontiguousarray(Q[qsel], np.float64)
+        qn = (Qg * Qg).sum(1)[:, None]
 
-class _SQScanner(_DecodeScanner):
-    """SQ codes (the reference's SQ InvertedListScanner)."""
+        def push(blk, ids):
+            X = self.decode(list_no, blk)
+            n_est = (
+                self.norm_q.quantize_np((X * X).sum(1))
+                if self.norm_q is not None
+                else np.zeros(len(X))
+            )
+            acc.push(qn - 2.0 * (Qg @ X.T) + n_est[None, :], ids)
 
-    def __init__(self, index):
-        super().__init__(index.metric)
-        self.sq = index.sq
+        return push
+
+
+class _CodecScanner(_DecodeScanner):
+    """Codes decoded by a codec's own ``decode_np`` (IVFSQ lists; the
+    factory's flat SQ, RQ/LSQ and PAQ tables). ``f32`` rounds x̂ to
+    float32 as the codec's Spark ``decode`` does."""
+
+    def __init__(self, model, metric: str, f32: bool = False,
+                 est: bool = False, norm_q=None):
+        super().__init__(metric)
+        self.model, self.f32, self.est, self.norm_q = model, f32, est, norm_q
 
     def block(self, cols):
-        return (arrow_binary_matrix(cols[0]),)
+        return (arrow_binary_matrix(cols[0]).view(self.model.code_dtype),)
 
     def decode(self, list_no, blk):
-        return self.sq.decode_np(blk[0])
+        X = self.model.decode_np(blk[0])
+        return X.astype(np.float32).astype(np.float64) if self.f32 else X
 
 
 class _AQScanner(_DecodeScanner):
     """AQ codes: gather-sum the M codebook rows onto the list centroid —
     the virtual centroid's reconstruction under an additive coarse
-    (AdditiveQuantizer decode, faiss/impl/AdditiveQuantizer.h:25). With a
-    '_N*' search_type (reference AdditiveQuantizer search_type) an L2
-    index ranks by ‖q‖² − 2⟨q,x̂⟩ + N(‖x̂‖²) instead ("none" is N ≡ 0);
-    IP never uses the norm term — its LUT similarity ⟨q,x̂⟩ is exact on
-    decoded vectors."""
+    (AdditiveQuantizer decode, faiss/impl/AdditiveQuantizer.h:25) — with
+    the index's '_N*' norm estimator, if any."""
 
     def __init__(self, index):
         super().__init__(index.metric)
@@ -1014,23 +1054,6 @@ class _AQScanner(_DecodeScanner):
         for m in range(self.books.shape[0]):
             X = X + self.books[m][cc[:, m]]
         return X
-
-    def bind(self, list_no, Q, qsel, acc, scratch, T):
-        if not self.est:
-            return super().bind(list_no, Q, qsel, acc, scratch, T)
-        Qg = np.ascontiguousarray(Q[qsel], np.float64)
-        qn = (Qg * Qg).sum(1)[:, None]
-
-        def push(blk, ids):
-            X = self.decode(list_no, blk)
-            n_est = (
-                self.norm_q.quantize_np((X * X).sum(1))
-                if self.norm_q is not None
-                else np.zeros(len(X))
-            )
-            acc.push(qn - 2.0 * (Qg @ X.T) + n_est[None, :], ids)
-
-        return push
 
 
 class _PQScanner(_ListScanner):
@@ -1106,11 +1129,13 @@ def _pq_lut_sum(D, luts, codes, qc=None, ht=None) -> np.ndarray:
     +inf (strict keep hd < ht, as the reference's ``if (hd < ht)``; ht >
     M·8 keeps everything)."""
     for m in range(luts.shape[1]):
-        D += luts[:, m, codes[:, m].astype(np.int64)]
+        D += luts[:, m].take(codes[:, m], axis=1)
     if qc is not None:
         ham = np.zeros(D.shape, np.int64)
         for m in range(codes.shape[1]):
-            ham += _POP8[np.bitwise_xor(qc[:, m][:, None], codes[None, :, m])]
+            # both bytes: a 9..16-bit PQ's sub-codes are uint16
+            x = np.bitwise_xor(qc[:, m][:, None], codes[None, :, m])
+            ham += _POP8[x & 0xFF] + _POP8[x >> 8]
         D[ham >= ht] = np.inf
     return D
 
@@ -1247,17 +1272,17 @@ class _HammingScanner(_ListScanner):
         return tuple(np.concatenate(p) for p in zip(*parts))
 
 
-def _scan_lists(scanner, groups, Q, l2q, k, radius, accs, l2t=None):
+def _scan_lists(scanner, groups, qids, Q, l2q, k, radius, accs, l2t=None):
     """The one list-scan loop both routes run over ``(list_no, blocks,
     ids)`` groups: bind the scanner the first time a list appears (query
-    group ``l2q[list_no]``, probe-term rows ``l2t[list_no]``), push its
-    code blocks in bounded rows, and
+    group ``l2q[list_no]``, probe-term rows ``l2t[list_no]``; ``qids``
+    in its scratch), push its code blocks in bounded rows, and
     yield ``(query index, id, dist)`` arrays — every pair within
     ``radius`` as it is found, or each list's top-k survivors at the end
     (a vector lives in one list, so survivors never repeat). ``accs`` are
     the IVFSearchStats (list_scans, ndis) accumulators, or None."""
     acc_scans, acc_ndis = accs or (None, None)
-    scratch: dict = {}
+    scratch: dict = {"qids": qids}
     bound: dict = {}
     for list_no, blk, ids in groups:
         qsel = l2q.get(list_no)
@@ -1296,6 +1321,12 @@ def _scan_lists(scanner, groups, Q, l2q, k, radius, accs, l2t=None):
 _CAND_SCHEMA = "qid bigint, id bigint, dist double"
 
 
+def _require_k(k, radius) -> None:
+    """Refuse a k-NN search with k < 1 on the driver, before any job."""
+    if radius is None and (k is None or k < 1):
+        raise ValueError(f"k must be a positive integer, got k={k!r}")
+
+
 def _scan_probed_lists(
     codes: DataFrame,
     dtype,
@@ -1319,8 +1350,10 @@ def _scan_probed_lists(
     scanner, ONE mapInArrow scan of the ``codes`` table, then the window
     top-k. The scan reads only the probed lists (partition pruning), or
     with the planner kind ``all`` a flat ``(id, code)`` table whole, as
-    list 0. Range mode (``radius``) ends map-side: inverted lists
-    partition the ids, so no pair repeats."""
+    list 0 (``_flat_source``; a planner without ``d`` takes the queries').
+    Range mode (``radius``) ends map-side: inverted
+    lists partition the ids, so no pair repeats."""
+    _require_k(k, radius)
     collected = collect_queries_bounded(
         queries, qid_col, qvec_col, op, d=planner.d, dtype=dtype,
         fallback=fallback,
@@ -1328,7 +1361,7 @@ def _scan_probed_lists(
     if isinstance(collected, DataFrame):
         return collected
     qids, Q = collected
-    if len(Q) and Q.shape[1] != planner.d:
+    if len(Q) and planner.d is not None and Q.shape[1] != planner.d:
         raise ValueError(
             f"{op}: query vectors have d={Q.shape[1]} components but the "
             f"index has d={planner.d}"
@@ -1360,7 +1393,7 @@ def _scan_probed_lists(
         qids_, Q_, l2q_, l2t_, sc = bc.value
         groups = arrow_list_groups(batches, lambda b: sc.block(b.columns[2:]))
         for qi, ids, dist in _scan_lists(
-            sc, groups, Q_, l2q_, k, radius, accs, l2t_
+            sc, groups, qids_, Q_, l2q_, k, radius, accs, l2t_
         ):
             yield pa.RecordBatch.from_arrays(
                 [
@@ -1372,11 +1405,8 @@ def _scan_probed_lists(
             )
 
     if planner.kind == "all":
-        # one list, no pruning: the literal filter folds away (or, with
-        # no queries, to an empty relation)
-        src = codes.filter(F.lit(bool(l2q))).select(
-            F.lit(0).alias("list_no"), "id", *scanner.code_cols
-        )
+        d = planner.d or Q.shape[1]
+        src = _flat_source(codes, scanner.code_cols, d, bool(l2q))
     else:
         # stage B — partition-pruned scan: Catalyst turns the IN-filter on
         # the partitioning column into reading only nprobe'd directories
@@ -1387,16 +1417,43 @@ def _scan_probed_lists(
     return cands if radius is not None else _window_topk(cands, k, scanner.largest)
 
 
+def _flat_source(codes: DataFrame, code_cols, d: int, any_queries: bool):
+    """A flat ``(id, code)`` table as list 0 (with no queries, an empty
+    relation); a raw ``vec`` of any length but ``d`` fails the job in
+    the JVM, naming both. SQL strings: the Column API makes about 100
+    py4j calls for this projection, ~20 ms of driver time per search on
+    a 4-vCPU host."""
+    guard = (
+        f"CASE WHEN size(vec) = {d} THEN vec ELSE raise_error(format_string("
+        f"'corpus vector has %d components but the queries have d={d}', "
+        "size(vec))) END AS vec"
+    )
+    src = (codes if any_queries else codes.limit(0)).selectExpr(
+        "0 AS list_no", "id", *[guard if c == "vec" else c for c in code_cols]
+    )
+    # CPU-bound scan: a source of fewer files than cores (listed plan-side,
+    # no job) fans out on the unique id; a keyless repartition(n) would
+    # first sort its input (sortBeforeRepartition) in the one scan task
+    par = codes.sparkSession.sparkContext.defaultParallelism
+    try:
+        n_files = len(codes.inputFiles())
+    except Exception:
+        n_files = 0
+    return src.repartition(par, F.col("id")) if 0 < n_files < par else src
+
+
 def _scan_flat_codes(
-    codes: DataFrame, queries: DataFrame, d: int, scanner: _ListScanner,
-    op: str, qid_col: str, qvec_col: str, k: int,
+    codes: DataFrame, queries: DataFrame, d: int | None,
+    scanner: _ListScanner, op: str, qid_col: str, qvec_col: str,
+    k: int | None = None, radius: float | None = None,
 ) -> DataFrame:
     """A flat ``(id, code)`` table searched as one inverted list: the
-    planner kind ``all`` and ``scanner`` on the driver route, with no
-    fallback — past the query bound it raises."""
+    planner kind ``all`` and ``scanner`` on the driver route, queries in
+    the scanner's dtype (``d`` None: their own), with no fallback — past
+    the query bound it raises."""
     return _scan_probed_lists(
-        codes, np.float64, queries, _ProbePlanner("all", None, 1, d), scanner,
-        op, qid_col, qvec_col, k=k,
+        codes, scanner.dtype, queries, _ProbePlanner("all", None, 1, d),
+        scanner, op, qid_col, qvec_col, k=k, radius=radius,
     )
 
 
@@ -2285,6 +2342,7 @@ def _preassigned_cogrouped(
     the same ``_scan_lists`` loop as the driver route. k-NN candidates
     get the global window top-k; range candidates return as-is (no pair
     can appear twice)."""
+    _require_k(k, radius)
     bc = queries.sparkSession.sparkContext.broadcast((planner, scanner))
     payload, assign_fn = assign or (bc, lambda ps, Q: ps[0](Q))
     accs = None
@@ -2316,8 +2374,8 @@ def _preassigned_cogrouped(
         if sc.probe_terms is not None:
             l2t = {list_no: arrow_binary_matrix(ptab.column("terms"))}
         parts = list(_scan_lists(
-            sc, [group], Qg, {list_no: np.arange(len(Qg))}, k, radius, accs,
-            l2t,
+            sc, [group], qids, Qg, {list_no: np.arange(len(Qg))}, k, radius,
+            accs, l2t,
         ))
         if not parts:
             return _empty_cand_table()
@@ -2490,7 +2548,7 @@ class IVFSQIndex(_IVFIndexBase):
     def _scanner(self, k: int, **kw):
         # the scan decodes SQ bytes to a float block before the GEMM
         # (asymmetric: queries stay exact)
-        return _SQScanner(self)
+        return _CodecScanner(self.sq, self.metric)
 
 
 def sq_search_preassigned(
@@ -2517,7 +2575,7 @@ def sq_search_preassigned(
     for an additive coarse (the fitted coarse model broadcasts whole:
     it is the same numpy state a driver-planned search holds)."""
     return _preassigned_cogrouped(
-        index, queries, index._planner(nprobe), _SQScanner(index),
+        index, queries, index._planner(nprobe), index._scanner(k),
         qid_col, qvec_col, max_cell_rows, k=k,
     )
 

@@ -3,15 +3,18 @@
 Spark-first re-expression of faiss's ``IndexFlat`` search path
 (reference faiss/IndexFlat.cpp, faiss/utils/distances.cpp:271-354) and of
 ``contrib/exhaustive_search.py:15-52`` ``knn_ground_truth`` (queries stay
-resident, the big table streams by):
+resident, the big table streams by). As faiss's IndexFlat is an
+IndexFlatCodes of raw floats, the vector table is ONE inverted list,
+scanned by ``_FlatScanner`` on the shared flat route
+(``ivf._scan_flat_codes``):
 
-  stage A  queries (the SMALL side) are collected once and broadcast to
-           executors as a contiguous float64 numpy block — this is the
-           "broadcast the dimension table" pattern; the 100 TB side is
-           never collected or shuffled.
+  stage A  queries (the SMALL side) are collected once, bounded, and
+           broadcast to executors as a contiguous numpy block — this is
+           the "broadcast the dimension table" pattern; the 100 TB side
+           is never collected or shuffled.
   stage B  ``mapInArrow`` over the vector table: each Arrow batch's
            list-values buffer is reshaped ZERO-COPY into the GEMM tile;
-           a per-partition TopKAccumulator keeps nq×k candidates
+           a per-task TopKAccumulator keeps nq×k candidates
            (map-side partial aggregation).
   stage C  the only shuffle: ≤ num_partitions × nq × k candidate rows
            (tiny) are re-ranked with a window for the global top-k
@@ -23,8 +26,7 @@ shuffles O(P·nq·k) rows, and never sorts the full distance matrix.
 Scale notes:
 - Queries are assumed to fit in a broadcast (≤ ~1 GB, i.e. millions of
   vectors at d=64). For larger query sets, chunk the query side and union
-  the results (same plan, run per chunk) — see ``knn_join`` for the
-  self-join case.
+  the results (same plan, run per chunk) — see ``knn_chunked``.
 - ``.explain``: stage B shows a single WholeStageCodegen scan feeding
   MapInArrow (filter/pruning pushed below it); stage C is one small
   shuffle.
@@ -36,39 +38,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from faiss_spark.kernels import (
-    SIMILARITY_METRICS,
-    TopKAccumulator,
-    _cand_table,
-    arrow_id_vec_blocks,
-)
-from faiss_spark.operators.ivf import _window_topk
-
-_RESULT_SCHEMA = "qid bigint, id bigint, dist double"
-
-
-def _validate_metric(metric: str) -> None:
-    from faiss_spark.kernels import METRICS
-
-    if metric not in METRICS:
-        raise ValueError(
-            f"unknown metric {metric!r}; expected one of {sorted(METRICS)}"
-        )
-
-
-def _collect_queries(
-    queries: DataFrame, qid_col: str, qvec_col: str, dtype=np.float64,
-    op: str = "knn",
-):
-    """Collect the (small) query side to the driver as (ids, matrix).
-
-    Brute-force search broadcasts the queries BY CONTRACT, so the
-    collect is bounded by the same one-job MAX_DRIVER_QUERY_CELLS budget
-    the IVF family uses (VERDICT r7 #5): a million-query frame gets the
-    actionable chunk-or-distribute error instead of a driver OOM."""
-    from faiss_spark.operators.ivf import collect_queries_bounded
-
-    return collect_queries_bounded(queries, qid_col, qvec_col, op, dtype=dtype)
+from faiss_spark.kernels import SIMILARITY_METRICS
+from faiss_spark.operators.ivf import _FlatScanner, _scan_flat_codes, _window_topk
 
 
 def _np_dtype(dtype: str):
@@ -79,69 +50,11 @@ def _np_dtype(dtype: str):
     raise ValueError(f"unknown dtype {dtype!r}; expected 'f32' or 'f64'")
 
 
-def _scan_partitions(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    Q: np.ndarray,
-    make_emit,
-):
-    """Arrow-native scan of the vector table; ``make_emit`` builds the
-    per-partition handler: it receives the arrow_id_vec_blocks of the
-    partition, X in Q's dtype, and yields ``_cand_table`` result tables.
-
-    ``Q`` is the query matrix (its width and dtype are read here). A
-    corpus vector of any other length fails the job in the JVM with a
-    message naming both dimensions, before the batch reaches the worker.
-
-    The Arrow list<float> column's values buffer IS the row-major
-    matrix, so arrow_id_vec_blocks hands numpy a ZERO-COPY view — a
-    per-row route materializes one object per row and re-stacks them,
-    which profiled at ~40% of the whole scan on the 600k-row bench
-    table (the GEMM itself is the small part at d≤64). ids likewise
-    arrive as one int64 buffer."""
-    d, dtype = Q.shape[1], Q.dtype
-
-    def arrow_scan(batches):
-        for t in make_emit(arrow_id_vec_blocks(batches, dtype)):
-            yield from t.to_batches()
-
-    vec = F.col(vec_col)
-    src = vectors.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.when(F.size(vec) == d, vec)
-        .otherwise(
-            F.raise_error(
-                F.format_string(
-                    f"corpus vector has %d components but the queries have d={d}",
-                    F.size(vec),
-                )
-            )
-        )
-        .alias("vec"),
+def _id_vec(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The vector table as a flat ``(id, vec)`` codes table."""
+    return vectors.select(
+        F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
     )
-    # CPU-bound scan: when the source is a handful of splits (small local
-    # files), fan it out across cores first. At cluster scale real tables
-    # already have ≥ parallelism files, so this no-ops there. The probe
-    # is plan-side (file listing) — touching df.rdd would force analysis
-    # through the RDD API and can schedule a separate job on some
-    # sources; non-file sources (e.g. in-memory ranges) skip the fan-out.
-    spark = vectors.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        n_files = len(vectors.inputFiles())
-    except Exception:
-        n_files = 0
-    if 0 < n_files < par:
-        # hash on the (unique) id, not round-robin: a keyless
-        # repartition(n) pays a local sort of its input first
-        # (sortBeforeRepartition, needed so retried tasks reproduce the
-        # same assignment — guide §2.5), charged to the single scan task
-        # when the source is one file/row-group; hash partitioning is
-        # deterministic per row, so it needs no such sort and spreads
-        # unique ids just as evenly.
-        src = src.repartition(par, F.col("id"))
-    return src.mapInArrow(arrow_scan, schema=_RESULT_SCHEMA)
 
 
 def knn(
@@ -168,33 +81,11 @@ def knn(
     double oracle; 'f32' mirrors the reference's sgemm kernels (half the
     memory traffic / ~2× the GEMM rate) for recall-style workloads.
     """
-    _validate_metric(metric)
-    if metric == "lp" and metric_arg is None:
-        raise ValueError("metric 'lp' needs metric_arg (the exponent p)")
-    largest = metric in SIMILARITY_METRICS
-    np_dt = _np_dtype(dtype)
-    spark = vectors.sparkSession
-    qids, Q = _collect_queries(queries, qid_col, qvec_col, dtype=np_dt)
-    if len(qids) == 0:
-        return spark.createDataFrame([], _RESULT_SCHEMA + ", rank int")
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    def scan(blocks):
-        qids_, Q_ = bc.value
-        acc = TopKAccumulator(len(qids_), k, largest)
-        acc.bind_queries(Q_, metric, metric_arg)
-        for ids, X, _ in blocks:
-            acc.push_block(
-                X, ids,
-                qids=qids_ if exclude_same_id else None,
-                exclude_same_id=exclude_same_id,
-            )
-        qidx, nid, nd = acc.emit()
-        finite = np.isfinite(nd)
-        yield _cand_table(qids_[qidx[finite]], nid[finite], nd[finite])
-
-    candidates = _scan_partitions(vectors, id_col, vec_col, Q, scan)
-    return _window_topk(candidates, k, largest)
+    scanner = _FlatScanner(metric, metric_arg, _np_dtype(dtype), exclude_same_id)
+    return _scan_flat_codes(
+        _id_vec(vectors, id_col, vec_col), queries, None, scanner, "knn",
+        qid_col, qvec_col, k=k,
+    )
 
 
 def range_search(
@@ -216,24 +107,11 @@ def range_search(
     there is no shuffle at all (the CSR `lims` of the reference is just a
     groupBy(qid).count() away if needed — SURVEY §1.1).
     """
-    _validate_metric(metric)
-    largest = metric in SIMILARITY_METRICS
-    spark = vectors.sparkSession
-    qids, Q = _collect_queries(queries, qid_col, qvec_col, op="range_search")
-    if len(qids) == 0:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    def scan(blocks):
-        from faiss_spark.kernels import range_pairs
-
-        qids_, Q_ = bc.value
-        for ids, X, _ in blocks:
-            hit_q, hit_x, vals = range_pairs(Q_, X, metric, radius, metric_arg)
-            if len(hit_q):
-                yield _cand_table(qids_[hit_q], ids[hit_x], vals)
-
-    return _scan_partitions(vectors, id_col, vec_col, Q, scan)
+    return _scan_flat_codes(
+        _id_vec(vectors, id_col, vec_col), queries, None,
+        _FlatScanner(metric, metric_arg), "range_search", qid_col, qvec_col,
+        radius=float(radius),
+    )
 
 
 def knn_join(
@@ -453,9 +331,6 @@ def knn_chunked(
         .first()
     )
     lo, hi, n = bounds[0], bounds[1], bounds[2]
-    if n == 0:
-        spark = vectors.sparkSession
-        return spark.createDataFrame([], _RESULT_SCHEMA + ", rank int")
     if n <= chunk_size:
         return knn(vectors, queries, k, metric, id_col, vec_col, qid_col, qvec_col)
     n_chunks = -(-n // chunk_size)

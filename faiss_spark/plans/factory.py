@@ -531,63 +531,6 @@ class IndexPlan:
         Xh = model.decode_np(model.encode_np(X))
         return AQNormQuantizer(self.aq_search_type).fit_np((Xh * Xh).sum(1))
 
-    def _aq_norm_est_search(self, q: DataFrame, k_cand: int) -> DataFrame:
-        """Flat AQ search under a stored-norm estimator (reference
-        AdditiveQuantizer '_N*' search types): rank by
-
-            dist_est = ‖q‖² − 2⟨q, x̂⟩ + N(‖x̂‖²)
-
-        (N = identity-0 for ST_LUT_nonorm '_Nnone'). Exact top-k under
-        the ESTIMATED distance via one augmented inner-product scan:
-        base rows carry y = [2x̂, −N(‖x̂‖²)], queries q' = [q, 1], so
-        ⟨q', y⟩ = 2⟨q,x̂⟩ − N and descending similarity IS ascending
-        est — the existing IP kernel (broadcast queries, zero-copy
-        GEMM tiles, candidate-only shuffle) does the selection."""
-        import numpy as np
-
-        from faiss_spark.operators.knn import knn
-
-        decoded = self._decoded_table()
-        nq_model = self._aq_norm  # None for "_Nnone" → N ≡ 0
-        bc = decoded.sparkSession.sparkContext.broadcast(nq_model)
-
-        def aug(batches):
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_id_vec_blocks, arrow_list
-
-            qz = bc.value
-            for ids, X, _ in arrow_id_vec_blocks(batches):
-                n_raw = (X * X).sum(1)
-                n_est = (
-                    qz.quantize_np(n_raw)
-                    if qz is not None
-                    else np.zeros(len(X))
-                )
-                Y = np.concatenate([2.0 * X, -n_est[:, None]], axis=1)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids, pa.int64()), arrow_list(Y)],
-                    names=["id", "vec"],
-                )
-
-        aug_t = decoded.select("id", "vec").mapInArrow(
-            aug, schema="id bigint, vec array<double>"
-        )
-        dbl = F.transform("vec", lambda x: x.cast("double"))
-        q_aug = q.select(
-            "qid", F.concat(dbl, F.array(F.lit(1.0))).alias("vec")
-        )
-        qn = q.select(
-            "qid",
-            F.aggregate(
-                dbl, F.lit(0.0), lambda a, b: a + b * b
-            ).alias("__qn2"),
-        )
-        res = knn(aug_t, q_aug, k_cand, metric="ip", qid_col="qid")
-        return res.join(qn, "qid").select(
-            "qid", "id", (F.col("__qn2") - F.col("dist")).alias("dist"), "rank"
-        )
-
     def search(self, queries: DataFrame, k: int, nprobe: int = 8,
                qid_col: str = "qid", qvec_col: str = "vec",
                polysemous_ht: int | None = None) -> DataFrame:
@@ -646,17 +589,8 @@ class IndexPlan:
                     self._pq_codes, q, k_cand, qid_col="qid",
                     polysemous_ht=polysemous_ht,
                 )
-        elif self.index_type in ("rq", "lsq"):
-            if self.aq_search_type is not None and self.metric == "l2":
-                # stored-norm estimator ('_N*'): ranked by est distance.
-                # For IP the reference LUT similarity is ⟨q, x̂⟩ with no
-                # norm term — identical to the decode+knn path below.
-                res = self._aq_norm_est_search(q, k_cand)
-            else:
-                decoded = self._rq_model.decode(self._rq_codes)
-                res = knn(
-                    decoded, q, k_cand, metric=self.metric, qid_col="qid"
-                )
+        elif self.index_type in ("sq", "rq", "lsq", "paq"):
+            res = self._codec_search(q, k_cand)
         elif self.index_type == "rcq":
             # standalone coarse quantizer: top-k VIRTUAL centroids per
             # query by beam (reference ResidualCoarseQuantizer::search) —
@@ -699,23 +633,16 @@ class IndexPlan:
             res = aq_fastscan_search(
                 self._aqfs_model, self._aqfs_codes, q, k_cand, qid_col="qid"
             )
-        elif self.index_type == "paq":
-            decoded = self._paq_model.decode(self._paq_codes)
-            res = knn(decoded, q, k_cand, metric=self.metric, qid_col="qid")
         elif self.index_type == "lsh":
             res = self.index.search(q, k_cand, qid_col="qid")
         elif self.index_type == "nsg":
             res = self.index.search(
                 q, k_cand, search_L=max(32, 2 * k_cand), qid_col="qid"
             )
-        elif self.index_type == "lattice":
-            # reference IndexLattice.search throws; here the codec searches
-            # like the other full-table codecs: refine-on-decode
-            decoded = self.index.sa_decode(self._lat_codes)
-            res = knn(decoded, q, k_cand, metric=self.metric, qid_col="qid")
         else:
-            # sq: decode + exact scan (SQ is a codec, search = refine on decode)
-            decoded = self._sq_model.decode(self._sq_codes)
+            # lattice: reference IndexLattice.search throws; here the codec
+            # searches like the other full-table codecs, refine-on-decode
+            decoded = self.index.sa_decode(self._lat_codes)
             res = knn(decoded, q, k_cand, metric=self.metric, qid_col="qid")
         if self.refine_flat:
             from faiss_spark.operators.refine import refine_search
@@ -726,6 +653,30 @@ class IndexPlan:
 
             res = refine_search(res, self._refine_table, q, k, metric=self.metric)
         return res
+
+    def _codec_search(self, q: DataFrame, k: int) -> DataFrame:
+        """Flat SQ, RQ/LSQ and PAQ search (a codec's search = refine on
+        decode): the codes are the one list of the flat route, decoded
+        in the scan. An RQ/LSQ '_N*' search_type under L2 ranks by the
+        stored-norm estimator instead (IP has no norm term)."""
+        from faiss_spark.operators.ivf import _CodecScanner, _scan_flat_codes
+
+        t = self.index_type
+        if t == "sq":
+            model, codes, d = self._sq_model, self._sq_codes, self._sq_model.d
+        elif t == "paq":
+            model, codes = self._paq_model, self._paq_codes
+            d = model.dsub * len(model.subs)
+        else:
+            model, codes = self._rq_model, self._rq_codes
+            d = model.codebooks.shape[2]
+        # only RQ/LSQ plans parse a '_N*' search_type
+        est = self.aq_search_type is not None and self.metric == "l2"
+        scanner = _CodecScanner(
+            model, self.metric, f32=True, est=est,
+            norm_q=self._aq_norm if est else None,
+        )
+        return _scan_flat_codes(codes, q, d, scanner, "search", "qid", "vec", k=k)
 
     def _graph_routed_search(
         self, q: DataFrame, k: int, nprobe: int

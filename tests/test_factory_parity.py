@@ -142,6 +142,49 @@ def test_rq_norm_estimator_matches_numpy(spark, tables):
         )
 
 
+@pytest.mark.parametrize("desc", ["SQ8", "RQ4x6", "RQ4x6_Nqint8", "PRQ2x4x8"])
+def test_flat_codec_scan_equals_decode_then_knn(spark, tables, desc):
+    """The factory's flat SQ, RQ/LSQ and PAQ plans decode inside the flat
+    route's scan, rounded to float32 as the codec's Spark decode emits,
+    so their rows equal brute-force knn over the decoded table exactly.
+    '_N*' ranks by the stored-norm estimator: ids and ranks equal a numpy
+    top-k over the same float32-rounded reconstructions, distances to
+    rounding."""
+    from faiss_spark.kernels import arrow_i64
+    from faiss_spark.operators.codecs import decode_column
+    from faiss_spark.operators.knn import knn
+
+    emb = _emb(tables)
+    qs = emb.filter("id < 4").select(F.col("id").alias("qid"), "vec")
+    plan = index_factory(desc).fit(emb, seed=42)
+    got = sorted(tuple(r) for r in plan.search(qs, 6).collect())
+    model, codes = (
+        (plan._sq_model, plan._sq_codes) if desc == "SQ8"
+        else (plan._paq_model, plan._paq_codes) if desc.startswith("PRQ")
+        else (plan._rq_model, plan._rq_codes)
+    )
+    if not desc.endswith("_Nqint8"):
+        expect = knn(model.decode(codes), qs, 6, qid_col="qid")
+        assert got == sorted(tuple(r) for r in expect.collect())
+        return
+    tbl = codes.toArrow()
+    ids = arrow_i64(tbl.column("id"))
+    Xh = decode_column(model, tbl.column("code")).astype(np.float32)
+    Xh = Xh.astype(np.float64)
+    n_est = plan._aq_norm.quantize_np((Xh * Xh).sum(1))
+    qt = qs.toArrow()
+    qids = arrow_i64(qt.column("qid"))
+    expect = []
+    for qid, q in zip(qids, qt.column("vec").to_pylist()):
+        q = np.asarray(q, np.float64)
+        est = (q * q).sum() - 2.0 * Xh @ q + n_est
+        order = np.lexsort((ids, est))[:6]
+        expect += [(qid, ids[j], est[j], r + 1) for r, j in enumerate(order)]
+    expect.sort()
+    assert [(a, b, d) for a, b, _, d in got] == [(a, b, d) for a, b, _, d in expect]
+    assert np.allclose([t[2] for t in got], [t[2] for t in expect], atol=1e-9)
+
+
 def test_ivfaq_norm_estimator_full_probe_matches_numpy(spark, tables):
     """IVF RQ with '_Ncqint8' at nprobe=nlist: every row scanned, so the
     result must equal the same estimator computed directly in numpy over

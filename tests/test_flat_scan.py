@@ -176,3 +176,59 @@ def test_flat_search_empty_queries(name, data):
     res = CELLS[name][1](model, codes, queries.limit(0), K)
     assert res.columns == ["qid", "id", "dist", "rank"]
     assert res.count() == 0
+
+
+@pytest.mark.parametrize("nbits", [8, 12])
+def test_pq_lut_sum_polysemous_counts_every_code_bit(nbits):
+    """The polysemous filter's Hamming count covers every bit of a
+    sub-code: a 12-bit PQ's uint16 codes keep exactly the candidates an
+    in-test popcount keeps (the sums are the plain LUT gather-sum)."""
+    rng = np.random.default_rng(nbits)
+    M, ksub, nq, n, ht = 2, 1 << nbits, 5, 300, 7
+    dt = np.uint8 if nbits <= 8 else np.uint16
+    luts = rng.standard_normal((nq, M, ksub))
+    codes = rng.integers(0, ksub, (n, M)).astype(dt)
+    qc = rng.integers(0, ksub, (nq, M)).astype(dt)
+    D = ivfmod._pq_lut_sum(np.zeros((nq, n)), luts, codes, qc, ht)
+    expect = _lut_sum(luts, codes)
+    x = np.bitwise_xor(qc[:, None, :], codes[None, :, :]).astype(np.uint16)
+    ham = np.unpackbits(x.view(np.uint8).reshape(nq, n, -1), axis=-1).sum(2)
+    expect[ham >= ht] = np.inf
+    assert np.isfinite(expect).any() and not np.isfinite(expect).all()
+    assert np.array_equal(D, expect)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+@pytest.mark.parametrize("entry", ["knn", "adc", "ivfpq_driver", "ivfpq_distributed"])
+def test_k_below_one_refused_before_any_job(entry, k, spark, data):
+    """k ≤ 0 is refused on the driver, before any job, by the shared
+    routes: knn and the flat codes searches (flat route), IVFPQ search
+    (driver route) and its distributed twin (cogroup route)."""
+    from faiss_spark.operators.ivf import IVFPQIndex, pq_search_preassigned
+    from faiss_spark.operators.knn import knn
+
+    vectors, queries, _ = data
+    if entry == "adc":
+        model, codes = _cell("adc", vectors)
+    elif entry != "knn":
+        idx = IVFPQIndex.train(vectors, nlist=4, M=4, seed=3, niter=3).add(vectors)
+
+    def run():
+        if entry == "knn":
+            return knn(vectors, queries, k)
+        if entry == "adc":
+            return model.adc_search(codes, queries, k)
+        if entry == "ivfpq_driver":
+            return idx.search(queries, k, nprobe=2)
+        return pq_search_preassigned(idx, queries, k, nprobe=2)
+
+    sc = spark.sparkContext
+    group = f"k-refusal-{entry}-{k}"
+    sc.setJobGroup(group, "k refusal")
+    try:
+        with pytest.raises(ValueError, match="k must be a positive integer"):
+            run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

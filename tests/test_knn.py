@@ -210,3 +210,119 @@ def test_knn_k_above_corpus_size_returns_every_row_unpadded(spark):
         got = [r for r in rows if r["qid"] == q]
         assert sorted(r["rank"] for r in got) == list(range(1, 21))
         assert sorted(r["id"] for r in got) == list(range(20))
+
+
+# -- IndexFlat on the flat route: every metric against an in-test numpy top-k
+
+
+def _np_dist(Q, X, metric):
+    if metric == "l2":
+        return ((Q[:, None, :] - X[None, :, :]) ** 2).sum(2)
+    if metric == "ip":
+        return Q @ X.T
+    if metric == "cosine":
+        qn = np.linalg.norm(Q, axis=1)[:, None]
+        xn = np.linalg.norm(X, axis=1)[None, :]
+        return (Q @ X.T) / (qn * xn)
+    if metric == "lp":
+        return (np.abs(Q[:, None, :] - X[None, :, :]) ** 3).sum(2)
+    if metric == "jaccard":
+        mn = np.minimum(Q[:, None, :], X[None, :, :]).sum(2)
+        mx = np.maximum(Q[:, None, :], X[None, :, :]).sum(2)
+        return np.where(mx != 0, (mx - mn) / mx, 1.0)
+    return (Q[:, None, :] != X[None, :, :]).sum(2).astype(np.float64)
+
+
+def _np_topk(Dm, ids, qids, k, largest, exclude_self=False):
+    out = set()
+    for qi, row in enumerate(Dm):
+        keep = ids != qids[qi] if exclude_self else np.ones(len(ids), bool)
+        order = np.lexsort((ids[keep], -row[keep] if largest else row[keep]))[:k]
+        out |= {
+            (int(qids[qi]), int(ids[keep][j]), float(row[keep][j]), r + 1)
+            for r, j in enumerate(order)
+        }
+    return out
+
+
+def _close(got, expect, rel):
+    """Same (qid, id, rank) rows, distances within ``rel``."""
+    g = sorted(got, key=lambda t: (t[0], t[3] if len(t) > 3 else t[1]))
+    e = sorted(expect, key=lambda t: (t[0], t[3] if len(t) > 3 else t[1]))
+    return [(t[0], t[1]) + t[3:] for t in g] == [
+        (t[0], t[1]) + t[3:] for t in e
+    ] and np.allclose([t[2] for t in g], [t[2] for t in e], rtol=rel, atol=rel)
+
+
+@pytest.mark.parametrize(
+    "metric,dtype",
+    [("l2", "f64"), ("ip", "f64"), ("cosine", "f64"), ("lp", "f64"),
+     ("jaccard", "f64"), ("hamming", "f64"), ("l2", "f32")],
+)
+def test_flat_route_matches_numpy_topk(spark, metric, dtype):
+    """knn, knn_join and range_search run the raw-vector _FlatScanner on
+    the flat route: rows equal a numpy top-k with the (dist, id)
+    tie-break. The discrete-valued cells (every metric but cosine and
+    f32) have exact distance ties and compare exactly; the continuous
+    ones compare ids and ranks exactly, distances to rounding."""
+    rng = np.random.default_rng(3)
+    exact = metric != "cosine" and dtype == "f64"
+    if exact:
+        X = rng.integers(0, 4, (120, 8)).astype(np.float64)
+    else:
+        X = rng.standard_normal((120, 24))
+    corpus = spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(X)],
+        "id bigint, vec array<float>",
+    )
+    qids = np.arange(0, 120, 10)
+    qs = corpus.filter(F.col("id") % 10 == 0).select(
+        F.col("id").alias("qid"), "vec"
+    )
+    Xf = X.astype(np.float32).astype(np.float64)
+    Dm = _np_dist(Xf[qids], Xf, metric)
+    ids = np.arange(len(X))
+    largest = metric in ("ip", "cosine")
+    arg = 3.0 if metric == "lp" else None
+    rel = 0.0 if exact else (1e-4 if dtype == "f32" else 1e-9)
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    got = rows(knn(corpus, qs, 7, metric, dtype=dtype, metric_arg=arg))
+    assert _close(got, _np_topk(Dm, ids, qids, 7, largest), rel)
+    if metric != "lp" and dtype == "f64":
+        got = rows(knn_join(corpus, 4, metric).filter(F.col("qid") % 10 == 0))
+        assert _close(got, _np_topk(Dm, ids, qids, 4, largest, True), rel)
+    radius = float(np.quantile(Dm, 0.8 if largest else 0.2))
+    hit = Dm > radius if largest else Dm < radius
+    expect = {
+        (int(qids[a]), int(b), float(Dm[a, b])) for a, b in zip(*np.nonzero(hit))
+    }
+    got = rows(range_search(corpus, qs, radius, metric, metric_arg=arg))
+    assert expect and _close(got, expect, rel)
+
+
+def test_knn_plan_is_one_flat_scan(spark, vectors, queries):
+    """knn's physical plan is the flat route's: one MapInArrow, the id
+    hash Exchange only when the source has fewer files than the
+    parallelism (a non-file source has none), and no other exchange
+    before the window merge on qid."""
+    from tests.test_plans import plan
+
+    par = spark.sparkContext.defaultParallelism
+    mem = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(40)], "id bigint, vec array<float>"
+    )
+    mem_q = mem.filter("id < 3").select(F.col("id").alias("qid"), "vec")
+    for src, q, n_files in (
+        (vectors, queries, len(vectors.inputFiles())),
+        (mem, mem_q, 0),
+    ):
+        p = plan(knn(src, q, 3), "simple")
+        assert p.count("MapInArrow") == 1, p
+        fan_out = 0 < n_files < par
+        assert ("Exchange hashpartitioning(id" in p) == fan_out, p
+        assert p.count("Exchange") == 1 + fan_out, p
+        assert "Exchange hashpartitioning(qid" in p, p
+        assert "0 AS list_no" in p, p

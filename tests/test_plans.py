@@ -484,16 +484,16 @@ def test_package_python_boundary_is_arrow_only():
 
 def test_one_topk_scan_loop():
     """One scan loop: a TopKAccumulator is constructed only in the shared
-    IVF list-scan loop (``ivf._scan_lists``, which every IVF family and
-    the flat codes searches run), the exact ``knn.knn`` and the
-    ``graph.knn_graph_bucketed`` cell scan."""
+    IVF list-scan loop (``ivf._scan_lists``, which every IVF family, the
+    flat codes searches and the exact ``knn``/``range_search`` run) and
+    the ``graph.knn_graph_bucketed`` cell scan."""
     import ast
     import pathlib
 
     import faiss_spark
 
     root = pathlib.Path(faiss_spark.__file__).parent
-    allowed = {("ivf", "_scan_lists"), ("knn", "knn"), ("graph", "knn_graph_bucketed")}
+    allowed = {("ivf", "_scan_lists"), ("graph", "knn_graph_bucketed")}
     hits = []
     for path in sorted(root.rglob("*.py")):
         tree = ast.parse(path.read_text())
